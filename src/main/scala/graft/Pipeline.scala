@@ -25,6 +25,19 @@ import graft.operators.{Features, Sinks}
   * tables are entity-cardinality (thousands of rows) and broadcast into
   * the fact; the only global operation is the W5 split (percentile
   * variant at 100 TB, Features.chronoSplitApprox).
+  * [[run]] PINS those side tables: the A4 key statistics (which also
+  * give the A2 routing and the window skew probe), each predictor
+  * family's fitted params, the A5 norm params and the one A6 metrics
+  * aggregate over (key, split) are each computed once, collected, and
+  * held on the driver as local relations. They are bounded by the key
+  * count, and the driver already held each one as a broadcast; a lazy
+  * aggregate plan, by contrast, is re-run and re-broadcast by every
+  * consumer. Fact-size frames (splits, the featured and predicted
+  * frames, validateFeatures) are never collected. The sink tail then
+  * publishes its 9–11 tables in one concurrent pass
+  * ([[Sinks.writeConcurrently]]): the writes target different tables,
+  * each is bound by driver latency rather than executor work, and each
+  * keeps its own commit protocol.
   */
 object Pipeline {
 
@@ -214,16 +227,6 @@ object Pipeline {
       else df.withColumn(out, Features.ffill(col(c), w))
   }
 
-  /** The skew probe behind [[WinOps]]: max per-key row count from a
-    * per-key stats frame carrying `n_rows`. One tiny driver-side action
-    * over a |groups|-row aggregate — the statistics-build class
-    * (untimed-construction contract, like the approx split's boundary
-    * scan). Empty input → 0 (plain path). */
-  private def hotKeyMax(keyStats: DataFrame): Long = {
-    val r = keyStats.agg(max(col("n_rows"))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
   /** F6 stand-in ordinal on the driver schema (CoreQueries convention):
     * 'purchase' is the high-impact class. */
   private val impactMap = Map("view" -> 1, "click" -> 2, "purchase" -> 3)
@@ -354,7 +357,7 @@ object Pipeline {
         stddev_pop(col("actual")).as("sd_y"), count(lit(1)).as("n"))
     val m = g.agg(aggs.head, aggs.tail: _*).head()
     val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      java.util.List.of[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType.fromDDL(
         "coef ARRAY<DOUBLE>, n_fit BIGINT, loss_ledger ARRAY<DOUBLE>, " +
           "epochs_run INT, accepted_steps INT, mus ARRAY<DOUBLE>, " +
@@ -419,6 +422,25 @@ object Pipeline {
   def sgdScore(feat: DataFrame, params: DataFrame): DataFrame =
     applySgd(feat, params)
 
+  /** Hold a key-cardinality side table on the driver: collect it ONCE and
+    * hand it back as a local relation. Every later consumer (broadcast
+    * joins, filters, the sink tail) then reads the rows instead of
+    * re-running the aggregate that produced them — a lazy aggregate plan
+    * is re-executed, and re-broadcast, by each action that touches it.
+    * Only for frames bounded by the key count (thousands of rows); fact-
+    * size frames are never passed here. */
+  private def pinned(spark: SparkSession, df: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** A6 metrics with each key's routed family attached (keys missing from
+    * the routing table default "xgb") — shared by [[run]] and
+    * [[stageMetrics]]. */
+  private def labelled(metrics: DataFrame, modelTypes: DataFrame): DataFrame =
+    metrics
+      .join(broadcast(modelTypes.select((keyCols :+ col("model_type")): _*)),
+        key, "left")
+      .withColumn("model_type", coalesce(col("model_type"), lit("xgb")))
+
   /** Run E2+E3 over the canonical events frame (driver test schema:
     * event_id, ts, user_id, event_type, value). When `outDir` is set the
     * stage outputs are persisted through the reference's sink modes. */
@@ -429,24 +451,29 @@ object Pipeline {
       .filter(col("ts").isNotNull) // F8
       .withColumn("actual", col("value"))
 
-    // A4+J2: drop groups whose measure is entirely null. The same
-    // aggregate doubles as the WINDOW SKEW PROBE (n_rows — round 15):
-    // one |groups|-row frame feeds the semi-join and the hottest-key
-    // statistic, so the probe costs nothing beyond what A4 already paid.
-    val keyStats = base.groupBy(keyCols: _*)
-      .agg(count(col("actual")).as("nn"), count(lit(1)).as("n_rows"))
-      .localCheckpoint(eager = false)
-    val validKeys = keyStats.filter(col("nn") > 0).select(keyCols: _*)
-    val kept = base.join(validKeys, key, "left_semi")
-    val hotMax = hotKeyMax(keyStats)
+    // A4+J2: drop groups whose measure is entirely null. The same pinned
+    // per-key aggregate is the WINDOW SKEW PROBE (n_rows, round 15 — the
+    // hottest key's row count, read on the driver) and the A2 routing
+    // count: for a kept key (nn > 0) every row survives the semi-join, so
+    // n_rows IS modelRouting(kept)'s total_samples and routing needs no
+    // second aggregate over the fact table.
+    val keyStats = pinned(spark, base.groupBy(keyCols: _*)
+      .agg(count(col("actual")).as("nn"), count(lit(1)).as("n_rows")))
+    val kept = base.join(
+      keyStats.filter(col("nn") > 0).select(keyCols: _*), key, "left_semi")
+    val hotMax = keyStats.collect().map(_.getAs[Long]("n_rows"))
+      .foldLeft(0L)(math.max)
     val ops = WinOps(hotMax > cfg.windowRowsPerTask)
 
     // A2+J3: model routing side table
-    val modelTypes = Features.modelRouting(kept, key, cfg.modelThreshold)
+    val modelTypes = keyStats.filter(col("nn") > 0)
+      .select((keyCols :+ col("n_rows").as("total_samples") :+
+        Features.modelRoute(col("n_rows"), cfg.modelThreshold)
+          .as("model_type")): _*)
 
     // W5: split assignment annotated in place (a separate side-table
     // computation + join-back on event_id would cost two extra shuffles);
-    // the persisted side table is a projection of the same frame.
+    // the persisted side table is a projection of the featured frame.
     // cfg.approxSplit flips to the percentile split — the plan to run at
     // cluster scale, where the exact form's single-partition window is
     // the one serial stage in the whole pipeline.
@@ -455,26 +482,27 @@ object Pipeline {
         Features.chronoSplitApprox(kept, "ts", cfg.trainRatio, cfg.valRatio)
       else Features.chronoSplit(kept,
         order = Seq("ts", "event_id"), cfg.trainRatio, cfg.valRatio)
-    val splits = withSplit.select(col("event_id"), col("split"))
 
     // create_features (train.py:415-433): date trunc, high-impact count,
     // lag, train-order fill.
-    // localCheckpoint (LAZY, the Dedup convention): this frame feeds SIX
-    // consumers — normParams (via trainRows), metricsFor ×3,
-    // validateFeatures (both sides of its broadcast join), and latest —
-    // and upstream of it sits the scan → semi-join → W5 split window
-    // (single-partition in exact mode). Without persistence each consumer
-    // re-runs that whole chain, so one materialization of
-    // pipeline_validate paid the serial global-window stage twice. The
-    // persisted rows are the featured fact (no wide intermediates); first
-    // consumer to touch a partition fills the cache, the rest reuse it.
-    // The reference runs this as one in-memory pass too (train.py:415-433
-    // feeds every downstream stage from the same frame).
+    // localCheckpoint (LAZY, the Dedup convention): this frame feeds
+    // normParams (via trainRows), the predictor fit, the metrics
+    // aggregate, validateFeatures (both sides of its broadcast join),
+    // latest and the splits table — and upstream of it sits the scan →
+    // semi-join → W5 split window (single-partition in exact mode).
+    // Without persistence each consumer re-runs that whole chain, so one
+    // materialization of pipeline_validate paid the serial global-window
+    // stage twice. The persisted rows are the featured fact (no wide
+    // intermediates); first consumer to touch a partition fills the
+    // cache, the rest reuse it. The reference runs this as one in-memory
+    // pass too (train.py:415-433 feeds every downstream stage from the
+    // same frame).
     val featured = ops.ffill(
         ops.lag1(withSplit.withColumn("event_date", to_date(col("ts"))),
           "actual", "pred"),
         "pred", "pred_f")
       .localCheckpoint(eager = false)
+    val splits = featured.select(col("event_id"), col("split"))
 
     // Predictor selection (cfg.predictor): "ar1" fits the per-group OLS
     // line on the TRAIN split of this same frame (x = the ffilled lag,
@@ -483,7 +511,8 @@ object Pipeline {
     // keeps every downstream decimal chain rounding-free cross-engine.
     // Keys with no train fit keep the naive pred_f (the reference's
     // untrained-group fallback). The fit reads the lazily-checkpointed
-    // featured frame, so the feature chain still runs once.
+    // featured frame, so the feature chain still runs once; the fitted
+    // params are pinned, so the fit aggregate runs once too.
     // The fitted params frame is kept alongside the applied frame so the
     // sink tail can publish it as the `predictor_params` artifact —
     // without it, [[stageMetrics]] could only ever re-grade the naive
@@ -492,9 +521,9 @@ object Pipeline {
     val (predicted, predictorParams): (DataFrame, Seq[(String, DataFrame)]) =
       cfg.predictor match {
       case "ar1" =>
-        val params = Features.fitAr1(
+        val params = pinned(spark, Features.fitAr1(
           featured.filter(col("split") === "train"), key,
-          col("pred_f"), col("actual"))
+          col("pred_f"), col("actual")))
         (featured.join(broadcast(params), key, "left")
           .withColumn("pred_f",
             when(col("slope").isNotNull,
@@ -510,9 +539,9 @@ object Pipeline {
             "lag2", "x2")
           .drop("lag2")
           .localCheckpoint(eager = false)
-        val params = Features.fitAr2(
+        val params = pinned(spark, Features.fitAr2(
           feat2.filter(col("split") === "train"), key,
-          col("pred_f"), col("x2"), col("actual"))
+          col("pred_f"), col("x2"), col("actual")))
         (feat2.join(broadcast(params), key, "left")
           .withColumn("pred_f",
             when(col("b1").isNotNull && col("x2").isNotNull,
@@ -533,12 +562,12 @@ object Pipeline {
         // checkpoint as ar2: feat2 feeds two fit aggregates + the apply.
         val feat2 = routedFeatures(featured, ops, modelTypes)
           .localCheckpoint(eager = false)
-        val rnnParams = Features.fitAr2(
+        val rnnParams = pinned(spark, Features.fitAr2(
           feat2.filter(col("split") === "train" && col("__route") === "rnn"),
-          key, col("pred_f"), col("x2"), col("actual"))
-        val xgbParams = Features.regressionStumpPerGroup(
+          key, col("pred_f"), col("x2"), col("actual")))
+        val xgbParams = pinned(spark, Features.regressionStumpPerGroup(
           feat2.filter(col("split") === "train" && col("__route") === "xgb"),
-          key, col("pred_f"), col("actual"))
+          key, col("pred_f"), col("actual")))
         (applyRouted(feat2, rnnParams, xgbParams),
           Seq("predictor_params_rnn" -> rnnParams,
             "predictor_params_xgb" -> xgbParams))
@@ -559,10 +588,10 @@ object Pipeline {
         // reference can feed it anyway because an LSTM ignores constant
         // inputs gracefully; closed-form OLS cannot.
         val feat2 = seqFeatures(featured, ops).localCheckpoint(eager = false)
-        val params = Features.fitLinearPerGroup(
+        val params = pinned(spark, Features.fitLinearPerGroup(
           feat2.filter(col("split") === "train"), key,
           Seq(col("pred_f"), col("x2"), col("x3"), col("x4")),
-          col("actual"))
+          col("actual")))
         // ill-conditioned groups (collinear feature rows — the fit's
         // well_conditioned gate) are treated as UNTRAINED: filtered out
         // of the apply join so they keep the naive pred_f, the same
@@ -583,6 +612,7 @@ object Pipeline {
         // carries the moments WITH the coefficients: serve must
         // standardize with the TRAIN moments or the model is garbage
         // (the J4 norm-param-reuse lesson applied to features).
+        // sgdArtifact is already a driver-local one-row relation.
         val feat2 = seqFeatures(featured, ops).localCheckpoint(eager = false)
         val params = sgdArtifact(spark,
           feat2.filter(col("split") === "train"))
@@ -593,18 +623,20 @@ object Pipeline {
 
     // A5 on the TRAIN split only: norm-param side table (train.py:467-477)
     val trainRows = featured.filter(col("split") === "train")
-    val normParams = Features.normParams(trainRows, key, col("actual"))
+    val normParams = pinned(spark,
+      Features.normParams(trainRows, key, col("actual")))
 
     // A6 per split; validate/test reuse train norm params (J4) for the
     // denormalized error scale — the naive predictor works in raw units so
     // the reuse shows up as the denorm join, mirroring validate.py:258-287.
+    // ONE aggregate over (key, split), pinned; each per-split table is a
+    // filter of it (the per-group Samples ≥ 2 gate is per (key, split)
+    // either way, so the rows are those of three separate aggregates).
+    val metrics = pinned(spark, labelled(
+      Features.regressionMetrics(predicted, key :+ "split",
+        col("actual"), col("pred_f")), modelTypes))
     def metricsFor(split: String): DataFrame =
-      Features.regressionMetrics(
-        predicted.filter(col("split") === split), key,
-        col("actual"), col("pred_f"))
-        .join(broadcast(modelTypes.select((keyCols :+ col("model_type")): _*)),
-          key, "left")
-        .withColumn("model_type", coalesce(col("model_type"), lit("xgb")))
+      metrics.filter(col("split") === split).drop("split")
 
     val trainMetrics = metricsFor("train")
     val validateMetrics = metricsFor("val")
@@ -669,43 +701,53 @@ object Pipeline {
     // the artifacts a concurrent validate/test stage is reading (read via
     // Sinks.readSnapshot). Metrics tables keep the reference's
     // truncate-and-load semantics (db_connector.py:120-150).
+    // Every write targets its own table and keeps its own commit
+    // protocol, so the tail publishes in ONE concurrent pass: each write
+    // is bound by driver latency (planning, job dispatch, commit), and
+    // the side tables they read are pinned above, so running them one
+    // after another only queued that latency up.
     outDir.foreach { dir =>
-      Sinks.upsertSnapshot(spark, s"$dir/splits", splits,
-        key = Seq("event_id"), orderCol = "split")
-      Sinks.upsertSnapshot(spark, s"$dir/model_types", modelTypes,
-        key, orderCol = "total_samples")
-      Sinks.upsertSnapshot(spark, s"$dir/norm_params", normParams,
-        key, orderCol = "mn")
-      // REPLACE, not merge: the reference persists its model wholesale
-      // (train.py:555-567), so a retrain must not blend stale per-key
-      // (slope, intercept) rows for keys absent from the new fit with
-      // the fresh ones — versioned replace keeps concurrent readers of
-      // the prior version safe while making v=N+1 exactly this run's fit
-      // routed publishes one artifact PER FAMILY (predictor_params_rnn /
-      // predictor_params_xgb) — the reference persists each group's model
-      // under its family's registry, and grading a family with the other
-      // family's params would silently score the wrong model
-      predictorParams.foreach { case (name, p) =>
-        Sinks.replaceSnapshot(spark, s"$dir/$name", p) }
       // the window-skew probe statistic, persisted so validate/test can
       // route plain-vs-chunked WITHOUT re-scanning the fact table per
       // request (round 15) — routing is a performance choice with
       // oracle-identical results either way, so a stat that goes stale
       // between train and serve costs at most a suboptimal plan, never
       // a wrong answer. Replace-wholesale like the predictor params.
-      Sinks.replaceSnapshot(spark,
-        s"$dir/probe_stats",
-        spark.createDataFrame(
-          java.util.List.of(org.apache.spark.sql.Row(hotMax)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(
-              "max_key_rows", org.apache.spark.sql.types.LongType,
-              nullable = false)))))
-      Sinks.truncateAndLoad(trainMetrics, s"$dir/train_metrics")
-      Sinks.truncateAndLoad(validateMetrics, s"$dir/validate_metrics")
-      Sinks.truncateAndLoad(validateFeatures, s"$dir/validate_features")
-      Sinks.truncateAndLoad(testForecasts, s"$dir/test_forecasts")
-      Sinks.appendOrReplace(spark, liveForecasts, s"$dir/live_forecasts")
+      val probeStats = spark.createDataFrame(
+        java.util.List.of(org.apache.spark.sql.Row(hotMax)),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField(
+            "max_key_rows", org.apache.spark.sql.types.LongType,
+            nullable = false))))
+      Sinks.writeConcurrently(Seq[() => Any](
+        () => Sinks.upsertSnapshot(spark, s"$dir/splits", splits,
+          key = Seq("event_id"), orderCol = "split"),
+        () => Sinks.upsertSnapshot(spark, s"$dir/model_types", modelTypes,
+          key, orderCol = "total_samples"),
+        () => Sinks.upsertSnapshot(spark, s"$dir/norm_params", normParams,
+          key, orderCol = "mn")) ++
+        // REPLACE, not merge: the reference persists its model wholesale
+        // (train.py:555-567), so a retrain must not blend stale per-key
+        // (slope, intercept) rows for keys absent from the new fit with
+        // the fresh ones — versioned replace keeps concurrent readers of
+        // the prior version safe while making v=N+1 exactly this run's
+        // fit. routed publishes one artifact PER FAMILY
+        // (predictor_params_rnn / predictor_params_xgb) — the reference
+        // persists each group's model under its family's registry, and
+        // grading a family with the other family's params would silently
+        // score the wrong model
+        predictorParams.map { case (name, p) =>
+          () => Sinks.replaceSnapshot(spark, s"$dir/$name", p) } ++
+        Seq(
+          () => Sinks.replaceSnapshot(spark, s"$dir/probe_stats", probeStats),
+          () => Sinks.truncateAndLoad(trainMetrics, s"$dir/train_metrics"),
+          () => Sinks.truncateAndLoad(validateMetrics,
+            s"$dir/validate_metrics"),
+          () => Sinks.truncateAndLoad(validateFeatures,
+            s"$dir/validate_features"),
+          () => Sinks.truncateAndLoad(testForecasts, s"$dir/test_forecasts"),
+          () => Sinks.appendOrReplace(spark, liveForecasts,
+            s"$dir/live_forecasts")))
     }
 
     Result(splits, modelTypes, normParams,
@@ -865,11 +907,8 @@ object Pipeline {
         applySgd(seqFeatures(featured, ops), params).drop("x2", "x3", "x4")
       case _ => featured
     }
-    Features.regressionMetrics(
+    labelled(Features.regressionMetrics(
       predicted.filter(col("split") === split), key,
-      col("actual"), col("pred_f"))
-      .join(broadcast(modelTypes.select((keyCols :+ col("model_type")): _*)),
-        key, "left")
-      .withColumn("model_type", coalesce(col("model_type"), lit("xgb")))
+      col("actual"), col("pred_f")), modelTypes)
   }
 }

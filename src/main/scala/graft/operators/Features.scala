@@ -566,12 +566,21 @@ object Features {
   def modelRouting(df: DataFrame, key: Seq[String], threshold: Int = 50): DataFrame =
     df.groupBy(key.map(col): _*)
       .agg(count(lit(1)).as("total_samples"))
-      .withColumn("model_type",
-        when(col("total_samples") >= threshold, lit("rnn")).otherwise(lit("xgb")))
+      .withColumn("model_type", modelRoute(col("total_samples"), threshold))
+
+  /** The A2 routing rule on a per-key sample count — shared by
+    * [[modelRouting]] and callers that already hold the count (the
+    * Pipeline derives routing from its A4 key statistics). */
+  def modelRoute(totalSamples: Column, threshold: Int): Column =
+    when(totalSamples >= threshold, lit("rnn")).otherwise(lit("xgb"))
 
   /** W5 — exact chronological 70/15/15 row-positional split
     * (train.py:131-153): sort by time, first floor(n*0.7) rows → train,
     * next floor(n*0.15) → val, remainder → test.
+    * The boundaries are computed in DOUBLE, as the reference's Python
+    * floats compute them: at n = 2800, 2800·0.7 = 1959.9999999999998, so
+    * train holds 1959 rows, not the 1960 that decimal arithmetic gives.
+    * The registered oracles type the product DOUBLE to match.
     * NOTE: exact row positions require one global window — fine at test
     * scale; use [[chronoSplitApprox]] at cluster scale. */
   def chronoSplit(df: DataFrame, order: Seq[String],

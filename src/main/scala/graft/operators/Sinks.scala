@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * |------|---------------------------------------------|------|
   * | SNK1 | keyed upsert (ON DUPLICATE KEY UPDATE)      | [[upsertSnapshot]] (versioned merge-on-write) |
   * | SNK2 | truncate-and-load                           | [[truncateAndLoad]] (mode=overwrite) |
-  * | SNK3 | append if empty else replace (first-run)    | [[appendOrReplace]] (count-gated SaveMode) |
+  * | SNK3 | append if empty else replace (first-run)    | [[appendOrReplace]] (emptiness-gated SaveMode) |
   * | SNK4 | row-count probe                             | [[rowCount]] |
   * | SNK5 | object-store snapshot replace               | [[snapshotReplace]] (partitioned overwrite) |
   *
@@ -45,13 +45,38 @@ object Sinks {
 
   /** SNK3 — the reference's first-run switch (db_connector.py:189-198,
     * test.py:226-230): append when the table is empty/missing, replace
-    * otherwise. */
+    * otherwise. The gate is an emptiness probe (a missing path, or a
+    * one-row `isEmpty` read), not a full [[rowCount]]. */
   def appendOrReplace(spark: SparkSession, df: DataFrame, path: String): SaveMode = {
-    val mode =
-      if (rowCount(spark, path) == 0L) SaveMode.Append else SaveMode.Overwrite
+    val empty = !tableExists(spark, path) || spark.read.parquet(path).isEmpty
+    val mode = if (empty) SaveMode.Append else SaveMode.Overwrite
     df.write.mode(mode).parquet(path)
     mode
   }
+
+  /** Publish independent table writes at once: one thread per write on a
+    * pool owned by this call, shut down before it returns. Waits for
+    * EVERY write to settle, then rethrows the first failure in `writes`
+    * order (later ones ride along as suppressed), so a caller never sees
+    * an exception while a sibling write is still in flight. The writes
+    * must target different tables; each keeps its own commit protocol. */
+  def writeConcurrently(writes: Seq[() => Any]): Unit =
+    if (writes.nonEmpty) {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        writes.size, r => {
+          val t = new Thread(r, "graft-sink-write"); t.setDaemon(true); t })
+      try {
+        val pending = writes.map(w => pool.submit(new java.util.concurrent
+          .Callable[Any] { def call(): Any = w() }))
+        val failures = pending.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException =>
+            Some(e.getCause) }
+        }
+        failures.headOption.foreach { first =>
+          failures.tail.foreach(first.addSuppressed); throw first }
+      } finally pool.shutdown()
+    }
 
   /** SNK5 — bucket snapshot replace (Upload DAG:24-58): delete-and-rewrite
     * the landing prefix, preserving the relative layout via partitioning. */

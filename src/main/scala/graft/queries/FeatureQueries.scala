@@ -308,7 +308,9 @@ object FeatureQueries {
 
     // W5 — exact chronological 70/15/15 row-positional split
     // (train.py:131-153): one global window at test scale;
-    // chronoSplitApprox is the 100-TB path (see Features.scala).
+    // chronoSplitApprox is the 100-TB path (see Features.scala). The
+    // oracle's n is DOUBLE: the boundaries are the reference's float
+    // arithmetic (floor(2800 · 0.7) = 1959), not DuckDB's decimal product.
     "w5_chrono_split" -> QueryDef(
       (s, dir) => Features.chronoSplit(
         Tables.events(s, dir).select(col("event_id"), col("ts")),
@@ -317,7 +319,7 @@ object FeatureQueries {
       """WITH r AS (
         |  SELECT event_id,
         |    row_number() OVER (ORDER BY ts, event_id) AS rn,
-        |    count(*) OVER () AS n
+        |    CAST(count(*) OVER () AS DOUBLE) AS n
         |  FROM events)
         |SELECT event_id,
         |  CASE WHEN rn <= floor(n * 0.7) THEN 'train'
@@ -338,7 +340,7 @@ object FeatureQueries {
       """WITH r AS (
         |  SELECT event_id,
         |    row_number() OVER (ORDER BY ts, event_id) AS rn,
-        |    count(*) OVER () AS n
+        |    CAST(count(*) OVER () AS DOUBLE) AS n
         |  FROM events)
         |SELECT event_id,
         |  CASE WHEN rn <= floor(n * 0.7) THEN 'train'
@@ -961,7 +963,7 @@ object FeatureQueries {
       """WITH ordered AS (
         |  SELECT event_id, ts, user_id, event_type, value,
         |    row_number() OVER (ORDER BY ts, event_id) AS rn,
-        |    count(*) OVER () AS n_total
+        |    CAST(count(*) OVER () AS DOUBLE) AS n_total
         |  FROM events),
         |feat AS (
         |  SELECT user_id, event_type, value, rn, n_total,

@@ -20,7 +20,10 @@ object PipelineQueries {
   /** Shared DuckDB CTE chain `base → valid → kept → spl → mt → f1 → f2`:
     * hygiene, all-null-group drop, 70/15/15 row-positional split, model
     * routing, lag-1 predictor, train-order forward fill. One source of
-    * truth for every pipeline oracle. */
+    * truth for every pipeline oracle. The split's row count is DOUBLE, so
+    * floor(n · ratio) is taken in doubles as Features.chronoSplit (and the
+    * reference's Python floats) take it; DuckDB's decimal product differs
+    * at n = 2800 (1960 against 1959). */
   private val duckF2Ctes =
     """base AS (
       |  SELECT event_id, ts, user_id, event_type, value AS actual
@@ -37,7 +40,7 @@ object PipelineQueries {
       |         ELSE 'test' END AS split
       |  FROM (SELECT event_id,
       |          row_number() OVER (ORDER BY ts, event_id) AS rn,
-      |          count(*) OVER () AS n
+      |          CAST(count(*) OVER () AS DOUBLE) AS n
       |        FROM kept)),
       |mt AS (
       |  SELECT user_id, event_type,

@@ -70,7 +70,9 @@ object OracleSql {
     * event_type, R2, MSE, Samples)` (mirrors Features.regressionMetrics —
     * see its scaladoc for the determinism rationale). */
   /** The A14 AR(1) training CTE chain over `events`: global 70/15/15 row-
-    * positional split markers (rn, n_total — the w5_chrono_split shape),
+    * positional split markers (rn, n_total — the w5_chrono_split shape,
+    * n_total DOUBLE so the boundaries take Features.chronoSplit's double
+    * arithmetic),
     * keyed lag feature `x`, DECIMAL-exact normal-equation sums under the
     * |x| < 1e11 domain guard, and the slope in `m(user_id, event_type,
     * n_fit, sx, sy, slope)` (mirrors Features.fitAr1 — see its scaladoc
@@ -80,7 +82,7 @@ object OracleSql {
     """ordered AS (
       |  SELECT event_id, ts, user_id, event_type, value,
       |    row_number() OVER (ORDER BY ts, event_id) AS rn,
-      |    count(*) OVER () AS n_total
+      |    CAST(count(*) OVER () AS DOUBLE) AS n_total
       |  FROM events),
       |feat AS (
       |  SELECT user_id, event_type, value, rn, n_total,
@@ -124,7 +126,7 @@ object OracleSql {
     """ordered AS (
       |  SELECT event_id, ts, user_id, event_type, value,
       |    row_number() OVER (ORDER BY ts, event_id) AS rn,
-      |    count(*) OVER () AS n_total
+      |    CAST(count(*) OVER () AS DOUBLE) AS n_total
       |  FROM events),
       |feat AS (
       |  SELECT user_id, event_type, value, rn, n_total,

@@ -356,6 +356,24 @@ class FeaturesSpec extends SparkSpecBase {
     assert(a1 === a2)
   }
 
+  test("W5 split arithmetic is the reference's Python floats: n = 2800 " +
+    "gives 1959/420/421, not decimal's 1960 (train.py:131-153)") {
+    // 2800 * 0.7 = 1959.9999999999998 in doubles (int() → 1959) while an
+    // exact decimal product is 1960; 2800 * 0.15 = 420.0 either way
+    assert(math.floor(2800 * 0.7) === 1959.0)
+    val df = (1 to 2800).toDF("id")
+    for (split <- Seq(Features.chronoSplit(df, order = Seq("id")),
+        Features.chronoSplitDistributed(df, order = Seq("id")))) {
+      val counts = split.groupBy("split").count().collect()
+        .map(r => r.getAs[String]("split") -> r.getAs[Long]("count")).toMap
+      assert(counts === Map("train" -> 1959L, "val" -> 420L, "test" -> 421L))
+      val at = split.filter(col("id").isin(1959, 1960, 2379, 2380)).collect()
+        .map(r => r.getAs[Int]("id") -> r.getAs[String]("split")).toMap
+      assert(at === Map(1959 -> "train", 1960 -> "val", 2379 -> "val",
+        2380 -> "test"))
+    }
+  }
+
   test("chronoSplitApprox: empty and all-null inputs do not crash (ADVICE r01)") {
     val empty = Seq.empty[(Int, java.sql.Timestamp)].toDF("id", "ts")
     assert(Features.chronoSplitApprox(empty, "ts").collect().isEmpty)

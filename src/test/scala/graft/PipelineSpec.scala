@@ -322,6 +322,12 @@ class PipelineSpec extends SparkSpecBase {
     assert(Sinks.appendOrReplace(spark, df2, dir) === SaveMode.Overwrite)
     assert(Sinks.rowCount(spark, dir) === 2L) // replaced, not appended
     assert(spark.read.parquet(dir).agg(min(col("id"))).collect().head.getLong(0) === 2L)
+    // the gate is emptiness, not existence: a table that exists but holds
+    // no rows is appended to
+    val empty = Files.createTempDirectory("graft_snk3_empty").toString + "/live"
+    Seq.empty[(Long, Double)].toDF("id", "v").write.parquet(empty)
+    assert(Sinks.appendOrReplace(spark, df1, empty) === SaveMode.Append)
+    assert(Sinks.rowCount(spark, empty) === 1L)
   }
 
   test("SNK1 snapshot upsert: versioned merge-on-write, batch wins on key") {
@@ -478,4 +484,129 @@ class PipelineSpec extends SparkSpecBase {
     // any missing feature -> naive passthrough, never NULL
     assert(out(1L) === 8.0 && out(2L) === 8.0 && out(3L) === 8.0)
   }
+
+  /** A frame's column names and its rows as strings, sorted — equal for
+    * two frames holding the same table whatever their plans or row order. */
+  private def content(df: org.apache.spark.sql.DataFrame) =
+    (df.columns.toSeq,
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
+
+  test("run() publishes exactly the Result it returns, for every predictor; " +
+    "validate/test graded from the artifacts equal the Result") {
+    val ev = Tables.events(spark, sf0001)
+    for (p <- Seq("naive", "ar1", "ar2", "routed", "seq", "sgd")) {
+      val dir = Files.createTempDirectory(s"graft_publish_$p").toString
+      val cfg = Pipeline.Config(predictor = p, modelThreshold = 14)
+      val r = Pipeline.run(spark, ev, cfg, Some(dir))
+      def snap(t: String) = Sinks.readSnapshot(spark, s"$dir/$t")
+      def table(t: String) = spark.read.parquet(s"$dir/$t")
+      Seq(
+        "splits" -> (snap("splits"), r.splits),
+        "model_types" -> (snap("model_types"), r.modelTypes),
+        "norm_params" -> (snap("norm_params"), r.normParams),
+        "train_metrics" -> (table("train_metrics"), r.trainMetrics),
+        "validate_metrics" -> (table("validate_metrics"), r.validateMetrics),
+        "validate_features" ->
+          (table("validate_features"), r.validateFeatures),
+        "test_forecasts" -> (table("test_forecasts"), r.testForecasts),
+        "live_forecasts" -> (table("live_forecasts"), r.liveForecasts)
+      ).foreach { case (t, (published, returned)) =>
+        assert(content(published) === content(returned), s"$p: $t")
+      }
+      assert(content(Pipeline.stageMetrics(spark, ev, dir, "val", cfg)) ===
+        content(r.validateMetrics), s"$p: validate from artifacts")
+      assert(content(Pipeline.stageMetrics(spark, ev, dir, "test", cfg)) ===
+        content(r.testForecasts), s"$p: test from artifacts")
+    }
+  }
+
+  /** Jobs started and ended under one value of a local property — the
+    * spec's own tag, so jobs of anything else in the JVM do not count.
+    * Pool threads a run creates inherit the tag, as do Spark's broadcast
+    * and subquery threads (they copy the caller's local properties). */
+  private final class TaggedJobs(tag: String)
+      extends org.apache.spark.scheduler.SparkListener {
+    private val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    def started: Int = mine.size
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      if (Option(e.properties)
+          .exists(_.getProperty(TagKey) == tag)) mine.add(e.jobId)
+    override def onJobEnd(
+        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+      if (mine.contains(e.jobId)) ended.incrementAndGet()
+  }
+  private val TagKey = "graft.spec.tag"
+
+  /** Run `body` with its jobs tagged and counted; the count is read after
+    * the listener bus has delivered every event the body produced. */
+  private def countingJobs[A](tag: String)(body: => A): (TaggedJobs, A) = {
+    val sc = spark.sparkContext
+    val jobs = new TaggedJobs(tag)
+    sc.addSparkListener(jobs)
+    sc.setLocalProperty(TagKey, tag)
+    try {
+      val a = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (jobs, a)
+    } finally {
+      sc.setLocalProperty(TagKey, null)
+      sc.removeSparkListener(jobs)
+    }
+  }
+
+  test("routed run() job budget; a failing tail write throws only after " +
+    "every other write settled, and /train answers a soft error") {
+    val ev = Tables.events(spark, sf0001)
+    val cfg = Pipeline.Config(predictor = "routed", modelThreshold = 14)
+    // warm-up on its own directory, so the counted run's plans and the
+    // fixture scan are not first-time
+    Pipeline.run(spark, ev, cfg,
+      Some(Files.createTempDirectory("graft_jobs_warm").toString))
+    val dir = Files.createTempDirectory("graft_jobs").toString
+    val (jobs, _) = countingJobs("routed-run") {
+      Pipeline.run(spark, ev, cfg, Some(dir)) }
+    // the per-key side tables are pinned once and the tail writes in one
+    // pass; re-running or re-broadcasting an aggregate per consumer
+    // shows up here as extra jobs
+    assert(jobs.started <= MaxRoutedRunJobs,
+      s"routed run() ran ${jobs.started} jobs, budget $MaxRoutedRunJobs")
+    assert(jobs.ended.get === jobs.started)
+
+    // a plain FILE where the model_types table goes: its write fails, the
+    // ten other writes of the tail still commit before run() throws
+    val broken = Files.createTempDirectory("graft_jobs_broken").toString
+    Files.writeString(java.nio.file.Path.of(s"$broken/model_types"), "x")
+    val (failed, thrown) = countingJobs("routed-fail") {
+      scala.util.Try(Pipeline.run(spark, ev, cfg, Some(broken))) }
+    assert(thrown.isFailure, "a failed tail write must fail run()")
+    assert(failed.ended.get === failed.started,
+      "run() returned while a sibling write still had jobs in flight")
+    Seq("splits", "norm_params", "predictor_params_rnn",
+      "predictor_params_xgb", "probe_stats").foreach(t =>
+      assert(Sinks.hasCommittedVersion(spark, s"$broken/$t"), t))
+    Seq("train_metrics", "validate_metrics", "validate_features",
+      "test_forecasts", "live_forecasts").foreach(t =>
+      assert(Files.exists(java.nio.file.Path.of(s"$broken/$t/_SUCCESS")), t))
+
+    // the serving surface reports the same failure as data, not a 5xx
+    val server = Serve.start(spark, () => ev, broken, port = 0)
+    try {
+      val resp = java.net.http.HttpClient.newHttpClient().send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+          s"http://127.0.0.1:${server.getAddress.getPort}/train"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
+            """{"predictor": "routed", "MODEL_THRESHOLD": 14}""")).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode === 200)
+      assert(resp.body.contains("\"error\"") &&
+        resp.body.contains("Training failed"), resp.body)
+    } finally server.stop(0)
+  }
+
+  /** Jobs one routed run() with `outDir` may launch on the sf0.001
+    * fixture: measured 40 with the side tables pinned; re-running them
+    * per consumer took 71. */
+  private val MaxRoutedRunJobs = 40
 }
