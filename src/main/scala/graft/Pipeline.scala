@@ -34,7 +34,7 @@ import graft.operators.{Features, Sinks}
   * aggregate plan, by contrast, is re-run and re-broadcast by every
   * consumer. Fact-size frames (splits, the featured and predicted
   * frames, validateFeatures) are never collected. The sink tail then
-  * publishes its 9–11 tables in one concurrent pass
+  * publishes its 8–10 tables in one concurrent pass
   * ([[Sinks.writeConcurrently]]): the writes target different tables,
   * each is bound by driver latency rather than executor work, and each
   * keeps its own commit protocol.
@@ -83,8 +83,9 @@ object Pipeline {
     * per key) and the chunked skew scale paths
     * ([[Features.lag1Chunked]]/[[Features.ffillChunked]], parallelism per
     * (key, month)). One cheap per-key row-count probe (folded into the A4
-    * aggregate the pipeline already runs) compares the HOTTEST key
-    * against this bound; only when it exceeds the bound do the chunked
+    * aggregate the pipeline already runs; validate/test read it back as
+    * the largest published `total_samples`) compares the HOTTEST kept
+    * key against this bound; only when it exceeds the bound do the chunked
     * forms engage — results are oracle-identical either way, so the
     * switch trades plan shape, never semantics. Default 4M rows ≈ what a
     * single window task absorbs comfortably; the sf fixtures never reach
@@ -205,8 +206,8 @@ object Pipeline {
     * (Features.scala round-14/15 contract), so the dispatch is purely a
     * plan choice made from a measured statistic, never a semantics
     * choice. Chunk = calendar month of `ts` (epoch-micros / 30 days) —
-    * monotone in the first time column, the [[Features.ffillChunked]]
-    * guard contract; lag-2 composes as lag∘lag (exact, nulls verbatim,
+    * monotone in the first time column, the `Features.chunkScan` guard
+    * contract; lag-2 composes as lag∘lag (exact, nulls verbatim,
     * each application carrying its own chunk boundary). */
   private final case class WinOps(useChunked: Boolean) {
     private val w = Features.keyWindow(key, timeOrder)
@@ -216,12 +217,9 @@ object Pipeline {
       if (useChunked) Features.lag1Chunked(df, c, key, timeOrder, chunk, out)
       else df.withColumn(out, Features.lag1(col(c), w))
     def lag2(df: DataFrame, c: String, out: String): DataFrame =
-      if (useChunked) {
-        val t = "__wo_lag1"
-        Features.lag1Chunked(
-          Features.lag1Chunked(df, c, key, timeOrder, chunk, t),
-          t, key, timeOrder, chunk, out).drop(t)
-      } else df.withColumn(out, lag(col(c), 2).over(w))
+      if (useChunked) lag1(lag1(df, c, "__wo_lag1"), "__wo_lag1", out)
+        .drop("__wo_lag1")
+      else df.withColumn(out, lag(col(c), 2).over(w))
     def ffill(df: DataFrame, c: String, out: String): DataFrame =
       if (useChunked) Features.ffillChunked(df, c, key, timeOrder, chunk, out)
       else df.withColumn(out, Features.ffill(col(c), w))
@@ -452,17 +450,18 @@ object Pipeline {
       .withColumn("actual", col("value"))
 
     // A4+J2: drop groups whose measure is entirely null. The same pinned
-    // per-key aggregate is the WINDOW SKEW PROBE (n_rows, round 15 — the
-    // hottest key's row count, read on the driver) and the A2 routing
-    // count: for a kept key (nn > 0) every row survives the semi-join, so
-    // n_rows IS modelRouting(kept)'s total_samples and routing needs no
-    // second aggregate over the fact table.
+    // per-key aggregate is the WINDOW SKEW PROBE (the hottest KEPT key's
+    // row count, read on the driver — those are the rows the windows
+    // see) and the A2 routing count: for a kept key (nn > 0) every row
+    // survives the semi-join, so n_rows IS modelRouting(kept)'s
+    // total_samples and routing needs no second aggregate over the fact
+    // table.
     val keyStats = pinned(spark, base.groupBy(keyCols: _*)
       .agg(count(col("actual")).as("nn"), count(lit(1)).as("n_rows")))
     val kept = base.join(
       keyStats.filter(col("nn") > 0).select(keyCols: _*), key, "left_semi")
-    val hotMax = keyStats.collect().map(_.getAs[Long]("n_rows"))
-      .foldLeft(0L)(math.max)
+    val hotMax = keyStats.collect().filter(_.getAs[Long]("nn") > 0)
+      .map(_.getAs[Long]("n_rows")).foldLeft(0L)(math.max)
     val ops = WinOps(hotMax > cfg.windowRowsPerTask)
 
     // A2+J3: model routing side table
@@ -707,18 +706,6 @@ object Pipeline {
     // the side tables they read are pinned above, so running them one
     // after another only queued that latency up.
     outDir.foreach { dir =>
-      // the window-skew probe statistic, persisted so validate/test can
-      // route plain-vs-chunked WITHOUT re-scanning the fact table per
-      // request (round 15) — routing is a performance choice with
-      // oracle-identical results either way, so a stat that goes stale
-      // between train and serve costs at most a suboptimal plan, never
-      // a wrong answer. Replace-wholesale like the predictor params.
-      val probeStats = spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(hotMax)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(
-            "max_key_rows", org.apache.spark.sql.types.LongType,
-            nullable = false))))
       Sinks.writeConcurrently(Seq[() => Any](
         () => Sinks.upsertSnapshot(spark, s"$dir/splits", splits,
           key = Seq("event_id"), orderCol = "split"),
@@ -739,7 +726,6 @@ object Pipeline {
         predictorParams.map { case (name, p) =>
           () => Sinks.replaceSnapshot(spark, s"$dir/$name", p) } ++
         Seq(
-          () => Sinks.replaceSnapshot(spark, s"$dir/probe_stats", probeStats),
           () => Sinks.truncateAndLoad(trainMetrics, s"$dir/train_metrics"),
           () => Sinks.truncateAndLoad(validateMetrics,
             s"$dir/validate_metrics"),
@@ -843,23 +829,13 @@ object Pipeline {
     val base = events
       .filter(col("ts").isNotNull)
       .withColumn("actual", col("value"))
-    // same skew statistic as run()'s probe, read from the PERSISTED
-    // probe_stats artifact (round 15: an eager per-request full-scan
-    // aggregate here roughly doubled each serving stage's I/O — run()
-    // already paid for the statistic inside A4 and now publishes it).
-    // Pre-probe_stats artifact dirs fall back to the live aggregate;
-    // either way routing is performance-only, results are
-    // oracle-identical on both paths.
-    // gate on a COMMITTED version, not bare directory existence (round-16
-    // advice): a crash during the first probe_stats write leaves a dir
-    // with no committed version, and readSnapshot would throw instead of
-    // taking the documented live-aggregate fallback
-    val probeDir = s"$outDir/probe_stats"
-    val hotMax =
-      if (Sinks.hasCommittedVersion(spark, probeDir))
-        Sinks.readSnapshot(spark, probeDir)
-          .head().getAs[Long]("max_key_rows")
-      else Features.maxKeyRows(base, key)
+    // same skew statistic as run()'s probe: for kept keys n_rows IS the
+    // published total_samples, so the hottest key comes from the routing
+    // table this stage reads anyway. Routing is a plan choice with
+    // oracle-identical results either way, so a statistic that goes
+    // stale between train and serve costs at most a suboptimal plan.
+    val hot = modelTypes.agg(max(col("total_samples")).cast("long")).head()
+    val hotMax = if (hot.isNullAt(0)) 0L else hot.getLong(0)
     val ops = WinOps(hotMax > cfg.windowRowsPerTask)
     val featured = ops.ffill(
       ops.lag1(base.join(splits, Seq("event_id")), "actual", "pred"),

@@ -939,8 +939,8 @@ object Dedup {
     require(n >= 2 && n <= 64, s"n must be in [2, 64], got $n")
     graft.functions.GraftFunctions.register(docs.sparkSession)
     // The whole per-row policy fused into ONE native pass
-    // (graft.functions.SpanScrubRow): the composable HOF form below
-    // ([[spanScrubRowwiseHof]], kept as the equivalence reference) paid an
+    // (graft.functions.SpanScrubRow): the composable HOF form (kept
+    // test-side as HofReferences.spanScrubRowwiseHof) paid an
     // interpreted array_position scan per gram — O(G²) string compares —
     // and was the suite's slowest row at sf0.1 (30.3 s → this form 1.2 s,
     // same policy, spec- and oracle-pinned equal).
@@ -951,45 +951,6 @@ object Dedup {
         col("__s").getField("n_tokens").as("n_tokens"),
         col("__s").getField("n_removed").as("n_removed"),
         col("__s").getField("text_clean").as("text_clean"))
-  }
-
-  /** The composable HOF form [[spanScrubRowwise]] claims policy equality
-    * with; test-only reference (the hyperplaneSignatureHof convention). */
-  private[graft] def spanScrubRowwiseHof(docs: DataFrame, n: Int): DataFrame = {
-    require(n >= 2 && n <= 64, s"n must be in [2, 64], got $n")
-    val g = n - 1
-    val grams = when(col("__m") >= n,
-      transform(sequence(lit(1), col("__m") - g),
-        i => array_join(slice(col("__ws"), i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-    // sequence(1, 0) DESCENDS for gram-less docs (the shingles guard) —
-    // gate before generating positions
-    val dups = when(size(col("__grams")) > 0,
-      transform(sequence(lit(1), size(col("__grams"))),
-        i => array_position(col("__grams"), element_at(col("__grams"), i)) < i))
-      .otherwise(array().cast("array<boolean>"))
-    val removed = transform(sequence(lit(1), col("__m")), k => {
-      val lo = greatest(lit(1), k - g)
-      val hi = least(k, col("__m") - g)
-      // sequence(lo, hi) DESCENDS when lo > hi (the shingles guard) —
-      // gate on coverage first
-      when(hi >= lo,
-        forall(sequence(lo, hi), i => element_at(col("__dups"), i)))
-        .otherwise(lit(false))
-    })
-    val keptPos = filter(sequence(lit(1), col("__m")),
-      k => !element_at(col("__removed"), k))
-    docs
-      .withColumn("__ws", tokens(coalesce(col("text"), lit(""))))
-      .withColumn("__m", size(col("__ws")))
-      .withColumn("__grams", grams)
-      .withColumn("__dups", dups)
-      .withColumn("__removed", removed)
-      .select(col("doc_id"),
-        col("__m").cast("long").as("n_tokens"),
-        size(filter(col("__removed"), x => x)).cast("long").as("n_removed"),
-        array_join(transform(keptPos, k => element_at(col("__ws"), k)), " ")
-          .as("text_clean"))
   }
 
   /** Pair generation from a PREBUILT [[simhashSketch]] frame — callers

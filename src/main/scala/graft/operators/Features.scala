@@ -57,151 +57,132 @@ object Features {
         .rowsBetween(Window.unboundedPreceding, 0))
 
   // ------------------------------------------------------------------
-  // CHUNKED order-dependent windows (round 14) — the skew scale path
-  // for W1/W2. A per-key window puts EVERY row of a key into ONE task;
-  // salting is unsound for sequence semantics (lag/ffill need row
-  // adjacency), so a hot key (one currency holding half the corpus —
-  // the measured 1.8-2.4x straggler in BENCH_SF1.md's skew table, and
-  // unboundedly worse at 100 TB) is the one shape the plain forms
-  // cannot absorb. The chunked forms split each key by a CONTIGUOUS
-  // time expression (e.g. the event month), run the window inside each
-  // (key, chunk) — parallelism now per chunk, not per key — and stitch
-  // chunk boundaries through a per-(key, chunk) SUMMARY table that is
-  // C rows per key (tiny: its own window costs nothing, and the
-  // join-back broadcasts). Results are IDENTICAL to the plain forms on
-  // any input — pinned by spec equality and by registering the chunked
-  // rows against the SAME DuckDB oracles as w1/w2.
+  // CHUNKED order-dependent windows — the skew scale path. A per-key
+  // window puts EVERY row of a key into ONE task; salting is unsound for
+  // sequence semantics (lag/ffill need row adjacency), so a hot key (one
+  // currency holding half the corpus — the measured 1.8-2.4x straggler
+  // in BENCH_SF1.md's skew table, unboundedly worse at 100 TB) is the
+  // one shape the plain forms cannot absorb. Every chunked form is one
+  // instance of [[chunkScan]]; results are IDENTICAL to the plain forms
+  // on any input — pinned by spec equality and by registering the
+  // chunked rows against the SAME DuckDB oracles as their plain twins.
 
-  /** The chunk-monotonicity contract, ENFORCED (round 15): inside the
-    * per-(key, chunk) summary table (C rows per key — the check is
-    * free), the cumulative max of earlier chunks' `time.head` must not
-    * exceed the current chunk's min. A non-monotone `chunk` (e.g. a
-    * hash) interleaves rows across chunks and silently corrupts the
-    * boundary carries; this turns that into a loud runtime failure,
-    * the `jaccardPairs.maxRows` posture. Null-interval chunks (all
-    * null time) never fire — they carry no ordering claim. The check
-    * is `>=`, not `>` (round 15): a shared boundary instant means the
-    * SAME `timeHead` value sits in two chunks, which only a chunk that
-    * is not a function of `timeHead` can produce — and then the plain
-    * order's tiebreak columns may interleave the tied rows across the
-    * chunks, the exact unorderable shape the guard exists to catch. A
-    * chunk computed from `timeHead` (every registered caller: month,
-    * day, floor(t/w)) can never trip it — equal times land in one
-    * chunk, so consecutive intervals are strictly separated. Returns
-    * the guarded carry expression: `carry` unless an overlap is seen. */
-  private[operators] def chunkGuard(op: String, timeHead: String,
-                                    carry: Column, wOrd: WindowSpec): Column = {
+  /** The chunk-stitch combinator: a scan whose carry is associative
+    * (Blelloch, "Prefix Sums and Their Applications", 1990), split by a
+    * CONTIGUOUS chunk of the order so parallelism is per (key, chunk)
+    * instead of per key:
+    *
+    *  1. `local` adds its window columns inside each (key, chunk), over
+    *     the given (unframed) order window;
+    *  2. `summary` aggregates each (key, chunk) to one row — C rows per
+    *     key, so everything after it is trivially small;
+    *  3. `carry` adds its columns over that summary, in chunk order (the
+    *     scan direction; its last column is the carry) — each chunk's
+    *     carry combines STRICTLY EARLIER chunks only;
+    *  4. the carry joins back onto the rows null-safely.
+    *
+    * Returns the frame with the local columns and the carry appended.
+    * `reverse` scans both the rows and the chunks backwards (asc
+    * nulls-first flips to desc nulls-last: an exact reversal when the
+    * order ends in a unique tiebreak).
+    *
+    * Guard: `chunk` must be MONOTONE in `order.head` (contiguous ranges;
+    * a hash would interleave rows and silently corrupt the carries). In
+    * ascending chunk order, an earlier chunk's max `order.head` that
+    * reaches a later chunk's min raises a descriptive error. Null
+    * intervals (all-null time) never fire. The check is `>=`, not `>`:
+    * a shared boundary instant means one `order.head` value sits in two
+    * chunks, which only a chunk that is not a function of it can produce
+    * — and then the plain order's tiebreak may interleave the tied rows
+    * across chunks. A chunk computed from `order.head` (every registered
+    * caller: month, day, floor(t/w)) can never trip it.
+    *
+    * Join-back: the plain forms treat a NULL key or chunk value as a
+    * real partition, and an equi-join never matches null = null, so
+    * every join key is `<=>` (the [[ewmaBucketed]] posture). The join
+    * strategy stays with Catalyst/AQE: the summary is broadcast-small
+    * for a skewed few-key corpus, and the shuffled join is fine either
+    * way (`<=>` still hashes as an equi-join key).
+    *
+    * Not instances: [[ewmaBucketed]] (a band join over a global row
+    * index) and [[rangeMovingAggBucketed]] (prefix sums over densified
+    * buckets) carry no running value across chunks. */
+  private[operators] def chunkScan(df: DataFrame, op: String, tag: String,
+                                   key: Seq[String], order: Seq[Column],
+                                   timeName: String, chunk: Column,
+                                   reverse: Boolean = false)(
+      local: WindowSpec => Seq[(String, Column)],
+      summary: Seq[Column],
+      carry: WindowSpec => Seq[(String, Column)]): DataFrame = {
+    val CHU = s"${tag}_chunk"
+    val kc = key.map(col)
+    def add(d: DataFrame, cs: Seq[(String, Column)]): DataFrame =
+      cs.foldLeft(d) { case (acc, (n, c)) => acc.withColumn(n, c) }
+    val scanOrder = if (reverse) order.map(_.desc_nulls_last) else order
+    val loc = add(df.withColumn(CHU, chunk),
+      local(Window.partitionBy((kc :+ col(CHU)): _*).orderBy(scanOrder: _*)))
+    val wOrd = Window.partitionBy(kc: _*).orderBy(col(CHU))
+    val steps = carry(Window.partitionBy(kc: _*)
+      .orderBy(if (reverse) col(CHU).desc_nulls_last else col(CHU)))
+    val CAR = steps.last._1
     val prevMax = max(col("__tmax"))
       .over(wOrd.rowsBetween(Window.unboundedPreceding, -1))
-    when(prevMax >= col("__tmin"),
-      raise_error(concat(
-        lit(s"$op: chunk is not monotone in `$timeHead` — chunk "),
-        col("__gchu").cast("string"),
-        lit(s"'s $timeHead range overlaps an earlier chunk's; a " +
-          "non-monotone chunk expression (e.g. a hash) would silently " +
-          "corrupt the boundary carries"))))
-      .otherwise(carry)
-  }
-
-  /** Null-safe stitch of the per-(key, chunk) carry table back onto the
-    * local frame. The plain window forms treat a NULL key/chunk value
-    * as a real partition (partitionBy semantics); a using-columns
-    * equi-join would silently drop those rows' carries (EqualTo never
-    * matches null = null) — so every join key is `<=>`, the
-    * [[ewmaBucketed]] posture. Join strategy stays with Catalyst/AQE:
-    * the summary is C rows per key — broadcast-small for a skewed
-    * few-key corpus, but a high-cardinality key set times C chunks can
-    * outgrow a broadcast, and the shuffled equi-join is fine either
-    * way (`<=>` is still an equi-join key for hashing). */
-  private[operators] def joinCarry(local: DataFrame, carries: DataFrame,
-                                   key: Seq[String], CHU: String,
-                                   CAR: String): DataFrame = {
-    val l = local.alias("__cl"); val r = carries.alias("__cr")
-    val cond = (key :+ CHU)
-      .map(k => col(s"__cl.$k") <=> col(s"__cr.$k")).reduce(_ && _)
-    l.join(r, cond, "left")
-      .select(local.columns.map(c => col(s"__cl.$c")) :+
+    val carries = add(loc.groupBy((kc :+ col(CHU)): _*).agg(
+        min(order.head).as("__tmin"), summary :+ max(order.head).as("__tmax"): _*),
+      steps)
+      .withColumn(CAR, when(prevMax >= col("__tmin"),
+        raise_error(concat(
+          lit(s"$op: chunk is not monotone in `$timeName` — chunk "),
+          col(CHU).cast("string"),
+          lit(s"'s $timeName range overlaps an earlier chunk's; a " +
+            "non-monotone chunk expression (e.g. a hash) would silently " +
+            "corrupt the boundary carries"))))
+        .otherwise(col(CAR)))
+      .select((kc :+ col(CHU) :+ col(CAR)): _*)
+    val l = loc.alias("__cl"); val r = carries.alias("__cr")
+    l.join(r, (key :+ CHU).map(k => col(s"__cl.$k") <=> col(s"__cr.$k"))
+        .reduce(_ && _), "left")
+      .select(loc.columns.filter(_ != CHU).map(c => col(s"__cl.$c")) :+
         col(s"__cr.$CAR").as(CAR): _*)
   }
 
-  /** Chunked W2 forward-fill: last non-null at or before each row, with
-    * per-key parallelism bounded by chunks instead of 1. `chunk` must be
-    * MONOTONE in `time`'s first column (contiguous ranges — a hash would
-    * interleave rows and break the carry; violations fail LOUD via
-    * [[chunkGuard]]). Requires the frame's columns as inputs and
-    * returns the frame with `outName` appended. */
-  def ffillChunked(df: DataFrame, c: String, key: Seq[String],
-                   time: Seq[String], chunk: Column,
-                   outName: String): DataFrame = {
-    val CHU = "__ffc_chunk"
-    val LOC = "__ffc_local"
-    val CAR = "__ffc_carry"
-    val withChunk = df.withColumn(CHU, chunk)
-    val wLocal = Window.partitionBy((key :+ CHU).map(col): _*)
-      .orderBy(time.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = withChunk
-      .withColumn(LOC, last(col(c), ignoreNulls = true).over(wLocal))
-    // chunk tails: the running-last at each chunk's final row == the
-    // max_by over time of the local fill (aggregate, map-side partial);
-    // the chunk's time.head interval rides along for the guard
-    val tails = local.groupBy((key :+ CHU).map(col): _*)
-      .agg(max_by(col(LOC), struct(time.map(col): _*)).as("__tail"),
-        min(col(time.head)).as("__tmin"), max(col(time.head)).as("__tmax"))
-    // carry: last non-null tail over STRICTLY EARLIER chunks — the
-    // summary table is C rows per key, so this window is trivially small
-    val wOrd = Window.partitionBy(key.map(col): _*).orderBy(col(CHU))
-    val carries = tails
-      .withColumn("__gchu", col(CHU))
-      .withColumn(CAR, chunkGuard("ffillChunked", time.head,
-        last(col("__tail"), ignoreNulls = true)
-          .over(wOrd.rowsBetween(Window.unboundedPreceding, -1)), wOrd))
-      .select((key :+ CHU).map(col) :+ col(CAR): _*)
-    joinCarry(local, carries, key, CHU, CAR)
-      .withColumn(outName, coalesce(col(LOC), col(CAR)))
-      .drop(CHU, LOC, CAR)
+  /** The running-last instance of [[chunkScan]]: `last(in, ignoreNulls)`
+    * over `[unboundedPreceding, upTo]` inside each chunk; the carry is
+    * the nearest earlier chunk's non-null tail; out = coalesce(local,
+    * carry). */
+  private def runningLast(df: DataFrame, op: String, tag: String,
+                          in: Column, key: Seq[String], time: Seq[String],
+                          chunk: Column, outName: String,
+                          reverse: Boolean = false,
+                          upTo: Long = 0L): DataFrame = {
+    val (loc, car) = (s"${tag}_local", s"${tag}_carry")
+    val tailOrd = when(in.isNotNull, struct(time.map(col): _*))
+    chunkScan(df, op, tag, key, time.map(col), time.head, chunk, reverse)(
+      w => Seq(loc -> last(in, ignoreNulls = true)
+        .over(w.rowsBetween(Window.unboundedPreceding, upTo))),
+      Seq((if (reverse) min_by(in, tailOrd) else max_by(in, tailOrd))
+        .as("__tail")),
+      w => Seq(car -> last(col("__tail"), ignoreNulls = true)
+        .over(w.rowsBetween(Window.unboundedPreceding, -1))))
+      .withColumn(outName, coalesce(col(loc), col(car))).drop(loc, car)
   }
 
-  /** Chunked W2 backward-fill — [[ffillChunked]] mirrored: the local
-    * pass is [[bfill]]'s reversed running frame inside each (key,
-    * chunk); the summary row per chunk is its HEAD (the backward fill
-    * at the chunk's earliest row = first non-null anywhere in the
-    * chunk); the carry for a row whose chunk-local fill is null is the
-    * nearest LATER chunk's non-null head (`last ignoreNulls` over the
-    * chunk summary in descending-chunk order, strictly-earlier frame =
-    * strictly-later chunks). Null chunks (null time) sort last in the
-    * descending scan, so they see every real chunk — matching the plain
-    * form's nulls-first placement under order reversal. */
+  /** Chunked W2 forward-fill: last non-null at or before each row, with
+    * per-key parallelism bounded by chunks ([[chunkScan]]). Returns the
+    * frame with `outName` appended. */
+  def ffillChunked(df: DataFrame, c: String, key: Seq[String],
+                   time: Seq[String], chunk: Column,
+                   outName: String): DataFrame =
+    runningLast(df, "ffillChunked", "__ffc", col(c), key, time, chunk,
+      outName)
+
+  /** Chunked W2 backward-fill: [[ffillChunked]] with the row order and
+    * the chunk order reversed ([[bfill]]'s running frame). */
   def bfillChunked(df: DataFrame, c: String, key: Seq[String],
                    time: Seq[String], chunk: Column,
-                   outName: String): DataFrame = {
-    val CHU = "__bfc_chunk"
-    val LOC = "__bfc_local"
-    val CAR = "__bfc_carry"
-    val withChunk = df.withColumn(CHU, chunk)
-    val wLocal = Window.partitionBy((key :+ CHU).map(col): _*)
-      .orderBy(time.map(t => col(t).desc_nulls_last): _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = withChunk
-      .withColumn(LOC, last(col(c), ignoreNulls = true).over(wLocal))
-    val heads = local.groupBy((key :+ CHU).map(col): _*)
-      .agg(min_by(col(LOC), struct(time.map(col): _*)).as("__head"),
-        min(col(time.head)).as("__tmin"), max(col(time.head)).as("__tmax"))
-    val wCarry = Window.partitionBy(key.map(col): _*)
-      .orderBy(col(CHU).desc_nulls_last)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // guard runs in ASCENDING chunk order (interval overlap is a
-    // symmetric property; one orientation suffices)
-    val wOrd = Window.partitionBy(key.map(col): _*).orderBy(col(CHU))
-    val carries = heads
-      .withColumn("__gchu", col(CHU))
-      .withColumn(CAR, chunkGuard("bfillChunked", time.head,
-        last(col("__head"), ignoreNulls = true).over(wCarry), wOrd))
-      .select((key :+ CHU).map(col) :+ col(CAR): _*)
-    joinCarry(local, carries, key, CHU, CAR) // null-safe, see joinCarry
-      .withColumn(outName, coalesce(col(LOC), col(CAR)))
-      .drop(CHU, LOC, CAR)
-  }
+                   outName: String): DataFrame =
+    runningLast(df, "bfillChunked", "__bfc", col(c), key, time, chunk,
+      outName, reverse = true)
 
   /** W10 at scale — EXACT trailing time-RANGE rolling (count, sum) with
     * skew bounded by rows-per-(key, bucket) instead of rows-per-key.
@@ -350,38 +331,15 @@ object Features {
       .unionByName(nullKeyOut)
   }
 
-  /** Chunked W1 lag-1: the previous row's value per key (nulls carried
-    * verbatim, the lag contract), chunk-parallel. Only each chunk's
-    * FIRST row crosses a boundary; it takes the latest earlier chunk's
-    * final value from the summary table (`last` WITHOUT ignoreNulls —
-    * a null final value must propagate exactly as lag would). */
+  /** Chunked W1 lag-1: the running-last of the never-null `struct(c)`
+    * over `[unboundedPreceding, −1]`, then its field — a null value is
+    * carried verbatim, exactly as `lag` does ([[chunkScan]]). */
   def lag1Chunked(df: DataFrame, c: String, key: Seq[String],
                   time: Seq[String], chunk: Column,
-                  outName: String): DataFrame = {
-    val CHU = "__lgc_chunk"
-    val RN = "__lgc_rn"
-    val LOC = "__lgc_local"
-    val CAR = "__lgc_carry"
-    val withChunk = df.withColumn(CHU, chunk)
-    val wLocal = Window.partitionBy((key :+ CHU).map(col): _*)
-      .orderBy(time.map(col): _*)
-    val local = withChunk
-      .withColumn(LOC, lag(col(c), 1).over(wLocal))
-      .withColumn(RN, row_number().over(wLocal))
-    val tails = local.groupBy((key :+ CHU).map(col): _*)
-      .agg(max_by(col(c), struct(time.map(col): _*)).as("__tail"),
-        min(col(time.head)).as("__tmin"), max(col(time.head)).as("__tmax"))
-    val wPrev = Window.partitionBy(key.map(col): _*).orderBy(col(CHU))
-    val carries = tails
-      .withColumn("__gchu", col(CHU))
-      .withColumn(CAR, chunkGuard("lag1Chunked", time.head,
-        lag(col("__tail"), 1).over(wPrev), wPrev))
-      .select((key :+ CHU).map(col) :+ col(CAR): _*)
-    joinCarry(local, carries, key, CHU, CAR) // null-safe, see joinCarry
-      .withColumn(outName,
-        when(col(RN) === 1, col(CAR)).otherwise(col(LOC)))
-      .drop(CHU, RN, LOC, CAR)
-  }
+                  outName: String): DataFrame =
+    runningLast(df, "lag1Chunked", "__lgc", struct(col(c).as("x")), key,
+      time, chunk, outName, upTo = -1L)
+      .withColumn(outName, col(outName)("x"))
 
   // ------------------------------------------------------------------
   // AUTO-DISPATCH (round 15, completing VERDICT r14 item 3 beyond the

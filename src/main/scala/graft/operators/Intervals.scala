@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Gaps-and-islands relational patterns — the two classic "SQL is
@@ -62,80 +62,68 @@ object Intervals {
     * NULL states are excluded (a NULL is "no state", not a state). */
   def stateEpisodes(df: DataFrame, group: Seq[String], order: Seq[Column],
                     state: Column): DataFrame = {
-    val gc = group.map(col)
-    val w = Window.partitionBy(gc: _*).orderBy(order: _*)
-    val ordStruct = struct(order: _*)
-    df.filter(state.isNotNull)
-      .withColumn("__st", state)
-      .withColumn("__ord", ordStruct)
-      .withColumn("__chg",
-        when(lag(col("__st"), 1).over(w).isNull ||
-          lag(col("__st"), 1).over(w) =!= col("__st"), lit(1L))
-          .otherwise(lit(0L)))
+    val w = Window.partitionBy(group.map(col): _*).orderBy(order: _*)
+    runs(states(df, order, state)
+      .withColumn("__chg", changeFlag(w))
       .withColumn("episode_id",
-        sum(col("__chg")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy((gc :+ col("episode_id") :+ col("__st").as("state")): _*)
-      .agg(count(lit(1)).as("n_events"),
-        min(col("__ord")).as("first_ord"), max(col("__ord")).as("last_ord"))
+        sum(col("__chg")).over(w.rowsBetween(Window.unboundedPreceding, 0))),
+      group)
   }
 
-  /** [[stateEpisodes]] at scale (round 15, VERDICT r14 item 7) — the
-    * chunked skew path, the Features.ffillChunked discipline applied to
-    * run-length encoding. The plain form's per-group sort window puts a
-    * hot key's every row into ONE task (measured 2.02× at 50% skew,
-    * BENCH_SF1.md; unbounded at 100 TB). Here the lag-change chain runs
-    * inside each (group, chunk) — parallelism per chunk — and episode
-    * ids stitch through a per-(group, chunk) SUMMARY (C rows per key):
+  /** The non-null states as `__st`, with the order packed as `__ord`. */
+  private def states(df: DataFrame, order: Seq[Column],
+                     state: Column): DataFrame =
+    df.filter(state.isNotNull)
+      .withColumn("__st", state)
+      .withColumn("__ord", struct(order: _*))
+
+  /** 1 where `__st` differs from the previous row's under `w` (or opens
+    * the window), else 0 — the running sum of it numbers the episodes. */
+  private def changeFlag(w: WindowSpec): Column =
+    when(lag(col("__st"), 1).over(w).isNull ||
+      lag(col("__st"), 1).over(w) =!= col("__st"), lit(1L))
+      .otherwise(lit(0L))
+
+  /** One row per (group, episode_id, state) run. */
+  private def runs(df: DataFrame, group: Seq[String]): DataFrame =
+    df.groupBy((group.map(col) :+ col("episode_id") :+
+        col("__st").as("state")): _*)
+      .agg(count(lit(1)).as("n_events"),
+        min(col("__ord")).as("first_ord"), max(col("__ord")).as("last_ord"))
+
+  /** [[stateEpisodes]] at scale — the chunked skew path, an instance of
+    * [[Features.chunkScan]]. The plain form's per-group sort window puts
+    * a hot key's every row into ONE task (measured 2.02× at 50% skew,
+    * BENCH_SF1.md). Here the lag-change chain runs inside each (group,
+    * chunk), and episode ids stitch through the per-chunk summary:
     *
-    *   adj(c)    = local episodes in c − continues(c), where
-    *   continues = chunk c's FIRST state equals chunk c−1's LAST state
-    *               (that run merges across the boundary);
-    *   offset(c) = Σ_{c'<c} adj(c') − continues(c)
-    *   global_id = local_id + offset(c)
+    *   continues(c) = chunk c's FIRST state equals chunk c−1's LAST state
+    *                  (that run merges across the boundary);
+    *   offset(c)    = Σ_{c'<c} (local episodes in c' − continues(c'))
+    *                  − continues(c)
+    *   global_id    = local_id + offset(c)
     *
     * A run spanning chunks lands the SAME (group, global_id, state) on
     * both sides, so the final aggregate merges it exactly — results are
     * IDENTICAL to the plain form (registered against the SAME oracle).
-    * `chunk` must be monotone in `order.head` (contiguous time ranges);
-    * violations fail LOUD, the [[Features.chunkGuard]] contract. */
+    * `chunk` must be monotone in `order.head`. */
   def stateEpisodesChunked(df: DataFrame, group: Seq[String],
                            order: Seq[Column], state: Column,
                            chunk: Column): DataFrame = {
-    val gc = group.map(col)
-    val CHU = "__sec_chunk"
-    val withChunk = df.filter(state.isNotNull)
-      .withColumn("__st", state)
-      .withColumn("__ord", struct(order: _*))
-      .withColumn(CHU, chunk)
-    val wLoc = Window.partitionBy((gc :+ col(CHU)): _*).orderBy(col("__ord"))
-    val local = withChunk
-      .withColumn("__chg",
-        when(lag(col("__st"), 1).over(wLoc).isNull ||
-          lag(col("__st"), 1).over(wLoc) =!= col("__st"), lit(1L))
-          .otherwise(lit(0L)))
-      .withColumn("__eid_loc",
-        sum(col("__chg")).over(wLoc.rowsBetween(Window.unboundedPreceding, 0)))
-    val summ = local.groupBy((gc :+ col(CHU)): _*)
-      .agg(min_by(col("__st"), col("__ord")).as("__first_st"),
+    runs(Features.chunkScan(states(df, order, state), "stateEpisodesChunked",
+        "__sec", group, Seq(col("__ord")), "order.head", chunk)(
+      w => Seq("__chg" -> changeFlag(w),
+        "__eid_loc" -> sum(col("__chg"))
+          .over(w.rowsBetween(Window.unboundedPreceding, 0))),
+      Seq(min_by(col("__st"), col("__ord")).as("__first_st"),
         max_by(col("__st"), col("__ord")).as("__last_st"),
-        max(col("__eid_loc")).as("__n_loc"),
-        min(col("__ord")).as("__tmin"), max(col("__ord")).as("__tmax"))
-    val wOrd = Window.partitionBy(gc: _*).orderBy(col(CHU))
-    val pre = wOrd.rowsBetween(Window.unboundedPreceding, -1)
-    val carries = summ
-      .withColumn("__gchu", col(CHU))
-      .withColumn("__cont",
-        when(lag(col("__last_st"), 1).over(wOrd) <=> col("__first_st"),
-          lit(1L)).otherwise(lit(0L)))
-      .withColumn("__off",
-        Features.chunkGuard("stateEpisodesChunked", "order.head",
-          coalesce(sum(col("__n_loc") - col("__cont")).over(pre), lit(0L)) -
-            col("__cont"), wOrd))
-      .select((gc :+ col(CHU) :+ col("__off")): _*)
-    Features.joinCarry(local, carries, group, CHU, "__off")
-      .withColumn("episode_id", col("__eid_loc") + col("__off"))
-      .groupBy((gc :+ col("episode_id") :+ col("__st").as("state")): _*)
-      .agg(count(lit(1)).as("n_events"),
-        min(col("__ord")).as("first_ord"), max(col("__ord")).as("last_ord"))
+        max(col("__eid_loc")).as("__n_loc")),
+      w => Seq(
+        "__cont" -> when(lag(col("__last_st"), 1).over(w) <=>
+          col("__first_st"), lit(1L)).otherwise(lit(0L)),
+        "__off" -> (coalesce(sum(col("__n_loc") - col("__cont"))
+          .over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)) -
+          col("__cont"))))
+      .withColumn("episode_id", col("__eid_loc") + col("__off")), group)
   }
 }

@@ -102,18 +102,6 @@ object Resample {
       idCol: String,
       valueCol: String): DataFrame = {
     val kc = keys.map(col)
-    val pts = df
-      .filter(col(tsCol).isNotNull && col(valueCol).isNotNull)
-      .select(kc ++ Seq(col(tsCol).as("__ts"), col(idCol).as("__id"),
-        col(valueCol).as("__v"), lit(0).as("__kind")): _*)
-    val spine = pts.groupBy(kc: _*)
-      .agg(min(to_date(col("__ts"))).as("d0"),
-        max(to_date(col("__ts"))).as("d1"))
-      .select(kc :+ explode(sequence(col("d0"), col("d1"),
-        expr("interval 1 day"))).as("day"): _*)
-      .select(kc ++ Seq(col("day").cast("timestamp_ntz").as("__ts"),
-        lit(null).cast("long").as("__id"),
-        lit(null).cast("double").as("__v"), lit(1).as("__kind")): _*)
     val prevW = Window.partitionBy(kc: _*)
       .orderBy(col("__ts"), col("__kind"), col("__id"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -123,47 +111,26 @@ object Resample {
     val nextW = Window.partitionBy(kc: _*)
       .orderBy(col("__ts").desc, col("__kind").desc, col("__id").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    pts.unionByName(spine)
-      .withColumn("__t0",
-        last(when(col("__kind") === 0, col("__ts")), ignoreNulls = true)
-          .over(prevW))
-      .withColumn("__y0",
-        last(when(col("__kind") === 0, col("__v")), ignoreNulls = true)
-          .over(prevW))
-      .withColumn("__t1",
-        last(when(col("__kind") === 0, col("__ts")), ignoreNulls = true)
-          .over(nextW))
-      .withColumn("__y1",
-        last(when(col("__kind") === 0, col("__v")), ignoreNulls = true)
-          .over(nextW))
-      .filter(col("__kind") === 1 &&
-        col("__t0").isNotNull && col("__t1").isNotNull)
-      .select(kc ++ Seq(
-        col("__ts").as("day"),
-        (col("__y0") + (col("__y1") - col("__y0")) *
-          ((unix_micros(col("__ts").cast("timestamp")) -
-            unix_micros(col("__t0").cast("timestamp"))).cast("double") /
-            (unix_micros(col("__t1").cast("timestamp")) -
-              unix_micros(col("__t0").cast("timestamp"))).cast("double")))
-          .as("y_interp")): _*)
+    interpolated(observationsAndDays(df, keys, tsCol, idCol, valueCol)
+      .withColumn("__p", last(col("__obs"), ignoreNulls = true).over(prevW))
+      .withColumn("__n", last(col("__obs"), ignoreNulls = true).over(nextW)),
+      keys)
   }
 
-  /** [[interpolateDaily]] at scale (round 15, VERDICT r14 item 7) — the
-    * chunked skew path. The plain form's four running fills over the
-    * per-key union frame put a hot key's rows into ONE task (measured
-    * 1.35× at 50% skew, BENCH_SF1.md; unbounded at 100 TB). Here each
-    * fill runs as its chunked twin — (t0, y0) via
-    * [[Features.ffillChunked]] (last observation at-or-before), (t1, y1)
-    * via [[Features.bfillChunked]] (first observation at-or-after) —
-    * over observation-marker columns that are NULL on spine rows, which
-    * makes at-or-after equal the plain form's STRICTLY-after frame on
-    * every surviving (spine) row: the current row contributes only a
-    * null, and an observation at the exact spine instant sorts after the
-    * spine row under (ts, kind, id) reversal on both paths. Parallelism
-    * is per (key, `bucketMicros` chunk of the timestamp — monotone by
-    * construction, so the chunk guard can never fire on well-formed
-    * input); results are IDENTICAL to the plain form and the registered
-    * row runs against the SAME DuckDB oracle. */
+  /** [[interpolateDaily]] at scale — the chunked skew path. The plain
+    * form's running fills over the per-key union frame put a hot key's
+    * rows into ONE task (measured 1.35× at 50% skew, BENCH_SF1.md). Here
+    * (t0, y0) comes from [[Features.ffillChunked]] (last observation
+    * at-or-before) and (t1, y1) from [[Features.bfillChunked]] (first
+    * observation at-or-after) over the observation struct, which is NULL
+    * on spine rows: at-or-after then equals the plain form's
+    * STRICTLY-after frame on every surviving (spine) row — the current
+    * row contributes only a null, and an observation at the exact spine
+    * instant sorts after the spine row under (ts, kind, id) reversal on
+    * both paths. Parallelism is per (key, `bucketMicros` chunk of the
+    * timestamp) — monotone by construction, so the chunk guard never
+    * fires on well-formed input; results are IDENTICAL to the plain
+    * form and the registered row runs against the SAME DuckDB oracle. */
   def interpolateDailyChunked(
       df: DataFrame,
       keys: Seq[String],
@@ -172,6 +139,26 @@ object Resample {
       valueCol: String,
       bucketMicros: Long = 2592000000000L): DataFrame = {
     require(bucketMicros > 0, s"bad bucketMicros: $bucketMicros")
+    val chunk = expr(
+      s"floor(unix_micros(CAST(__ts AS TIMESTAMP)) DIV ${bucketMicros}L)")
+    val time = Seq("__ts", "__kind", "__id")
+    interpolated(
+      Features.bfillChunked(
+        Features.ffillChunked(
+          observationsAndDays(df, keys, tsCol, idCol, valueCol),
+          "__obs", keys, time, chunk, "__p"),
+        "__obs", keys, time, chunk, "__n"),
+      keys)
+  }
+
+  /** The per-group union both interpolation forms fill over: observation
+    * rows (`__kind` 0, non-null time and value) and one midnight row per
+    * day of the group's observed span (`__kind` 1). `__obs` = (t, v) as
+    * ONE struct, null exactly on spine rows, so one running fill per
+    * direction carries both fields (`last ignoreNulls` skips it whole). */
+  private def observationsAndDays(df: DataFrame, keys: Seq[String],
+                                  tsCol: String, idCol: String,
+                                  valueCol: String): DataFrame = {
     val kc = keys.map(col)
     val pts = df
       .filter(col(tsCol).isNotNull && col(valueCol).isNotNull)
@@ -185,24 +172,18 @@ object Resample {
       .select(kc ++ Seq(col("day").cast("timestamp_ntz").as("__ts"),
         lit(null).cast("long").as("__id"),
         lit(null).cast("double").as("__v"), lit(1).as("__kind")): _*)
-    val chunk = expr(
-      s"floor(unix_micros(CAST(__ts AS TIMESTAMP)) DIV ${bucketMicros}L)")
-    val time = Seq("__ts", "__kind", "__id")
-    // (t, v) travel as ONE nullable struct (null exactly on spine rows —
-    // pts filters null values, so obs rows are never partially null):
-    // one ffill + one bfill pass instead of four, each carrying both
-    // fields — `last ignoreNulls` skips null structs whole
-    val u = pts.unionByName(spine)
+    pts.unionByName(spine)
       .withColumn("__obs", when(col("__kind") === 0,
         struct(col("__ts").as("t"), col("__v").as("v"))))
-    val filled =
-      Features.bfillChunked(
-        Features.ffillChunked(u, "__obs", keys, time, chunk, "__p"),
-        "__obs", keys, time, chunk, "__n")
+  }
+
+  /** The spine rows with both neighbours (`__p` before, `__n` after),
+    * blended: y0 + (y1 − y0)·(t − t0)/(t1 − t0). */
+  private def interpolated(filled: DataFrame, keys: Seq[String]): DataFrame =
     filled
       .filter(col("__kind") === 1 &&
         col("__p").isNotNull && col("__n").isNotNull)
-      .select(kc ++ Seq(
+      .select(keys.map(col) ++ Seq(
         col("__ts").as("day"),
         (col("__p.v") + (col("__n.v") - col("__p.v")) *
           ((unix_micros(col("__ts").cast("timestamp")) -
@@ -210,5 +191,4 @@ object Resample {
             (unix_micros(col("__n.t").cast("timestamp")) -
               unix_micros(col("__p.t").cast("timestamp"))).cast("double")))
           .as("y_interp")): _*)
-  }
 }

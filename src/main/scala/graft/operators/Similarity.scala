@@ -108,26 +108,12 @@ object Similarity {
     * the pseudo-random hyperplane has entries ±1 derived from
     * xxhash64(table, j, dim) — deterministic, no stored model. Computed
     * by the fused native expression [[graft.functions.HyperplaneSig]]
-    * (bit-equal to the nested-HOF form it replaces — see
-    * [[hyperplaneSignatureHof]], kept for the equivalence pin — which
-    * paid an interpreted lambda per (bit, dim) and dominated ann_lsh_topk
-    * in the round-2 bench). */
+    * (bit-equal to the nested-HOF form it replaces — kept test-side as
+    * `HofReferences.hyperplaneSignatureHof` for the equivalence pin —
+    * which paid an interpreted lambda per (bit, dim) and dominated
+    * ann_lsh_topk in the round-2 bench). */
   def hyperplaneSignature(vCol: String, bits: Int, table: Int): Column =
     call_function("graft_hyperplane_sig", col(vCol), lit(bits), lit(table))
-
-  /** The composable form [[hyperplaneSignature]] claims bit-equality
-    * with; test-only reference. */
-  private[graft] def hyperplaneSignatureHof(vCol: String, bits: Int, table: Int): Column =
-    expr(
-      s"""aggregate(
-         |  transform(sequence(0, ${bits - 1}),
-         |    j -> CASE WHEN aggregate(
-         |           zip_with($vCol, sequence(0, size($vCol) - 1),
-         |             (x, d) -> x * CASE WHEN (xxhash64($table, j, d) & 1) = 1
-         |                              THEN 1.0D ELSE -1.0D END),
-         |           0D, (acc, x) -> acc + x) > 0D
-         |         THEN 1L ELSE 0L END),
-         |  0L, (acc, bit) -> acc * 2 + bit)""".stripMargin)
 
   /** Multi-table LSH approximate top-k: `tables` independent b-bit
     * hyperplane signatures (OR-amplification — a pair is a candidate if it

@@ -131,8 +131,8 @@ object Sinks {
     * [[tableExists]] (bare directory probe) is the WRONG gate for
     * versioned tables: a crash during the very first write leaves a dir
     * with no committed version, and a reader gated on the dir would then
-    * throw instead of taking its documented fallback (round-16 advice on
-    * Pipeline.stageMetrics' probe_stats gate). */
+    * throw instead of answering "not found" (Pipeline.automate's and
+    * Serve's artifact gates). */
   def hasCommittedVersion(spark: SparkSession, tableDir: String): Boolean =
     listVersions(spark, tableDir).nonEmpty
 

@@ -47,7 +47,7 @@ object FeatureQueries {
     "PARTITION BY user_id, event_type ORDER BY ts, event_id"
 
   // contiguous ~30-day chunk id, monotone in ts, null-preserving (the
-  // chunked-window contract, Features.ffillChunked)
+  // chunked-window contract, Features.chunkScan)
   private val monthChunk =
     expr("floor(unix_micros(CAST(ts AS TIMESTAMP)) / 2592000000000)")
 
@@ -157,7 +157,7 @@ object FeatureQueries {
     // for sequence semantics. The chunked forms split each key by the
     // event MONTH (contiguous, monotone in ts), window inside each
     // (key, chunk), and stitch boundaries through a C-rows-per-key
-    // summary join (Features.ffillChunked scaladoc). Results are
+    // summary join (Features.chunkScan scaladoc). Results are
     // IDENTICAL to the plain rows — same DuckDB oracles verbatim.
     "w1_lag_chunked" -> QueryDef(
       (s, dir) => Features.lag1Chunked(Tables.events(s, dir), "value",

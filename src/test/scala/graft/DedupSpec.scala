@@ -391,9 +391,9 @@ class DedupSpec extends SparkSpecBase {
       snap(Dedup.spanScrub(real, n = 3)))
     // the fused native pass ≡ the composable HOF reference it replaced
     assert(snap(Dedup.spanScrubRowwise(real, n = 3)) ===
-      snap(Dedup.spanScrubRowwiseHof(real, n = 3)))
+      snap(graft.operators.HofReferences.spanScrubRowwiseHof(real, n = 3)))
     assert(snap(Dedup.spanScrubRowwise(docs, n = 2)) ===
-      snap(Dedup.spanScrubRowwiseHof(docs, n = 2)))
+      snap(graft.operators.HofReferences.spanScrubRowwiseHof(docs, n = 2)))
   }
 
   test("spanScrubGlobal: cross-doc echoes lose their tail, lowest doc_id " +

@@ -513,10 +513,16 @@ class PipelineSpec extends SparkSpecBase {
       ).foreach { case (t, (published, returned)) =>
         assert(content(published) === content(returned), s"$p: $t")
       }
-      assert(content(Pipeline.stageMetrics(spark, ev, dir, "val", cfg)) ===
-        content(r.validateMetrics), s"$p: validate from artifacts")
-      assert(content(Pipeline.stageMetrics(spark, ev, dir, "test", cfg)) ===
-        content(r.testForecasts), s"$p: test from artifacts")
+      // windowRowsPerTask = 1 makes every key hot, so validate/test run
+      // lag/ffill (and routed/seq's lag-2) through the chunked forms
+      val serveCfgs =
+        if (Set("routed", "seq")(p)) Seq(cfg, cfg.copy(windowRowsPerTask = 1L))
+        else Seq(cfg)
+      for ((split, want) <- Seq("val" -> r.validateMetrics,
+          "test" -> r.testForecasts); c <- serveCfgs)
+        assert(content(Pipeline.stageMetrics(spark, ev, dir, split, c)) ===
+          content(want),
+          s"$p: $split from artifacts, rows/task ${c.windowRowsPerTask}")
     }
   }
 
@@ -575,7 +581,7 @@ class PipelineSpec extends SparkSpecBase {
     assert(jobs.ended.get === jobs.started)
 
     // a plain FILE where the model_types table goes: its write fails, the
-    // ten other writes of the tail still commit before run() throws
+    // nine other writes of the tail still commit before run() throws
     val broken = Files.createTempDirectory("graft_jobs_broken").toString
     Files.writeString(java.nio.file.Path.of(s"$broken/model_types"), "x")
     val (failed, thrown) = countingJobs("routed-fail") {
@@ -584,7 +590,7 @@ class PipelineSpec extends SparkSpecBase {
     assert(failed.ended.get === failed.started,
       "run() returned while a sibling write still had jobs in flight")
     Seq("splits", "norm_params", "predictor_params_rnn",
-      "predictor_params_xgb", "probe_stats").foreach(t =>
+      "predictor_params_xgb").foreach(t =>
       assert(Sinks.hasCommittedVersion(spark, s"$broken/$t"), t))
     Seq("train_metrics", "validate_metrics", "validate_features",
       "test_forecasts", "live_forecasts").foreach(t =>

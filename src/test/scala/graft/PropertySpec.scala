@@ -213,7 +213,7 @@ object PropertySpec extends Properties("graft") {
         val out = vecs.toDF("embedding")
           .select(
             graft.operators.Similarity.hyperplaneSignature("embedding", bits, table).as("got"),
-            graft.operators.Similarity.hyperplaneSignatureHof("embedding", bits, table).as("want"))
+            graft.operators.HofReferences.hyperplaneSignatureHof("embedding", bits, table).as("want"))
           .collect()
         out.forall(r => r.getLong(0) == r.getLong(1))
     }
@@ -297,7 +297,7 @@ object PropertySpec extends Properties("graft") {
         .map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
       val native = snap(Dedup.spanScrubRowwise(df, n))
-      native == snap(Dedup.spanScrubRowwiseHof(df, n)) &&
+      native == snap(graft.operators.HofReferences.spanScrubRowwiseHof(df, n)) &&
         native == snap(Dedup.spanScrub(df, n))
     }
 
@@ -337,34 +337,39 @@ object PropertySpec extends Properties("graft") {
         got == want
     }
 
-  // --- chunked window forms (round 15): for RANDOM data (nulls in value,
-  // key and time included) and a RANDOM monotone chunk width, the chunked
-  // scale paths are bit-identical to the plain per-key windows. The fixed
-  // FeaturesSpec fixtures pin the known edge shapes; this sweeps the
-  // space between them.
-  private val seqGen: Gen[List[(Option[String], Option[Int], Option[Double])]] =
+  // --- chunked window forms: for RANDOM data (nulls in value, in both
+  // key columns and in time included; ties in time broken by a unique
+  // id) and a RANDOM monotone chunk width, the chunked scale paths are
+  // bit-identical to the plain per-key windows. The two-column nullable
+  // key pins the per-column null-safe carry join; the (t, id) order pins
+  // the multi-column tiebreak. The fixed FeaturesSpec fixtures pin the
+  // known edge shapes; this sweeps the space between them.
+  private val seqGen: Gen[List[(Option[String], Option[Int], Option[Int],
+      Long, Option[Double])]] =
     for {
       n <- Gen.choose(0, 50)
       rows <- Gen.listOfN(n, for {
-        k <- Gen.option(Gen.oneOf("g", "h", "i"))
+        k1 <- Gen.option(Gen.oneOf("g", "h"))
+        k2 <- Gen.option(Gen.oneOf(1, 2))
         t <- Gen.option(Gen.choose(0, 60))
         v <- Gen.option(Gen.chooseNum(-100.0, 100.0))
-      } yield (k, t, v))
-    } yield rows
+      } yield (k1, k2, t, v))
+    } yield rows.zipWithIndex.map { case ((k1, k2, t, v), i) =>
+      (k1, k2, t, i.toLong, v) }
+
+  private val kSeq = Seq("k1", "k2")
+  private val tSeq = Seq("t", "id")
+  private def seqFrame(rows: List[(Option[String], Option[Int], Option[Int],
+      Long, Option[Double])]) = rows.toDF("k1", "k2", "t", "id", "v")
 
   property("chunked lag/ffill/bfill equal the plain windows on random " +
     "data for any monotone chunk width") =
     Prop.forAll(seqGen, Gen.choose(1, 9)) { (rows, width) =>
-      // (k, t) must be a total order per key for the identity to be well
-      // defined (plain window vs chunked tiebreak) — dedup on (k, t)
-      val uniq = rows.groupBy(r => (r._1, r._2)).map(_._2.head).toList
-      val df = uniq.toDF("k", "t", "v")
-      val kSeq = Seq("k"); val tSeq = Seq("t")
+      val df = seqFrame(rows)
       val chunk = expr(s"CAST(floor(t / $width) AS BIGINT)")
       val w = Features.keyWindow(kSeq, tSeq)
       def snap(d: org.apache.spark.sql.DataFrame, c: String) =
-        d.collect().map(r =>
-          (r.getAs[Any]("k"), r.getAs[Any]("t")) -> r.getAs[Any](c)).toMap
+        d.collect().map(r => r.getAs[Long]("id") -> r.getAs[Any](c)).toMap
       val okF = snap(Features.ffillChunked(df, "v", kSeq, tSeq, chunk, "o"), "o") ==
         snap(df.withColumn("o", Features.ffill(col("v"), w)), "o")
       val okB = snap(Features.bfillChunked(df, "v", kSeq, tSeq, chunk, "o"), "o") ==
@@ -377,20 +382,36 @@ object PropertySpec extends Properties("graft") {
   property("chunked state episodes equal the plain form on random state " +
     "sequences for any monotone chunk width") =
     Prop.forAll(seqGen, Gen.choose(1, 9)) { (rows, width) =>
-      val uniq = rows.groupBy(r => (r._1, r._2)).map(_._2.head).toList
       // states from a tiny alphabet so runs actually form and span chunks
-      val df = uniq.map { case (k, t, v) =>
-        (k, t, v.map(d => if (d < 0) "A" else "B"))
-      }.toDF("k", "t", "st")
+      val df = seqFrame(rows)
+        .withColumn("st", when(col("v") < 0, "A").when(col("v") >= 0, "B"))
       val chunk = expr(s"CAST(floor(t / $width) AS BIGINT)")
+      val order = tSeq.map(col)
       def snap(d: org.apache.spark.sql.DataFrame) =
-        d.collect().map(r => (r.getAs[Any]("k"), r.getAs[Long]("episode_id"),
-          r.getAs[String]("state")) ->
+        d.collect().map(r => (r.getAs[Any]("k1"), r.getAs[Any]("k2"),
+          r.getAs[Long]("episode_id"), r.getAs[String]("state")) ->
           ((r.getAs[Long]("n_events"), r.getAs[Any]("first_ord"),
             r.getAs[Any]("last_ord")))).toMap
       snap(graft.operators.Intervals.stateEpisodesChunked(
-        df, Seq("k"), Seq(col("t")), col("st"), chunk)) ==
+        df, kSeq, order, col("st"), chunk)) ==
         snap(graft.operators.Intervals.stateEpisodes(
-          df, Seq("k"), Seq(col("t")), col("st")))
+          df, kSeq, order, col("st")))
+    }
+
+  property("chunked daily interpolation equals the plain form on random " +
+    "series for any monotone chunk width") =
+    Prop.forAll(seqGen, Gen.choose(1, 9)) { (rows, width) =>
+      // t → t·7 hours: a few weeks per series, several points per day and
+      // multi-day gaps; a chunk is `width` days
+      val df = seqFrame(rows).withColumn("ts",
+        expr("timestamp_ntz'2024-01-01 00:00:00' + make_dt_interval(0, t * 7)"))
+      def snap(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(r => (r.getAs[Any]("k1"), r.getAs[Any]("k2"),
+          r.getAs[Any]("day"), r.getAs[Double]("y_interp"))).toSeq
+          .sortBy(_.toString)
+      snap(graft.operators.Resample.interpolateDailyChunked(df, kSeq, "ts",
+        "id", "v", bucketMicros = width * 86400000000L)) ==
+        snap(graft.operators.Resample.interpolateDaily(df, kSeq, "ts", "id",
+          "v"))
     }
 }
