@@ -43,10 +43,13 @@ import org.apache.spark.sql.SparkSession
   *    the whole plan.
   *  - KNOWN LIMITATION: driver-side actions a query runs while BUILDING
   *    its plan stay untimed — today that is the approx split's
-  *    approxQuantile boundary scan, the IVF seeding (a TakeOrdered
-  *    sample of O(K) vectors collected for the driver-side farthest-point
-  *    pick; ann_ivf_topk's k-means refinement is a lazy checkpoint and IS
-  *    timed), and — DELIBERATELY — ann_ivf_persisted's whole index build
+  *    approxQuantile boundary scan, the IVF coarse-quantizer training
+  *    (a TakeOrdered sample of O(K) vectors collected for the
+  *    driver-side farthest-point pick, then one job per Lloyd pass with
+  *    the centroids on the driver — ann_ivf_topk times only the postings
+  *    and the probes), the connected-components closure of the dedup
+  *    cluster rows (driver finish or star rounds, both run while the
+  *    plan is built), and — DELIBERATELY — ann_ivf_persisted's whole index build
   *    + parquet writes: that row measures the SERVE-from-persisted-index
   *    path by design (the build cost is ann_ivf_topk's number). Treat
   *    such actions as statistics/index builds; anything heavier must

@@ -243,6 +243,13 @@ object GraftFunctions {
           litDoubles("mu")(e(2)),
           litDoubles("scales")(e(3)), rows.head.length)
       }),
+    ("graft_nearest_centroids", classOf[NearestCentroids],
+      "_FUNC_(v, cents, keep) - ids of the keep centroids of " +
+        "array<struct<id, vec>> nearest to v by cosine (ties to the smaller id)",
+      es => {
+        val e = arity("graft_nearest_centroids", 3)(es)
+        NearestCentroids(e(0), e(1), intLit("graft_nearest_centroids", "keep")(e(2)))
+      }),
     ("graft_span_scrub", classOf[SpanScrubRow],
       "_FUNC_(ws, n) - row-wise repeated-span scrub of a token array: " +
         "struct(n_tokens, n_removed, text_clean)",

@@ -36,4 +36,16 @@ object Checkpointing {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager)
     else df.localCheckpoint(eager)
+
+  /** Release the executor blocks a [[cut]] pinned (`df` is what `cut`
+    * returned), once an iterative operator has superseded that round.
+    * `Dataset.unpersist` would not:
+    * a checkpoint is not in the cache manager, its blocks belong to the
+    * RDD under the plan. (A reliable checkpoint's files stay with the
+    * checkpoint dir.) */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 }

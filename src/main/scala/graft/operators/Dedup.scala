@@ -580,13 +580,28 @@ object Dedup {
     * O(log² n) rounds (2-3 in practice for dedup graphs, whose components
     * are small near-dup groups).
     *
-    * Scale design (100 TB): no step ever materializes a component in one
-    * row or on the driver — neighborhoods are reduced with `min` (partial
-    * aggregation, map-side combine) and re-joined on the node id, so a
-    * hot hub (a boilerplate doc duplicated millions of times) is just a
-    * skewed join key that AQE splits. Each iteration is eagerly
-    * local-checkpointed: the convergence loop would otherwise stack an
-    * unbounded lineage (and re-run every prior round on each action).
+    * Finish on the driver when the edge set is small: canonical edge
+    * rows (before `distinct`) numbering at most
+    * `spark.sql.autoBroadcastJoinThreshold` / 16 B (16 B = one edge's two
+    * longs; the 10 MB default is ≈ 655k rows, −1 disables) are collected
+    * by [[collectAtMost]] and closed by union-find in
+    * [[componentsOnDriver]], and the result returns as a local relation.
+    * No option of its own: the session's bound for "small enough to ship
+    * to every executor" is the one that matters, since [[resolveClusters]]
+    * broadcasts this frame anyway. A near-dup graph of a shard (a few
+    * thousand verified pairs) takes one job this way instead of ~6 per
+    * star round. `maxIter` does not bound the driver finish, which never
+    * iterates.
+    *
+    * Scale design (100 TB), the star rounds for a larger edge set: no
+    * step ever materializes a component in one row or on the driver —
+    * neighborhoods are reduced with `min` (partial aggregation, map-side
+    * combine) and re-joined on the node id, so a hot hub (a boilerplate
+    * doc duplicated millions of times) is just a skewed join key that AQE
+    * splits. Each iteration is eagerly local-checkpointed: the
+    * convergence loop would otherwise stack an unbounded lineage (and
+    * re-run every prior round on each action); each superseded round's
+    * blocks are released once the next round has materialized.
     * Convergence is detected by (count, order-independent xxhash64 sum)
     * equality of consecutive edge sets — one tiny aggregate per round —
     * and non-convergence within `maxIter` fails loud rather than
@@ -600,17 +615,29 @@ object Dedup {
     */
   def connectedComponents(edges: DataFrame, src: String = "doc_a",
                           dst: String = "doc_b", maxIter: Int = 25): DataFrame = {
-    // Canonicalize: big→small, no self-loops, distinct. This IS already
-    // the small-star input shape, and is also a fixpoint candidate.
-    var e = edges
+    // Canonicalize: big→small, no self-loops; made distinct below, this
+    // IS already the small-star input shape, and is also a fixpoint
+    // candidate.
+    val canon = edges
       .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
-      .distinct()
+    // driver finish when the canonical rows fit the session's broadcast
+    // bound at 16 B each; the lazy cut keeps them for the star rounds
+    // otherwise, so the input is computed once either way
+    val bound = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val rows = if (bound >= 0) Checkpointing.cut(canon, eager = false) else canon
+    if (bound >= 0) collectAtMost(rows, bound / 16) match {
+      case Some(uv) =>
+        Checkpointing.release(rows)
+        return componentsOnDriver(rows, uv)
+      case None =>
+    }
     // per-round lineage cut — reliable when a checkpoint dir is set
     // (Checkpointing.cut), executor-local otherwise
-    e = Checkpointing.cut(e)
+    var e = Checkpointing.cut(rows.distinct())
+    if (bound >= 0) Checkpointing.release(rows)
 
     // large-star: per node u over its FULL neighborhood Γ(u) (both edge
     // directions), m = min(Γ(u) ∪ {u}); link every strictly-larger
@@ -659,6 +686,8 @@ object Dedup {
       val next = Checkpointing.cut(smallStar(largeStar(e)))
       val nextSig = signature(next)
       converged = nextSig == sig
+      // the returned plan reads only the last round
+      Checkpointing.release(e)
       e = next
       sig = nextSig
       iter += 1
@@ -672,6 +701,64 @@ object Dedup {
     e.select(col("u").as("node"), col("v").as("component"))
       .union(e.select(col("v").as("node"), col("v").as("component")))
       .distinct()
+  }
+
+  /** The (u, v) rows of `df` on the driver, flattened u₀ v₀ u₁ v₁ …, when
+    * there are at most `max` of them, else None. One job while every
+    * partition holds at most max / P rows: a partition over that share
+    * returns only its count, so the driver never holds more than `max`
+    * rows, and a second job fetches the partitions it skipped when the
+    * total still fits. */
+  private def collectAtMost(df: DataFrame, max: Long): Option[Array[Long]] = {
+    val rdd = df.queryExecution.toRdd
+    val sc = df.sparkSession.sparkContext
+    val share = max / math.max(1, rdd.getNumPartitions)
+    val first = sc.runJob(rdd, takeAtMost(share) _)
+    if (first.map(_._1).sum > max) return None
+    val skipped = first.indices.filter(first(_)._2 == null)
+    val rest =
+      if (skipped.isEmpty) Array.empty[(Long, Array[Long])]
+      else sc.runJob(rdd, takeAtMost(Long.MaxValue) _, skipped)
+    Some((first.map(_._2).filter(_ != null) ++ rest.map(_._2)).flatten)
+  }
+
+  /** A partition's row count, and its (u, v) values when it has at most
+    * `limit` rows. */
+  private def takeAtMost(limit: Long)(
+      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]): (Long, Array[Long]) = {
+    val out = Array.newBuilder[Long]
+    var n = 0L
+    rows.foreach { r =>
+      n += 1
+      if (n <= limit) { out += r.getLong(0); out += r.getLong(1) }
+    }
+    (n, if (n <= limit) out.result() else null)
+  }
+
+  /** The driver finish of [[connectedComponents]]: union-find over the
+    * canonical edges `uv(2i) > uv(2i+1)` (duplicates allowed), node ids
+    * sorted into one array and parents held as indices into it, each
+    * union pointing at the smaller index — so every root is its
+    * component's minimum id. Returns the star rounds' rows and schema as
+    * a local relation. */
+  private def componentsOnDriver(canon: DataFrame, uv: Array[Long]): DataFrame = {
+    val nodes = uv.distinct
+    java.util.Arrays.sort(nodes)
+    val parent = Array.tabulate(nodes.length)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    for (i <- 0 until uv.length by 2) {
+      val a = find(java.util.Arrays.binarySearch(nodes, uv(i)))
+      val b = find(java.util.Arrays.binarySearch(nodes, uv(i + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val rows = nodes.indices.map(i =>
+      org.apache.spark.sql.Row(nodes(i), nodes(find(i))))
+    canon.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      canon.select(col("u").as("node"), col("v").as("component")).schema)
   }
 
   /** Duplicate-cluster resolution over a corpus: assign every doc its

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
 
 /** Similarity search over an embedding column (`array<float>`): exact
   * brute-force cosine top-k as the correctness baseline, and a
@@ -50,16 +53,24 @@ object Similarity {
   /** Per-pair cosine work drops 3× when each side's norm is computed ONCE
     * per vector and carried through the join (the expression shape
     * dot/(nₐ·n_b) stays identical to computing norms inline, so results
-    * are bit-equal). */
+    * are bit-equal).
+    *
+    * The zero-norm rule every pair and top-k entry point shares: zero-norm
+    * rows are OUT of the cosine domain on BOTH sides (0/0 = NaN, which
+    * Spark orders above every real number — one failed-embedding row
+    * would otherwise pass every >= threshold filter and top every
+    * ranking, round 15; see [[cosine]]). Excluding them here makes every
+    * pair set and final ranking NaN-free by construction: a zero-norm
+    * CORPUS row can never be a neighbour, and a zero-norm QUERY row
+    * yields NO output rows — deliberate silent absence, not an error
+    * (callers needing one result set per input query must pre-filter or
+    * pre-join on the returned query_id set; trainingPairs' loud
+    * raise_error convention covers starvation AFTER domain filtering,
+    * not out-of-domain inputs). */
   private def withNorm(df: DataFrame, idName: String, vecName: String,
                        normName: String): DataFrame =
     df.select(col("vec_id").as(idName), col("embedding").as(vecName))
       .withColumn(normName, sqrt(dot(col(vecName), col(vecName))))
-      // zero-norm vectors are OUT of the cosine domain (0/0 = NaN, which
-      // Spark orders above every real number): one failed-embedding row
-      // would otherwise pass every >= threshold filter and top every
-      // ranking (round 15). Excluding it here makes every pair set and
-      // final ranking NaN-free by construction.
       .filter(col(normName) > 0)
 
   /** Keep top-k (cos desc, id asc) per query from a scored frame via the
@@ -85,15 +96,9 @@ object Similarity {
   }
 
   /** Exact top-k nearest neighbours by cosine for each query vector.
-    * Zero-norm rows are OUT of the cosine domain on BOTH sides
-    * (see [[cosine]]): a zero-norm CORPUS row can never be a
-    * neighbour, and a zero-norm QUERY row yields NO output rows —
-    * deliberate silent absence, not an error (callers needing one
-    * result set per input query must pre-filter or pre-join on
-    * the returned query_id set; trainingPairs' loud raise_error
-    * convention covers starvation AFTER domain filtering, not
-    * out-of-domain inputs).
-    * Deterministic rank: ties broken by neighbour id. */
+    * Deterministic rank: ties broken by neighbour id.
+    * Zero-norm rows are out of the cosine domain on both sides: see
+    * [[withNorm]]. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     graft.functions.GraftFunctions.register(queries.sparkSession)
     val q = withNorm(queries, "query_id", "qv", "qn")
@@ -134,15 +139,9 @@ object Similarity {
     * 0.3–0.5 (this corpus), per-table collision is ~p_bit^b, so recall
     * needs many tables while background collisions keep the candidate set
     * large — [[ivfTopK]] is the better scale path here; LSH wins when
-    * Zero-norm rows are OUT of the cosine domain on BOTH sides
-    * (see [[cosine]]): a zero-norm CORPUS row can never be a
-    * neighbour, and a zero-norm QUERY row yields NO output rows —
-    * deliberate silent absence, not an error (callers needing one
-    * result set per input query must pre-filter or pre-join on
-    * the returned query_id set; trainingPairs' loud raise_error
-    * convention covers starvation AFTER domain filtering, not
-    * out-of-domain inputs).
-    * near-dup-grade similarity (cos ≥ 0.8) is the target. */
+    * near-dup-grade similarity (cos ≥ 0.8) is the target.
+    * Zero-norm rows are out of the cosine domain on both sides: see
+    * [[withNorm]]. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               bits: Int, tables: Int, multiProbe: Int = 0): DataFrame = {
     require(multiProbe >= 0 && multiProbe <= bits,
@@ -182,15 +181,9 @@ object Similarity {
     * SEEDS cover the embedding space, which is what lifts the coarse
     * quantizer. The sample is O(K) rows collected driver-side (FAISS
     * trains its coarse quantizer on a sample the same way) — independent
-    * Zero-norm rows are OUT of the cosine domain on BOTH sides
-    * (see [[cosine]]): a zero-norm CORPUS row can never be a
-    * neighbour, and a zero-norm QUERY row yields NO output rows —
-    * deliberate silent absence, not an error (callers needing one
-    * result set per input query must pre-filter or pre-join on
-    * the returned query_id set; trainingPairs' loud raise_error
-    * convention covers starvation AFTER domain filtering, not
-    * out-of-domain inputs).
-    * of corpus size, so the scale story is unchanged. */
+    * of corpus size, so the scale story is unchanged.
+    * Zero-norm rows are out of the cosine domain on both sides: see
+    * [[withNorm]]. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               nCentroids: Int, nProbe: Int, refineIters: Int = 1): DataFrame =
     buildIvfIndex(corpus, nCentroids, refineIters) match {
@@ -212,7 +205,10 @@ object Similarity {
 
   /** Build the IVF index once: farthest-point seeds → `refineIters` Lloyd
     * passes → corpus posting lists. None on an empty corpus. See
-    * [[ivfTopK]] for the seeding rationale. */
+    * [[ivfTopK]] for the seeding rationale. The seed sample and every
+    * Lloyd pass run here, one job each, with the centroids held on the
+    * driver; the centroids return as a local relation and the postings
+    * as a lazy map-only [[assign]] plan. */
   def buildIvfIndex(corpus: DataFrame, nCentroids: Int,
                     refineIters: Int = 1): Option[IvfIndex] = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
@@ -248,54 +244,87 @@ object Similarity {
       val d = units.map(cosDist(units(best), _))
       for (i <- units.indices) minDist(i) = math.min(minDist(i), d(i))
     }
-    val seeds = spark.createDataFrame(
-      chosen.toSeq.map(i => (sample(i)._1, sample(i)._2.toSeq)))
-      .toDF("centroid_id", "centv")
-
-    // Lloyd refinement: reassign, recompute each centroid as the
-    // element-wise mean of its members (posexplode → per-dim avg →
-    // re-assembled in dim order). Each pass is the same broadcast-assign
-    // join — the k-means shape at any scale.
-    val centroids = (1 to refineIters).foldLeft(seeds) { (cents, _) =>
-      val members = assign(cents, corpus, "member_id", keep = 1)
-        .join(corpus.select(col("vec_id").as("member_id"), col("embedding")),
-          "member_id")
-      val refreshed = members
-        .select(col("centroid_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("centroid_id"), col("pos"))
-        .agg(avg(col("x")).as("m"))
-        .groupBy(col("centroid_id"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, m))), s -> CAST(s.m AS FLOAT))")
-          .as("centv"))
-      refreshed
-        // a centroid that lost every member keeps its PREVIOUS vector —
-        // the groupBy emits no row for it, and dropping it would shrink
-        // nCentroids silently (the buildPqIndex empty-code rule, applied
-        // here in round 15: duplicate sample points seed identical
-        // centroids whose members all tie to the smaller id)
-        .unionByName(cents.join(refreshed.select(col("centroid_id")),
-          Seq("centroid_id"), "left_anti"))
-        // LAZY: feeds the two assign() branches below — compute once at
-        // first action, reuse from cache; eager would run the whole
-        // k-means pass as a construction-time job, which both hides the
-        // index-build cost from any caller timing the returned plan and
-        // wastes a pass when the result is never materialized.
-        .localCheckpoint(eager = false)
+    val ids = chosen.map(i => sample(i)._1).toArray
+    val vFloat = corpus.schema("embedding").dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
     }
+    lazy val members = corpus.filter(col("vec_id").isNotNull).select(col("embedding"))
+      .queryExecution.toRdd
+    // Lloyd refinement with the centroids on the driver: ONE job per pass.
+    // Every corpus vector takes its nearest centroid by the assign kernel
+    // (the same ranking as [[assign]]), and each partition folds its
+    // members into per-centroid sums and counts (C × dim doubles, C longs)
+    // merged once by treeReduce; the new centroid is the float mean
+    // (sum / count in double, then to float). Only a valid member counts —
+    // non-NULL, no null element, the centroid's length; the others are
+    // assigned but carry no coordinates to average.
+    val centroidVecs = (1 to refineIters).foldLeft(chosen.map(i => sample(i)._2).toArray) {
+      (cents, _) =>
+        val bc = spark.sparkContext.broadcast((ids, cents))
+        val (sums, counts) =
+          try members.mapPartitions(rows => Iterator(lloydPartial(rows, bc.value, vFloat)))
+            .treeReduce { (a, b) =>
+              for (i <- a._1.indices) a._1(i) += b._1(i)
+              for (i <- a._2.indices) a._2(i) += b._2(i)
+              a
+            }
+          finally bc.destroy()
+        val off = cents.scanLeft(0)(_ + _.length)
+        cents.indices.map { c =>
+          // a centroid that lost every member keeps its PREVIOUS vector —
+          // dropping it would shrink nCentroids silently (the buildPqIndex
+          // empty-code rule, applied here in round 15: duplicate sample
+          // points seed identical centroids whose members all tie to the
+          // smaller id)
+          if (counts(c) == 0) cents(c)
+          else Array.tabulate(cents(c).length)(j =>
+            (sums(off(c) + j) / counts(c).toDouble).toFloat)
+        }.toArray
+    }
+    // a local relation of ≤ nCentroids rows: nothing left to recompute
+    val centroids = spark.createDataFrame(
+      ids.indices.map(i => (ids(i), centroidVecs(i).toSeq)))
+      .toDF("centroid_id", "centv")
     Some(IvfIndex(centroids, assign(centroids, corpus, "neighbor_id", keep = 1)))
+  }
+
+  /** One partition's Lloyd fold for [[buildIvfIndex]]: the per-centroid
+    * coordinate sums (centroid c's slots follow those of 0..c−1) and
+    * member counts of the `embedding` rows. */
+  private def lloydPartial(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+                           cents: (Array[Long], Array[Array[Float]]),
+                           vFloat: Boolean): (Array[Double], Array[Long]) = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val (ids, vecs) = cents
+    val set = new GenericArrayData(ids.indices.map(i =>
+      InternalRow(ids(i), UnsafeArrayData.fromPrimitiveArray(vecs(i)))).toArray[Any])
+    val offsets = vecs.scanLeft(0)(_ + _.length)
+    val sums = new Array[Double](offsets.last)
+    val counts = new Array[Long](vecs.length)
+    rows.foreach { r =>
+      val v = if (r.isNullAt(0)) null else r.getArray(0)
+      val c = graft.functions.NearestCentroids.rank(v, vFloat, set, true, 1)(0)
+      val d = vecs(c).length
+      if (v != null && v.numElements() == d && (0 until d).forall(!v.isNullAt(_))) {
+        var j = 0
+        while (j < d) {
+          sums(offsets(c) + j) += (if (vFloat) v.getFloat(j).toDouble else v.getDouble(j))
+          j += 1
+        }
+        counts(c) += 1
+      }
+    }
+    (sums, counts)
   }
 
   /** Serve approximate top-k from a PREBUILT (possibly parquet-round-
     * tripped) [[IvfIndex]]: only the query-side assignment and the
-    * Zero-norm rows are OUT of the cosine domain on BOTH sides
-    * (see [[cosine]]): a zero-norm CORPUS row can never be a
-    * neighbour, and a zero-norm QUERY row yields NO output rows —
-    * deliberate silent absence, not an error (callers needing one
-    * result set per input query must pre-filter or pre-join on
-    * the returned query_id set; trainingPairs' loud raise_error
-    * convention covers starvation AFTER domain filtering, not
-    * out-of-domain inputs).
-    * candidate scoring run — the corpus is never re-clustered. */
+    * candidate scoring run — the corpus is never re-clustered.
+    * Zero-norm rows are out of the cosine domain on both sides: see
+    * [[withNorm]]. */
   def ivfTopKWithIndex(queries: DataFrame, corpus: DataFrame,
                        index: IvfIndex, k: Int, nProbe: Int): DataFrame = {
     graft.functions.GraftFunctions.register(queries.sparkSession)
@@ -521,25 +550,39 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"))
   }
 
-  /** Nearest-`keep` centroid assignment: broadcast the (small) centroid
-    * set, rank by cosine (ties by centroid id). `private[graft]` so the
+  /** Nearest-`keep` centroid assignment, map-only: the centroid set is
+    * folded into ONE row (`centv`: the array of (centroid_id, centv)
+    * structs — an aggregate, so nothing is collected while the plan is
+    * built; a local relation, such as [[buildIvfIndex]]'s centroids, is
+    * folded on the driver), broadcast as the build side of the only
+    * nested-loop join, and each row's ranking is the native
+    * [[graft.functions.NearestCentroids]] kernel: cosine descending
+    * exactly as [[cosine]] scores it (−2 on a zero or NULL norm, a NULL
+    * cosine last), ties by centroid id. `private[graft]` so the
     * ScaleRecallCheck tool can measure probed-posting candidate volumes
     * with the exact serve-path assignment. */
   private[graft] def assign(cents: DataFrame, df: DataFrame, idName: String,
                             keep: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idName))
-      .orderBy(col("ccos").desc, col("centroid_id"))
+    val pairs = cents.select(struct(col("centroid_id"), col("centv")).as("c"))
+    // optimized without cache substitution, so a cached local relation
+    // still shows as one
+    val centSet = cents.sparkSession.sessionState.optimizer
+        .execute(pairs.queryExecution.analyzed) match {
+      // a local relation's rows are on the driver already: fold them here
+      // and skip the aggregate's jobs
+      case l: LocalRelation =>
+        val t = pairs.schema("c").dataType
+        cents.sparkSession.createDataFrame(
+          java.util.List.of(Row(l.data.map(r => CatalystTypeConverters
+            .convertToScala(r.get(0, t), t)))),
+          new StructType().add("centv", ArrayType(t, false)))
+      case _ => pairs.agg(collect_list(col("c")).as("centv"))
+    }
     df.select(col("vec_id").as(idName), col("embedding"))
-      .join(broadcast(cents),
-        col(idName).isNotNull) // cross vs small centroid set
-      // cosine is TOTAL (round 15): a zero query vector or degenerate
-      // zero centroid scores -2 — below every real cosine — instead of
-      // crashing (ANSI) or NaN-ranking first (non-ANSI)
-      .withColumn("ccos", cosine(col("embedding"), col("centv")))
-      .withColumn("crank", row_number().over(w))
-      .filter(col("crank") <= keep)
-      .select(col(idName), col("centroid_id"))
+      .filter(col(idName).isNotNull)
+      .crossJoin(broadcast(centSet))
+      .select(col(idName), explode(call_function("graft_nearest_centroids",
+        col("embedding"), col("centv"), lit(keep))).as("centroid_id"))
   }
 
   /** Score candidate (query, neighbor) pairs exactly and keep top-k per
@@ -722,15 +765,9 @@ object Similarity {
     * count job derives (nCentroids, nProbe) via [[ivfParamsAuto]], then
     * the fixed-knob pipeline runs unchanged — the production entry
     * point; the fixed form remains for recall-pinned registrations and
-    * Zero-norm rows are OUT of the cosine domain on BOTH sides
-    * (see [[cosine]]): a zero-norm CORPUS row can never be a
-    * neighbour, and a zero-norm QUERY row yields NO output rows —
-    * deliberate silent absence, not an error (callers needing one
-    * result set per input query must pre-filter or pre-join on
-    * the returned query_id set; trainingPairs' loud raise_error
-    * convention covers starvation AFTER domain filtering, not
-    * out-of-domain inputs).
-    * spec geometry. */
+    * spec geometry.
+    * Zero-norm rows are out of the cosine domain on both sides: see
+    * [[withNorm]]. */
   def ivfTopKAuto(queries: DataFrame, corpus: DataFrame, k: Int,
                   refineIters: Int = 1, probeMilli: Int = 375,
                   maxCentroids: Int = 4096): DataFrame = {
@@ -832,15 +869,9 @@ object Similarity {
     * float corpus — compose with [[ivfTopK]]'s centroid pruning for the
     * compute cut, exactly as FAISS's IVF-SQ8 does); stage 2 touches only
     * the candidate ids, so the float corpus is read once per candidate,
-    * Zero-norm rows are OUT of the cosine domain on BOTH sides
-    * (see [[cosine]]): a zero-norm CORPUS row can never be a
-    * neighbour, and a zero-norm QUERY row yields NO output rows —
-    * deliberate silent absence, not an error (callers needing one
-    * result set per input query must pre-filter or pre-join on
-    * the returned query_id set; trainingPairs' loud raise_error
-    * convention covers starvation AFTER domain filtering, not
-    * out-of-domain inputs).
-    * never scanned. */
+    * never scanned.
+    * Zero-norm rows are out of the cosine domain on both sides: see
+    * [[withNorm]]. */
   def sqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
              rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
@@ -1121,15 +1152,9 @@ object Similarity {
   }
 
   /** Score, shortlist, exact-re-rank: the shared back half of both PQ
-    * Zero-norm rows are OUT of the cosine domain on BOTH sides
-    * (see [[cosine]]): a zero-norm CORPUS row can never be a
-    * neighbour, and a zero-norm QUERY row yields NO output rows —
-    * deliberate silent absence, not an error (callers needing one
-    * result set per input query must pre-filter or pre-join on
-    * the returned query_id set; trainingPairs' loud raise_error
-    * convention covers starvation AFTER domain filtering, not
-    * out-of-domain inputs).
-    * serving paths. `adc` = (query_id, neighbor_id, ad). */
+    * serving paths. `adc` = (query_id, neighbor_id, ad).
+    * Zero-norm rows are out of the cosine domain on both sides: see
+    * [[withNorm]]. */
   private def pqRerank(adc: DataFrame, vecNorm: DataFrame,
                        queries: DataFrame, corpus: DataFrame,
                        k: Int, rerank: Int): DataFrame = {
@@ -1166,15 +1191,9 @@ object Similarity {
     * only for the final |queries|·rerank ids. Both indexes are built once
     * and parquet-persistable; recall compounds (a true neighbour must
     * land in a probed list AND survive the quantized shortlist) — the
-    * Zero-norm rows are OUT of the cosine domain on BOTH sides
-    * (see [[cosine]]): a zero-norm CORPUS row can never be a
-    * neighbour, and a zero-norm QUERY row yields NO output rows —
-    * deliberate silent absence, not an error (callers needing one
-    * result set per input query must pre-filter or pre-join on
-    * the returned query_id set; trainingPairs' loud raise_error
-    * convention covers starvation AFTER domain filtering, not
-    * out-of-domain inputs).
-    * registered row pins the measured floor. */
+    * registered row pins the measured floor.
+    * Zero-norm rows are out of the cosine domain on both sides: see
+    * [[withNorm]]. */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, ivf: IvfIndex,
                 pq: PqIndex, k: Int, nProbe: Int, rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
@@ -1472,15 +1491,9 @@ object Similarity {
     * re-rank the shortlist with the exact full-dimension cosine. The
     * model must be fit on [[normalizedEmbeddings]] of the same corpus and
     * both sides are normalized here, so the shortlist metric agrees with
-    * Zero-norm rows are OUT of the cosine domain on BOTH sides
-    * (see [[cosine]]): a zero-norm CORPUS row can never be a
-    * neighbour, and a zero-norm QUERY row yields NO output rows —
-    * deliberate silent absence, not an error (callers needing one
-    * result set per input query must pre-filter or pre-join on
-    * the returned query_id set; trainingPairs' loud raise_error
-    * convention covers starvation AFTER domain filtering, not
-    * out-of-domain inputs).
-    * the serving metric. */
+    * the serving metric.
+    * Zero-norm rows are out of the cosine domain on both sides: see
+    * [[withNorm]]. */
   def pcaTopK(queries: DataFrame, corpus: DataFrame, model: PcaModel,
               k: Int, shortlist: Int): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
@@ -1528,15 +1541,9 @@ object Similarity {
     * Plan contract (spec-pinned): candidates come from an equi-join on
     * `centroid_id`; the only nested-loop join anywhere is the O(K)
     * centroid-set broadcast inside assignment — nothing ever
-    * Zero-norm rows are OUT of the cosine domain on BOTH sides
-    * (see [[cosine]]): a zero-norm CORPUS row can never be a
-    * neighbour, and a zero-norm QUERY row yields NO output rows —
-    * deliberate silent absence, not an error (callers needing one
-    * result set per input query must pre-filter or pre-join on
-    * the returned query_id set; trainingPairs' loud raise_error
-    * convention covers starvation AFTER domain filtering, not
-    * out-of-domain inputs).
-    * nested-loops the corpus against the queries. */
+    * nested-loops the corpus against the queries.
+    * Zero-norm rows are out of the cosine domain on both sides: see
+    * [[withNorm]]. */
   def pcaIvfTopK(queries: DataFrame, corpus: DataFrame, model: PcaModel,
                  k: Int, nCentroids: Int, nProbe: Int,
                  refineIters: Int = 1): DataFrame = {

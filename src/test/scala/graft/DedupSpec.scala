@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Checkpointing, Dedup, TextAnalysis}
 
 /** Pins the dedup sketch semantics that the DuckDB oracle cannot express
   * (xxhash64-based MinHash and SimHash): determinism, locality, the
@@ -177,13 +177,27 @@ class DedupSpec extends SparkSpecBase {
   }
 
   private def ccMap(edges: Seq[(Long, Long)], maxIter: Int = 25): Map[Long, Long] =
-    Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"), maxIter = maxIter)
+    ccMapOf(edges.toDF("doc_a", "doc_b"), maxIter)
+
+  private def ccMapOf(edges: org.apache.spark.sql.DataFrame,
+                      maxIter: Int = 25): Map[Long, Long] =
+    Dedup.connectedComponents(edges, maxIter = maxIter)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** `body` through both exits of connectedComponents — the driver
+    * finish (the default session's broadcast bound) and the star rounds
+    * (`autoBroadcastJoinThreshold = -1`) — which must agree. */
+  private def bothExits[A](body: => A): A = {
+    val driver = body
+    val star = withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+    assert(star === driver, "driver finish and star rounds disagree")
+    driver
+  }
 
   test("connectedComponents: hand graph with chain, reversed dups, and self-loops") {
     // {1,2,3} via a chain, {4,5}, self-loop 7 dropped (7 never appears:
     // a doc paired only with itself is not in any near-dup relation)
-    val comp = ccMap(Seq((2L, 1L), (2L, 3L), (5L, 4L), (4L, 5L), (7L, 7L)))
+    val comp = bothExits(ccMap(Seq((2L, 1L), (2L, 3L), (5L, 4L), (4L, 5L), (7L, 7L))))
     assert(comp === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
   }
 
@@ -191,11 +205,50 @@ class DedupSpec extends SparkSpecBase {
     // a 31-edge path is the slow-contraction worst case for naive label
     // propagation (O(diameter)); large-star/small-star takes O(log² n)
     val path = (0L until 31L).map(i => (i, i + 1))
-    assert(ccMap(path, maxIter = 8) ===
+    assert(bothExits(ccMap(path, maxIter = 8)) ===
       (0L to 31L).map(_ -> 0L).toMap)
-    // a budget of 0 rounds cannot converge — must throw, never return a
-    // partially-contracted clustering
-    intercept[IllegalStateException](ccMap(path, maxIter = 0))
+    // a budget of 0 star rounds cannot converge — must throw, never
+    // return a partially-contracted clustering
+    withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      intercept[IllegalStateException](ccMap(path, maxIter = 0))
+    }
+  }
+
+  test("connectedComponents: the driver finish never iterates, so maxIter = 0 " +
+    "still resolves the path exactly") {
+    val path = (0L until 31L).map(i => (i, i + 1))
+    assert(ccMap(path, maxIter = 0) === (0L to 31L).map(_ -> 0L).toMap)
+  }
+
+  test("connectedComponents: the driver finish is exact at the broadcast " +
+    "bound, a partition over its share of the bound included") {
+    // n path edges: 7 in one partition, the rest spread over three more
+    def path(n: Int) = {
+      val es = (0L until n.toLong).map(i => (i, i + 1))
+      es.take(7).toDF("doc_a", "doc_b").coalesce(1)
+        .union(es.drop(7).toDF("doc_a", "doc_b").repartition(3))
+    }
+    withSessionConf("spark.sql.autoBroadcastJoinThreshold", "160") {
+      // 160 B holds 10 edges: the driver finish, which never iterates
+      assert(ccMapOf(path(10), maxIter = 0) === (0L to 10L).map(_ -> 0L).toMap)
+      // one edge more takes the star rounds, which cannot converge in 0
+      intercept[IllegalStateException](ccMapOf(path(11), maxIter = 0))
+    }
+  }
+
+  test("connectedComponents: null endpoints are dropped; ids at the ends of " +
+    "the long range keep their order") {
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(Long.MaxValue), Some(Long.MaxValue - 1)),
+      (Some(Long.MinValue + 1), Some(Long.MinValue)),
+      (Some(0L), Some(Long.MinValue + 1)),
+      (Some(Long.MaxValue), None), (None, Some(5L)), (None, None),
+      (Some(6L), Some(7L))
+    ).toDF("doc_a", "doc_b")
+    assert(bothExits(ccMapOf(edges)) === Map(
+      Long.MaxValue -> (Long.MaxValue - 1), (Long.MaxValue - 1) -> (Long.MaxValue - 1),
+      Long.MinValue -> Long.MinValue, (Long.MinValue + 1) -> Long.MinValue,
+      0L -> Long.MinValue, 6L -> 6L, 7L -> 6L))
   }
 
   test("connectedComponents: random-graph differential vs driver-side union-find") {
@@ -219,7 +272,7 @@ class DedupSpec extends SparkSpecBase {
       val m = members.min
       members.map(_ -> m)
     }.toMap
-    assert(ccMap(edges) === expected)
+    assert(bothExits(ccMap(edges)) === expected)
   }
 
   test("resolveClusters: transitive cluster assignment, longest-text canonical, singletons intact") {
@@ -231,17 +284,17 @@ class DedupSpec extends SparkSpecBase {
       (30L, "p q r s"), (31L, "p q r s") // pair; equal length → min id 30
     ).toDF("doc_id", "text")
     val pairs = Seq((10L, 11L), (11L, 12L), (30L, 31L)).toDF("doc_a", "doc_b")
-    val out = Dedup.resolveClusters(corpus, pairs)
+    val out = bothExits(Dedup.resolveClusters(corpus, pairs)
       .select("doc_id", "cluster_id", "canonical_id")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap)
     assert(out === Map(
       10L -> ((10L, 11L)), 11L -> ((10L, 11L)), 12L -> ((10L, 11L)),
       20L -> ((20L, 20L)),
       30L -> ((30L, 30L)), 31L -> ((30L, 30L))))
     // the deduplicated corpus = canonical rows only
-    val survivors = Dedup.resolveClusters(corpus, pairs)
+    val survivors = bothExits(Dedup.resolveClusters(corpus, pairs)
       .filter(col("doc_id") === col("canonical_id"))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+      .select("doc_id").collect().map(_.getLong(0)).toSet)
     assert(survivors === Set(11L, 20L, 30L))
   }
 
@@ -252,18 +305,18 @@ class DedupSpec extends SparkSpecBase {
       (30L, "p"), (31L, "q")              // pair
     ).toDF("doc_id", "text")
     val pairs = Seq((10L, 11L), (11L, 12L), (30L, 31L)).toDF("doc_a", "doc_b")
-    val out = Dedup.softDedupWeights(corpus, pairs)
+    val out = bothExits(Dedup.softDedupWeights(corpus, pairs)
       .collect()
       .map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
+        ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap)
     assert(out === Map(
       10L -> ((10L, 3L, 1.0 / 3.0)), 11L -> ((10L, 3L, 1.0 / 3.0)),
       12L -> ((10L, 3L, 1.0 / 3.0)),
       20L -> ((20L, 1L, 1.0)),
       30L -> ((30L, 2L, 0.5)), 31L -> ((30L, 2L, 0.5))))
     // conservation: total weight == number of semantic units (clusters)
-    val total = Dedup.softDedupWeights(corpus, pairs)
-      .agg(sum(col("weight"))).collect()(0).getDouble(0)
+    val total = bothExits(Dedup.softDedupWeights(corpus, pairs)
+      .agg(sum(col("weight"))).collect()(0).getDouble(0))
     assert(math.abs(total - 3.0) < 1e-12)
   }
 
@@ -560,4 +613,35 @@ class DedupSpec extends SparkSpecBase {
     }
     assert(e.getMessage.contains("must divide"))
   }
+
+  test("resolveClusters job budget: the driver finish closes the near-dup " +
+    "graph in a few jobs, and the star rounds release superseded rounds") {
+    val docs = Tables.documents(spark, sf0001)
+    val pairs = Dedup.minhashLshPairs(docs, n = 3, numPerm = 32,
+      rowsPerBand = 2, num = 1, den = 2).localCheckpoint()
+    def resolved() = Dedup.resolveClusters(docs, pairs).count()
+    resolved() // warm-up: the counted run's plans are not first-time
+    val (jobs, n) = countingJobs("resolve-clusters")(resolved())
+    assert(n === docs.count())
+    assert(jobs.started <= MaxResolveJobs,
+      s"resolveClusters ran ${jobs.started} jobs, budget $MaxResolveJobs")
+    // the driver finish leaves no blocks pinned, the star rounds only
+    // their last round's
+    val sc = spark.sparkContext
+    def pinned[A](body: => A): (A, Int) = {
+      val before = sc.getPersistentRDDs.keySet
+      val a = body
+      (a, (sc.getPersistentRDDs.keySet -- before).size)
+    }
+    assert(pinned(Dedup.connectedComponents(pairs))._2 === 0)
+    val (star, starPinned) = pinned(withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      Dedup.connectedComponents(pairs) })
+    assert(starPinned === 1)
+    Checkpointing.release(star)
+  }
+
+  /** Jobs of `resolveClusters(...).count()` on the sf0.001 documents with
+    * its LSH pairs pinned: measured 6 with the driver finish (1 of them
+    * the closure); the star rounds made it 31. */
+  private val MaxResolveJobs = 6
 }

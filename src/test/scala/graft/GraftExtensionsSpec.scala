@@ -45,7 +45,9 @@ class GraftExtensionsSpec extends SparkSpecBase {
         |  graft_text_metrics('a b').n_tokens AS tm,
         |  graft_rolling_hash('x') AS rh,
         |  graft_sorted_upper_bound(array(1L, 3L, 5L), 4L) AS ub,
-        |  graft_hyperplane_sig(array(1.0D, 0.0D), 2, 0) AS hs""".stripMargin)
+        |  graft_hyperplane_sig(array(1.0D, 0.0D), 2, 0) AS hs,
+        |  graft_nearest_centroids(array(1.0D, 0.0D), array(struct(9L, array(0.0D, 1.0D)),
+        |    struct(7L, array(2.0D, 0.0D))), 1)[0] AS nc""".stripMargin)
       .collect().head
     assert(r.getAs[Double]("d") === 11.0)
     assert(r.getAs[Long]("i") === 2L)
@@ -57,6 +59,7 @@ class GraftExtensionsSpec extends SparkSpecBase {
     assert(r.getAs[Long]("rh") >= 0L && r.getAs[Long]("rh") < 1000000007L)
     assert(r.getAs[Int]("ub") === 2) // elements <= 4 in [1,3,5]
     assert(r.getAs[Long]("hs") >= 0L && r.getAs[Long]("hs") < 4L) // 2-bit sig
+    assert(r.getAs[Long]("nc") === 7L) // cosine 1 beats cosine 0
   }
 
   test("SimplifySelfIntersect rewrites |A∩A| to size(A)") {

@@ -156,8 +156,16 @@ class GraphSpec extends SparkSpecBase {
     val srcs = Seq("n1").toDF("id")
     def prOut() = Graph.pageRank(prEdges, 0.85, iters = 12)
       .collect().map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).toSeq
-    def ccOut() = Dedup.connectedComponents(ccEdges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    // both exits: the driver finish (the default session) and the star
+    // rounds (no broadcast bound), which must agree
+    def ccOut() = {
+      def run() = Dedup.connectedComponents(ccEdges)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      val driver = run()
+      assert(withSessionConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run()) ===
+        driver, "connectedComponents: driver finish and star rounds disagree")
+      driver
+    }
     def bfsOut() = Graph.bfsDistances(bfsEdges, srcs, maxHops = 6)
       .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
     val (prL, ccL, bfsL) = (prOut(), ccOut(), bfsOut())

@@ -526,42 +526,6 @@ class PipelineSpec extends SparkSpecBase {
     }
   }
 
-  /** Jobs started and ended under one value of a local property — the
-    * spec's own tag, so jobs of anything else in the JVM do not count.
-    * Pool threads a run creates inherit the tag, as do Spark's broadcast
-    * and subquery threads (they copy the caller's local properties). */
-  private final class TaggedJobs(tag: String)
-      extends org.apache.spark.scheduler.SparkListener {
-    private val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val ended = new java.util.concurrent.atomic.AtomicInteger()
-    def started: Int = mine.size
-    override def onJobStart(
-        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      if (Option(e.properties)
-          .exists(_.getProperty(TagKey) == tag)) mine.add(e.jobId)
-    override def onJobEnd(
-        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-      if (mine.contains(e.jobId)) ended.incrementAndGet()
-  }
-  private val TagKey = "graft.spec.tag"
-
-  /** Run `body` with its jobs tagged and counted; the count is read after
-    * the listener bus has delivered every event the body produced. */
-  private def countingJobs[A](tag: String)(body: => A): (TaggedJobs, A) = {
-    val sc = spark.sparkContext
-    val jobs = new TaggedJobs(tag)
-    sc.addSparkListener(jobs)
-    sc.setLocalProperty(TagKey, tag)
-    try {
-      val a = body
-      org.apache.spark.ListenerBusDrain(sc)
-      (jobs, a)
-    } finally {
-      sc.setLocalProperty(TagKey, null)
-      sc.removeSparkListener(jobs)
-    }
-  }
-
   test("routed run() job budget; a failing tail write throws only after " +
     "every other write settled, and /train answers a soft error") {
     val ev = Tables.events(spark, sf0001)

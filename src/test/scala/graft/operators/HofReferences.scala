@@ -60,4 +60,21 @@ object HofReferences {
         array_join(transform(keptPos, k => element_at(col("__ws"), k)), " ")
           .as("text_clean"))
   }
+
+  /** The relational form [[Similarity.assign]] claims row equality with:
+    * every row crossed with the broadcast centroid set, scored by
+    * [[Similarity.cosine]], and the first `keep` kept by `row_number()`
+    * over (cosine desc, centroid_id) per row. */
+  def assignWindow(cents: DataFrame, df: DataFrame, idName: String,
+                   keep: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(idName))
+      .orderBy(col("ccos").desc, col("centroid_id"))
+    df.select(col("vec_id").as(idName), col("embedding"))
+      .join(broadcast(cents), col(idName).isNotNull)
+      .withColumn("ccos", Similarity.cosine(col("embedding"), col("centv")))
+      .withColumn("crank", row_number().over(w))
+      .filter(col("crank") <= keep)
+      .select(col(idName), col("centroid_id"))
+  }
 }
