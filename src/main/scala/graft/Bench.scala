@@ -49,7 +49,11 @@ import org.apache.spark.sql.SparkSession
   *    the centroids on the driver — ann_ivf_topk times only the postings
   *    and the probes), the connected-components closure of the dedup
   *    cluster rows (driver finish or star rounds, both run while the
-  *    plan is built), and — DELIBERATELY — ann_ivf_persisted's whole index build
+  *    plan is built), the build side of dedup_ngram_jaccard's and
+  *    dedup_containment's pair-scan kernels (the row-cap count, then a
+  *    collect() of every doc's hashed shingles for the broadcast —
+  *    measured at sf0.1, local[4] on a 4-core box, warm session: 1.2–1.4 s
+  *    and 1.0–1.3 s untimed against 2.4–3.0 s and 4.1–4.4 s timed), and — DELIBERATELY — ann_ivf_persisted's whole index build
   *    + parquet writes: that row measures the SERVE-from-persisted-index
   *    path by design (the build cost is ann_ivf_topk's number). Treat
   *    such actions as statistics/index builds; anything heavier must

@@ -26,6 +26,20 @@ import org.apache.spark.sql.functions._
   *    doc must be stored: near-dup ⇔ small Hamming distance; banding the
   *    64 bits into 4×16 guarantees candidate generation for distance ≤ 3
   *    (pigeonhole) and is probabilistic beyond.
+  *  - every banded family makes its candidates with ONE combinator,
+  *    [[BandJoin]]: explode a band key per (row, band) → optional 1-bit
+  *    multi-probe of one end ([[BandJoin.probe]]) → equi-join on the key
+  *    → keep (`a < b` for a self-join, the caller's predicate for a
+  *    cross-join) → project the id pair → `distinct` ([[BandJoin.pairs]];
+  *    a stream keeps its repeats) → join each id back to its payload and
+  *    verify exactly ([[BandJoin.verify]]). A family supplies only its key
+  *    expression, its carried columns and its verify predicate: MinHash
+  *    here ([[minhashLshPairs]], [[minhashPairsAgainst]], and
+  *    StreamingDedup.indexProbeStream), SimHash bands and block tables
+  *    ([[simhashPairsFromSketch]], [[simhashPairsFromSketchMasked]]),
+  *    and in [[Similarity]] hyperplane buckets (lshTopK,
+  *    cosinePairsBucketed) and IVF posting lists (ivfTopKWithIndex,
+  *    ivfPqTopK, pcaIvfTopK, semanticDedupPairs).
   */
 object Dedup {
 
@@ -103,12 +117,6 @@ object Dedup {
     ((size(a) + size(b)) > 0) &&
       ((inter * (den + num)) >= ((size(a) + size(b)).cast("long") * num))
   }
-
-  /** Size-ratio prefilter: j = |A∩B|/|A∪B| ≤ min(|A|,|B|)/max(|A|,|B|),
-    * so j ≥ num/den requires den·|A| ≥ num·|B| and vice versa. Checked
-    * BEFORE the per-pair intersect — prunes on two cached ints. */
-  private[graft] def sizeRatioCanReach(sa: Column, sb: Column, num: Int, den: Int): Column =
-    (sa * den >= sb * num) && (sb * den >= sa * num)
 
   /** Ground-truth near-dup pairs by exact shingle Jaccard ≥ num/den.
     * O(n²) pair evaluations — correctness reference and small-scale path
@@ -297,22 +305,34 @@ object Dedup {
     (md.getLong("graft_gram_n").toInt, md.getLong("graft_num_perm").toInt)
   }
 
+  /** The band count numPerm / rowsPerBand, which must divide: a silent
+    * truncation would band only (numPerm/r)·r of the signature — perms
+    * sketched and paid for but never used, and a realized recall curve
+    * quietly different from the b = numPerm/r the caller computed. */
+  private[graft] def bandCount(numPerm: Int, rowsPerBand: Int): Int = {
+    require(numPerm % rowsPerBand == 0,
+      s"rowsPerBand=$rowsPerBand must divide numPerm=$numPerm")
+    numPerm / rowsPerBand
+  }
+
   /** Banded view of a [[minhashIndex]] frame: one row per (doc, band),
     * `band_hash` = xxhash64 of the band's signature slice (band id mixed
-    * in so equal slices of different bands never collide). Map-only. */
+    * in so equal slices of different bands never collide), after
+    * `doc_id` and the `carry` columns. Map-only. */
   private[graft] def bandsOf(index: DataFrame, numBands: Int,
-                             rowsPerBand: Int): DataFrame =
-    index.select(col("doc_id"), posexplode(expr(
+                             rowsPerBand: Int, carry: Column*): DataFrame =
+    index.select(col("doc_id") +: carry :+ posexplode(expr(
       s"transform(sequence(0, ${numBands - 1}), " +
         s"b -> xxhash64(b, slice(sig, b * $rowsPerBand + 1, $rowsPerBand)))"))
-      .as(Seq("band_id", "band_hash")))
+      .as(Seq("band_id", "band_hash")): _*)
 
   /** LSH candidate pairs + exact verification.
     *
     * Signature → `numPerm/rowsPerBand` bands → explode → shuffle on the
     * (band_id, band_hash) key → in-bucket pair generation → distinct →
-    * exact-Jaccard verify. Output = verified near-dup pairs (doc_a <
-    * doc_b); precision 1.0, recall 1−(1−j^r)^b per pair.
+    * exact-Jaccard verify (the [[BandJoin]] shape, see "Scale design"
+    * above). Output = verified near-dup pairs (doc_a < doc_b); precision
+    * 1.0, recall 1−(1−j^r)^b per pair.
     *
     * `maxBucket` (0 = off, the default — existing behavior and oracles
     * unchanged): skip band buckets holding more than `maxBucket` docs
@@ -332,13 +352,7 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, n: Int, numPerm: Int,
                       rowsPerBand: Int, num: Int, den: Int,
                       maxBucket: Int = 0): DataFrame = {
-    // the minhashPairsAgainst guard, mirrored (round 15): a silent
-    // truncation here banded only (numPerm/r)*r of the signature — perms
-    // sketched and paid for but never used, and a realized recall curve
-    // quietly different from the b = numPerm/r the caller computed
-    require(numPerm % rowsPerBand == 0,
-      s"rowsPerBand=$rowsPerBand must divide numPerm=$numPerm")
-    val numBands = numPerm / rowsPerBand
+    val numBands = bandCount(numPerm, rowsPerBand)
     // localCheckpoint (LAZY): shingles + signatures feed four join
     // branches (two banded sides, two verification sides) — compute once,
     // reuse from cache; eager=false avoids a dedicated fill pass.
@@ -355,32 +369,41 @@ object Dedup {
     val banded =
       if (maxBucket <= 0) bandedAll
       else bandedAll.join(
-        bandedAll.groupBy(col("band_id"), col("band_hash"))
+        bandedAll.groupBy(BandKey.map(col): _*)
           .agg(count(lit(1)).as("__bc")).filter(col("__bc") > maxBucket)
-          .select(col("band_id"), col("band_hash")),
-        Seq("band_id", "band_hash"), "left_anti")
+          .select(BandKey.map(col): _*),
+        BandKey, "left_anti")
     // In-bucket pair generation as a SELF-JOIN on the band key (not a
     // collect_set + in-row pair expansion): a hot bucket — guaranteed at
     // scale, and common here because the tiny vocabulary makes popular
     // shingles win many min-hashes — would otherwise become one giant
-    // array in one row on one thread. The equi-join form shuffles on the
-    // band key and AQE's skew-join splitting handles the hot buckets.
-    val candidates = banded.alias("x")
-      .join(banded.alias("y"), Seq("band_id", "band_hash"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val sh = s.select(col("doc_id"), col("sh"), size(col("sh")).as("sz"))
-    candidates
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
-        col("sz").as("sz_a")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"),
-        col("sz").as("sz_b")), "doc_b")
-      // cheap integer prefilter before the per-pair intersect
-      .filter(sizeRatioCanReach(col("sz_a"), col("sz_b"), num, den))
-      .filter(jaccardAtLeast(col("sh_a"), col("sh_b"), num, den))
-      .select(col("doc_a"), col("doc_b"))
+    // array in one row on one thread.
+    val candidates = BandJoin.selfPairs(banded.alias("x"), banded.alias("y"),
+      BandKey, "x.doc_id", "y.doc_id", ("doc_a", "doc_b"))
+    BandJoin.verify(candidates,
+      Seq("doc_a" -> shingleSide(s, "doc_a", "a"),
+        "doc_b" -> shingleSide(s, "doc_b", "b")), jaccardCheck(num, den))
   }
+
+  /** The MinHash band-join key of [[bandsOf]] rows. */
+  private[graft] val BandKey = Seq("band_id", "band_hash")
+
+  /** One pair end's verify payload from a [[minhashIndex]]-shaped frame:
+    * `(id, sh_<side>, sz_<side>)`; `sh` overrides the shingle column. */
+  private def shingleSide(df: DataFrame, id: String, side: String,
+                          sh: Column = col("sh")): DataFrame =
+    df.select(col("doc_id").as(id), sh.as(s"sh_$side"),
+      size(col("sh")).as(s"sz_$side"))
+
+  /** The MinHash verify predicate over two [[shingleSide]] payloads:
+    * exact Jaccard ≥ num/den ([[jaccardAtLeast]]) behind a size-ratio
+    * prefilter — j = |A∩B|/|A∪B| ≤ min(|A|,|B|)/max(|A|,|B|), so j ≥
+    * num/den requires den·|A| ≥ num·|B| and vice versa; checked BEFORE
+    * the per-pair intersect, it prunes on two cached ints. */
+  private[graft] def jaccardCheck(num: Int, den: Int): Column =
+    (col("sz_a") * den >= col("sz_b") * num) &&
+      (col("sz_b") * den >= col("sz_a") * num) &&
+      jaccardAtLeast(col("sh_a"), col("sh_b"), num, den)
 
   /** MinHash band sizing as a pure function of corpus count (round 13 —
     * the occupancyBits discipline applied to the last caller-tuned
@@ -486,38 +509,33 @@ object Dedup {
     * corpus re-scan of text, no corpus-side shuffle beyond the band-key
     * exchange) and the shingle arrays only for candidate verification,
     * joined on doc id. Candidate volume is the same banded-bucket product
-    * as [[minhashLshPairs]], restricted to cross pairs. Recall per true
+    * as [[minhashLshPairs]], restricted to cross pairs (the [[BandJoin]]
+    * cross-join, no keep predicate). Recall per true
     * pair is 1−(1−j^r)^b, identical to the self-join path (same
     * signatures, same band layout). */
   def minhashPairsAgainst(batch: DataFrame, index: DataFrame,
                           rowsPerBand: Int, num: Int, den: Int): DataFrame = {
     val (n, numPerm) = indexContract(index)
-    require(numPerm % rowsPerBand == 0,
-      s"rowsPerBand=$rowsPerBand must divide the index's numPerm=$numPerm")
-    val numBands = numPerm / rowsPerBand
+    val numBands = bandCount(numPerm, rowsPerBand)
     // batch sketch feeds its banded view + the verify join; the index is
     // caller-owned (persist/read-back is the caller's lifecycle, the
     // AsOfJoin pack()/probeAgainst() convention)
     val b = minhashIndex(batch, n, numPerm).localCheckpoint(eager = false)
-    val candidates = bandsOf(b, numBands, rowsPerBand).alias("x")
-      .join(bandsOf(index, numBands, rowsPerBand).alias("y"),
-        Seq("band_id", "band_hash"))
-      .select(col("x.doc_id").as("doc_new"), col("y.doc_id").as("doc_old"))
-      .distinct()
-    candidates
-      .join(b.select(col("doc_id").as("doc_new"), col("sh").as("sh_a"),
-        size(col("sh")).as("sz_a")), "doc_new")
-      // array_compact: parquet read-back widens the element type to
-      // nullable, which the native two-pointer intersect rejects; the
-      // compact is a data no-op (the index never contains null elements)
-      // that restores containsNull=false at the type level
-      .join(index.select(col("doc_id").as("doc_old"),
-        array_compact(col("sh")).as("sh_b"),
-        size(col("sh")).as("sz_b")), "doc_old")
-      .filter(sizeRatioCanReach(col("sz_a"), col("sz_b"), num, den))
-      .filter(jaccardAtLeast(col("sh_a"), col("sh_b"), num, den))
-      .select(col("doc_new"), col("doc_old"))
+    val candidates = BandJoin.pairs(bandsOf(b, numBands, rowsPerBand).alias("x"),
+      bandsOf(index, numBands, rowsPerBand).alias("y"), BandKey, None,
+      col("x.doc_id").as("doc_new"), col("y.doc_id").as("doc_old"))
+    BandJoin.verify(candidates,
+      Seq("doc_new" -> shingleSide(b, "doc_new", "a"),
+        "doc_old" -> indexSide(index)), jaccardCheck(num, den))
   }
+
+  /** The persisted index's verify payload, `(doc_old, sh_b, sz_b)`.
+    * array_compact: parquet read-back widens the element type to
+    * nullable, which the native two-pointer intersect rejects; the
+    * compact is a data no-op (the index never contains null elements)
+    * that restores containsNull=false at the type level. */
+  private[graft] def indexSide(index: DataFrame): DataFrame =
+    shingleSide(index, "doc_old", "b", array_compact(col("sh")))
 
   /** 63-bit SimHash over the hashed-shingle array column named `shCol`
     * (array<long>; bit 63 left clear so the value stays a non-negative
@@ -1055,29 +1073,27 @@ object Dedup {
     * in ≤ 1 bit, so candidate generation is GUARANTEED for d ≤ 7 — the
     * right knob when maxDist is pushed past the exact-band guarantee,
     * where distance-4..8 pairs were previously found only if they happened
-    * to collide on a band. In the self-join both docs take the probe role,
-    * so a 1-bit band difference is found from either end. */
+    * to collide on a band. The probe set is symmetric, so the self-join
+    * keeps doc_a < doc_b and still finds a 1-bit band difference from
+    * either end ([[BandJoin.probe]]). */
   def simhashPairsFromSketch(sk: DataFrame, maxDist: Int,
-                             probeBits: Int = 0): DataFrame = {
-    require(probeBits >= 0 && probeBits <= 16,
-      s"probeBits must be in [0, 16] (16-bit bands), got $probeBits")
-    val banded = sk.select(col("doc_id"), col("simhash"), posexplode(
-      array(col("band0"), col("band1"), col("band2"), col("band3")))
-      .as(Seq("band_id", "band_val")))
-    val probed =
-      if (probeBits == 0) banded
-      else banded.select(col("doc_id"), col("simhash"), col("band_id"),
-        explode(array(col("band_val") +:
-          (0 until probeBits).map(j => col("band_val").bitwiseXOR(lit(1L << j))): _*))
-          .as("band_val"))
-    val a = probed.select(col("band_id"), col("band_val"),
-      col("doc_id").as("doc_a"), col("simhash").as("sim_a"))
-    val b = banded.select(col("band_id"), col("band_val"),
-      col("doc_id").as("doc_b"), col("simhash").as("sim_b"))
-    a.join(b, Seq("band_id", "band_val"))
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(expr(s"bit_count(sim_a ^ sim_b) <= $maxDist"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+                             probeBits: Int = 0): DataFrame =
+    simhashBandJoin(sk, (0 to 3).map(i => col(s"band$i")), probeBits, 16,
+      maxDist)
+
+  /** The SimHash band join: one `band_id` row per key of `keys`, the
+    * probe end flipping `probeBits` of the key's `width` bits; the
+    * sketches ride along for the inline Hamming verify. */
+  private def simhashBandJoin(sk: DataFrame, keys: Seq[Column], probeBits: Int,
+                              width: Int, maxDist: Int): DataFrame = {
+    val banded = sk.select(col("doc_id"), col("simhash"),
+      posexplode(array(keys: _*)).as(Seq("band_id", "band_val")))
+    def end(df: DataFrame, s: String) = df.select(col("band_id"),
+      col("band_val"), col("doc_id").as(s"doc_$s"), col("simhash").as(s"sim_$s"))
+    BandJoin.selfPairs(
+      end(BandJoin.probe(banded, "band_val", probeBits, width), "a"),
+      end(banded, "b"), Seq("band_id", "band_val"), "doc_a", "doc_b",
+      ("doc_a", "doc_b"), Some(expr(s"bit_count(sim_a ^ sim_b) <= $maxDist")))
   }
 
   // ------------------------------------------------------------------
@@ -1152,22 +1168,13 @@ object Dedup {
     * verify `bit_count(xor) ≤ maxDist`. With masks built for d ≥
     * maxDist the candidate stage is COMPLETE for the verify predicate,
     * so the result is exactly the Hamming-≤-maxDist pair set — same
-    * shuffle shape as [[simhashPairsFromSketch]] (band equi-join, never
-    * all-pairs), fan-out C(m,d) rows per doc per side. */
+    * [[BandJoin]] self-join as [[simhashPairsFromSketch]] (band
+    * equi-join, never all-pairs), fan-out C(m,d) rows per doc per side. */
   def simhashPairsFromSketchMasked(sk: DataFrame, maxDist: Int,
                                    masks: Array[Long]): DataFrame = {
     require(masks.nonEmpty, "empty table-mask layout")
-    val banded = sk.select(col("doc_id"), col("simhash"), posexplode(
-      array(masks.map(mk => col("simhash").bitwiseAND(lit(mk))): _*))
-      .as(Seq("band_id", "band_val")))
-    val a = banded.select(col("band_id"), col("band_val"),
-      col("doc_id").as("doc_a"), col("simhash").as("sim_a"))
-    val b = banded.select(col("band_id"), col("band_val"),
-      col("doc_id").as("doc_b"), col("simhash").as("sim_b"))
-    a.join(b, Seq("band_id", "band_val"))
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(expr(s"bit_count(sim_a ^ sim_b) <= $maxDist"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    simhashBandJoin(sk, masks.map(mk => col("simhash").bitwiseAND(lit(mk))),
+      0, 63, maxDist)
   }
 
   /** [[simhashPairsFromSketchMasked]] with the sizing rule applied

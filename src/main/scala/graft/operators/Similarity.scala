@@ -21,8 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
   *    (one narrow pass), then joins queries to their bucket only: the join
   *    key is an int, the fan-in per bucket is |corpus|/2^b in expectation.
   *    Recall is tuned by b (fewer bits → bigger buckets → higher recall)
-  *    and multi-probe (flip one signature bit per probe). An IVF variant
-  *    would replace the hash with k-means centroid ids — same join shape.
+  *    and multi-probe (flip one signature bit per probe). The IVF paths
+  *    replace the hash with k-means centroid ids — the same band join
+  *    ([[BandJoin]]; see the "Scale design" note on [[Dedup]]).
   *  - normalize vectors once upstream and cosine degenerates to a dot
   *    product (saves the per-pair norm).
   */
@@ -122,7 +123,8 @@ object Similarity {
 
   /** Multi-table LSH approximate top-k: `tables` independent b-bit
     * hyperplane signatures (OR-amplification — a pair is a candidate if it
-    * collides in ANY table), candidates deduplicated then scored exactly.
+    * collides in ANY table), candidates deduplicated then scored exactly
+    * (the [[BandJoin]] cross-join on (table, bucket)).
     *
     * `multiProbe` (0..bits): in addition to its own bucket, each QUERY
     * probes the buckets at Hamming distance 1 on its first `multiProbe`
@@ -144,28 +146,36 @@ object Similarity {
     * [[withNorm]]. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               bits: Int, tables: Int, multiProbe: Int = 0): DataFrame = {
-    require(multiProbe >= 0 && multiProbe <= bits,
-      s"multiProbe must be in [0, bits], got $multiProbe / bits=$bits")
     graft.functions.GraftFunctions.register(queries.sparkSession)
-    def bucketed(df: DataFrame, idName: String): DataFrame =
-      df.select(col("vec_id").as(idName), posexplode(array(
-        (0 until tables).map(t => hyperplaneSignature("embedding", bits, t)): _*))
-        .as(Seq("table_id", "bucket")))
-    val probedQueries = {
-      val exact = bucketed(queries, "query_id")
-      if (multiProbe == 0) exact
-      else exact.select(col("query_id"), col("table_id"),
-        explode(array(col("bucket") +:
-          (0 until multiProbe).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*))
-          .as("bucket"))
-    }
-    val cand = probedQueries
-      .join(bucketed(corpus, "neighbor_id"), Seq("table_id", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-      .distinct()
+    val probes = BandJoin.probe(hyperplaneBands(queries,
+      col("vec_id").as("query_id"), bits, tables), "bucket", multiProbe, bits)
+    val cand = annPairs(probes, hyperplaneBands(corpus,
+      col("vec_id").as("neighbor_id"), bits, tables), Seq("table_id", "bucket"))
     topKAmong(cand, queries, corpus, k)
   }
+
+  /** One `(id, table_id, bucket)` row per (vector, hash table): the
+    * `bits`-bit [[hyperplaneSignature]] of `embedding` in each table. */
+  private def hyperplaneBands(df: DataFrame, id: Column, bits: Int,
+                              tables: Int): DataFrame =
+    df.select(id, posexplode(array(
+      (0 until tables).map(t => hyperplaneSignature("embedding", bits, t)): _*))
+      .as(Seq("table_id", "bucket")))
+
+  /** The ANN band join: (query_id, neighbor_id) candidates of `probes`
+    * matched to `index` rows on the key `on`, a vector never its own
+    * neighbour. */
+  private def annPairs(probes: DataFrame, index: DataFrame,
+                       on: Seq[String]): DataFrame =
+    BandJoin.pairs(probes, index, on,
+      Some(col("query_id") =!= col("neighbor_id")),
+      col("query_id"), col("neighbor_id"))
+
+  /** IVF candidates: each query row of `q` probes the posting lists of
+    * its `nProbe` nearest centroids. */
+  private def ivfPairs(index: IvfIndex, q: DataFrame, nProbe: Int): DataFrame =
+    annPairs(assign(index.centroids, q, "query_id", keep = nProbe),
+      index.postings, Seq("centroid_id"))
 
   /** IVF (inverted-file) approximate top-k — the FAISS-style scale path:
     * a small set of coarse centroids partitions the corpus ONCE (cluster
@@ -186,14 +196,14 @@ object Similarity {
     * [[withNorm]]. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               nCentroids: Int, nProbe: Int, refineIters: Int = 1): DataFrame =
-    buildIvfIndex(corpus, nCentroids, refineIters) match {
-      case None =>
-        // empty corpus: no seeds to pick — return the empty result frame
-        // (the spread-sample seeding this replaced degraded the same way)
-        queries.sparkSession.range(0).select(col("id").as("query_id"),
-          col("id").as("rank"), col("id").as("neighbor_id"))
-      case Some(index) => ivfTopKWithIndex(queries, corpus, index, k, nProbe)
-    }
+    buildIvfIndex(corpus, nCentroids, refineIters)
+      .fold(noNeighbors(queries))(ivfTopKWithIndex(queries, corpus, _, k, nProbe))
+
+  /** The empty top-k frame: an empty corpus has no seeds to pick (the
+    * spread-sample seeding this replaced degraded the same way). */
+  private def noNeighbors(queries: DataFrame): DataFrame =
+    queries.sparkSession.range(0).select(col("id").as("query_id"),
+      col("id").as("rank"), col("id").as("neighbor_id"))
 
   /** The persisted form of the coarse quantizer: centroids
     * `(centroid_id long, centv array<float>)` and posting assignments
@@ -322,18 +332,15 @@ object Similarity {
 
   /** Serve approximate top-k from a PREBUILT (possibly parquet-round-
     * tripped) [[IvfIndex]]: only the query-side assignment and the
-    * candidate scoring run — the corpus is never re-clustered.
+    * candidate scoring run — the corpus is never re-clustered. Candidates
+    * are the [[BandJoin]] cross-join of the probes and the postings on
+    * `centroid_id`.
     * Zero-norm rows are out of the cosine domain on both sides: see
     * [[withNorm]]. */
   def ivfTopKWithIndex(queries: DataFrame, corpus: DataFrame,
                        index: IvfIndex, k: Int, nProbe: Int): DataFrame = {
     graft.functions.GraftFunctions.register(queries.sparkSession)
-    val probes = assign(index.centroids, queries, "query_id", keep = nProbe)
-    val cand = probes.join(index.postings, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-      .distinct()
-    topKAmong(cand, queries, corpus, k)
+    topKAmong(ivfPairs(index, queries, nProbe), queries, corpus, k)
   }
 
   /** Incremental index growth — the FAISS `add()` analog: assign a batch
@@ -516,8 +523,8 @@ object Similarity {
     * K-MEANS CLUSTERS instead of LSH bands — each vector is assigned to
     * its nearest centroid of a prebuilt [[IvfIndex]] (nProbe=1,
     * `multiAssign` to widen), candidates are same-cluster pairs via a
-    * self-join on the cluster id, and every candidate is verified with
-    * the exact native dot product. The literature's trade vs
+    * [[BandJoin]] self-join on the cluster id, and every candidate is
+    * verified with the exact native dot product. The literature's trade vs
     * [[cosinePairsBucketed]]: clusters adapt to the data's density (one
     * build amortized with ANN serving) where hyperplanes are oblivious;
     * recall is bounded by co-clustering of true pairs, so a pair
@@ -535,20 +542,24 @@ object Similarity {
     // both self-join branches — one broadcast-centroid pass, not two
     val assigned = assign(index.centroids, corpus, "vec_id",
       keep = multiAssign).localCheckpoint(eager = false)
-    val candidates = assigned.alias("x")
-      .join(assigned.alias("y"), Seq("centroid_id"))
-      .filter(col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-      .distinct()
-    val base = withNorm(corpus, "vec_a", "va", "na")
-      .localCheckpoint(eager = false)
-    candidates
-      .join(base, "vec_a")
-      .join(base.select(col("vec_a").as("vec_b"), col("va").as("vb"),
-        col("na").as("nb")), "vec_b")
-      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
-      .select(col("vec_a"), col("vec_b"))
+    val candidates = BandJoin.selfPairs(assigned.alias("x"),
+      assigned.alias("y"), Seq("centroid_id"), "x.vec_id", "y.vec_id",
+      ("vec_a", "vec_b"))
+    cosineVerify(candidates, withNorm(corpus, "vec_a", "va", "na")
+      .localCheckpoint(eager = false), threshold)
   }
+
+  /** Exact verify of `(vec_a, vec_b)` candidates against the `(vec_a,
+    * va, na)` vectors and norms of `a`, which also serve the b end. */
+  private def cosineVerify(cand: DataFrame, a: DataFrame,
+                           threshold: Double): DataFrame =
+    BandJoin.verify(cand, Seq("vec_a" -> a, "vec_b" -> a.select(
+      col("vec_a").as("vec_b"), col("va").as("vb"), col("na").as("nb"))),
+      cosineAtLeast(threshold))
+
+  /** The cosine predicate over `(va, na)` and `(vb, nb)` ends. */
+  private def cosineAtLeast(threshold: Double): Column =
+    dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold
 
   /** Nearest-`keep` centroid assignment, map-only: the centroid set is
     * folded into ONE row (`centv`: the array of (centroid_id, centv)
@@ -617,7 +628,7 @@ object Similarity {
     val a = withNorm(Dedup.spread(corpus), "vec_a", "va", "na")
     val b = withNorm(corpus, "vec_b", "vb", "nb")
     a.join(broadcast(b), col("vec_a") < col("vec_b"))
-      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
+      .filter(cosineAtLeast(threshold))
       .select(col("vec_a"), col("vec_b"))
   }
 
@@ -625,9 +636,10 @@ object Similarity {
     * [[cosinePairs]] lacks (the [[Dedup.minhashLshPairs]] design applied
     * to vectors): the corpus is bucketed ONCE per hash table on a
     * `bits`-bit random-hyperplane signature (the [[lshTopK]] sketch),
-    * candidate pairs are generated within buckets by a SELF-JOIN on the
-    * (table, bucket) key, and every candidate is verified with the exact
-    * native dot product. Never all-pairs, never a full-corpus broadcast:
+    * candidate pairs are generated within buckets by a [[BandJoin]]
+    * SELF-JOIN on the (table, bucket) key, and every candidate is
+    * verified with the exact native dot product. Never all-pairs, never a
+    * full-corpus broadcast:
     * both join sides shuffle on the narrow band key (AQE's skew-join
     * splitting handles hot buckets), and the verify joins move only
     * (vec_a, vec_b) id pairs back to the vectors.
@@ -638,8 +650,9 @@ object Similarity {
     * exactly like [[lshTopK]]: `multiProbe` (0..bits) also probes each
     * bucket at Hamming distance 1 on the first `multiProbe` signature
     * bits, probe-side fan-out only (the index stays one row per (vector,
-    * table)); in the self-join both vectors take the probe role, so a
-    * 1-bit band difference is found from either end.
+    * table)); the probe set is symmetric, so the self-join keeps vec_a <
+    * vec_b and still finds a 1-bit band difference from either end
+    * ([[BandJoin.probe]]).
     *
     * Honest regime note (the [[lshTopK]] caveat applies doubly here):
     * hyperplane LSH prunes hard only when the target cosine is high. At
@@ -661,8 +674,6 @@ object Similarity {
   def cosinePairsBucketed(corpus: DataFrame, threshold: Double,
                           bits: Int, tables: Int,
                           multiProbe: Int = 0): DataFrame = {
-    require(multiProbe >= 0 && multiProbe <= bits,
-      s"multiProbe must be in [0, bits], got $multiProbe / bits=$bits")
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     // Norms computed once per vector; the frame feeds the banding pass AND
     // both verify sides — localCheckpoint (LAZY, the Dedup convention) so
@@ -671,31 +682,12 @@ object Similarity {
       .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
       .filter(col("nrm") > 0) // zero vectors: NaN cos passes >= (round 15)
       .localCheckpoint(eager = false)
-    val banded = base.select(col("vec_id"), posexplode(array(
-      (0 until tables).map(t => hyperplaneSignature("embedding", bits, t)): _*))
-      .as(Seq("table_id", "bucket")))
-    val probed =
-      if (multiProbe == 0) banded
-      else banded.select(col("vec_id"), col("table_id"),
-        explode(array(col("bucket") +:
-          (0 until multiProbe).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*))
-          .as("bucket"))
-    // least/greatest orientation (not x < y): a pair is a candidate when
-    // EITHER end's probe set reaches the other's exact bucket, and the
-    // one-sided filter would silently drop the b-probes-into-a direction.
-    val cand = probed.alias("x")
-      .join(banded.alias("y"), Seq("table_id", "bucket"))
-      .filter(col("x.vec_id") =!= col("y.vec_id"))
-      .select(least(col("x.vec_id"), col("y.vec_id")).as("vec_a"),
-        greatest(col("x.vec_id"), col("y.vec_id")).as("vec_b"))
-      .distinct()
-    cand
-      .join(base.select(col("vec_id").as("vec_a"), col("embedding").as("va"),
-        col("nrm").as("na")), "vec_a")
-      .join(base.select(col("vec_id").as("vec_b"), col("embedding").as("vb"),
-        col("nrm").as("nb")), "vec_b")
-      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
-      .select(col("vec_a"), col("vec_b"))
+    val banded = hyperplaneBands(base, col("vec_id"), bits, tables)
+    val cand = BandJoin.selfPairs(
+      BandJoin.probe(banded, "bucket", multiProbe, bits).alias("x"), banded.alias("y"),
+      Seq("table_id", "bucket"), "x.vec_id", "y.vec_id", ("vec_a", "vec_b"))
+    cosineVerify(cand, base.select(col("vec_id").as("vec_a"),
+      col("embedding").as("va"), col("nrm").as("na")), threshold)
   }
 
   /** The occupancy rule as a pure function: bits = round(log₂(n /
@@ -1183,7 +1175,7 @@ object Similarity {
   }
 
   /** IVF-PQ (the full FAISS serving composition): candidates come from
-    * the IVF index's nProbe nearest inverted lists — a
+    * the IVF index's nProbe nearest inverted lists ([[BandJoin]]) — a
     * corpus/nCentroids·nProbe slice, not a scan — and ONLY those are
     * ADC-scored against the PQ codes before the exact re-rank. At 100 TB
     * this stacks the two cuts: IVF prunes the candidate COUNT, PQ shrinks
@@ -1198,13 +1190,8 @@ object Similarity {
                 pq: PqIndex, k: Int, nProbe: Int, rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
     graft.functions.GraftFunctions.register(queries.sparkSession)
-    val probes = assign(ivf.centroids, queries, "query_id", keep = nProbe)
-    val cand = probes.join(ivf.postings, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-      .distinct()
     val (encSub, vecNorm, qTable) = pqParts(queries, pq)
-    val adc = cand
+    val adc = ivfPairs(ivf, queries, nProbe)
       .join(encSub, "neighbor_id") // m code rows per candidate
       .join(qTable, Seq("query_id", "sub_id", "code"))
       .groupBy(col("query_id"), col("neighbor_id"))
@@ -1539,7 +1526,7 @@ object Similarity {
     * precision of the emitted top-k is exact given the shortlist.
     *
     * Plan contract (spec-pinned): candidates come from an equi-join on
-    * `centroid_id`; the only nested-loop join anywhere is the O(K)
+    * `centroid_id` ([[BandJoin]]); the only nested-loop join anywhere is the O(K)
     * centroid-set broadcast inside assignment — nothing ever
     * nested-loops the corpus against the queries.
     * Zero-norm rows are out of the cosine domain on both sides: see
@@ -1551,18 +1538,8 @@ object Similarity {
     // LAZY checkpoint: the reduced corpus feeds the index build (sample +
     // Lloyd passes + postings) — project once, reuse
     val reducedCorpus = pcaReduced(corpus, model).localCheckpoint(eager = false)
-    buildIvfIndex(reducedCorpus, nCentroids, refineIters) match {
-      case None =>
-        queries.sparkSession.range(0).select(col("id").as("query_id"),
-          col("id").as("rank"), col("id").as("neighbor_id"))
-      case Some(index) =>
-        val probes = assign(index.centroids, pcaReduced(queries, model),
-          "query_id", keep = nProbe)
-        val cand = probes.join(index.postings, Seq("centroid_id"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"))
-          .distinct()
-        topKAmong(cand, queries, corpus, k)
-    }
+    buildIvfIndex(reducedCorpus, nCentroids, refineIters)
+      .fold(noNeighbors(queries))(index => topKAmong(
+        ivfPairs(index, pcaReduced(queries, model), nProbe), queries, corpus, k))
   }
 }

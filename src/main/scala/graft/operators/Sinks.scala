@@ -498,10 +498,13 @@ object Sinks {
       if (touched.nonEmpty) {
         // explicit schema from the layout contract (round 17, see
         // upsertSnapshotBucketed): the snapshot carries the changes'
-        // data columns + __bucket, never the feed bookkeeping columns
+        // data columns + __bucket, never the feed bookkeeping columns —
+        // matched by the session's resolver, as the create branch's
+        // drop(opCol, orderCol) and upsertSnapshotEvolving match names
+        val resolver = spark.sessionState.analyzer.resolver
         val snapSchema = org.apache.spark.sql.types.StructType(
           inc.schema.fields.filterNot(fd =>
-            fd.name == opCol || fd.name == orderCol))
+            resolver(fd.name, opCol) || resolver(fd.name, orderCol)))
         val existingTouched = spark.read.schema(snapSchema)
           .parquet(tableDir)
           .filter(col("__bucket").isin(touched: _*))

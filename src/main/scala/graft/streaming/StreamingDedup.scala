@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
-import graft.operators.Dedup
+import graft.operators.{BandJoin, Dedup}
 
 /** Streaming composition of the dedup surface (north star × §2i): the
   * batch operators' semantics carried onto an unbounded document stream.
@@ -233,34 +233,18 @@ object StreamingDedup {
   def indexProbeStream(docs: DataFrame, index: DataFrame,
                        rowsPerBand: Int, num: Int, den: Int): DataFrame = {
     val (n, numPerm) = Dedup.indexContract(index)
-    require(numPerm % rowsPerBand == 0,
-      s"rowsPerBand=$rowsPerBand must divide the index's numPerm=$numPerm")
-    val numBands = numPerm / rowsPerBand
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val sketched = docs
-      .withColumn("ws", Dedup.tokens(coalesce(col("text"), lit(""))))
-      .withColumn("sh", Dedup.hashedShingles("ws", n))
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("sh"),
-        Dedup.minhashSignature("sh", numPerm).as("sig"))
+    val numBands = Dedup.bandCount(numPerm, rowsPerBand)
     // band rows carry the probe doc's shingles inline (joining back to
     // the stream side would be a stream-stream join) — per-batch fan-out
     // of numBands × the shingle array, bounded by the micro-batch, never
-    // by the corpus
-    val bandedStream = sketched.select(
-      col("doc_id"), col("sh").as("sh_a"), size(col("sh")).as("sz_a"),
-      posexplode(expr(
-        s"transform(sequence(0, ${numBands - 1}), " +
-          s"b -> xxhash64(b, slice(sig, b * $rowsPerBand + 1, $rowsPerBand)))"))
-        .as(Seq("band_id", "band_hash")))
-    bandedStream
-      .join(Dedup.bandsOf(index, numBands, rowsPerBand)
-        .withColumnRenamed("doc_id", "doc_old"), Seq("band_id", "band_hash"))
-      .join(index.select(col("doc_id").as("doc_old"),
-        array_compact(col("sh")).as("sh_b"), size(col("sh")).as("sz_b")),
-        "doc_old")
-      .filter(Dedup.sizeRatioCanReach(col("sz_a"), col("sz_b"), num, den))
-      .filter(Dedup.jaccardAtLeast(col("sh_a"), col("sh_b"), num, den))
-      .select(col("doc_id").as("doc_new"), col("doc_old"))
+    // by the corpus; the band join of a stream keeps its repeats
+    val cand = BandJoin.pairs(
+      Dedup.bandsOf(Dedup.minhashIndex(docs, n, numPerm), numBands,
+        rowsPerBand, col("sh").as("sh_a"), size(col("sh")).as("sz_a")),
+      Dedup.bandsOf(index, numBands, rowsPerBand)
+        .withColumnRenamed("doc_id", "doc_old"), Dedup.BandKey, None,
+      col("doc_id").as("doc_new"), col("doc_old"), col("sh_a"), col("sz_a"))
+    BandJoin.verify(cand, Seq("doc_old" -> Dedup.indexSide(index)),
+      Dedup.jaccardCheck(num, den))
   }
 }

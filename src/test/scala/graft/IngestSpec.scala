@@ -232,6 +232,30 @@ class IngestSpec extends SparkSpecBase {
     assert(out2 === (0 until 64).map(i => s"u$i").toSet - "u3" -- keysInVictim)
   }
 
+  test("bucketed CDC: op/order columns match the feed's by the session " +
+    "resolver, not by case-sensitive name") {
+    import graft.operators.Sinks
+    val tableDir = Files.createTempDirectory("graft_snk10_case")
+      .toFile.getAbsolutePath + "/tbl"
+    // the feed spells its bookkeeping columns OP / ORD; the caller
+    // passes "op" / "ord" — one column each under the default
+    // case-insensitive resolver
+    val seed = (0 until 8).map(i => (s"u$i", i.toDouble, "I", 0L))
+      .toDF("user_id", "value", "OP", "ORD")
+    Sinks.applyChangesBucketed(spark, tableDir, seed, Seq("user_id"), "ord",
+      "op", nBuckets = 4)
+    val batch = Seq(("u1", 10.0, "U", 1L), ("u2", 0.0, "D", 1L),
+      ("u9", 9.0, "I", 1L)).toDF("user_id", "value", "OP", "ORD")
+    Sinks.applyChangesBucketed(spark, tableDir, batch, Seq("user_id"), "ord",
+      "op", nBuckets = 4)
+    val snap = Sinks.readBucketedSnapshot(spark, tableDir)
+    assert(snap.columns.toSet === Set("user_id", "value"),
+      s"feed bookkeeping leaked into snapshot schema: ${snap.columns.toSeq}")
+    val got = snap.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(got === (0 until 8).filter(_ != 2).map(i => s"u$i" -> i.toDouble)
+      .toMap ++ Map("u1" -> 10.0, "u9" -> 9.0))
+  }
+
   test("bucketed staged write: no stage debris after a merge; crashed-attempt stage dirs are GC'd and invisible to readers") {
     import graft.operators.Sinks
     val tableDir = Files.createTempDirectory("graft_stage_gc")

@@ -99,6 +99,26 @@ class SimilaritySpec extends SparkSpecBase {
       s"bucketed pair generation must never go all-pairs:\n$plan")
   }
 
+  test("bucketed cosine pairs: one orientation a < b gives the " +
+    "both-orientations pair set at every multi-probe width") {
+    import graft.operators.HofReferences
+    val emb = Tables.embeddings(spark, sf0001)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
+    val bits = 3
+    // threshold -2 verifies every candidate (cosine ≥ −1), so the
+    // candidate sets themselves are compared; 0.45 is the registered cut
+    for (mp <- Seq(0, 1, bits); t <- Seq(-2.0, 0.45)) {
+      val got = pairs(Similarity.cosinePairsBucketed(emb, t, bits = bits,
+        tables = 4, multiProbe = mp))
+      val want = pairs(HofReferences.cosinePairsBucketedBothWays(emb, t,
+        bits = bits, tables = 4, multiProbe = mp))
+      assert(want.nonEmpty, s"multiProbe=$mp threshold=$t: empty reference")
+      assert(got === want, s"multiProbe=$mp threshold=$t: " +
+        s"missing ${(want -- got).take(5)}, extra ${(got -- want).take(5)}")
+    }
+  }
+
   test("PQ: code shape bounded by (m, k), recall floor with re-rank, empty corpus degrades") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val idx = Similarity.buildPqIndex(emb, m = 16, k = 16).get

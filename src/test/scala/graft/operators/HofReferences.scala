@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Composable higher-order-function reference forms of fused native
-  * expressions. The native forms replaced them for speed; the specs pin
-  * the native forms equal to these. */
+/** Reference forms the production code replaced: composable
+  * higher-order-function forms of fused native expressions (replaced for
+  * speed) and earlier operator shapes (replaced by a shared combinator).
+  * The specs pin the production forms equal to these. */
 object HofReferences {
 
   /** The composable form [[Similarity.hyperplaneSignature]] claims
@@ -76,5 +77,42 @@ object HofReferences {
       .withColumn("crank", row_number().over(w))
       .filter(col("crank") <= keep)
       .select(col(idName), col("centroid_id"))
+  }
+
+  /** The both-orientations candidate stage [[Similarity.cosinePairsBucketed]]
+    * had before it moved onto [[BandJoin]]: every probe-side vector joins
+    * every exact-side vector of its buckets, self-pairs dropped by `=!=`,
+    * each pair oriented by `least`/`greatest` and made once by `distinct`
+    * (so a pair is made from both ends before the `distinct`), then the
+    * same exact cosine verify. */
+  def cosinePairsBucketedBothWays(corpus: DataFrame, threshold: Double,
+                                  bits: Int, tables: Int,
+                                  multiProbe: Int): DataFrame = {
+    import Similarity.{dot, hyperplaneSignature}
+    val base = corpus.select(col("vec_id"), col("embedding"))
+      .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
+      .filter(col("nrm") > 0)
+    val banded = base.select(col("vec_id"), posexplode(array(
+      (0 until tables).map(t => hyperplaneSignature("embedding", bits, t)): _*))
+      .as(Seq("table_id", "bucket")))
+    val probed =
+      if (multiProbe == 0) banded
+      else banded.select(col("vec_id"), col("table_id"),
+        explode(array(col("bucket") +:
+          (0 until multiProbe).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*))
+          .as("bucket"))
+    val cand = probed.alias("x")
+      .join(banded.alias("y"), Seq("table_id", "bucket"))
+      .filter(col("x.vec_id") =!= col("y.vec_id"))
+      .select(least(col("x.vec_id"), col("y.vec_id")).as("vec_a"),
+        greatest(col("x.vec_id"), col("y.vec_id")).as("vec_b"))
+      .distinct()
+    cand
+      .join(base.select(col("vec_id").as("vec_a"), col("embedding").as("va"),
+        col("nrm").as("na")), "vec_a")
+      .join(base.select(col("vec_id").as("vec_b"), col("embedding").as("vb"),
+        col("nrm").as("nb")), "vec_b")
+      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
+      .select(col("vec_a"), col("vec_b"))
   }
 }
