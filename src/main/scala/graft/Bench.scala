@@ -131,20 +131,20 @@ object Bench {
     val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.collect { case (_, v, true) => v }.sum
-    val overPinJson = overPin.map("\"" + _ + "\"").mkString("[", ",", "]")
     val ok = results.collect { case (k, v, true) => (k, v) }
     val tpch = ok.filter(_._1.matches("q\\d+_.*")).sortBy(_._1)
     val rest = ok.filterNot(_._1.matches("q\\d+_.*")).sortBy(-_._2)
-    // both series ride the tail, explicitly named (round 13): each entry
-    // is "name":[raw,norm] under a units key that names the two slots.
-    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","complete":$complete,"deadline_hit":$deadlineHit,"units":{"queries":"[raw_sec,sec_at_pin_calibration]","over_pin":"judged_on_normalized"},"calib_sec":${r3(calibSec)},"calib_sec_end":${r3(calibEnd)},"norm_factor":${r3(normFactor)},"contended":$contended,"reran":$reran,"over_pin":$overPinJson,"n_queries":${results.size},"queries_full":"$fullPath","failed":$failed,"sf":"$sfDir","queries":{"""
+    // The head is bounded whatever the run: the over-pin NAMES and the
+    // normalized series live in BENCH_FULL.json (`over_pin`,
+    // `queries_norm`), so neither can crowd the per-query entries out of
+    // the line — each entry is one scalar of raw seconds.
+    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","complete":$complete,"deadline_hit":$deadlineHit,"units":{"queries":"raw_sec","over_pin_n":"judged_on_normalized"},"calib_sec":${r3(calibSec)},"calib_sec_end":${r3(calibEnd)},"norm_factor":${r3(normFactor)},"contended":$contended,"reran":$reran,"over_pin_n":${overPin.size},"n_queries":${results.size},"queries_full":"$fullPath","failed":$failed,"sf":"$sfDir","queries":{"""
     val tail = "}}"
     val budget = 1700 - head.length - tail.length
     val entries = scala.collection.mutable.ListBuffer.empty[String]
     var used = 0
     (tpch ++ rest).foreach { case (k, v) =>
-      val e = "\"" + k + "\":[" + r3(v) + "," +
-        r3(if (v < 0) v else v * normFactor) + "]"
+      val e = "\"" + k + "\":" + r3(v)
       val sep = if (entries.isEmpty) 0 else 1
       if (used + sep + e.length <= budget) { entries += e; used += sep + e.length }
     }

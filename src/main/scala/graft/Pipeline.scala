@@ -1,6 +1,10 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,11 +37,13 @@ import graft.operators.{Features, Sinks}
   * count, and the driver already held each one as a broadcast; a lazy
   * aggregate plan, by contrast, is re-run and re-broadcast by every
   * consumer. Fact-size frames (splits, the featured and predicted
-  * frames, validateFeatures) are never collected. The sink tail then
-  * publishes its 8–10 tables in one concurrent pass
-  * ([[Sinks.writeConcurrently]]): the writes target different tables,
-  * each is bound by driver latency rather than executor work, and each
-  * keeps its own commit protocol.
+  * frames, validateFeatures) are never collected. The norm params and the
+  * predictor's fits pin in one concurrent wave, and the sink tail then
+  * publishes its 8–10 tables in one concurrent pass (both on
+  * [[Sinks.concurrently]]): the writes target different tables, each is
+  * bound by driver latency rather than executor work, and each keeps its
+  * own commit protocol. The last write is the stage stamp, which lets
+  * [[automate]]'s validate/test answer from the published results.
   */
 object Pipeline {
 
@@ -512,24 +518,25 @@ object Pipeline {
     // untrained-group fallback). The fit reads the lazily-checkpointed
     // featured frame, so the feature chain still runs once; the fitted
     // params are pinned, so the fit aggregate runs once too.
-    // The fitted params frame is kept alongside the applied frame so the
-    // sink tail can publish it as the `predictor_params` artifact —
+    // Each branch names its fits (pinned below, in one wave with the norm
+    // params) and how to apply them. The fitted params frames are kept so
+    // the sink tail can publish them as the `predictor_params` artifact —
     // without it, [[stageMetrics]] could only ever re-grade the naive
     // predictor regardless of what run() trained (the reference persists
     // the trained model and validate/test load THAT, validate.py:171-331).
-    val (predicted, predictorParams): (DataFrame, Seq[(String, DataFrame)]) =
-      cfg.predictor match {
+    val (fits, applyFits): (Seq[(String, () => DataFrame)],
+        Seq[DataFrame] => DataFrame) = cfg.predictor match {
       case "ar1" =>
-        val params = pinned(spark, Features.fitAr1(
+        (Seq("predictor_params" -> (() => pinned(spark, Features.fitAr1(
           featured.filter(col("split") === "train"), key,
-          col("pred_f"), col("actual")))
-        (featured.join(broadcast(params), key, "left")
-          .withColumn("pred_f",
-            when(col("slope").isNotNull,
-              round(col("slope") * col("pred_f") + col("intercept"), 2))
-              .otherwise(col("pred_f")))
-          .drop("slope", "intercept", "n_fit"),
-          Seq("predictor_params" -> params))
+          col("pred_f"), col("actual"))))),
+          { case Seq(params) =>
+            featured.join(broadcast(params), key, "left")
+              .withColumn("pred_f",
+                when(col("slope").isNotNull,
+                  round(col("slope") * col("pred_f") + col("intercept"), 2))
+                  .otherwise(col("pred_f")))
+              .drop("slope", "intercept", "n_fit") })
       case "ar2" =>
         // second filled lag built the way pred_f is (lag → ffill); its
         // OWN lazy checkpoint — feat2 feeds both the fit aggregate and
@@ -538,17 +545,17 @@ object Pipeline {
             "lag2", "x2")
           .drop("lag2")
           .localCheckpoint(eager = false)
-        val params = pinned(spark, Features.fitAr2(
+        (Seq("predictor_params" -> (() => pinned(spark, Features.fitAr2(
           feat2.filter(col("split") === "train"), key,
-          col("pred_f"), col("x2"), col("actual")))
-        (feat2.join(broadcast(params), key, "left")
-          .withColumn("pred_f",
-            when(col("b1").isNotNull && col("x2").isNotNull,
-              round(col("b1") * col("pred_f") + col("b2") * col("x2") +
-                col("intercept"), 2))
-              .otherwise(col("pred_f")))
-          .drop("b1", "b2", "intercept", "n_fit", "x2"),
-          Seq("predictor_params" -> params))
+          col("pred_f"), col("x2"), col("actual"))))),
+          { case Seq(params) =>
+            feat2.join(broadcast(params), key, "left")
+              .withColumn("pred_f",
+                when(col("b1").isNotNull && col("x2").isNotNull,
+                  round(col("b1") * col("pred_f") + col("b2") * col("x2") +
+                    col("intercept"), 2))
+                  .otherwise(col("pred_f")))
+              .drop("b1", "b2", "intercept", "n_fit", "x2") })
       case "routed" =>
         // The reference's core ML dispatch (train.py:377-394 routes each
         // (Currency, Event) group by sample count; :453 scores it with
@@ -561,15 +568,17 @@ object Pipeline {
         // checkpoint as ar2: feat2 feeds two fit aggregates + the apply.
         val feat2 = routedFeatures(featured, ops, modelTypes)
           .localCheckpoint(eager = false)
-        val rnnParams = pinned(spark, Features.fitAr2(
-          feat2.filter(col("split") === "train" && col("__route") === "rnn"),
-          key, col("pred_f"), col("x2"), col("actual")))
-        val xgbParams = pinned(spark, Features.regressionStumpPerGroup(
-          feat2.filter(col("split") === "train" && col("__route") === "xgb"),
-          key, col("pred_f"), col("actual")))
-        (applyRouted(feat2, rnnParams, xgbParams),
-          Seq("predictor_params_rnn" -> rnnParams,
-            "predictor_params_xgb" -> xgbParams))
+        def routedTrain(route: String) =
+          feat2.filter(col("split") === "train" && col("__route") === route)
+        (Seq(
+          "predictor_params_rnn" -> (() => pinned(spark, Features.fitAr2(
+            routedTrain("rnn"), key, col("pred_f"), col("x2"),
+            col("actual")))),
+          "predictor_params_xgb" -> (() => pinned(spark,
+            Features.regressionStumpPerGroup(routedTrain("xgb"), key,
+              col("pred_f"), col("actual"))))),
+          { case Seq(rnnParams, xgbParams) =>
+            applyRouted(feat2, rnnParams, xgbParams) })
       case "seq" =>
         // Multi-feature per-group sequence fit (round 10): the reference
         // LSTM consumes a SIX-feature normalized row per step
@@ -586,19 +595,20 @@ object Pipeline {
         // within this key its information content IS the key. The
         // reference can feed it anyway because an LSTM ignores constant
         // inputs gracefully; closed-form OLS cannot.
-        val feat2 = seqFeatures(featured, ops).localCheckpoint(eager = false)
-        val params = pinned(spark, Features.fitLinearPerGroup(
-          feat2.filter(col("split") === "train"), key,
-          Seq(col("pred_f"), col("x2"), col("x3"), col("x4")),
-          col("actual")))
         // ill-conditioned groups (collinear feature rows — the fit's
         // well_conditioned gate) are treated as UNTRAINED: filtered out
         // of the apply join so they keep the naive pred_f, the same
         // else-branch as a missing fit. The published artifact keeps
         // every group WITH its flag so stageMetrics re-applies the
         // identical dispatch.
-        (applySeq(feat2, params).drop("x2", "x3", "x4"),
-          Seq("predictor_params" -> params))
+        val feat2 = seqFeatures(featured, ops).localCheckpoint(eager = false)
+        (Seq("predictor_params" -> (() => pinned(spark,
+          Features.fitLinearPerGroup(
+            feat2.filter(col("split") === "train"), key,
+            Seq(col("pred_f"), col("x2"), col("x3"), col("x4")),
+            col("actual"))))),
+          { case Seq(params) =>
+            applySeq(feat2, params).drop("x2", "x3", "x4") })
       case "sgd" =>
         // GRADIENT training (round 12): same four-feature frame as seq,
         // but ONE GLOBAL linear model learned by minibatch gradient
@@ -613,17 +623,26 @@ object Pipeline {
         // (the J4 norm-param-reuse lesson applied to features).
         // sgdArtifact is already a driver-local one-row relation.
         val feat2 = seqFeatures(featured, ops).localCheckpoint(eager = false)
-        val params = sgdArtifact(spark,
-          feat2.filter(col("split") === "train"))
-        (applySgd(feat2, params).drop("x2", "x3", "x4"),
-          Seq("predictor_params" -> params))
-      case _ => (featured, Nil)
+        (Seq("predictor_params" -> (() => sgdArtifact(spark,
+          feat2.filter(col("split") === "train")))),
+          { case Seq(params) =>
+            applySgd(feat2, params).drop("x2", "x3", "x4") })
+      case _ => (Nil, _ => featured)
     }
 
-    // A5 on the TRAIN split only: norm-param side table (train.py:467-477)
+    // A5 on the TRAIN split only: norm-param side table (train.py:467-477).
+    // It and the predictor's fits read only the checkpointed feature
+    // frames and none reads another, so they pin in ONE concurrent wave:
+    // each is a short driver-latency-bound collect, and the checkpoint's
+    // shared lineage (and its cached blocks) is computed once, whichever
+    // collect touches a partition first.
     val trainRows = featured.filter(col("split") === "train")
-    val normParams = pinned(spark,
-      Features.normParams(trainRows, key, col("actual")))
+    val pins = Sinks.concurrently(
+      (() => pinned(spark, Features.normParams(trainRows, key,
+        col("actual")))) +: fits.map(_._2))
+    val normParams = pins.head
+    val predictorParams = fits.map(_._1).zip(pins.tail)
+    val predicted = applyFits(pins.tail)
 
     // A6 per split; validate/test reuse train norm params (J4) for the
     // denormalized error scale — the naive predictor works in raw units so
@@ -705,14 +724,26 @@ object Pipeline {
     // is bound by driver latency (planning, job dispatch, commit), and
     // the side tables they read are pinned above, so running them one
     // after another only queued that latency up.
+    // The STAGE STAMP ([[stageStamp]]) is deleted before the tail and
+    // written after every write has committed, so a failed or partial
+    // publish never leaves a stamp that vouches for it.
     outDir.foreach { dir =>
-      Sinks.writeConcurrently(Seq[() => Any](
-        () => Sinks.upsertSnapshot(spark, s"$dir/splits", splits,
-          key = Seq("event_id"), orderCol = "split"),
-        () => Sinks.upsertSnapshot(spark, s"$dir/model_types", modelTypes,
-          key, orderCol = "total_samples"),
-        () => Sinks.upsertSnapshot(spark, s"$dir/norm_params", normParams,
-          key, orderCol = "mn")) ++
+      val stampFile = new org.apache.hadoop.fs.Path(dir, StampFile)
+      val fs = stampFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(stampFile, false)
+      // artifact writes report the committed version the stamp records
+      def artifact(name: String)(
+          write: String => Int): () => Option[(String, Int)] =
+        () => Some(name -> write(s"$dir/$name"))
+      def table(write: => Any): () => Option[(String, Int)] =
+        () => { write; None }
+      val versions = Sinks.concurrently(Seq(
+        artifact("splits")(Sinks.upsertSnapshot(spark, _, splits,
+          key = Seq("event_id"), orderCol = "split")),
+        artifact("model_types")(Sinks.upsertSnapshot(spark, _, modelTypes,
+          key, orderCol = "total_samples")),
+        artifact("norm_params")(Sinks.upsertSnapshot(spark, _, normParams,
+          key, orderCol = "mn"))) ++
         // REPLACE, not merge: the reference persists its model wholesale
         // (train.py:555-567), so a retrain must not blend stale per-key
         // (slope, intercept) rows for keys absent from the new fit with
@@ -724,16 +755,28 @@ object Pipeline {
         // grading a family with the other family's params would silently
         // score the wrong model
         predictorParams.map { case (name, p) =>
-          () => Sinks.replaceSnapshot(spark, s"$dir/$name", p) } ++
+          artifact(name)(Sinks.replaceSnapshot(spark, _, p)) } ++
         Seq(
-          () => Sinks.truncateAndLoad(trainMetrics, s"$dir/train_metrics"),
-          () => Sinks.truncateAndLoad(validateMetrics,
-            s"$dir/validate_metrics"),
-          () => Sinks.truncateAndLoad(validateFeatures,
-            s"$dir/validate_features"),
-          () => Sinks.truncateAndLoad(testForecasts, s"$dir/test_forecasts"),
-          () => Sinks.appendOrReplace(spark, liveForecasts,
-            s"$dir/live_forecasts")))
+          table(Sinks.truncateAndLoad(trainMetrics, s"$dir/train_metrics")),
+          table(Sinks.truncateAndLoad(validateMetrics,
+            s"$dir/validate_metrics")),
+          table(Sinks.truncateAndLoad(validateFeatures,
+            s"$dir/validate_features")),
+          table(Sinks.truncateAndLoad(testForecasts, s"$dir/test_forecasts")),
+          table(Sinks.appendOrReplace(spark, liveForecasts,
+            s"$dir/live_forecasts")))).flatten.toMap
+      // the metric-group counts come from the pinned rows on the driver
+      val groups = metrics.collect().groupBy(_.getAs[String]("split"))
+        .map { case (split, rows) => split -> rows.length.toLong }
+      stageStamp(events, cfg, versions).foreach { inputs =>
+        val doc = Json.createObjectNode()
+        doc.set[ObjectNode]("inputs", inputs)
+        val counts = doc.putObject("metric_groups")
+        Seq("train", "val", "test").foreach(sp =>
+          counts.put(sp, groups.getOrElse(sp, 0L)))
+        val out = fs.create(stampFile, true)
+        try out.write(Json.writeValueAsBytes(doc)) finally out.close()
+      }
     }
 
     Result(splits, modelTypes, normParams,
@@ -762,6 +805,80 @@ object Pipeline {
       case _ => Seq("predictor_params")
     })
 
+  /** File name of the stage stamp under a run's `outDir`. */
+  private val StampFile = "_stage_stamp"
+  private val Json = new ObjectMapper()
+
+  /** The inputs half of the STAGE STAMP: what a run's published results
+    * were computed from — the events frame (a digest of its canonicalized
+    * plan plus its file leaves as sorted (path, length, modification
+    * time)), the resolved config and the committed version of each
+    * artifact table. Built on the driver from the listing the frame's
+    * file index already holds: no Spark job, no second listing. None when
+    * any leaf of the frame is not a file relation (a local relation, an
+    * RDD, a stream, a cached relation): nothing cheap then says whether
+    * two such frames hold the same rows. */
+  private def stageStamp(events: DataFrame, cfg: Config,
+                         versions: Map[String, Int]): Option[ObjectNode] =
+    if (events.isStreaming) None
+    else {
+      val plan = events.queryExecution.withCachedData
+      val leaves = plan.collectLeaves().map {
+        case r: LogicalRelation => r.relation match {
+          case h: HadoopFsRelation => h.location match {
+            case idx: PartitioningAwareFileIndex => Some(h -> idx.allFiles())
+            case _ => None
+          }
+          case _ => None
+        }
+        case _ => None
+      }
+      if (leaves.exists(_.isEmpty)) None
+      else {
+        val relations = leaves.flatten
+        val planText = plan.canonicalized.treeString(verbose = true,
+          maxFields = Int.MaxValue) + relations.map { case (h, _) =>
+            h.schema.json + h.options.toSeq.sorted.mkString(",") }
+          .mkString("\n")
+        val n = Json.createObjectNode()
+        val ev = n.putObject("events")
+        ev.put("plan", java.security.MessageDigest.getInstance("SHA-256")
+          .digest(planText.getBytes("UTF-8")).map("%02x".format(_)).mkString)
+        val files = ev.putArray("files")
+        relations.flatMap(_._2).sortBy(_.getPath.toString).foreach(f =>
+          files.addArray().add(f.getPath.toString).add(f.getLen)
+            .add(f.getModificationTime))
+        val c = n.putObject("config")
+        cfg.productElementNames.zip(cfg.productIterator).foreach {
+          case (k, v) => c.put(k, String.valueOf(v)) }
+        val a = n.putObject("artifacts")
+        versions.toSeq.sorted.foreach { case (t, v) => a.put(t, v) }
+        Some(n)
+      }
+    }
+
+  /** `split`'s metric-group count as the stage stamp under `outDir`
+    * records it — only when the stamp's inputs equal these: same event
+    * files and plan, same config, same artifact versions. A missing,
+    * unreadable or mismatching stamp is None. */
+  private def stampedGroups(spark: SparkSession, events: DataFrame,
+                            outDir: String, cfg: Config,
+                            versions: Map[String, Int],
+                            split: String): Option[Long] = {
+    val file = new org.apache.hadoop.fs.Path(outDir, StampFile)
+    scala.util.Try {
+      val in = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .open(file)
+      try Json.readTree(in) finally in.close()
+    }.toOption.flatMap { doc =>
+      stageStamp(events, cfg, versions)
+        .filter(now => Json.writeValueAsString(doc.get("inputs")) ==
+          Json.writeValueAsString(now))
+        .flatMap(_ => Option(doc.path("metric_groups").get(split)))
+        .filter(_.canConvertToLong).map(_.asLong)
+    }
+  }
+
   /** E3 orchestration with the reference's gate semantics
     * (automate_pipeline.py:77-173, main.py:177-391):
     *
@@ -773,6 +890,26 @@ object Pipeline {
     *    (round 16): a crash during the first artifact write leaves a dir
     *    whose readSnapshot would throw, and that must read as "model not
     *    found", not as present-then-crash.
+    *  - validate/test answer FROM THE STAGE STAMP when it vouches for
+    *    their inputs: [[run]] with an `outDir` writes `_stage_stamp` last,
+    *    after every table has committed (and deletes the old one before
+    *    its tail starts). It records the events frame's file leaves
+    *    (path, length, modification time) and a digest of its
+    *    canonicalized plan, the resolved config, each artifact's committed
+    *    version, and the per-split metric-group counts of the tables it
+    *    published. A stage whose artifacts pass the gate and whose stamp
+    *    matches all of these answers the count from the stamp — no Spark
+    *    job, no artifact read; `validate_metrics`/`test_forecasts` then
+    *    already hold exactly what a recompute would produce. Every other
+    *    case recomputes through [[stageMetrics]] as before: a missing,
+    *    unreadable or mismatching stamp, an events frame with any leaf that
+    *    is not a file relation (a local relation, an RDD, a stream, a
+    *    cached relation), another config, or a newer artifact version. The
+    *    file-system assumption: rewriting the input changes a file's path,
+    *    length or modification time (Spark writers name every file anew,
+    *    and HDFS, local and object stores stamp each write's modification
+    *    time). The recompute path publishes nothing — see COVERAGE.md
+    *    (Orchestration).
     *  - stage failures are SOFT: the client logs each stage's outcome
     *    and proceeds to the next (automate_pipeline.py:97-108 — a failed
     *    validate does not abort test), so one bad stage never takes down
@@ -798,15 +935,17 @@ object Pipeline {
         // A trained (non-naive) predictor adds its params artifact to the
         // existence gate: grading ar1/ar2 stages without the fit would
         // silently score a different model than run() published.
-        val required = requiredArtifacts(cfg)
-        val missing = required.filterNot(a =>
-          Sinks.hasCommittedVersion(spark, s"$outDir/$a"))
+        val versions = requiredArtifacts(cfg).map(a =>
+          a -> Sinks.latestCommittedVersion(spark, s"$outDir/$a"))
+        val missing = versions.collect { case (a, None) => a }
         if (missing.nonEmpty)
           StageStatus(st, ok = false,
             s"missing artifacts ${missing.mkString(", ")} — run train first")
         else attempt(st) {
           val split = if (st == "validate") "val" else "test"
-          val n = stageMetrics(spark, events, outDir, split, cfg).count()
+          val n = stampedGroups(spark, events, outDir, cfg,
+              versions.collect { case (a, Some(v)) => a -> v }.toMap, split)
+            .getOrElse(stageMetrics(spark, events, outDir, split, cfg).count())
           s"$n metric groups"
         }
       case other =>

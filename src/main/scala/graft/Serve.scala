@@ -32,7 +32,11 @@ import graft.operators.Sinks
   *  - `POST /validate`, `POST /test` — artifact-gated stage runs: the
   *    reference answers "model not found — run /train first" instead
   *    of crashing (main.py:320-323); here [[Pipeline.automate]]'s
-  *    existence gate produces the same soft answer.
+  *    existence gate produces the same soft answer. Past the gate, a
+  *    stage answers from the train run's stage stamp with no Spark job
+  *    when the stamp vouches for the request's events frame, config and
+  *    artifact versions; otherwise it recomputes from the artifacts
+  *    (see [[Pipeline.automate]]).
   *  - `POST /automate?use_file_params=&skip_training=` — the
   *    sequential train → validate → test chain with SOFT per-stage
   *    failure (main.py:299-391): one bad stage never takes down the

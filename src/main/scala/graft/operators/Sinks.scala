@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
+  StructType}
 
 /** Sink semantics of the reference's write paths (SURVEY.md §2a), mapped
   * to parquet snapshot directories (the engine's stand-in for MySQL
@@ -54,27 +56,32 @@ object Sinks {
     mode
   }
 
-  /** Publish independent table writes at once: one thread per write on a
-    * pool owned by this call, shut down before it returns. Waits for
-    * EVERY write to settle, then rethrows the first failure in `writes`
-    * order (later ones ride along as suppressed), so a caller never sees
-    * an exception while a sibling write is still in flight. The writes
-    * must target different tables; each keeps its own commit protocol. */
-  def writeConcurrently(writes: Seq[() => Any]): Unit =
-    if (writes.nonEmpty) {
+  /** Run independent driver-side actions at once — table writes, or the
+    * collects that pin side tables — and return their values in `thunks`
+    * order: one daemon thread per thunk on a pool owned by this call, shut
+    * down before it returns. Waits for EVERY thunk to settle, then
+    * rethrows the first failure in `thunks` order (later ones ride along
+    * as suppressed), so a caller never sees an exception while a sibling
+    * is still in flight. Writes must target different tables; each keeps
+    * its own commit protocol. */
+  def concurrently[A](thunks: Seq[() => A]): Seq[A] =
+    if (thunks.isEmpty) Nil
+    else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        writes.size, r => {
-          val t = new Thread(r, "graft-sink-write"); t.setDaemon(true); t })
+        thunks.size, r => {
+          val t = new Thread(r, "graft-concurrent"); t.setDaemon(true); t })
       try {
-        val pending = writes.map(w => pool.submit(new java.util.concurrent
-          .Callable[Any] { def call(): Any = w() }))
-        val failures = pending.flatMap { f =>
-          try { f.get(); None }
+        val pending = thunks.map(w => pool.submit(new java.util.concurrent
+          .Callable[A] { def call(): A = w() }))
+        val settled = pending.map { f =>
+          try Right(f.get())
           catch { case e: java.util.concurrent.ExecutionException =>
-            Some(e.getCause) }
+            Left(e.getCause) }
         }
+        val failures = settled.collect { case Left(e) => e }
         failures.headOption.foreach { first =>
           failures.tail.foreach(first.addSuppressed); throw first }
+        settled.collect { case Right(a) => a }
       } finally pool.shutdown()
     }
 
@@ -134,7 +141,13 @@ object Sinks {
     * throw instead of answering "not found" (Pipeline.automate's and
     * Serve's artifact gates). */
   def hasCommittedVersion(spark: SparkSession, tableDir: String): Boolean =
-    listVersions(spark, tableDir).nonEmpty
+    latestCommittedVersion(spark, tableDir).nonEmpty
+
+  /** The version [[readSnapshot]] would read, if any — a driver-side
+    * listing, no Spark job. */
+  def latestCommittedVersion(spark: SparkSession,
+                             tableDir: String): Option[Int] =
+    listVersions(spark, tableDir).lastOption
 
   /** Every v=N directory, committed or not — next-version computation
     * and vacuum need the full set. */
@@ -319,6 +332,7 @@ object Sinks {
         s"bucket-count mismatch: table $tableDir was created with " +
           s"$declared buckets, batch hashed with $nBuckets — the same key " +
           "would land in a different bucket and duplicate")
+      requireStoredSchema(spark, tableDir, incoming.schema)
       // O(touched buckets) ≤ nBuckets driver-side values — corpus-size-
       // independent, the IVF-seeding budget class
       val touched = inc.select(col("__bucket")).distinct()
@@ -327,10 +341,10 @@ object Sinks {
         // isin on the partition column → partition-pruned scan of only
         // the touched bucket directories. Explicit schema (round 17):
         // the table's schema IS the batch schema by the layout contract
-        // (the create branch wrote exactly these columns, and the merge
-        // below would fail on drift anyway), so per-batch parquet footer
-        // inference is a driver round-trip for nothing on the streaming
-        // hot path.
+        // (the create branch wrote exactly these columns, and
+        // requireStoredSchema above rejects a drifted batch), so
+        // per-batch parquet schema inference is a job for nothing on the
+        // streaming hot path.
         val existingTouched = spark.read.schema(inc.schema)
           .parquet(tableDir)
           .filter(col("__bucket").isin(touched: _*))
@@ -432,6 +446,71 @@ object Sinks {
     }
   }
 
+  /** Schema-drift gate of the bucketed sinks: a batch's data columns must
+    * be the table's stored columns — the same names under the session
+    * resolver and the same types (nullability aside). The touched-bucket
+    * read imposes the batch's schema on the stored files, so without this
+    * gate a column the batch lacks silently vanishes from every rewritten
+    * bucket, an extra batch column reads back all-null for the old rows,
+    * and a changed type is written into the rewritten buckets, after which
+    * reading the table fails on the mixed file types.
+    * The stored schema is the Spark row schema Spark writes into every
+    * parquet footer, read from ONE bucket file on the driver: a listing
+    * and a footer read, no Spark job. */
+  private def requireStoredSchema(spark: SparkSession, tableDir: String,
+                                  batch: StructType): Unit = {
+    val stored = storedBucketSchema(spark, tableDir)
+    val resolver = spark.sessionState.analyzer.resolver
+    def find(s: StructType, name: String) =
+      s.find(fd => resolver(fd.name, name))
+    def loose(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.map(fd =>
+        StructField(fd.name, loose(fd.dataType))))
+      case a: ArrayType => ArrayType(loose(a.elementType))
+      case m: MapType => MapType(loose(m.keyType), loose(m.valueType))
+      case other => other
+    }
+    val missing = stored.filter(fd => find(batch, fd.name).isEmpty)
+      .map(_.name)
+    val extra = batch.filter(fd => find(stored, fd.name).isEmpty).map(_.name)
+    val changed = stored.flatMap(fd => find(batch, fd.name)
+      .filter(b => loose(b.dataType) != loose(fd.dataType))
+      .map(b => s"${fd.name}: table ${fd.dataType.simpleString} vs batch " +
+        b.dataType.simpleString))
+    require(missing.isEmpty && extra.isEmpty && changed.isEmpty,
+      s"schema drift against bucketed table $tableDir — " +
+        Seq("missing" -> missing, "extra" -> extra, "changed type" -> changed)
+          .filter(_._2.nonEmpty)
+          .map { case (k, v) => s"$k: ${v.mkString(", ")}" }.mkString("; "))
+  }
+
+  /** The data schema of a bucketed table, from the footer of its first
+    * bucket file (every bucket carries the same columns by the layout
+    * contract; an emptied table keeps one empty schema-carrying file). */
+  private def storedBucketSchema(spark: SparkSession,
+                                 tableDir: String): StructType = {
+    val f = fs(spark)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def visible(p: Path) =
+      !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    val file = f.listStatus(new Path(tableDir)).iterator
+      .filter(_.getPath.getName.startsWith("__bucket="))
+      .flatMap(d => f.listStatus(d.getPath).iterator.map(_.getPath))
+      .find(visible)
+      .getOrElse(throw new IllegalStateException(
+        s"$tableDir has a bucket marker but no bucket data file"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try {
+      val meta = reader.getFooter.getFileMetaData
+      Option(meta.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
+    } finally reader.close()
+  }
+
   private def readNBucketsMarker(spark: SparkSession, marker: Path): Int = {
     val in = fs(spark).open(marker)
     val buf = new java.io.ByteArrayOutputStream()
@@ -493,6 +572,11 @@ object Sinks {
         s"bucket-count mismatch: table $tableDir was created with " +
           s"$declared buckets, batch hashed with $nBuckets — the same key " +
           "would land in a different bucket and duplicate")
+      val resolver = spark.sessionState.analyzer.resolver
+      def isFeedCol(name: String) =
+        resolver(name, opCol) || resolver(name, orderCol)
+      requireStoredSchema(spark, tableDir,
+        StructType(changes.schema.filterNot(fd => isFeedCol(fd.name))))
       val touched = inc.select(col("__bucket")).distinct()
         .collect().map(_.getInt(0)).toSeq
       if (touched.nonEmpty) {
@@ -501,10 +585,8 @@ object Sinks {
         // data columns + __bucket, never the feed bookkeeping columns —
         // matched by the session's resolver, as the create branch's
         // drop(opCol, orderCol) and upsertSnapshotEvolving match names
-        val resolver = spark.sessionState.analyzer.resolver
-        val snapSchema = org.apache.spark.sql.types.StructType(
-          inc.schema.fields.filterNot(fd =>
-            resolver(fd.name, opCol) || resolver(fd.name, orderCol)))
+        val snapSchema =
+          StructType(inc.schema.filterNot(fd => isFeedCol(fd.name)))
         val existingTouched = spark.read.schema(snapSchema)
           .parquet(tableDir)
           .filter(col("__bucket").isin(touched: _*))

@@ -44,6 +44,28 @@ class BenchEmitSpec extends AnyFunSuite {
     assert(line.count(_ == '{') == line.count(_ == '}'))
   }
 
+  test("renderLine: the over-pin names stay out of the line, and each " +
+    "entry is one scalar of raw seconds") {
+    val many = (1 to 290).map(i => (f"row_$i%03d_some_query", 0.5 + i / 1e3,
+      true))
+    def line(overPin: Seq[String]) = Bench.renderLine(many,
+      calibSec = 0.30, calibEnd = 0.29, normFactor = 0.8,
+      contended = "false", reran = 0, overPin = overPin,
+      fullPath = "/root/repo/BENCH_FULL.json", sfDir = "/tmp/sf",
+      complete = true, deadlineHit = false)
+    val pinned = line(many.map(_._1))
+    val clean = line(Nil)
+    assert(pinned.length <= 1700, s"stdout line too long: ${pinned.length}")
+    assert(pinned.contains("\"over_pin_n\":290"))
+    def entries(l: String) =
+      "\"row_\\d+_some_query\":\\d+\\.\\d+".r.findAllIn(l).size
+    assert(entries(pinned) > 0)
+    assert(entries(pinned) >= entries(clean))
+    // raw seconds, not [raw,norm] pairs
+    assert(!pinned.substring(pinned.indexOf("\"queries\":{")).contains("["))
+    assert(pinned.contains("\"row_290_some_query\":0.790"))
+  }
+
   test("contendedVerdict: missing end calibration is never 'false'") {
     // cut-short run, plausible start calibration -> unknown, not false
     assert(Bench.contendedVerdict(0.30, -1.0) == "\"unknown\"")

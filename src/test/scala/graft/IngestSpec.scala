@@ -607,4 +607,71 @@ class IngestSpec extends SparkSpecBase {
     assert(out.as[(Long, String)].collect().toSet ===
       Set((1L, "a"), (2L, "b")))
   }
+
+  /** Runs `write` with each drifted batch — a column missing, an extra
+    * column, a changed type — and checks that it throws, names the drift
+    * and leaves the table's rows as they were. */
+  private def assertDriftFailsLoud(tableDir: String,
+      batches: Seq[(String, org.apache.spark.sql.DataFrame)])(
+      write: org.apache.spark.sql.DataFrame => Unit): Unit = {
+    import graft.operators.Sinks
+    def rows = Sinks.readBucketedSnapshot(spark, tableDir)
+      .collect().map(_.toSeq.mkString("|")).toSet
+    val before = rows
+    batches.foreach { case (kind, batch) =>
+      val e = intercept[IllegalArgumentException](write(batch))
+      assert(e.getMessage.contains(kind), e.getMessage)
+      assert(rows === before, s"$kind: the table changed")
+    }
+  }
+
+  test("bucketed upsert: a batch whose columns drift from the table's " +
+    "(missing, extra, changed type) fails loud before touching a bucket") {
+    import graft.operators.Sinks
+    val tableDir = Files.createTempDirectory("graft_drift_up")
+      .toString + "/t"
+    val key = Seq("user_id")
+    val seed = (0 until 8).map(i => (s"u$i", i.toDouble, i, 0L))
+      .toDF("user_id", "value", "n", "ord")
+    Sinks.upsertSnapshotBucketed(spark, tableDir, seed, key, "ord",
+      nBuckets = 4)
+    assertDriftFailsLoud(tableDir, Seq(
+      "missing" -> Seq(("u1", 1, 1L)).toDF("user_id", "n", "ord"),
+      "extra" -> Seq(("u1", 1.0, 1, 1L, "x"))
+        .toDF("user_id", "value", "n", "ord", "note"),
+      "changed type" -> Seq(("u1", 1.0, 1L, 1L))
+        .toDF("user_id", "value", "n", "ord"))) { batch =>
+      Sinks.upsertSnapshotBucketed(spark, tableDir, batch, key, "ord",
+        nBuckets = 4)
+    }
+    // a re-cased column is the same column under the session resolver
+    Sinks.upsertSnapshotBucketed(spark, tableDir,
+      Seq(("u1", 9.0, 9, 1L)).toDF("user_id", "VALUE", "n", "ord"), key,
+      "ord", nBuckets = 4)
+    assert(Sinks.readBucketedSnapshot(spark, tableDir)
+      .filter($"user_id" === "u1").select("value").as[Double]
+      .collect().toSeq === Seq(9.0))
+  }
+
+  test("bucketed CDC: a changelog whose data columns drift from the " +
+    "table's (missing, extra, changed type) fails loud before touching a " +
+    "bucket") {
+    import graft.operators.Sinks
+    val tableDir = Files.createTempDirectory("graft_drift_cdc")
+      .toString + "/t"
+    val key = Seq("user_id")
+    val seed = (0 until 8).map(i => (s"u$i", i.toDouble, i, "I", 0L))
+      .toDF("user_id", "value", "n", "op", "ord")
+    Sinks.applyChangesBucketed(spark, tableDir, seed, key, "ord", "op",
+      nBuckets = 4)
+    assertDriftFailsLoud(tableDir, Seq(
+      "missing" -> Seq(("u1", 1, "U", 1L)).toDF("user_id", "n", "op", "ord"),
+      "extra" -> Seq(("u1", 1.0, 1, "x", "U", 1L))
+        .toDF("user_id", "value", "n", "note", "op", "ord"),
+      "changed type" -> Seq(("u1", 1.0, 1L, "U", 1L))
+        .toDF("user_id", "value", "n", "op", "ord"))) { batch =>
+      Sinks.applyChangesBucketed(spark, tableDir, batch, key, "ord", "op",
+        nBuckets = 4)
+    }
+  }
 }

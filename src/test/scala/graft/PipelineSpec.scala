@@ -575,6 +575,89 @@ class PipelineSpec extends SparkSpecBase {
     } finally server.stop(0)
   }
 
+  private val predictors = Seq("naive", "ar1", "ar2", "routed", "seq", "sgd")
+
+  private def stampOf(dir: String) = java.nio.file.Path.of(dir, "_stage_stamp")
+
+  test("stage stamp: after run(), validate/test answer from the stamp " +
+    "with no Spark job, and say what the recompute path says") {
+    val ev = Tables.events(spark, sf0001)
+    for (p <- predictors) {
+      val dir = Files.createTempDirectory(s"graft_stamp_$p").toString
+      val cfg = Pipeline.Config(predictor = p, modelThreshold = 14)
+      Pipeline.run(spark, ev, cfg, Some(dir))
+      assert(Files.exists(stampOf(dir)), p)
+      val (jobs, stamped) = countingJobs(s"stamp-hit-$p") {
+        Pipeline.automate(spark, ev, dir, cfg, Seq("validate", "test")) }
+      assert(jobs.started === 0, s"$p: a stamped stage ran Spark jobs")
+      // no stamp: the same stages recompute from the artifacts
+      Files.delete(stampOf(dir))
+      val (rjobs, recomputed) = countingJobs(s"stamp-miss-$p") {
+        Pipeline.automate(spark, ev, dir, cfg, Seq("validate", "test")) }
+      assert(rjobs.started > 0, s"$p: no stamp, yet nothing recomputed")
+      assert(stamped.forall(_.ok), s"$p: $stamped")
+      assert(stamped === recomputed, p)
+    }
+  }
+
+  test("stage stamp: a new events file, another config, an in-memory " +
+    "events frame or a newer artifact version each recompute") {
+    val cfg = Pipeline.Config(predictor = "routed", modelThreshold = 14)
+    // a file-backed events table of our own, so a file can land in it
+    val sf = Files.createTempDirectory("graft_stamp_sf")
+    val evDir = Files.createDirectories(sf.resolve("events.parquet"))
+    Files.copy(java.nio.file.Path.of(sf0001, "events.parquet"),
+      evDir.resolve("part-0.parquet"))
+    val ev = Tables.events(spark, sf.toString)
+    val dir = Files.createTempDirectory("graft_stamp_miss").toString
+    Pipeline.run(spark, ev, cfg, Some(dir))
+    // each case must launch jobs (the recompute) and report what
+    // stageMetrics reports on its input
+    def recomputes(tag: String, events: org.apache.spark.sql.DataFrame,
+                   c: Pipeline.Config): Unit = {
+      val (jobs, st) = countingJobs(s"stamp-$tag") {
+        Pipeline.automate(spark, events, dir, c, Seq("validate")).head }
+      assert(jobs.started > 0, s"$tag: answered from a stale stamp")
+      assert(st.ok, s"$tag: ${st.detail}")
+      assert(st.detail ===
+        s"${Pipeline.stageMetrics(spark, events, dir, "val", c).count()} " +
+          "metric groups", tag)
+    }
+    val (hit, _) = countingJobs("stamp-hit-own") {
+      Pipeline.automate(spark, ev, dir, cfg, Seq("validate")) }
+    assert(hit.started === 0)
+    recomputes("threshold", ev, cfg.copy(modelThreshold = 20))
+    recomputes("local", spark.createDataFrame(
+      java.util.Arrays.asList(ev.collect(): _*), ev.schema), cfg)
+    // a second file lands in the events directory after the run
+    Files.copy(evDir.resolve("part-0.parquet"),
+      evDir.resolve("part-1.parquet"))
+    recomputes("new-file", Tables.events(spark, sf.toString), cfg)
+    // and an artifact committed after the stamp: v=N+1 of model_types
+    val mt = java.nio.file.Path.of(dir, "model_types")
+    val v = Sinks.latestCommittedVersion(spark, mt.toString).get
+    val src = mt.resolve(s"v=$v")
+    val dst = mt.resolve(s"v=${v + 1}")
+    Files.createDirectories(dst)
+    Files.list(src).forEach(f => Files.copy(f, dst.resolve(f.getFileName)))
+    recomputes("artifact", ev, cfg)
+  }
+
+  test("stage stamp: a run whose tail fails removes the earlier stamp " +
+    "and writes none") {
+    val ev = Tables.events(spark, sf0001)
+    val dir = Files.createTempDirectory("graft_stamp_fail").toString
+    Pipeline.run(spark, ev, Pipeline.Config(), Some(dir))
+    assert(Files.exists(stampOf(dir)))
+    // a plain FILE where the model_types table goes: its write fails
+    val mt = new java.io.File(dir, "model_types")
+    org.apache.commons.io.FileUtils.deleteDirectory(mt)
+    Files.writeString(mt.toPath, "x")
+    assert(scala.util.Try(Pipeline.run(spark, ev, Pipeline.Config(),
+      Some(dir))).isFailure)
+    assert(!Files.exists(stampOf(dir)), "a failed publish left a stamp")
+  }
+
   /** Jobs one routed run() with `outDir` may launch on the sf0.001
     * fixture: measured 40 with the side tables pinned; re-running them
     * per consumer took 71. */
