@@ -51,7 +51,7 @@ class BenchEmitSpec extends AnyFunSuite {
     def line(overPin: Seq[String]) = Bench.renderLine(many,
       calibSec = 0.30, calibEnd = 0.29, normFactor = 0.8,
       contended = "false", reran = 0, overPin = overPin,
-      fullPath = "/root/repo/BENCH_FULL.json", sfDir = "/tmp/sf",
+      fullPath = "BENCH_FULL.json", sfDir = "/tmp/sf",
       complete = true, deadlineHit = false)
     val pinned = line(many.map(_._1))
     val clean = line(Nil)
