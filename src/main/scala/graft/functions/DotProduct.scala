@@ -167,6 +167,13 @@ object GraftFunctions {
         val e = arity("graft_minhash_sig", 2)(es)
         MinHashSig(e.head, intLit("graft_minhash_sig", "numPerm")(e(1)))
       }),
+    ("graft_minhash_bands", classOf[MinHashBands],
+      "_FUNC_(sig, rowsPerBand) - LSH band hashes of a minhash signature: " +
+        "element b = xxhash64(b, slice(sig, b * rowsPerBand + 1, rowsPerBand))",
+      es => {
+        val e = arity("graft_minhash_bands", 2)(es)
+        MinHashBands(e.head, intLit("graft_minhash_bands", "rowsPerBand")(e(1)))
+      }),
     ("graft_text_metrics", classOf[TextMetrics],
       "_FUNC_(text) - struct of per-document text statistics " +
         "(chars, tokens, distinct tokens, subword estimate, stopwords, punctuation)",

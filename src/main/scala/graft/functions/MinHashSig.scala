@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** MinHash signature over an array<long> of element hashes, in ONE pass:
@@ -58,12 +58,12 @@ case class MinHashSig(child: Expression, numPerm: Int) extends UnaryExpression {
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val xxh = classOf[XXH64].getName
-    val gad = classOf[GenericArrayData].getName
+    val uad = classOf[UnsafeArrayData].getName
     nullSafeCodeGen(ctx, ev, a => {
       val n = ctx.freshName("n")
       val mins = ctx.freshName("mins")
@@ -85,7 +85,7 @@ case class MinHashSig(child: Expression, numPerm: Int) extends UnaryExpression {
          |      if ($v < $mins[$p]) { $mins[$p] = $v; }
          |    }
          |  }
-         |  ${ev.value} = new $gad($mins);
+         |  ${ev.value} = $uad.fromPrimitiveArray($mins);
          |}
        """.stripMargin
     })

@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 import org.apache.spark.unsafe.types.UTF8String
@@ -78,7 +78,7 @@ case class WordNGramHashes(child: Expression, n: Int, algo: String = "xxh64")
   override def nullSafeEval(a: Any): Any = {
     val arr = a.asInstanceOf[ArrayData]
     val len = arr.numElements()
-    if (len < n) return new GenericArrayData(Array.empty[Long])
+    if (len < n) return UnsafeArrayData.fromPrimitiveArray(Array.empty[Long])
     val grams = new Array[Long](len - n + 1)
     val parts = new Array[UTF8String](n)
     var i = 0
@@ -96,7 +96,7 @@ case class WordNGramHashes(child: Expression, n: Int, algo: String = "xxh64")
       if (w == 0 || grams(r) != grams(w - 1)) { grams(w) = grams(r); w += 1 }
       r += 1
     }
-    new GenericArrayData(java.util.Arrays.copyOf(grams, w))
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(grams, w))
   }
 
   override protected def withNewChildInternal(newChild: Expression): WordNGramHashes =

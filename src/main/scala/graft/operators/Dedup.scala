@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   *  - the brute-force pair join ([[jaccardPairs]]) is the CORRECTNESS
   *    reference, O(n²) — run it only on samples/buckets.
   *  - the scale path is [[minhashLshPairs]]: per-doc signatures (one
-  *    narrow projection), explode to `bands` rows/doc, shuffle on the
-  *    16-byte band key, pair-generate within buckets only, then verify
-  *    candidates exactly. Never all-pairs. Candidate volume is tuned by
+  *    narrow projection), explode to `bands` rows/doc (native band
+  *    hashes), ONE shuffle on the 12-byte (band_hash, band_id) key, a
+  *    per-partition kernel that pair-generates within each bucket and
+  *    applies the hot-bucket cap as it counts, then verify candidates
+  *    exactly. Never all-pairs. Candidate volume is tuned by
   *    (numPerm, rowsPerBand): more rows/band → fewer false candidates,
   *    lower recall per band — with exact verification downstream,
   *    precision is always 1.0 and only recall is probabilistic.
@@ -27,13 +29,20 @@ import org.apache.spark.sql.functions._
   *    64 bits into 4×16 guarantees candidate generation for distance ≤ 3
   *    (pigeonhole) and is probabilistic beyond.
   *  - every banded family makes its candidates with ONE combinator,
-  *    [[BandJoin]]: explode a band key per (row, band) → optional 1-bit
-  *    multi-probe of one end ([[BandJoin.probe]]) → equi-join on the key
-  *    → keep (`a < b` for a self-join, the caller's predicate for a
-  *    cross-join) → project the id pair → `distinct` ([[BandJoin.pairs]];
-  *    a stream keeps its repeats) → join each id back to its payload and
-  *    verify exactly ([[BandJoin.verify]]). A family supplies only its key
-  *    expression, its carried columns and its verify predicate: MinHash
+  *    [[BandJoin]]: explode a band key per (row, band) → pair the rows
+  *    of each key → `distinct` → join each id back to its payload and
+  *    verify exactly ([[BandJoin.verify]]). One relation paired with
+  *    itself (MinHash, SemDeDup clusters) goes through the bucket kernel
+  *    of [[BandJoin.selfPairs]]: one exchange on the key, each bucket
+  *    walked once in a sorted partition, `a < b`, the hot-bucket cap
+  *    counted on the way. Two different ends — an optional 1-bit
+  *    multi-probe end ([[BandJoin.probe]]), a query side, a persisted
+  *    index, a stream — meet in the equi-join of [[BandJoin.pairs]]
+  *    under the family's keep predicate (`a < b` plus an inline check for
+  *    the probed self-joins; a stream keeps its repeats). Every key leads
+  *    with its widest column, which the join's sort orders on first.
+  *    A family supplies only its key expression, its carried columns and
+  *    its verify predicate: MinHash
   *    here ([[minhashLshPairs]], [[minhashPairsAgainst]], and
   *    StreamingDedup.indexProbeStream), SimHash bands and block tables
   *    ([[simhashPairsFromSketch]], [[simhashPairsFromSketchMasked]]),
@@ -318,75 +327,67 @@ object Dedup {
   /** Banded view of a [[minhashIndex]] frame: one row per (doc, band),
     * `band_hash` = xxhash64 of the band's signature slice (band id mixed
     * in so equal slices of different bands never collide), after
-    * `doc_id` and the `carry` columns. Map-only. */
-  private[graft] def bandsOf(index: DataFrame, numBands: Int,
-                             rowsPerBand: Int, carry: Column*): DataFrame =
-    index.select(col("doc_id") +: carry :+ posexplode(expr(
-      s"transform(sequence(0, ${numBands - 1}), " +
-        s"b -> xxhash64(b, slice(sig, b * $rowsPerBand + 1, $rowsPerBand)))"))
+    * `doc_id` and the `carry` columns. Map-only; the band hashes come
+    * from the one-pass native [[graft.functions.MinHashBands]]. */
+  private[graft] def bandsOf(index: DataFrame, rowsPerBand: Int,
+                             carry: Column*): DataFrame =
+    index.select(col("doc_id") +: carry :+ posexplode(call_function(
+      "graft_minhash_bands", col("sig"), lit(rowsPerBand)))
       .as(Seq("band_id", "band_hash")): _*)
 
   /** LSH candidate pairs + exact verification.
     *
-    * Signature → `numPerm/rowsPerBand` bands → explode → shuffle on the
-    * (band_id, band_hash) key → in-bucket pair generation → distinct →
-    * exact-Jaccard verify (the [[BandJoin]] shape, see "Scale design"
-    * above). Output = verified near-dup pairs (doc_a < doc_b); precision
-    * 1.0, recall 1−(1−j^r)^b per pair.
+    * Signature → `numPerm/rowsPerBand` bands → explode → one exchange on
+    * the (band_hash, band_id) key → in-bucket pair generation by the
+    * [[BandJoin.selfPairs]] kernel → distinct → exact-Jaccard verify (the
+    * [[BandJoin]] shape, see "Scale design" above). Output = verified
+    * near-dup pairs (doc_a < doc_b); precision 1.0, recall 1−(1−j^r)^b
+    * per pair.
     *
     * `maxBucket` (0 = off, the default — existing behavior and oracles
     * unchanged): skip band buckets holding more than `maxBucket` docs
-    * before pair generation. The in-bucket self-join is quadratic PER
-    * BUCKET — AQE's skew splitting redistributes a hot bucket's work but
-    * cannot shrink it, and a degenerate text cohort (boilerplate,
-    * templates, near-constant fields) can put thousands of docs behind
-    * one band signature: the round-10 sf1 cost-curve measured a 5,277-doc
-    * bucket = 13.9M candidate pairs in ONE bucket from a canonicalized-
-    * word-order fixture. Real 100 TB crawls carry exactly such template
-    * cohorts, so production runs should set a cap (e.g. 10·expected
-    * cluster size). The trade is explicit and bounded: only pairs whose
-    * EVERY matching band is over the cap are lost — i.e. giant template
-    * cohorts, which an exact-dup pass or a dedicated template detector
-    * should own anyway — and the skip is per-band, so a pair sharing one
-    * normal bucket still surfaces. */
+    * before pair generation; the kernel counts each bucket as it walks
+    * it, so the cap costs no extra pass. In-bucket pair generation is
+    * quadratic PER BUCKET, and a bucket is one task of the kernel — a
+    * hot bucket cannot be split across tasks — and a degenerate text
+    * cohort (boilerplate, templates, near-constant fields) can put
+    * thousands of docs behind one band signature: the round-10 sf1
+    * cost-curve measured a 5,277-doc bucket = 13.9M candidate pairs in
+    * ONE bucket from a canonicalized-word-order fixture. Real 100 TB
+    * crawls carry exactly such template cohorts, so production runs
+    * should set a cap (e.g. 10·expected cluster size). The trade is
+    * explicit and bounded: only pairs whose EVERY matching band is over
+    * the cap are lost — i.e. giant template cohorts, which an exact-dup
+    * pass or a dedicated template detector should own anyway — and the
+    * skip is per-band, so a pair sharing one normal bucket still
+    * surfaces. */
   def minhashLshPairs(docs: DataFrame, n: Int, numPerm: Int,
                       rowsPerBand: Int, num: Int, den: Int,
                       maxBucket: Int = 0): DataFrame = {
-    val numBands = bandCount(numPerm, rowsPerBand)
-    // localCheckpoint (LAZY): shingles + signatures feed four join
-    // branches (two banded sides, two verification sides) — compute once,
-    // reuse from cache; eager=false avoids a dedicated fill pass.
+    bandCount(numPerm, rowsPerBand)
+    // localCheckpoint (LAZY): shingles + signatures feed the banded view
+    // and both verification sides — compute once, reuse from cache;
+    // eager=false avoids a dedicated fill pass.
     // The persisted rows are (doc_id, sh, sig) — document text is
     // already projected away. See the scale note in jaccardPairs:
     // MEMORY_AND_DISK per executor, not fault-tolerant; at cluster scale
     // switch to DISK_ONLY persist / reliable checkpoint.
     val s = minhashIndex(docs, n, numPerm)
       .localCheckpoint(eager = false)
-    val bandedAll = bandsOf(s, numBands, rowsPerBand)
-    // hot-bucket cap: one narrow count aggregate + an anti-join on the
-    // band key — both shuffle the (band_id, band_hash, doc_id) triple
-    // only, never shingles
-    val banded =
-      if (maxBucket <= 0) bandedAll
-      else bandedAll.join(
-        bandedAll.groupBy(BandKey.map(col): _*)
-          .agg(count(lit(1)).as("__bc")).filter(col("__bc") > maxBucket)
-          .select(BandKey.map(col): _*),
-        BandKey, "left_anti")
-    // In-bucket pair generation as a SELF-JOIN on the band key (not a
-    // collect_set + in-row pair expansion): a hot bucket — guaranteed at
-    // scale, and common here because the tiny vocabulary makes popular
-    // shingles win many min-hashes — would otherwise become one giant
-    // array in one row on one thread.
-    val candidates = BandJoin.selfPairs(banded.alias("x"), banded.alias("y"),
-      BandKey, "x.doc_id", "y.doc_id", ("doc_a", "doc_b"))
+    // In-bucket pair generation by the per-partition kernel (not a
+    // collect_set + in-row pair expansion, which would make a hot bucket
+    // one giant array in one row): one exchange of the (band_hash,
+    // band_id, doc_id) triple on the band key, never shingles, with the
+    // hot-bucket cap counted inside the kernel.
+    val candidates = BandJoin.selfPairs(bandsOf(s, rowsPerBand),
+      BandKey, "doc_id", ("doc_a", "doc_b"), maxBucket)
     BandJoin.verify(candidates,
       Seq("doc_a" -> shingleSide(s, "doc_a", "a"),
         "doc_b" -> shingleSide(s, "doc_b", "b")), jaccardCheck(num, den))
   }
 
-  /** The MinHash band-join key of [[bandsOf]] rows. */
-  private[graft] val BandKey = Seq("band_id", "band_hash")
+  /** The MinHash band-join key of [[bandsOf]] rows, widest column first. */
+  private[graft] val BandKey = Seq("band_hash", "band_id")
 
   /** One pair end's verify payload from a [[minhashIndex]]-shaped frame:
     * `(id, sh_<side>, sz_<side>)`; `sh` overrides the shingle column. */
@@ -516,13 +517,13 @@ object Dedup {
   def minhashPairsAgainst(batch: DataFrame, index: DataFrame,
                           rowsPerBand: Int, num: Int, den: Int): DataFrame = {
     val (n, numPerm) = indexContract(index)
-    val numBands = bandCount(numPerm, rowsPerBand)
+    bandCount(numPerm, rowsPerBand)
     // batch sketch feeds its banded view + the verify join; the index is
     // caller-owned (persist/read-back is the caller's lifecycle, the
     // AsOfJoin pack()/probeAgainst() convention)
     val b = minhashIndex(batch, n, numPerm).localCheckpoint(eager = false)
-    val candidates = BandJoin.pairs(bandsOf(b, numBands, rowsPerBand).alias("x"),
-      bandsOf(index, numBands, rowsPerBand).alias("y"), BandKey, None,
+    val candidates = BandJoin.pairs(bandsOf(b, rowsPerBand).alias("x"),
+      bandsOf(index, rowsPerBand).alias("y"), BandKey, None,
       col("x.doc_id").as("doc_new"), col("y.doc_id").as("doc_old"))
     BandJoin.verify(candidates,
       Seq("doc_new" -> shingleSide(b, "doc_new", "a"),
@@ -1090,10 +1091,12 @@ object Dedup {
       posexplode(array(keys: _*)).as(Seq("band_id", "band_val")))
     def end(df: DataFrame, s: String) = df.select(col("band_id"),
       col("band_val"), col("doc_id").as(s"doc_$s"), col("simhash").as(s"sim_$s"))
-    BandJoin.selfPairs(
+    BandJoin.pairs(
       end(BandJoin.probe(banded, "band_val", probeBits, width), "a"),
-      end(banded, "b"), Seq("band_id", "band_val"), "doc_a", "doc_b",
-      ("doc_a", "doc_b"), Some(expr(s"bit_count(sim_a ^ sim_b) <= $maxDist")))
+      end(banded, "b"), Seq("band_val", "band_id"),
+      Some(col("doc_a") < col("doc_b") &&
+        expr(s"bit_count(sim_a ^ sim_b) <= $maxDist")),
+      col("doc_a"), col("doc_b"))
   }
 
   // ------------------------------------------------------------------

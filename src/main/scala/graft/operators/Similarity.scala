@@ -124,7 +124,7 @@ object Similarity {
   /** Multi-table LSH approximate top-k: `tables` independent b-bit
     * hyperplane signatures (OR-amplification — a pair is a candidate if it
     * collides in ANY table), candidates deduplicated then scored exactly
-    * (the [[BandJoin]] cross-join on (table, bucket)).
+    * (the [[BandJoin]] cross-join on (bucket, table)).
     *
     * `multiProbe` (0..bits): in addition to its own bucket, each QUERY
     * probes the buckets at Hamming distance 1 on its first `multiProbe`
@@ -150,7 +150,7 @@ object Similarity {
     val probes = BandJoin.probe(hyperplaneBands(queries,
       col("vec_id").as("query_id"), bits, tables), "bucket", multiProbe, bits)
     val cand = annPairs(probes, hyperplaneBands(corpus,
-      col("vec_id").as("neighbor_id"), bits, tables), Seq("table_id", "bucket"))
+      col("vec_id").as("neighbor_id"), bits, tables), Seq("bucket", "table_id"))
     topKAmong(cand, queries, corpus, k)
   }
 
@@ -531,20 +531,18 @@ object Similarity {
     * straddling a cluster boundary needs `multiAssign` ≥ 2 to be seen.
     *
     * Scale: assignment is a broadcast of the O(K) centroid set + one
-    * map pass; the self-join shuffles on the cluster id (AQE splits hot
-    * clusters); verification moves id pairs only. Never all-pairs,
-    * never a corpus broadcast. Precision 1.0 by construction. */
+    * map pass; the [[BandJoin.selfPairs]] kernel shuffles the (vec_id,
+    * centroid_id) rows once on the cluster id and pairs each cluster in
+    * one task (AQE cannot split a large cluster; more centroids shrink
+    * it); verification moves id pairs only. Never all-pairs, never a
+    * corpus broadcast. Precision 1.0 by construction. */
   def semanticDedupPairs(corpus: DataFrame, index: IvfIndex,
                          threshold: Double, multiAssign: Int = 1): DataFrame = {
     require(multiAssign >= 1, s"multiAssign must be >= 1, got $multiAssign")
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    // localCheckpoint (LAZY, the Dedup convention): the assignment feeds
-    // both self-join branches — one broadcast-centroid pass, not two
-    val assigned = assign(index.centroids, corpus, "vec_id",
-      keep = multiAssign).localCheckpoint(eager = false)
-    val candidates = BandJoin.selfPairs(assigned.alias("x"),
-      assigned.alias("y"), Seq("centroid_id"), "x.vec_id", "y.vec_id",
-      ("vec_a", "vec_b"))
+    val assigned = assign(index.centroids, corpus, "vec_id", keep = multiAssign)
+    val candidates = BandJoin.selfPairs(assigned, Seq("centroid_id"),
+      "vec_id", ("vec_a", "vec_b"))
     cosineVerify(candidates, withNorm(corpus, "vec_a", "va", "na")
       .localCheckpoint(eager = false), threshold)
   }
@@ -637,12 +635,12 @@ object Similarity {
     * to vectors): the corpus is bucketed ONCE per hash table on a
     * `bits`-bit random-hyperplane signature (the [[lshTopK]] sketch),
     * candidate pairs are generated within buckets by a [[BandJoin]]
-    * SELF-JOIN on the (table, bucket) key, and every candidate is
+    * SELF-JOIN on the (bucket, table) key, and every candidate is
     * verified with the exact native dot product. Never all-pairs, never a
     * full-corpus broadcast:
-    * both join sides shuffle on the narrow band key (AQE's skew-join
-    * splitting handles hot buckets), and the verify joins move only
-    * (vec_a, vec_b) id pairs back to the vectors.
+    * both join sides shuffle on the narrow (bucket, table_id) key (AQE's
+    * skew-join splitting handles hot buckets), and the verify joins move
+    * only (vec_a, vec_b) id pairs back to the vectors.
     *
     * Precision is 1.0 by construction (exact verify); recall per pair is
     * the OR-amplified 1−(1−P)^tables with P = p^bits + multiProbe·(1−p)·
@@ -683,9 +681,10 @@ object Similarity {
       .filter(col("nrm") > 0) // zero vectors: NaN cos passes >= (round 15)
       .localCheckpoint(eager = false)
     val banded = hyperplaneBands(base, col("vec_id"), bits, tables)
-    val cand = BandJoin.selfPairs(
+    val cand = BandJoin.pairs(
       BandJoin.probe(banded, "bucket", multiProbe, bits).alias("x"), banded.alias("y"),
-      Seq("table_id", "bucket"), "x.vec_id", "y.vec_id", ("vec_a", "vec_b"))
+      Seq("bucket", "table_id"), Some(col("x.vec_id") < col("y.vec_id")),
+      col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
     cosineVerify(cand, base.select(col("vec_id").as("vec_a"),
       col("embedding").as("va"), col("nrm").as("na")), threshold)
   }

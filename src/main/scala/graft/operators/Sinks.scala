@@ -420,9 +420,13 @@ object Sinks {
   }
 
   /** Current contents of an [[upsertSnapshotBucketed]] table (layout
-    * column dropped). */
+    * column dropped). The schema comes from one bucket file's footer
+    * ([[storedBucketSchema]], read on the driver) instead of parquet
+    * schema inference, which runs a Spark job on every call; a table with
+    * no bucket data file fails loud. */
   def readBucketedSnapshot(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.parquet(tableDir).drop("__bucket")
+    spark.read.schema(storedBucketSchema(spark, tableDir)).parquet(tableDir)
+      .drop("__bucket")
 
 
   /** Create-branch safety for the bucketed tables (round 15): dispatch
@@ -498,7 +502,7 @@ object Sinks {
       .flatMap(d => f.listStatus(d.getPath).iterator.map(_.getPath))
       .find(visible)
       .getOrElse(throw new IllegalStateException(
-        s"$tableDir has a bucket marker but no bucket data file"))
+        s"$tableDir holds no bucket data file"))
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
     try {

@@ -233,15 +233,15 @@ object StreamingDedup {
   def indexProbeStream(docs: DataFrame, index: DataFrame,
                        rowsPerBand: Int, num: Int, den: Int): DataFrame = {
     val (n, numPerm) = Dedup.indexContract(index)
-    val numBands = Dedup.bandCount(numPerm, rowsPerBand)
+    Dedup.bandCount(numPerm, rowsPerBand)
     // band rows carry the probe doc's shingles inline (joining back to
     // the stream side would be a stream-stream join) — per-batch fan-out
     // of numBands × the shingle array, bounded by the micro-batch, never
     // by the corpus; the band join of a stream keeps its repeats
     val cand = BandJoin.pairs(
-      Dedup.bandsOf(Dedup.minhashIndex(docs, n, numPerm), numBands,
-        rowsPerBand, col("sh").as("sh_a"), size(col("sh")).as("sz_a")),
-      Dedup.bandsOf(index, numBands, rowsPerBand)
+      Dedup.bandsOf(Dedup.minhashIndex(docs, n, numPerm), rowsPerBand,
+        col("sh").as("sh_a"), size(col("sh")).as("sz_a")),
+      Dedup.bandsOf(index, rowsPerBand)
         .withColumnRenamed("doc_id", "doc_old"), Dedup.BandKey, None,
       col("doc_id").as("doc_new"), col("doc_old"), col("sh_a"), col("sz_a"))
     BandJoin.verify(cand, Seq("doc_old" -> Dedup.indexSide(index)),

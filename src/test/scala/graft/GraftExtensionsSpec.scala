@@ -42,6 +42,7 @@ class GraftExtensionsSpec extends SparkSpecBase {
         |  graft_simhash63(array(0L)) AS s,
         |  size(graft_ngram_hashes(array('a', 'b', 'c'), 2)) AS ng,
         |  size(graft_minhash_sig(array(7L), 4)) AS mh,
+        |  size(graft_minhash_bands(array(1L, 2L, 3L, 4L), 2)) AS mb,
         |  graft_text_metrics('a b').n_tokens AS tm,
         |  graft_rolling_hash('x') AS rh,
         |  graft_sorted_upper_bound(array(1L, 3L, 5L), 4L) AS ub,
@@ -54,6 +55,7 @@ class GraftExtensionsSpec extends SparkSpecBase {
     assert(r.getAs[Long]("s") === 0L) // single zero hash: every majority is -1
     assert(r.getAs[Int]("ng") === 2) // "a b", "b c"
     assert(r.getAs[Int]("mh") === 4) // numPerm signature slots
+    assert(r.getAs[Int]("mb") === 2) // numPerm / rowsPerBand bands
     assert(r.getAs[Long]("tm") === 2L)
     // value pinned by ext_fingerprint's oracle; here only resolution+range
     assert(r.getAs[Long]("rh") >= 0L && r.getAs[Long]("rh") < 1000000007L)

@@ -147,6 +147,33 @@ class IngestSpec extends SparkSpecBase {
     assert(out(("u2", "click")) === ((1L, 5.0)))
   }
 
+  test("readBucketedSnapshot reads the footer schema with no Spark job: " +
+    "the same schema and rows as parquet inference; no data file fails loud") {
+    import graft.operators.Sinks
+    val root = Files.createTempDirectory("graft_snk_footer").toFile.getAbsolutePath
+    val tableDir = root + "/tbl"
+    val batch = (0 until 40).map(i => (s"u$i", if (i % 2 == 0) "view" else "click",
+      i.toLong, i * 0.5, java.sql.Timestamp.valueOf(s"2024-01-0${1 + i % 9} 00:00:00")))
+      .toDF("user_id", "event_type", "event_id", "value", "ts")
+    Sinks.upsertSnapshotBucketed(spark, tableDir, batch,
+      Seq("user_id", "event_type"), "event_id", nBuckets = 4)
+    val (jobs, df) = countingJobs("footer-schema")(
+      Sinks.readBucketedSnapshot(spark, tableDir))
+    assert(jobs.started === 0, s"reading the table ran ${jobs.started} jobs")
+    val inferred = spark.read.parquet(tableDir).drop("__bucket")
+    assert(df.schema === inferred.schema)
+    assert(df.collect().map(_.toString).sorted ===
+      inferred.collect().map(_.toString).sorted)
+    assert(df.count() === 40)
+    // a table directory with no bucket data file fails loud
+    val emptyDir = new java.io.File(root + "/empty/__bucket=0")
+    emptyDir.mkdirs()
+    val e = intercept[IllegalStateException] {
+      Sinks.readBucketedSnapshot(spark, root + "/empty")
+    }
+    assert(e.getMessage.contains("no bucket data file"))
+  }
+
   test("SNK10 applyChanges: I-then-D nets delete, D-then-I nets insert, unknown op fails loud") {
     import graft.operators.Sinks
     val existing = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")

@@ -79,6 +79,26 @@ object HofReferences {
       .select(col(idName), col("centroid_id"))
   }
 
+  /** The self-join form [[BandJoin.selfPairs]] claims pair equality with:
+    * the hot-bucket cap as a count aggregate over `key` and an anti-join
+    * on it, then the band rows self-joined on `key` (NULL keys never
+    * match), `x.id < y.id` kept, the pair projected and made once by
+    * `distinct`. */
+  def selfPairsJoin(rel: DataFrame, key: Seq[String], id: String,
+                    as: (String, String), maxBucket: Int): DataFrame = {
+    val capped =
+      if (maxBucket <= 0) rel
+      else rel.join(
+        rel.groupBy(key.map(col): _*)
+          .agg(count(lit(1)).as("__bc")).filter(col("__bc") > maxBucket)
+          .select(key.map(col): _*),
+        key, "left_anti")
+    capped.alias("x").join(capped.alias("y"), key)
+      .filter(col(s"x.$id") < col(s"y.$id"))
+      .select(col(s"x.$id").as(as._1), col(s"y.$id").as(as._2))
+      .distinct()
+  }
+
   /** The both-orientations candidate stage [[Similarity.cosinePairsBucketed]]
     * had before it moved onto [[BandJoin]]: every probe-side vector joins
     * every exact-side vector of its buckets, self-pairs dropped by `=!=`,
