@@ -13,10 +13,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * the composable form — `aggregate(zip_with(a, b, _*_), 0d, _+_)` — is a
   * chain of interpreted higher-order functions that allocates an
   * intermediate array per row and pays ~µs/element lambda overhead; on an
-  * O(n²) similarity join that's the whole runtime. This expression
-  * whole-stage-codegens to a tight primitive loop (~ns/element), with an
-  * interpreted eval of the IDENTICAL accumulation order, so results are
-  * bit-equal to the HOF form and to a sequential-fold SQL oracle.
+  * O(n²) similarity join that's the whole runtime. This expression's
+  * codegen and interpreted eval both call the one primitive fold
+  * [[DotProduct.dot]] (~ns/element), so the two paths are bit-equal by
+  * construction, and equal to the HOF form and a sequential-fold SQL
+  * oracle.
   *
   * Elements are read as float or double per the input type and widened to
   * double BEFORE multiplying (float·float in float32 would lose the bits
@@ -58,48 +59,59 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
-    val lf = elemIsFloat(left)
-    val rf = elemIsFloat(right)
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xi = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      acc += xi * yi
-      i += 1
-    }
-    acc
+    val v = DotProduct.dot(x, elemIsFloat(left), y, elemIsFloat(right), checkNulls = true)
+    if (DotProduct.isNull(x, y, v)) null else v
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (elemIsFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (elemIsFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += (double) $a.$lGet($i) * (double) $b.$rGet($i);
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $acc; }
-         |}
-       """.stripMargin
-    })
+    val kernel = s"${DotProduct.getClass.getName}.MODULE$$"
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = $kernel.dot($a, ${elemIsFloat(left)}, $b, ${elemIsFloat(right)}, true);
+         |${ev.isNull} = $kernel.isNull($a, $b, ${ev.value});""".stripMargin)
   }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+
+  /** Σ aᵢ·bᵢ, left to right in double, each element widened before the
+    * multiply. A length mismatch, or with `checkNulls` a null element,
+    * stops the fold with NaN, so the common path reads each element once
+    * and returns a primitive; [[isNull]] tells that stop from a NaN the
+    * data produced. Callers whose operands are known null-free
+    * ([[NearestCentroids]], [[MatProject]]) pass `checkNulls = false`.
+    * The one dot fold behind both eval paths and those two. */
+  def dot(a: ArrayData, af: Boolean, b: ArrayData, bf: Boolean,
+          checkNulls: Boolean): Double = {
+    val n = a.numElements()
+    if (n != b.numElements()) return Double.NaN
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (checkNulls && (a.isNullAt(i) || b.isNullAt(i))) return Double.NaN
+      val x = if (af) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bf) b.getFloat(i).toDouble else b.getDouble(i)
+      acc += x * y
+      i += 1
+    }
+    acc
+  }
+
+  /** Whether [[dot]]'s result `v` over `a`, `b` is SQL NULL: only a NaN
+    * can be, so a second pass runs only on that rare path. */
+  def isNull(a: ArrayData, b: ArrayData, v: Double): Boolean =
+    java.lang.Double.isNaN(v) &&
+      (a.numElements() != b.numElements() || hasNull(a) || hasNull(b))
+
+  /** Whether `a` holds a null element. */
+  def hasNull(a: ArrayData): Boolean = {
+    var i = 0
+    while (i < a.numElements()) { if (a.isNullAt(i)) return true; i += 1 }
+    false
+  }
 }
 
 /** Session registration for the engine's native functions. Idempotent.

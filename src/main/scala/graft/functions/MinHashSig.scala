@@ -42,8 +42,25 @@ case class MinHashSig(child: Expression, numPerm: Int) extends UnaryExpression {
             s"${other.catalogString} / numPerm=$numPerm")
     }
 
-  override def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    MinHashSig.signature(a.asInstanceOf[ArrayData], numPerm)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = s"${MinHashSig.getClass.getName}.MODULE$$"
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = $kernel.signature($a, $numPerm);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
+    copy(child = newChild)
+}
+
+object MinHashSig {
+
+  /** The signature of `arr` (see the class doc), NULL when it is empty.
+    * The one kernel behind both eval paths. */
+  def signature(arr: ArrayData, numPerm: Int): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return null
     val mins = Array.fill(numPerm)(Long.MaxValue)
@@ -60,37 +77,4 @@ case class MinHashSig(child: Expression, numPerm: Int) extends UnaryExpression {
     }
     UnsafeArrayData.fromPrimitiveArray(mins)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val xxh = classOf[XXH64].getName
-    val uad = classOf[UnsafeArrayData].getName
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val mins = ctx.freshName("mins")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val h1 = ctx.freshName("h1")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $mins = new long[$numPerm];
-         |  java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $h1 = $xxh.hashLong($a.getLong($i), 42L);
-         |    for (int $p = 0; $p < $numPerm; $p++) {
-         |      long $v = $xxh.hashInt($p, $h1);
-         |      if ($v < $mins[$p]) { $mins[$p] = $v; }
-         |    }
-         |  }
-         |  ${ev.value} = $uad.fromPrimitiveArray($mins);
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
 }

@@ -93,23 +93,7 @@ case class NearestCentroids(left: Expression, right: Expression, keep: Int)
 
 object NearestCentroids {
 
-  private def elem(a: ArrayData, isFloat: Boolean, i: Int): Double =
-    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
-
-  private def hasNull(a: ArrayData): Boolean = {
-    var i = 0
-    while (i < a.numElements()) { if (a.isNullAt(i)) return true; i += 1 }
-    false
-  }
-
-  /** Σ aᵢ·bᵢ, left to right in double — [[DotProduct]]'s fold, for
-    * operands already known to be null-free and of equal length. */
-  private def dot(a: ArrayData, af: Boolean, b: ArrayData, bf: Boolean): Double = {
-    var acc = 0.0
-    var i = 0
-    while (i < a.numElements()) { acc += elem(a, af, i) * elem(b, bf, i); i += 1 }
-    acc
-  }
+  import DotProduct.{dot, hasNull}
 
   /** Positions in `cents` of the `keep` best centroids for `v`, best
     * first (see the class doc for the order); null struct entries are
@@ -119,7 +103,7 @@ object NearestCentroids {
            keep: Int): Array[Int] = {
     val n = cents.numElements()
     val vNull = v == null || hasNull(v)
-    val vNorm = if (vNull) 0.0 else math.sqrt(dot(v, vFloat, v, vFloat))
+    val vNorm = if (vNull) 0.0 else math.sqrt(dot(v, vFloat, v, vFloat, checkNulls = false))
     val cos = new Array[Double](n)
     val cosNull = new Array[Boolean](n)
     val ids = new Array[Long](n)
@@ -136,10 +120,10 @@ object NearestCentroids {
         // denominator takes the ELSE branch, a NaN one the THEN branch
         if (vNull || cNull) cos(i) = -2.0
         else {
-          val den = vNorm * math.sqrt(dot(c, cFloat, c, cFloat))
+          val den = vNorm * math.sqrt(dot(c, cFloat, c, cFloat, checkNulls = false))
           if (SQLOrderingUtil.compareDoubles(den, 0.0) <= 0) cos(i) = -2.0
           else if (v.numElements() != c.numElements()) cosNull(i) = true
-          else cos(i) = dot(v, vFloat, c, cFloat) / den
+          else cos(i) = dot(v, vFloat, c, cFloat, checkNulls = false) / den
         }
       }
       i += 1

@@ -35,8 +35,22 @@ case class SimHash63(child: Expression) extends UnaryExpression {
             s"(containsNull=false), got ${other.catalogString}")
     }
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any = SimHash63.sketch(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = s"${SimHash63.getClass.getName}.MODULE$$"
+    defineCodeGen(ctx, ev, a => s"$kernel.sketch($a)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash63 =
+    copy(child = newChild)
+}
+
+object SimHash63 {
+
+  /** The 63-bit majority sketch of `x` (see the class doc). The one
+    * kernel behind both eval paths. */
+  def sketch(x: ArrayData): Long = {
     val n = x.numElements()
     val cnt = new Array[Int](63)
     var i = 0
@@ -57,32 +71,4 @@ case class SimHash63(child: Expression) extends UnaryExpression {
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val cnt = ctx.freshName("cnt")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $cnt = new int[63];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $b = 0; $b < 63; $b++) {
-         |    if ((($h >> $b) & 1L) == 1L) { $cnt[$b]++; } else { $cnt[$b]--; }
-         |  }
-         |}
-         |long $acc = 0L;
-         |for (int $b = 0; $b < 63; $b++) {
-         |  $acc = $acc * 2 + ($cnt[$b] > 0 ? 1L : 0L);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash63 =
-    copy(child = newChild)
 }

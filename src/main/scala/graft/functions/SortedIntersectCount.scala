@@ -37,9 +37,25 @@ case class SortedIntersectCount(left: Expression, right: Expression)
             s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectCount.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = s"${SortedIntersectCount.getClass.getName}.MODULE$$"
+    defineCodeGen(ctx, ev, (a, b) => s"$kernel.count($a, $b)")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedIntersectCount =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+
+  /** |x ∩ y| by a two-pointer merge (see the class doc for the sorted,
+    * distinct contract). The one merge behind both eval paths and the
+    * O(n²) shingle scans of `Dedup`. */
+  def count(x: ArrayData, y: ArrayData): Long = {
     val n = x.numElements()
     val m = y.numElements()
     var i = 0
@@ -54,32 +70,4 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = $a.numElements();
-         |int $m = $b.numElements();
-         |int $i = 0; int $j = 0; long $c = 0L;
-         |while ($i < $n && $j < $m) {
-         |  long $x = $a.getLong($i);
-         |  long $y = $b.getLong($j);
-         |  if ($x < $y) { $i++; }
-         |  else if ($x > $y) { $j++; }
-         |  else { $c++; $i++; $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
 }

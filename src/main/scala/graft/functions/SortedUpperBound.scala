@@ -41,9 +41,24 @@ case class SortedUpperBound(left: Expression, right: Expression)
           s"got ${l.catalogString} / ${r.catalogString}")
     }
 
-  override def nullSafeEval(a: Any, t: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val target = t.asInstanceOf[Long]
+  override def nullSafeEval(a: Any, t: Any): Any =
+    SortedUpperBound.upperBound(a.asInstanceOf[ArrayData], t.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = s"${SortedUpperBound.getClass.getName}.MODULE$$"
+    defineCodeGen(ctx, ev, (a, t) => s"$kernel.upperBound($a, $t)")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedUpperBound =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedUpperBound {
+
+  /** The count of elements `<= target` in ascending `arr`, by binary
+    * search. The one kernel behind both eval paths. */
+  def upperBound(arr: ArrayData, target: Long): Int = {
     var lo = 0
     var hi = arr.numElements()
     while (lo < hi) {
@@ -52,24 +67,4 @@ case class SortedUpperBound(left: Expression, right: Expression)
     }
     lo
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, t) => {
-      val lo = ctx.freshName("lo")
-      val hi = ctx.freshName("hi")
-      val mid = ctx.freshName("mid")
-      s"""
-         |int $lo = 0;
-         |int $hi = $a.numElements();
-         |while ($lo < $hi) {
-         |  int $mid = ($lo + $hi) >>> 1;
-         |  if ($a.getLong($mid) <= $t) { $lo = $mid + 1; } else { $hi = $mid; }
-         |}
-         |${ev.value} = $lo;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedUpperBound =
-    copy(left = newLeft, right = newRight)
 }

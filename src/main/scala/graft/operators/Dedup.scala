@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import graft.functions.SortedIntersectCount
 
 /** Document deduplication operators for the LLM-data-pipeline extension
   * surface: exact (see ExtensionQueries.dedup_exact), n-gram Jaccard
@@ -127,78 +130,93 @@ object Dedup {
       ((inter * (den + num)) >= ((size(a) + size(b)).cast("long") * num))
   }
 
-  /** Ground-truth near-dup pairs by exact shingle Jaccard ≥ num/den.
-    * O(n²) pair evaluations — correctness reference and small-scale path
-    * only (the scale path is [[minhashLshPairs]]); hashed-long sets + the
-    * size prefilter keep the constant factor honest at bench scale.
-    *
-    * `maxRows` fails LOUD (one cheap parquet-count job) if this
-    * correctness reference is pointed at a production-sized corpus where
-    * the O(n²) pair loop would silently burn the cluster; raise it
-    * explicitly only for a deliberate large ground-truth run. */
-  def jaccardPairs(docs: DataFrame, n: Int, num: Int, den: Int,
-                   maxRows: Long = 100000L): DataFrame = {
-    val rows = docs.count()
+  /** Fails LOUD (one cheap count job) when an O(n²) ground-truth
+    * reference meets more than `maxRows` rows, where its pair loop would
+    * silently burn the cluster; raise `maxRows` explicitly only for a
+    * deliberate large ground-truth run. `reference` opens the message
+    * ("jaccardPairs is an O(n²)"), `scalePath` points at the production
+    * sibling. */
+  private[graft] def requireRowCap(df: DataFrame, maxRows: Long, reference: String,
+                                   scalePath: String, input: String = "input"): Unit = {
+    val rows = df.count()
     require(rows <= maxRows,
-      s"jaccardPairs is an O(n²) ground-truth reference: input has $rows rows > maxRows=$maxRows. " +
-        "Use minhashLshPairs for production corpora, or pass maxRows explicitly for a deliberate large run.")
+      s"$reference ground-truth reference: $input has $rows rows > maxRows=$maxRows. " +
+        s"$scalePath for production corpora, or pass maxRows explicitly for a deliberate large run.")
+  }
+
+  /** The pair rule of one [[shinglePairScan]]: a cheap prune on the ids
+    * and set sizes, then the integer threshold on the intersect size.
+    * Methods on primitives, so the O(n²) loop boxes nothing. */
+  private abstract class ShinglePairRule extends Serializable {
+    def prune(ida: Long, idb: Long, sa: Int, sb: Int): Boolean
+    def accept(inter: Long, sa: Int, sb: Int): Boolean
+  }
+
+  /** Every ordered pair (doc_a, doc_b) of `docs` whose hashed word-`n`-gram
+    * sets `rule` keeps, after the [[requireRowCap]] guard. The shingle
+    * sets are computed once (lazy checkpoint: they feed both the
+    * broadcast build side and the streamed probe side), null doc_id /
+    * null shingle rows dropped as the join form this scan replaced did
+    * (its conditions implied IsNotNull). Each set is wrapped as an
+    * `UnsafeArrayData` once; each spread partition then scans the
+    * broadcast with the prune first (~ns/pair) and ONE allocation-free
+    * intersect ([[graft.functions.SortedIntersectCount.count]]) per
+    * surviving pair. A BroadcastNestedLoopJoin evaluated the same
+    * predicate interpreted, after Catalyst had tripled the intersect
+    * call and ordered it before the prunes (plan committed:
+    * plans/r17/dedup_ngram_jaccard_before.txt). One task per spread
+    * partition. */
+  private def shinglePairScan(docs: DataFrame, n: Int, maxRows: Long, reference: String,
+                              scalePath: String, rule: ShinglePairRule): DataFrame = {
+    requireRowCap(docs, maxRows, reference, scalePath)
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val spark = docs.sparkSession
     import spark.implicits._
-    // localCheckpoint (LAZY): the shingle computation feeds both the
-    // broadcast build and the streamed probe side — compute once.
-    // Null doc_id / null shingle rows are dropped, matching the join
-    // form this kernel replaced (its conditions implied IsNotNull).
     val s = spread(docs)
       .withColumn("ws", tokens(col("text")))
       .select(col("doc_id"), hashedShingles("ws", n).as("sh"))
       .filter(col("doc_id").isNotNull && col("sh").isNotNull)
       .localCheckpoint(eager = false)
       .as[(Long, Array[Long])]
-    // PAIR-SCAN KERNEL (round 17, VERDICT r16 item 5 / guide §8): the
-    // previous broadcast join put the Jaccard predicate INTO a
-    // BroadcastNestedLoopJoin condition, where it evaluates INTERPRETED
-    // — and Catalyst had duplicated the intersect call three times and
-    // ordered it BEFORE the cheap doc_a<doc_b / size-ratio prunes, so
-    // all n² ordered pairs paid boxed two-pointer merges (the plan is
-    // committed: plans/r17/dedup_ngram_jaccard_before.txt). This kernel
-    // is the same O(n²) loop over the same broadcast bytes, but on
-    // primitive long[]: prefilters first (~ns/pair), ONE allocation-free
-    // intersect per surviving pair, semantics bit-identical (exact
-    // integer threshold, empty-set pairs excluded). One task per spread
-    // partition — parallelism unchanged.
-    val built: Array[(Long, Array[Long])] = s.collect()
-    val bc = spark.sparkContext.broadcast(built)
+    val built = s.collect()
+    val bc = spark.sparkContext.broadcast((built.map(_._1),
+      built.map(r => UnsafeArrayData.fromPrimitiveArray(r._2): ArrayData)))
     s.mapPartitions { it =>
-      val all = bc.value
-      it.flatMap { case (ida, sha) =>
+      val (ids, sets) = bc.value
+      it.flatMap { case (ida, sh) =>
+        val a = UnsafeArrayData.fromPrimitiveArray(sh)
+        val sa = sh.length
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        val sa = sha.length
         var i = 0
-        while (i < all.length) {
-          val idb = all(i)._1
-          val shb = all(i)._2
-          val sb = shb.length
-          // size-ratio prune (implied by the threshold: j ≤ min/max) +
-          // the empty-set exclusion (sa+sb>0 ⟺ union>0)
-          if (ida < idb && sa + sb > 0 &&
-            sa * den >= sb * num && sb * den >= sa * num) {
-            var p = 0; var q = 0; var c = 0L
-            while (p < sa && q < sb) {
-              val x = sha(p); val y = shb(q)
-              if (x < y) p += 1
-              else if (x > y) q += 1
-              else { c += 1; p += 1; q += 1 }
-            }
-            // inter·den ≥ union·num ⟺ inter·(den+num) ≥ (|A|+|B|)·num
-            if (c * (den + num) >= (sa + sb).toLong * num) out += ((ida, idb))
-          }
+        while (i < ids.length) {
+          val sb = sets(i).numElements()
+          if (rule.prune(ida, ids(i), sa, sb) &&
+              rule.accept(SortedIntersectCount.count(a, sets(i)), sa, sb))
+            out += ((ida, ids(i)))
           i += 1
         }
         out.iterator
       }
     }.toDF("doc_a", "doc_b")
   }
+
+  /** Ground-truth near-dup pairs by exact shingle Jaccard ≥ num/den.
+    * O(n²) pair evaluations — correctness reference and small-scale path
+    * only (the scale path is [[minhashLshPairs]]); hashed-long sets + the
+    * size prefilter keep the constant factor honest at bench scale.
+    * `maxRows` bounds the input ([[requireRowCap]]). */
+  def jaccardPairs(docs: DataFrame, n: Int, num: Int, den: Int,
+                   maxRows: Long = 100000L): DataFrame =
+    shinglePairScan(docs, n, maxRows, "jaccardPairs is an O(n²)", "Use minhashLshPairs",
+      new ShinglePairRule {
+        // size-ratio prune (implied by the threshold: j ≤ min/max) + the
+        // empty-set exclusion (sa+sb>0 ⟺ union>0)
+        def prune(ida: Long, idb: Long, sa: Int, sb: Int): Boolean =
+          ida < idb && sa + sb > 0 && sa * den >= sb * num && sb * den >= sa * num
+        // inter·den ≥ union·num ⟺ inter·(den+num) ≥ (|A|+|B|)·num
+        def accept(inter: Long, sa: Int, sb: Int): Boolean =
+          inter * (den + num) >= (sa + sb).toLong * num
+      })
 
   /** CONTAINMENT ground truth (round 9): pairs where
     * |A∩B| / |A| ≥ num/den — the ASYMMETRIC near-dup relation Jaccard
@@ -207,59 +225,23 @@ object Dedup {
     * needs alongside symmetric near-dup). Directed: (doc_a ⊂ doc_b)
     * and (doc_b ⊂ doc_a) are separate rows. Same integer threshold
     * discipline (`inter·den ≥ |A|·num`, no float ratio), same shingle
-    * machinery, same O(n²) row-cap guard as [[jaccardPairs]] — this is
+    * scan and O(n²) row-cap guard as [[jaccardPairs]] — this is
     * the labeled correctness reference; the banded production sibling
     * for containment is the MinHash-LSH candidate set verified with
     * this predicate instead of the Jaccard one. */
   def containmentPairs(docs: DataFrame, n: Int, num: Int, den: Int,
-                       maxRows: Long = 100000L): DataFrame = {
-    val rows = docs.count()
-    require(rows <= maxRows,
-      s"containmentPairs is an O(n²) ground-truth reference: input has $rows rows > maxRows=$maxRows. " +
-        "Verify banded candidates with the containment predicate for production corpora, " +
-        "or pass maxRows explicitly for a deliberate large run.")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val s = spread(docs)
-      .withColumn("ws", tokens(col("text")))
-      .select(col("doc_id"), hashedShingles("ws", n).as("sh"))
-      .filter(col("doc_id").isNotNull && col("sh").isNotNull &&
-        size(col("sh")) > 0) // an empty set is vacuously contained — drop
-      .localCheckpoint(eager = false)
-      .as[(Long, Array[Long])]
-    // PAIR-SCAN KERNEL (round 17 — see jaccardPairs): same O(n²)
-    // directed loop and integer threshold, primitive arrays, one-sided
-    // size prune (inter ≤ min ⇒ inter·den ≥ |A|·num needs |B|·den ≥
-    // |A|·num) before the single intersect.
-    val built: Array[(Long, Array[Long])] = s.collect()
-    val bc = spark.sparkContext.broadcast(built)
-    s.mapPartitions { it =>
-      val all = bc.value
-      it.flatMap { case (ida, sha) =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        val sa = sha.length
-        var i = 0
-        while (i < all.length) {
-          val idb = all(i)._1
-          val shb = all(i)._2
-          val sb = shb.length
-          if (ida != idb && sb * den >= sa * num) {
-            var p = 0; var q = 0; var c = 0L
-            while (p < sa && q < sb) {
-              val x = sha(p); val y = shb(q)
-              if (x < y) p += 1
-              else if (x > y) q += 1
-              else { c += 1; p += 1; q += 1 }
-            }
-            if (c * den >= sa.toLong * num) out += ((ida, idb))
-          }
-          i += 1
-        }
-        out.iterator
-      }
-    }.toDF("doc_a", "doc_b")
-  }
+                       maxRows: Long = 100000L): DataFrame =
+    shinglePairScan(docs, n, maxRows, "containmentPairs is an O(n²)",
+      "Verify banded candidates with the containment predicate",
+      new ShinglePairRule {
+        // an empty set is vacuously contained — neither side may be
+        // empty; one-sided size prune (inter ≤ min ⇒ inter·den ≥ |A|·num
+        // needs |B|·den ≥ |A|·num)
+        def prune(ida: Long, idb: Long, sa: Int, sb: Int): Boolean =
+          ida != idb && sa > 0 && sb > 0 && sb * den >= sa * num
+        def accept(inter: Long, sa: Int, sb: Int): Boolean =
+          inter * den >= sa.toLong * num
+      })
 
   /** MinHash signature over the hashed-shingle array column named `shCol`
     * (array<long>): for permutation p, min over shingles of

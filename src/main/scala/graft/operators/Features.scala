@@ -245,8 +245,8 @@ object Features {
     // lookup) never match null keys, so a null-key partition silently
     // lost all cross-bucket history — diverging from the plain window,
     // whose partitionBy treats null as a real group, and breaking the
-    // 'oracle-identical either way' contract rangeMovingAggAuto rests
-    // on. Null keys form at most one partition per null pattern, which
+    // 'oracle-identical either way' contract of the two forms. Null keys
+    // form at most one partition per null pattern, which
     // is exactly what the plain form computes for them anyway.
     val nullKey = key.map(col(_).isNull).reduce(_ || _)
     val nullKeyOut = rangeMovingAgg(df.filter(nullKey), key, tsMicros,
@@ -341,53 +341,8 @@ object Features {
       time, chunk, outName, upTo = -1L)
       .withColumn(outName, col(outName)("x"))
 
-  // ------------------------------------------------------------------
-  // AUTO-DISPATCH (round 15, completing VERDICT r14 item 3 beyond the
-  // pipeline): every order-dependent operator with a registered scale
-  // twin gets a probe-routed entry — ONE cheap per-key row-count
-  // aggregate decides plain (one shuffle, one task per key) vs the
-  // chunked/bucketed decomposition (more shuffles, parallelism bounded
-  // by rows-per-(key, chunk)). Results are oracle-identical either way
-  // (the twins share DuckDB oracles verbatim), so the switch is purely
-  // a plan choice from a measured statistic. The probe is a driver-side
-  // stats action (the approx-split boundary-scan class); callers with
-  // an existing per-key aggregate should fold it in instead (the
-  // Pipeline does — its A4 frame carries n_rows for free).
-
-  /** The probe: rows held by the hottest key. Empty input → 0. */
-  def maxKeyRows(df: DataFrame, key: Seq[String]): Long = {
-    val r = df.groupBy(key.map(col): _*).agg(count(lit(1)).as("__n"))
-      .agg(max(col("__n"))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
-  /** Default rows-per-task bound shared by every auto entry: what one
-    * window task absorbs comfortably (the Pipeline's Config default). */
-  val DefaultRowsPerTask: Long = 4000000L
-
-  def lag1Auto(df: DataFrame, c: String, key: Seq[String],
-               time: Seq[String], chunk: Column, outName: String,
-               rowsPerTask: Long = DefaultRowsPerTask): DataFrame =
-    if (maxKeyRows(df, key) > rowsPerTask)
-      lag1Chunked(df, c, key, time, chunk, outName)
-    else df.withColumn(outName, lag1(col(c), keyWindow(key, time)))
-
-  def ffillAuto(df: DataFrame, c: String, key: Seq[String],
-                time: Seq[String], chunk: Column, outName: String,
-                rowsPerTask: Long = DefaultRowsPerTask): DataFrame =
-    if (maxKeyRows(df, key) > rowsPerTask)
-      ffillChunked(df, c, key, time, chunk, outName)
-    else df.withColumn(outName, ffill(col(c), keyWindow(key, time)))
-
-  def bfillAuto(df: DataFrame, c: String, key: Seq[String],
-                time: Seq[String], chunk: Column, outName: String,
-                rowsPerTask: Long = DefaultRowsPerTask): DataFrame =
-    if (maxKeyRows(df, key) > rowsPerTask)
-      bfillChunked(df, c, key, time, chunk, outName)
-    else df.withColumn(outName, bfill(col(c), key, time))
-
   /** The plain sliding-RANGE trailing (count, sum) — the w10 frame shape
-    * as a function, so [[rangeMovingAggAuto]] can route to it. O(n·w)
+    * as a function. O(n·w)
     * re-aggregation in ONE task per key (Spark's sliding-frame
     * evaluation) — fine at bounded keys, the documented hang under a
     * hot one. */
@@ -395,32 +350,14 @@ object Features {
                      valueMicros: String, windowMicros: Long,
                      outCnt: String = "n_w",
                      outSum: String = "sum_w"): DataFrame = {
-    // same validation as the bucketed twin, so rangeMovingAggAuto fails
-    // the SAME way on a bad window whichever route the skew probe picks
+    // same validation as the bucketed twin, so both fail the SAME way
+    // on a bad window
     require(windowMicros >= 0, s"bad window: $windowMicros")
     val w = Window.partitionBy(key.map(col): _*).orderBy(col(tsMicros))
       .rangeBetween(-windowMicros, Window.currentRow)
     df.withColumn(outCnt, count(lit(1)).over(w))
       .withColumn(outSum, sum(col(valueMicros)).over(w))
   }
-
-  def rangeMovingAggAuto(df: DataFrame, key: Seq[String], tsMicros: String,
-                         valueMicros: String, windowMicros: Long,
-                         bucketMicros: Long = 86400000000L,
-                         outCnt: String = "n_w", outSum: String = "sum_w",
-                         rowsPerTask: Long = DefaultRowsPerTask): DataFrame =
-    if (maxKeyRows(df, key) > rowsPerTask)
-      rangeMovingAggBucketed(df, key, tsMicros, valueMicros, windowMicros,
-        bucketMicros, outCnt, outSum)
-    else rangeMovingAgg(df, key, tsMicros, valueMicros, windowMicros,
-      outCnt, outSum)
-
-  def ewmaAuto(df: DataFrame, group: Seq[String], order: Seq[String],
-               valueCol: String, alpha: Double, maxLag: Int,
-               rowsPerTask: Long = DefaultRowsPerTask): DataFrame =
-    if (maxKeyRows(df, group) > rowsPerTask)
-      ewmaBucketed(df, group, order, valueCol, alpha, maxLag)
-    else ewma(df, group, order.map(col), col(valueCol), alpha, maxLag)
 
   /** W3/A5 — per-group min-max normalization with the reference's guards
     * (train.py:122-129 normalize_feature): all-NaN group → zeros with

@@ -490,11 +490,8 @@ object Similarity {
                          maxRows: Long = 100000L): DataFrame = {
     require(numNeg >= 1, s"numNeg must be >= 1, got $numNeg")
     require(exclusionK >= 1, s"exclusionK must be >= 1, got $exclusionK")
-    val rows = corpus.count()
-    require(rows <= maxRows,
-      s"trainingPairsExact is an O(|Q|*N) ground-truth reference: corpus has $rows rows > maxRows=$maxRows. " +
-        "Use trainingPairs (IVF positives + hash-gated negative pool) for production corpora, " +
-        "or pass maxRows explicitly for a deliberate large run.")
+    Dedup.requireRowCap(corpus, maxRows, "trainingPairsExact is an O(|Q|*N)",
+      "Use trainingPairs (IVF positives + hash-gated negative pool)", input = "corpus")
     graft.functions.GraftFunctions.register(queries.sparkSession)
     val topK = bruteForceTopK(queries, corpus, exclusionK)
       .localCheckpoint(eager = false)
@@ -608,16 +605,12 @@ object Similarity {
   /** Near-duplicate pairs by embedding cosine ≥ threshold (both
     * directions deduplicated to vec_a < vec_b). Brute force with per-
     * vector precomputed norms — pair set only, no float similarity column
-    * in the output. */
+    * in the output. An O(n²) ground-truth reference: `maxRows` bounds the
+    * input ([[Dedup.requireRowCap]]); the scale sibling is
+    * [[cosinePairsBucketed]]. */
   def cosinePairs(corpus: DataFrame, threshold: Double,
                   maxRows: Long = 100000L): DataFrame = {
-    // Fail LOUD (one cheap parquet-count job) if this O(n²) correctness
-    // reference is pointed at a production corpus — the scale sibling is
-    // [[cosinePairsBucketed]]; raise maxRows only for a deliberate run.
-    val rows = corpus.count()
-    require(rows <= maxRows,
-      s"cosinePairs is an O(n²) ground-truth reference: input has $rows rows > maxRows=$maxRows. " +
-        "Use cosinePairsBucketed for production corpora, or pass maxRows explicitly for a deliberate large run.")
+    Dedup.requireRowCap(corpus, maxRows, "cosinePairs is an O(n²)", "Use cosinePairsBucketed")
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     // Spread the streamed side (Dedup.spread — the one gated-repartition
     // heuristic, shared since round 15): a small parquet is one input

@@ -98,8 +98,9 @@ class FeaturesSpec extends SparkSpecBase {
     val chunkL = Features.lag1Chunked(df, "v", kSeq, tSeq, chunk, "o")
     assert(snap(chunkL, "o") === snap(plainL, "o"))
     // and on the REAL events table at sf0.001, (user_id, event_type)
-    // keys, month chunks — the registered rows' exact shape
-    val ev = Tables.events(spark, sf0001)
+    // keys, month chunks — the registered rows' exact shape — with and
+    // without its null values
+    val events = Tables.events(spark, sf0001)
     val rkey = Seq("user_id", "event_type"); val rt = Seq("ts", "event_id")
     val mchunk = expr(
       "floor(unix_micros(CAST(ts AS TIMESTAMP)) / 2592000000000)")
@@ -107,77 +108,14 @@ class FeaturesSpec extends SparkSpecBase {
     def rsnap(d: org.apache.spark.sql.DataFrame, c: String) =
       d.select(col("event_id"), col(c)).collect()
         .map(r => (r.getLong(0), r.getAs[Any](1))).toMap
-    assert(rsnap(Features.ffillChunked(ev, "value", rkey, rt, mchunk, "o"), "o")
-      === rsnap(ev.withColumn("o", Features.ffill(col("value"), rw)), "o"))
-    assert(rsnap(Features.bfillChunked(ev, "value", rkey, rt, mchunk, "o"), "o")
-      === rsnap(ev.withColumn("o", Features.bfill(col("value"), rkey, rt)), "o"))
-    assert(rsnap(Features.lag1Chunked(ev, "value", rkey, rt, mchunk, "o"), "o")
-      === rsnap(ev.withColumn("o", Features.lag1(col("value"), rw)), "o"))
-  }
-
-  test("auto-dispatch entries route on the hottest-key probe and are " +
-    "identical through BOTH routes (lag/ffill/bfill, range agg, ewma)") {
-    val ev = Tables.events(spark, sf0001).filter(col("value").isNotNull)
-    val rkey = Seq("user_id", "event_type"); val rt = Seq("ts", "event_id")
-    val mchunk = expr(
-      "floor(unix_micros(CAST(ts AS TIMESTAMP)) / 2592000000000)")
-    def planOf(d: org.apache.spark.sql.DataFrame) =
-      d.queryExecution.analyzed.toString
-    // a huge bound routes plain (no chunk machinery in the plan); a
-    // bound of 0 forces the scale path — and both snapshots are equal
-    val plainF = Features.ffillAuto(ev, "value", rkey, rt, mchunk, "o",
-      rowsPerTask = Long.MaxValue)
-    val fastF = Features.ffillAuto(ev, "value", rkey, rt, mchunk, "o",
-      rowsPerTask = 0L)
-    assert(!planOf(plainF).contains("__ffc_chunk"))
-    assert(planOf(fastF).contains("__ffc_chunk"))
-    def snap(d: org.apache.spark.sql.DataFrame, c: String) =
-      d.select(col("event_id"), col(c)).collect()
-        .map(r => (r.getLong(0), r.getAs[Any](1))).toMap
-    assert(snap(fastF, "o") === snap(plainF, "o"))
-    val plainL = Features.lag1Auto(ev, "value", rkey, rt, mchunk, "o",
-      rowsPerTask = Long.MaxValue)
-    val fastL = Features.lag1Auto(ev, "value", rkey, rt, mchunk, "o",
-      rowsPerTask = 0L)
-    assert(planOf(fastL).contains("__lgc_chunk") &&
-      !planOf(plainL).contains("__lgc_chunk"))
-    assert(snap(fastL, "o") === snap(plainL, "o"))
-    val plainB = Features.bfillAuto(ev, "value", rkey, rt, mchunk, "o",
-      rowsPerTask = Long.MaxValue)
-    val fastB = Features.bfillAuto(ev, "value", rkey, rt, mchunk, "o",
-      rowsPerTask = 0L)
-    assert(planOf(fastB).contains("__bfc_chunk") &&
-      !planOf(plainB).contains("__bfc_chunk"))
-    assert(snap(fastB, "o") === snap(plainB, "o"))
-    // range agg: plain frame vs bucketed decomposition
-    val evm = ev
-      .withColumn("ts_us", expr("unix_micros(cast(ts AS timestamp))"))
-      .withColumn("vm", expr("CAST(round(value * 1e6) AS BIGINT)"))
-    val w7 = 7L * 86400L * 1000000L
-    val plainR = Features.rangeMovingAggAuto(evm, Seq("user_id"), "ts_us",
-      "vm", w7, rowsPerTask = Long.MaxValue)
-    val fastR = Features.rangeMovingAggAuto(evm, Seq("user_id"), "ts_us",
-      "vm", w7, rowsPerTask = 0L)
-    assert(planOf(fastR).contains("__rma_day") &&
-      !planOf(plainR).contains("__rma_day"))
-    def rsnap(d: org.apache.spark.sql.DataFrame) =
-      d.select("event_id", "n_w", "sum_w").collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(rsnap(fastR) === rsnap(plainR))
-    // ewma: windowed fold vs bucketed band join — bit-identical
-    val plainE = Features.ewmaAuto(ev, rkey, rt, "value", 0.3, 8,
-      rowsPerTask = Long.MaxValue)
-    val fastE = Features.ewmaAuto(ev, rkey, rt, "value", 0.3, 8,
-      rowsPerTask = 0L)
-    assert(planOf(fastE).contains("__ewb_rn") &&
-      !planOf(plainE).contains("__ewb_rn"))
-    def esnap(d: org.apache.spark.sql.DataFrame) =
-      d.select("event_id", "ewma").collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(esnap(fastE) === esnap(plainE))
-    // the probe itself: hottest key on the real table, empty-input zero
-    assert(Features.maxKeyRows(ev, rkey) > 0L)
-    assert(Features.maxKeyRows(ev.filter(lit(false)), rkey) === 0L)
+    Seq(events, events.filter(col("value").isNotNull)).foreach { ev =>
+      assert(rsnap(Features.ffillChunked(ev, "value", rkey, rt, mchunk, "o"), "o")
+        === rsnap(ev.withColumn("o", Features.ffill(col("value"), rw)), "o"))
+      assert(rsnap(Features.bfillChunked(ev, "value", rkey, rt, mchunk, "o"), "o")
+        === rsnap(ev.withColumn("o", Features.bfill(col("value"), rkey, rt)), "o"))
+      assert(rsnap(Features.lag1Chunked(ev, "value", rkey, rt, mchunk, "o"), "o")
+        === rsnap(ev.withColumn("o", Features.lag1(col("value"), rw)), "o"))
+    }
   }
 
   test("chunked W1/W2 forms FAIL LOUD on a non-monotone chunk expression " +
@@ -254,22 +192,26 @@ class FeaturesSpec extends SparkSpecBase {
       .select("n", "s").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(nulls.toSeq === Seq((2L, 16L), (2L, 16L)))
     // and on real events at sf0.001 (null timestamps included), the
-    // registered w10 shape: 7-day window, day buckets
-    val ev = Tables.events(spark, sf0001)
+    // registered w10 shape: 7-day window, day buckets; null values read
+    // as 0, or their rows dropped
+    val events = Tables.events(spark, sf0001)
       .withColumn("ts_us", expr("unix_micros(cast(ts AS timestamp))"))
-      .withColumn("vm", expr("CAST(round(coalesce(value, 0) * 1e6) AS BIGINT)"))
     val w7 = 7L * 86400L * 1000000L
     val pW = W.partitionBy(col("user_id")).orderBy(col("ts_us"))
       .rangeBetween(-w7, W.currentRow)
-    val pRef = ev.withColumn("n", count(lit(1)).over(pW))
-      .withColumn("s", sum(col("vm")).over(pW))
-      .select("event_id", "n", "s").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val pFast = Features.rangeMovingAggBucketed(ev, Seq("user_id"), "ts_us",
-        "vm", windowMicros = w7, outCnt = "n", outSum = "s")
-      .select("event_id", "n", "s").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(pFast === pRef)
+    Seq(events.withColumn("vm", expr("CAST(round(coalesce(value, 0) * 1e6) AS BIGINT)")),
+      events.filter(col("value").isNotNull)
+        .withColumn("vm", expr("CAST(round(value * 1e6) AS BIGINT)"))).foreach { ev =>
+      val pRef = ev.withColumn("n", count(lit(1)).over(pW))
+        .withColumn("s", sum(col("vm")).over(pW))
+        .select("event_id", "n", "s").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val pFast = Features.rangeMovingAggBucketed(ev, Seq("user_id"), "ts_us",
+          "vm", windowMicros = w7, outCnt = "n", outSum = "s")
+        .select("event_id", "n", "s").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(pFast === pRef)
+    }
   }
 
   test("rangeMovingAggBucketed FAILS LOUD when a key's bucket span exceeds " +

@@ -27,10 +27,16 @@ in the plan.
 Usage:
     python3 tools/plan_diff.py BEFORE_DIR AFTER_DIR [row ...]
 
+A plan that reads a checkpointed or RDD-built frame (`Scan ExistingRDD`)
+shows only what runs above that scan: the stage that built the frame is
+not in the text. Such a row, when its visible text is identical, is
+reported `opaque` rather than `identical`: the diff cannot vouch for it.
+
 With no rows, every `<row>.txt` present in either directory is compared.
-Prints one line per row (`identical`, `DIFFERENT`, or `missing`) and a
-unified diff of the normalized text for each different row. Exit status
-is 0 when every compared row is identical, 1 otherwise.
+Prints one line per row (`identical`, `opaque`, `DIFFERENT`, or
+`missing`), a unified diff of the normalized text for each different row,
+and a summary line with the counts. Exit status is 0 when no row is
+different or missing, 1 otherwise.
 """
 import difflib
 import os
@@ -80,6 +86,8 @@ def unbracket(s):
     assert s[0] == "[" and s[-1] == "]", s
     return s[1:-1]
 
+
+OPAQUE = "Scan ExistingRDD"
 
 ATTR_ID = re.compile(r"#\d+L?")
 EXPAND_ARGS = re.compile(r"^(\(\d+\) Expand\n(?:.*\n)*?Arguments: )(.*)$", re.M)
@@ -174,7 +182,7 @@ def main(argv):
         for d in (before, after):
             names |= {f[:-4] for f in os.listdir(d) if f.endswith(".txt")}
         rows = sorted(names)
-    bad = 0
+    bad = opaque = 0
     for row in rows:
         a, b = (os.path.join(d, row + ".txt") for d in (before, after))
         if not (os.path.exists(a) and os.path.exists(b)):
@@ -184,14 +192,19 @@ def main(argv):
             continue
         ta, tb = read(a), read(b)
         if ta == tb:
-            print(f"{row}: identical")
+            if OPAQUE in ta:
+                opaque += 1
+                print(f"{row}: opaque")
+            else:
+                print(f"{row}: identical")
             continue
         bad += 1
         print(f"{row}: DIFFERENT")
         sys.stdout.writelines(difflib.unified_diff(
             ta.splitlines(True), tb.splitlines(True),
             f"{before}/{row}.txt", f"{after}/{row}.txt", n=1))
-    print(f"{len(rows) - bad} identical, {bad} different or missing")
+    print(f"{len(rows) - bad - opaque} identical, {opaque} opaque, "
+          f"{bad} different or missing")
     return 0 if bad == 0 else 1
 
 
