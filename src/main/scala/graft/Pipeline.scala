@@ -18,9 +18,17 @@ import graft.operators.{Features, Sinks}
   * of joblib pickles.
   *
   * Model training itself is out of relational scope (no torch/xgboost in
-  * a Spark-jars-only build — SURVEY.md §7 step 5): the predictor is the
-  * lag-1 naive forecast, which keeps every downstream operator (A6
-  * metrics, W6 live forecasts, SNK2/SNK3 sinks) fully exercised.
+  * a Spark-jars-only build — SURVEY.md §7 step 5): the default predictor
+  * is the lag-1 naive forecast, which keeps every downstream operator (A6
+  * metrics, W6 live forecasts, SNK2/SNK3 sinks) fully exercised; the
+  * trained families are relational stand-ins for the reference's models.
+  *
+  * Each predictor family is one entry of the private [[Families]] table:
+  * the artifacts it publishes with one fit each, the feature columns it
+  * adds, and its apply. [[run]] fits and applies it, [[stageMetrics]]
+  * applies the published artifacts, [[score]] serves them (the
+  * streaming serve scores each micro-batch with it), and
+  * [[requiredArtifacts]] gates on them — none of them names a family.
   *
   * Config merge semantics follow main.py:241-264: defaults < overrides.
   *
@@ -48,43 +56,19 @@ import graft.operators.{Features, Sinks}
 object Pipeline {
 
   /** Hyperparameters (Model Parameters.json:1-16) with defaults-then-
-    * override merge (main.py:241-264). */
-  /** `approxSplit` selects the W5 implementation: false → the reference's
+    * override merge (main.py:241-264).
+    *
+    * `approxSplit` selects the W5 implementation: false → the reference's
     * exact row-positional split (one global-window pass, train.py:131-153);
     * true → the 100-TB plan (Features.chronoSplitApprox: percentile
     * boundaries, no single-partition stage). Membership may differ by
     * ~relErr·n rows near each boundary — the documented trade.
     *
-    * `predictor` selects the forecast model: "naive" (default — the
-    * lag-1 passthrough every existing oracle pins), "ar1" (the TRAINED
-    * per-group OLS line [[Features.fitAr1]] fit on the train split only
-    * and applied everywhere — the reference's train→apply contract,
-    * train.py:377-499, with its LSTM swapped for the relational model;
-    * keys with no train fit fall back to the naive predictor, the
-    * reference's untrained-group else-branch), or "ar2"
-    * ([[Features.fitAr2]] on the two filled lags — one step closer to
-    * the reference's look-back window; rows missing the second lag and
-    * keys with no fit fall back exactly like ar1), or "routed" (the
-    * reference's core ML dispatch, train.py:377-394 + :453: each
-    * (user_id, event_type) group is scored by ITS routed family —
-    * total samples ≥ modelThreshold → the sequence model ("rnn" branch,
-    * AR(2) here), else the boosted-tree branch ("xgb",
-    * [[Features.regressionStumpPerGroup]]: one exact GBM round per
-    * group); artifacts persist per family and untrained groups keep the
-    * naive fallback), or "seq" (round 10 — the multi-feature sequence
-    * fit: [[Features.fitLinearPerGroup]] on the two filled lags PLUS
-    * the exogenous row features, the relational narrowing of the
-    * reference LSTM's per-step multi-feature window, train.py:463-492;
-    * see [[run]]'s seq branch for the feature choice and the F6
-    * singularity note), or "sgd" (round 12 — the same four seq
-    * features, but trained by MINIBATCH GRADIENT DESCENT
-    * ([[Features.sgdLinearFit]]): one GLOBAL linear model fit in
-    * z-scored feature space by iterative distributed gradient
-    * aggregates — the reference's actual training LOOP
-    * (train.py:499-553 steps its LSTM by minibatch gradients), not
-    * just its model shape; the closed-form families above never
-    * exercised gradient descent itself). */
-  /** `windowRowsPerTask` (round 15, VERDICT r14 item 3): the auto-dispatch
+    * `predictor` names the forecast family, one entry of [[Families]]
+    * (default "naive" — the lag-1 passthrough every existing oracle
+    * pins); the table says what each family fits, publishes and applies.
+    *
+    * `windowRowsPerTask` (round 15, VERDICT r14 item 3): the auto-dispatch
     * bound between the plain per-key sort windows (lag/ffill — one task
     * per key) and the chunked skew scale paths
     * ([[Features.lag1Chunked]]/[[Features.ffillChunked]], parallelism per
@@ -105,9 +89,7 @@ object Pipeline {
       approxSplit: Boolean = false,
       predictor: String = "naive",
       windowRowsPerTask: Long = 4000000L) {
-    require(Set("naive", "ar1", "ar2", "routed", "seq", "sgd")(predictor),
-      s"unknown predictor '$predictor' " +
-        "(naive | ar1 | ar2 | routed | seq | sgd)")
+    family(predictor)
     require(windowRowsPerTask > 0,
       s"windowRowsPerTask must be positive: $windowRowsPerTask")
   }
@@ -130,31 +112,27 @@ object Pipeline {
       * failing; scalar values are stringified for the merge; nested
       * values (none exist in the reference shape) are skipped. */
     def fromJsonFile(path: String): Map[String, String] =
-      try fromJsonNode(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new java.io.File(path)))
-      catch { case scala.util.control.NonFatal(_) => Map.empty }
+      fromJson(_.readTree(new java.io.File(path)))
 
     /** Same layer from an in-memory JSON object string — the /train
       * endpoint's manual-override body ([[graft.Serve]]); same
       * error-tolerance contract as the file form (junk → empty layer). */
     def fromJsonString(json: String): Map[String, String] =
-      try fromJsonNode(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(json))
-      catch { case scala.util.control.NonFatal(_) => Map.empty }
+      fromJson(_.readTree(json))
 
-    private def fromJsonNode(
-        root: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
-      if (root == null || !root.isObject) Map.empty
-      else {
+    private def fromJson(read: ObjectMapper => com.fasterxml.jackson.databind
+        .JsonNode): Map[String, String] =
+      try {
+        val root = read(new ObjectMapper())
         val b = Map.newBuilder[String, String]
-        root.fields().forEachRemaining { e =>
+        if (root != null && root.isObject) root.fields().forEachRemaining { e =>
           // JSON null means "absent", not the string "null" — skipping
           // it keeps the layer from shadowing the default with junk
           if (e.getValue.isValueNode && !e.getValue.isNull)
             b += (refAliases.getOrElse(e.getKey, e.getKey) -> e.getValue.asText)
         }
         b.result()
-      }
+      } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
     /** Three-layer merge, lowest to highest precedence: hard defaults <
       * config-file overrides < manual (CLI) overrides — main.py:241-264,
@@ -179,10 +157,7 @@ object Pipeline {
         trainRatio = get("trainRatio", _.toDouble, d.trainRatio),
         valRatio = get("valRatio", _.toDouble, d.valRatio),
         approxSplit = get("approxSplit", _.toBoolean, d.approxSplit),
-        predictor = get("predictor",
-          s => { require(
-            Set("naive", "ar1", "ar2", "routed", "seq", "sgd")(s)); s },
-          d.predictor),
+        predictor = get("predictor", s => { family(s); s }, d.predictor),
         windowRowsPerTask = get("windowRowsPerTask",
           s => { val v = s.toLong; require(v > 0); v },
           d.windowRowsPerTask))
@@ -235,113 +210,33 @@ object Pipeline {
     * 'purchase' is the high-impact class. */
   private val impactMap = Map("view" -> 1, "click" -> 2, "purchase" -> 3)
 
-  /** Routed-predictor feature frame, shared by [[run]] and
-    * [[stageMetrics]]: the second filled lag (built the way pred_f is,
-    * lag → ffill) plus each group's route from the model-routing side
-    * table (keys missing from it default "xgb", the [[run]] metrics
-    * convention). */
-  private def routedFeatures(featured: DataFrame,
-                             ops: WinOps,
-                             modelTypes: DataFrame): DataFrame =
-    ops.ffill(ops.lag2(featured, "actual", "lag2"), "lag2", "x2")
-      .drop("lag2")
-      .join(broadcast(modelTypes.select(
-        (keyCols :+ col("model_type").as("__route")): _*)), key, "left")
-      .withColumn("__route", coalesce(col("__route"), lit("xgb")))
+  /** The second filled lag, built the way pred_f is (lag → ffill). */
+  private def withX2(featured: DataFrame, ops: WinOps): DataFrame =
+    ops.ffill(ops.lag2(featured, "actual", "lag2"), "lag2", "x2").drop("lag2")
 
-  /** Score each row by its group's routed family: rnn → the AR(2) apply,
-    * xgb → the stump's landing-leaf mean (both with the scale-2 snap
-    * that keeps the downstream decimal metric chain rounding-free
-    * cross-engine); rows whose family has no fit for the group — or
-    * missing the feature the family needs — keep the naive pred_f, the
-    * reference's untrained-group else-branch. */
-  private def applyRouted(feat2: DataFrame, rnnParams: DataFrame,
-                          xgbParams: DataFrame): DataFrame =
-    feat2
-      .join(broadcast(rnnParams.drop("n_fit")), key, "left")
-      .join(broadcast(xgbParams.select((keyCols :+ col("threshold") :+
-        col("left_mean") :+ col("right_mean")): _*)), key, "left")
-      .withColumn("pred_f",
-        when(col("__route") === "rnn" && col("b1").isNotNull &&
-          col("x2").isNotNull,
-          round(col("b1") * col("pred_f") + col("b2") * col("x2") +
-            col("intercept"), 2))
-        .when(col("__route") === "xgb" && col("threshold").isNotNull &&
-          col("pred_f").isNotNull,
-          when(col("pred_f") <= col("threshold"), round(col("left_mean"), 2))
-            .otherwise(round(col("right_mean"), 2)))
-        .otherwise(col("pred_f")))
-      .drop("b1", "b2", "intercept", "x2", "threshold", "left_mean",
-        "right_mean", "__route")
-
-  /** Public routed-serve entry (the reference's predict endpoint shape,
-    * main.py:320-391: look up the group's registered family, score with
-    * THAT family's stored model): score a feature frame carrying the two
-    * lag features — `pred_f` (last value, possibly forward-filled) and
-    * `x2` (second lag) — against the three persisted artifacts
-    * [[run]] publishes with `predictor = "routed"`. Keys absent from the
-    * routing table default "xgb"; groups whose routed family has no fit
-    * (or rows missing the feature the family needs) keep their incoming
-    * naive `pred_f` — exactly [[run]]'s train-time dispatch, so serve
-    * and train can never disagree. All three artifact joins broadcast
-    * (model-sized); the feature side streams at scan speed. */
-  def routedScore(feat: DataFrame, modelTypes: DataFrame,
-                  rnnParams: DataFrame, xgbParams: DataFrame): DataFrame =
-    applyRouted(
-      feat.join(broadcast(modelTypes.select(
-        (keyCols :+ col("model_type").as("__route")): _*)), key, "left")
-        .withColumn("__route", coalesce(col("__route"), lit("xgb"))),
-      rnnParams, xgbParams)
-
-  /** Seq-predictor feature frame, shared by [[run]] and [[stageMetrics]]:
-    * the second filled lag plus the two exogenous row features — x3 =
-    * the J1 high-impact day count (purchases per (user, day) — varies
-    * inside a group), x4 = ISO weekday. */
-  private def seqFeatures(featured: DataFrame,
-                          ops: WinOps): DataFrame =
-    ops.ffill(ops.lag2(featured, "actual", "lag2"), "lag2", "x2")
-      .drop("lag2")
+  /** The seq features: the second filled lag plus the two exogenous row
+    * features — x3 = the J1 high-impact day count (purchases per (user,
+    * day) — varies inside a group), x4 = ISO weekday. */
+  private def withSeqX(featured: DataFrame, ops: WinOps): DataFrame =
+    withX2(featured, ops)
       .withColumn("x3", Features.highImpactCount(
         graft.functions.cleaning.ordinalEncode(
           col("event_type"), impactMap) === 3,
         "user_id", to_date(col("ts"))).cast("double"))
       .withColumn("x4", (weekday(col("ts")) + lit(1)).cast("double"))
 
-  /** Apply a [[Features.fitLinearPerGroup]] artifact to a seq feature
-    * frame: ill-conditioned groups are dropped from the join (naive
-    * fallback — an unreliable solve is an untrained group), fitted rows
-    * score round(Σbᵢxᵢ + intercept, 2). Rows missing ANY of the three
-    * extra features (x2/x3/x4 — possible on caller-supplied frames via
-    * [[seqScore]] / the streaming serve path; [[run]]'s own frames only
-    * realize null x2) also keep the naive `pred_f`: a null feature would
-    * otherwise null the whole Σbᵢxᵢ and silently REPLACE a valid
-    * fallback prediction. Keeps the x-feature columns for the caller to
-    * drop. */
-  private def applySeq(feat2: DataFrame, params: DataFrame): DataFrame =
-    feat2.join(broadcast(
-      params.filter(col("well_conditioned"))
-        .drop("n_fit", "well_conditioned")), key, "left")
-      .withColumn("pred_f",
-        when(col("b1").isNotNull && col("x2").isNotNull &&
-            col("x3").isNotNull && col("x4").isNotNull,
-          round(col("b1") * col("pred_f") + col("b2") * col("x2") +
-            col("b3") * col("x3") + col("b4") * col("x4") +
-            col("intercept"), 2))
-          .otherwise(col("pred_f")))
-      .drop("b1", "b2", "b3", "b4", "intercept")
+  /** Each row's group route from the model-routing side table as
+    * `__route` (keys missing from it default "xgb", the [[run]] metrics
+    * convention). */
+  private def withRoute(df: DataFrame, modelTypes: DataFrame): DataFrame =
+    df.join(broadcast(modelTypes.select(
+        (keyCols :+ col("model_type").as("__route")): _*)), key, "left")
+      .withColumn("__route", coalesce(col("__route"), lit("xgb")))
 
-  /** Public seq-serve entry (the multi-feature sibling of
-    * [[routedScore]]): score a feature frame carrying the four seq
-    * features — `pred_f` (filled lag-1), `x2` (filled lag-2), `x3`
-    * (high-impact day count), `x4` (ISO weekday) — against the
-    * persisted [[Features.fitLinearPerGroup]] artifact a
-    * `predictor = "seq"` [[run]] publishes. Unknown groups AND
-    * ill-conditioned fits keep the incoming naive `pred_f` — exactly
-    * run()'s train-time dispatch, so serve and train cannot disagree.
-    * The params join broadcasts (model-sized); the feature side streams
-    * at scan speed. */
-  def seqScore(feat: DataFrame, params: DataFrame): DataFrame =
-    applySeq(feat, params)
+  /** The AR(2) score, with the scale-2 snap that keeps the downstream
+    * decimal metric chain rounding-free cross-engine. */
+  private val ar2Score = round(col("b1") * col("pred_f") +
+    col("b2") * col("x2") + col("intercept"), 2)
 
   /** The sgd predictor's artifact: the [[Features.sgdLinearFit]] model
     * row EXTENDED with the train-split standardization moments (per-
@@ -350,7 +245,8 @@ object Pipeline {
     * EMPTY frame when no guarded train rows exist (the untrained-run
     * contract: [[applySgd]] then leaves every pred_f naive). σ floors
     * at 1.0 for constant columns (the A5 zero-range guard). */
-  private def sgdArtifact(spark: SparkSession, train: DataFrame): DataFrame = {
+  private def sgdArtifact(train: DataFrame): DataFrame = {
+    val spark = train.sparkSession
     val fs = Seq("pred_f", "x2", "x3", "x4")
     val guard = (fs :+ "actual")
       .map(c => col(c).isNotNull && abs(col(c)) < lit(1e11)).reduce(_ && _)
@@ -420,11 +316,180 @@ object Pipeline {
     }
   }
 
-  /** Public sgd-serve entry: score a four-feature frame against the
-    * persisted [[sgdArtifact]] a `predictor = "sgd"` [[run]] publishes —
-    * same fallback dispatch as train time. */
-  def sgdScore(feat: DataFrame, params: DataFrame): DataFrame =
-    applySgd(feat, params)
+  /** One predictor family: all that [[run]], [[stageMetrics]] and
+    * [[score]] know of it.
+    *  - `fits`: each artifact it publishes, by name, with its fit over
+    *    the train rows of the family's features;
+    *  - `window`: the history columns it adds on top of `featured` (a
+    *    serve caller brings them itself);
+    *  - `routed`: rows also carry their key's `__route` ([[withRoute]]);
+    *  - `apply`: (features, artifacts in `fits` order) → `pred_f`; keys
+    *    with no fit keep the naive `pred_f` (the reference's
+    *    untrained-group else-branch). It drops the artifact columns and
+    *    `__route`, and leaves the window columns to its caller. */
+  private final case class Family(
+      fits: Seq[(String, DataFrame => DataFrame)] = Nil,
+      window: Option[(DataFrame, WinOps) => DataFrame] = None,
+      routed: Boolean = false,
+      apply: (DataFrame, Seq[DataFrame]) => DataFrame = (df, _) => df) {
+    def artifacts: Seq[String] = fits.map(_._1)
+    def addsFeatures: Boolean = window.isDefined || routed
+  }
+
+  /** The predictor families by [[Config]] name — the one place a family
+    * is defined. Each trained family fits on the TRAIN split only and is
+    * applied everywhere: the reference's train→apply contract
+    * (train.py:377-499); its artifacts publish by versioned REPLACE, so
+    * validate/test grade the model that was trained (validate.py:171-331)
+    * and a retrain never blends stale per-key rows into it. */
+  private val Families = scala.collection.immutable.ListMap[String, Family](
+    // the lag-1 passthrough every existing oracle pins
+    "naive" -> Family(),
+    // per-group OLS line on the filled lag (Features.fitAr1), the
+    // reference's LSTM swapped for the relational model
+    "ar1" -> Family(
+      fits = Seq("predictor_params" -> (t => Features.fitAr1(t, key,
+        col("pred_f"), col("actual")))),
+      apply = { case (feat, Seq(params)) =>
+        feat.join(broadcast(params), key, "left")
+          .withColumn("pred_f",
+            when(col("slope").isNotNull,
+              round(col("slope") * col("pred_f") + col("intercept"), 2))
+              .otherwise(col("pred_f")))
+          .drop("slope", "intercept", "n_fit") }),
+    // Features.fitAr2 on the two filled lags — one step closer to the
+    // reference's look-back window; rows missing the second lag fall back
+    "ar2" -> Family(
+      fits = Seq("predictor_params" -> (t => Features.fitAr2(t, key,
+        col("pred_f"), col("x2"), col("actual")))),
+      window = Some(withX2),
+      apply = { case (feat, Seq(params)) =>
+        feat.join(broadcast(params), key, "left")
+          .withColumn("pred_f",
+            when(col("b1").isNotNull && col("x2").isNotNull, ar2Score)
+              .otherwise(col("pred_f")))
+          .drop("b1", "b2", "intercept", "n_fit") }),
+    // The reference's core ML dispatch (train.py:377-394 routes each
+    // (Currency, Event) group by sample count; :453 scores it with its
+    // own family's model): groups at/over modelThreshold train the
+    // sequence family (AR(2) — the rnn branch's relational analogue), the
+    // rest one exact GBM round per group (regressionStumpPerGroup — the
+    // xgb branch, scored by the landing leaf's mean). Each fit reads only
+    // its own routed train rows and publishes its own artifact: grading a
+    // family with the other family's params would silently score the
+    // wrong model. Rows whose family has no fit for the group, or that
+    // miss the feature it needs, keep the naive pred_f.
+    "routed" -> Family(
+      fits = Seq(
+        "predictor_params_rnn" -> (t => Features.fitAr2(
+          t.filter(col("__route") === "rnn"), key, col("pred_f"), col("x2"),
+          col("actual"))),
+        "predictor_params_xgb" -> (t => Features.regressionStumpPerGroup(
+          t.filter(col("__route") === "xgb"), key, col("pred_f"),
+          col("actual")))),
+      window = Some(withX2), routed = true,
+      apply = { case (feat, Seq(rnn, xgb)) =>
+        feat.join(broadcast(rnn.drop("n_fit")), key, "left")
+          .join(broadcast(xgb.select((keyCols :+ col("threshold") :+
+            col("left_mean") :+ col("right_mean")): _*)), key, "left")
+          .withColumn("pred_f",
+            when(col("__route") === "rnn" && col("b1").isNotNull &&
+              col("x2").isNotNull, ar2Score)
+            .when(col("__route") === "xgb" && col("threshold").isNotNull &&
+              col("pred_f").isNotNull,
+              when(col("pred_f") <= col("threshold"),
+                round(col("left_mean"), 2))
+                .otherwise(round(col("right_mean"), 2)))
+            .otherwise(col("pred_f")))
+          .drop("b1", "b2", "intercept", "threshold", "left_mean",
+            "right_mean", "__route") }),
+    // Multi-feature per-group sequence fit (round 10): the reference LSTM
+    // consumes a six-feature normalized row per step (train.py:463-492);
+    // this fits AR(2) lags PLUS the exogenous x3/x4. The F6 impact
+    // ordinal is deliberately NOT a feature: it is constant inside a
+    // (user_id, event_type) group, so every group's normal system would
+    // be singular (see fitLinearPerGroup) — an LSTM ignores constant
+    // inputs, closed-form OLS cannot. Ill-conditioned groups (the fit's
+    // well_conditioned gate) are UNTRAINED: left out of the join, they
+    // keep the naive pred_f; the artifact keeps them with their flag.
+    // Rows missing ANY of x2/x3/x4 (possible on a [[score]] caller's
+    // frame; run()'s own frames only realize null x2) keep it too: a
+    // null feature would otherwise null the whole sum and silently
+    // REPLACE a valid fallback prediction.
+    "seq" -> Family(
+      fits = Seq("predictor_params" -> (t => Features.fitLinearPerGroup(t,
+        key, Seq(col("pred_f"), col("x2"), col("x3"), col("x4")),
+        col("actual")))),
+      window = Some(withSeqX),
+      apply = { case (feat, Seq(params)) =>
+        feat.join(broadcast(params.filter(col("well_conditioned"))
+            .drop("n_fit", "well_conditioned")), key, "left")
+          .withColumn("pred_f",
+            when(col("b1").isNotNull && col("x2").isNotNull &&
+                col("x3").isNotNull && col("x4").isNotNull,
+              round(col("b1") * col("pred_f") + col("b2") * col("x2") +
+                col("b3") * col("x3") + col("b4") * col("x4") +
+                col("intercept"), 2))
+              .otherwise(col("pred_f")))
+          .drop("b1", "b2", "b3", "b4", "intercept") }),
+    // GRADIENT training (round 12): the seq features, but ONE GLOBAL
+    // linear model learned by minibatch gradient descent in z-scored
+    // space (Features.sgdLinearFit — the train.py:499-553 training loop
+    // itself, with an Armijo backtracking line search). The artifact
+    // carries the train moments WITH the coefficients: serve must
+    // standardize with them (the J4 norm-param-reuse lesson).
+    "sgd" -> Family(
+      fits = Seq("predictor_params" -> sgdArtifact),
+      window = Some(withSeqX),
+      apply = { case (feat, Seq(params)) => applySgd(feat, params) }))
+
+  /** The family named `predictor`; an unknown name fails loud. */
+  private def family(predictor: String): Family = {
+    require(Families.contains(predictor), s"unknown predictor " +
+      s"'$predictor' (${Families.keys.mkString(" | ")})")
+    Families(predictor)
+  }
+
+  /** Every predictor name, in table order (for specs that must cover each
+    * family). */
+  private[graft] def predictorNames: Seq[String] = Families.keys.toSeq
+
+  /** `f`'s feature frame over `featured` (itself when `f` adds none). */
+  private def features(f: Family, featured: DataFrame, ops: WinOps,
+                       modelTypes: DataFrame): DataFrame = {
+    val w = f.window.fold(featured)(_(featured, ops))
+    if (f.routed) withRoute(w, modelTypes) else w
+  }
+
+  /** `f` applied to its feature frame, the feature columns dropped again. */
+  private def predict(f: Family, featured: DataFrame, feat: DataFrame,
+                      artifacts: Seq[DataFrame]): DataFrame =
+    f.apply(feat, artifacts).drop(feat.columns.diff(featured.columns): _*)
+
+  /** The serve entry (the reference's predict endpoint, main.py:320-391:
+    * look up the group's registered family, score with THAT family's
+    * stored model): score a feature frame — `pred_f` (the last value,
+    * possibly forward-filled) plus the family's window columns (`x2` the
+    * second lag; `x3`, `x4` for seq and sgd) — with the artifacts a
+    * [[run]] of `predictor` published, looked up by name in `artifact`
+    * (a map, or a snapshot read per name; [[scoreArtifacts]] lists the
+    * names). It is the apply [[run]] and [[stageMetrics]] use, so serve
+    * and train cannot disagree: keys with no fit, and rows missing a
+    * feature the family needs, keep the incoming naive `pred_f`.
+    * Artifact joins broadcast (model-sized); the feature side streams at
+    * scan speed. Returns the feature frame with `pred_f` rescored. */
+  def score(predictor: String, features: DataFrame,
+            artifact: String => DataFrame): DataFrame = {
+    val f = family(predictor)
+    f.apply(if (f.routed) withRoute(features, artifact("model_types"))
+      else features, f.artifacts.map(artifact))
+  }
+
+  /** The artifact tables [[score]] reads for `predictor`. */
+  private[graft] def scoreArtifacts(predictor: String): Seq[String] = {
+    val f = family(predictor)
+    (if (f.routed) Seq("model_types") else Nil) ++ f.artifacts
+  }
 
   /** Hold a key-cardinality side table on the driver: collect it ONCE and
     * hand it back as a local relation. Every later consumer (broadcast
@@ -509,126 +574,19 @@ object Pipeline {
       .localCheckpoint(eager = false)
     val splits = featured.select(col("event_id"), col("split"))
 
-    // Predictor selection (cfg.predictor): "ar1" fits the per-group OLS
-    // line on the TRAIN split of this same frame (x = the ffilled lag,
-    // y = actual), broadcast-joins the per-key params back, and replaces
-    // pred_f with round(slope·x + intercept, 2) — the scale-2 snap that
-    // keeps every downstream decimal chain rounding-free cross-engine.
-    // Keys with no train fit keep the naive pred_f (the reference's
-    // untrained-group fallback). The fit reads the lazily-checkpointed
-    // featured frame, so the feature chain still runs once; the fitted
-    // params are pinned, so the fit aggregate runs once too.
-    // Each branch names its fits (pinned below, in one wave with the norm
-    // params) and how to apply them. The fitted params frames are kept so
-    // the sink tail can publish them as the `predictor_params` artifact —
-    // without it, [[stageMetrics]] could only ever re-grade the naive
-    // predictor regardless of what run() trained (the reference persists
-    // the trained model and validate/test load THAT, validate.py:171-331).
-    val (fits, applyFits): (Seq[(String, () => DataFrame)],
-        Seq[DataFrame] => DataFrame) = cfg.predictor match {
-      case "ar1" =>
-        (Seq("predictor_params" -> (() => pinned(spark, Features.fitAr1(
-          featured.filter(col("split") === "train"), key,
-          col("pred_f"), col("actual"))))),
-          { case Seq(params) =>
-            featured.join(broadcast(params), key, "left")
-              .withColumn("pred_f",
-                when(col("slope").isNotNull,
-                  round(col("slope") * col("pred_f") + col("intercept"), 2))
-                  .otherwise(col("pred_f")))
-              .drop("slope", "intercept", "n_fit") })
-      case "ar2" =>
-        // second filled lag built the way pred_f is (lag → ffill); its
-        // OWN lazy checkpoint — feat2 feeds both the fit aggregate and
-        // the apply join, and without it the added window pass runs twice
-        val feat2 = ops.ffill(ops.lag2(featured, "actual", "lag2"),
-            "lag2", "x2")
-          .drop("lag2")
-          .localCheckpoint(eager = false)
-        (Seq("predictor_params" -> (() => pinned(spark, Features.fitAr2(
-          feat2.filter(col("split") === "train"), key,
-          col("pred_f"), col("x2"), col("actual"))))),
-          { case Seq(params) =>
-            feat2.join(broadcast(params), key, "left")
-              .withColumn("pred_f",
-                when(col("b1").isNotNull && col("x2").isNotNull,
-                  round(col("b1") * col("pred_f") + col("b2") * col("x2") +
-                    col("intercept"), 2))
-                  .otherwise(col("pred_f")))
-              .drop("b1", "b2", "intercept", "n_fit", "x2") })
-      case "routed" =>
-        // The reference's core ML dispatch (train.py:377-394 routes each
-        // (Currency, Event) group by sample count; :453 scores it with
-        // its own family's model): groups at/over cfg.modelThreshold
-        // train the sequence family (AR(2) — the rnn branch's relational
-        // analogue), the rest train one exact GBM round per group
-        // (regressionStumpPerGroup — the xgb branch). BOTH fits read only
-        // their own routed train rows; each family persists its own
-        // artifact; untrained groups keep the naive pred_f. Same lazy
-        // checkpoint as ar2: feat2 feeds two fit aggregates + the apply.
-        val feat2 = routedFeatures(featured, ops, modelTypes)
-          .localCheckpoint(eager = false)
-        def routedTrain(route: String) =
-          feat2.filter(col("split") === "train" && col("__route") === route)
-        (Seq(
-          "predictor_params_rnn" -> (() => pinned(spark, Features.fitAr2(
-            routedTrain("rnn"), key, col("pred_f"), col("x2"),
-            col("actual")))),
-          "predictor_params_xgb" -> (() => pinned(spark,
-            Features.regressionStumpPerGroup(routedTrain("xgb"), key,
-              col("pred_f"), col("actual"))))),
-          { case Seq(rnnParams, xgbParams) =>
-            applyRouted(feat2, rnnParams, xgbParams) })
-      case "seq" =>
-        // Multi-feature per-group sequence fit (round 10): the reference
-        // LSTM consumes a SIX-feature normalized row per step
-        // (train.py:463-492) where the engine's ar2/rnn branch consumed
-        // two lags — this branch narrows that gap with
-        // fitLinearPerGroup over AR(2) lags PLUS the exogenous row
-        // features: x3 = the J1 high-impact day count (varies daily
-        // inside a group) and x4 = ISO weekday (the calendar feature a
-        // day-granular forecaster sees). The F6 impact ordinal is
-        // deliberately NOT a feature: it is a function of event_type —
-        // CONSTANT inside a (user_id, event_type) group — so its
-        // centered moments are exactly zero and every group's normal
-        // system would be singular (see fitLinearPerGroup scaladoc);
-        // within this key its information content IS the key. The
-        // reference can feed it anyway because an LSTM ignores constant
-        // inputs gracefully; closed-form OLS cannot.
-        // ill-conditioned groups (collinear feature rows — the fit's
-        // well_conditioned gate) are treated as UNTRAINED: filtered out
-        // of the apply join so they keep the naive pred_f, the same
-        // else-branch as a missing fit. The published artifact keeps
-        // every group WITH its flag so stageMetrics re-applies the
-        // identical dispatch.
-        val feat2 = seqFeatures(featured, ops).localCheckpoint(eager = false)
-        (Seq("predictor_params" -> (() => pinned(spark,
-          Features.fitLinearPerGroup(
-            feat2.filter(col("split") === "train"), key,
-            Seq(col("pred_f"), col("x2"), col("x3"), col("x4")),
-            col("actual"))))),
-          { case Seq(params) =>
-            applySeq(feat2, params).drop("x2", "x3", "x4") })
-      case "sgd" =>
-        // GRADIENT training (round 12): same four-feature frame as seq,
-        // but ONE GLOBAL linear model learned by minibatch gradient
-        // descent in z-scored space (Features.sgdLinearFit — the
-        // train.py:499-553 training loop itself, iterative distributed
-        // gradient aggregates with an Armijo backtracking line search).
-        // z-scoring is the reference's own preprocessing (train.py:430-
-        // 470 normalizes before every fit) and what makes a single
-        // learning rate serve features with scales 1..10³. The artifact
-        // carries the moments WITH the coefficients: serve must
-        // standardize with the TRAIN moments or the model is garbage
-        // (the J4 norm-param-reuse lesson applied to features).
-        // sgdArtifact is already a driver-local one-row relation.
-        val feat2 = seqFeatures(featured, ops).localCheckpoint(eager = false)
-        (Seq("predictor_params" -> (() => sgdArtifact(spark,
-          feat2.filter(col("split") === "train")))),
-          { case Seq(params) =>
-            applySgd(feat2, params).drop("x2", "x3", "x4") })
-      case _ => (Nil, _ => featured)
-    }
+    // The predictor family (cfg.predictor, [[Families]]). Its feature
+    // columns get their OWN lazy checkpoint when it adds any: they feed
+    // every fit aggregate and the apply join, and without it the added
+    // window pass runs once per consumer. Its fits read the train rows of
+    // those features and are pinned, so each fit aggregate runs once;
+    // the pinned frames are kept so the sink tail can publish them —
+    // without them, [[stageMetrics]] could only ever re-grade the naive
+    // predictor regardless of what run() trained.
+    val fam = family(cfg.predictor)
+    val feat =
+      if (fam.addsFeatures)
+        features(fam, featured, ops, modelTypes).localCheckpoint(eager = false)
+      else featured
 
     // A5 on the TRAIN split only: norm-param side table (train.py:467-477).
     // It and the predictor's fits read only the checkpointed feature
@@ -637,12 +595,14 @@ object Pipeline {
     // shared lineage (and its cached blocks) is computed once, whichever
     // collect touches a partition first.
     val trainRows = featured.filter(col("split") === "train")
+    val featTrain = feat.filter(col("split") === "train")
     val pins = Sinks.concurrently(
       (() => pinned(spark, Features.normParams(trainRows, key,
-        col("actual")))) +: fits.map(_._2))
+        col("actual")))) +:
+        fam.fits.map { case (_, fit) => () => pinned(spark, fit(featTrain)) })
     val normParams = pins.head
-    val predictorParams = fits.map(_._1).zip(pins.tail)
-    val predicted = applyFits(pins.tail)
+    val predictorParams = fam.artifacts.zip(pins.tail)
+    val predicted = predict(fam, featured, feat, pins.tail)
 
     // A6 per split; validate/test reuse train norm params (J4) for the
     // denormalized error scale — the naive predictor works in raw units so
@@ -746,14 +706,9 @@ object Pipeline {
           key, orderCol = "mn"))) ++
         // REPLACE, not merge: the reference persists its model wholesale
         // (train.py:555-567), so a retrain must not blend stale per-key
-        // (slope, intercept) rows for keys absent from the new fit with
-        // the fresh ones — versioned replace keeps concurrent readers of
-        // the prior version safe while making v=N+1 exactly this run's
-        // fit. routed publishes one artifact PER FAMILY
-        // (predictor_params_rnn / predictor_params_xgb) — the reference
-        // persists each group's model under its family's registry, and
-        // grading a family with the other family's params would silently
-        // score the wrong model
+        // rows for keys absent from the new fit with the fresh ones —
+        // versioned replace keeps concurrent readers of the prior version
+        // safe while making v=N+1 exactly this run's fit
         predictorParams.map { case (name, p) =>
           artifact(name)(Sinks.replaceSnapshot(spark, _, p)) } ++
         Seq(
@@ -799,11 +754,7 @@ object Pipeline {
     * the base artifacts for non-naive predictors, so skip_training could
     * skip into stages that then failed the gate). */
   private[graft] def requiredArtifacts(cfg: Config): Seq[String] =
-    artifactTables ++ (cfg.predictor match {
-      case "naive" => Nil
-      case "routed" => Seq("predictor_params_rnn", "predictor_params_xgb")
-      case _ => Seq("predictor_params")
-    })
+    artifactTables ++ family(cfg.predictor).artifacts
 
   /** File name of the stage stamp under a run's `outDir`. */
   private val StampFile = "_stage_stamp"
@@ -979,49 +930,14 @@ object Pipeline {
     val featured = ops.ffill(
       ops.lag1(base.join(splits, Seq("event_id")), "actual", "pred"),
       "pred", "pred_f")
-    // cfg.predictor != naive → apply the PERSISTED fit (the artifact
-    // [[run]] published), never a re-fit: these stages grade the model
-    // that was trained, exactly as the reference's validate/test load the
-    // stored params (validate.py:171-331). Same apply expressions as
-    // run()'s, same untrained-key naive fallback.
-    val predicted = cfg.predictor match {
-      case "ar1" =>
-        val params = Sinks.readSnapshot(spark, s"$outDir/predictor_params")
-        featured.join(broadcast(params), key, "left")
-          .withColumn("pred_f",
-            when(col("slope").isNotNull,
-              round(col("slope") * col("pred_f") + col("intercept"), 2))
-              .otherwise(col("pred_f")))
-          .drop("slope", "intercept", "n_fit")
-      case "ar2" =>
-        val params = Sinks.readSnapshot(spark, s"$outDir/predictor_params")
-        ops.ffill(ops.lag2(featured, "actual", "lag2"), "lag2", "x2")
-          .drop("lag2")
-          .join(broadcast(params), key, "left")
-          .withColumn("pred_f",
-            when(col("b1").isNotNull && col("x2").isNotNull,
-              round(col("b1") * col("pred_f") + col("b2") * col("x2") +
-                col("intercept"), 2))
-              .otherwise(col("pred_f")))
-          .drop("b1", "b2", "intercept", "n_fit", "x2")
-      case "routed" =>
-        // both persisted family artifacts + the persisted routing table —
-        // the same dispatch run() trained, never a re-fit
-        val rnnP = Sinks.readSnapshot(spark, s"$outDir/predictor_params_rnn")
-        val xgbP = Sinks.readSnapshot(spark, s"$outDir/predictor_params_xgb")
-        applyRouted(routedFeatures(featured, ops, modelTypes), rnnP, xgbP)
-      case "seq" =>
-        // the persisted multi-feature fit, with the same ill-conditioned
-        // → naive dispatch run() trained under
-        val params = Sinks.readSnapshot(spark, s"$outDir/predictor_params")
-        applySeq(seqFeatures(featured, ops), params).drop("x2", "x3", "x4")
-      case "sgd" =>
-        // the persisted gradient-trained model + its train moments —
-        // the same standardize-serve-fallback dispatch run() trained
-        val params = Sinks.readSnapshot(spark, s"$outDir/predictor_params")
-        applySgd(seqFeatures(featured, ops), params).drop("x2", "x3", "x4")
-      case _ => featured
-    }
+    // a trained family applies its PERSISTED fit (the artifacts [[run]]
+    // published), never a re-fit: these stages grade the model that was
+    // trained, exactly as the reference's validate/test load the stored
+    // params (validate.py:171-331). Same features and apply as run()'s.
+    val fam = family(cfg.predictor)
+    val predicted = predict(fam, featured,
+      features(fam, featured, ops, modelTypes),
+      fam.artifacts.map(a => Sinks.readSnapshot(spark, s"$outDir/$a")))
     labelled(Features.regressionMetrics(
       predicted.filter(col("split") === split), key,
       col("actual"), col("pred_f")), modelTypes)

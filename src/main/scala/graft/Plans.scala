@@ -16,31 +16,15 @@ object Plans {
     val names = args.tail
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // dev-loop experiment knobs: decouple shuffle partitions from the
-    // core count, and optionally TIME each query (3 noop passes, fresh
-    // construction per pass — the Bench shape) instead of only dumping
-    // the plan. Diagnosis only; the graded surfaces stay in Bench.
+    // dev-loop knob: decouple shuffle partitions from the core count.
+    // Timing rows is Bench's job (`runMain graft.Bench <row ...>`).
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val timeIt = sys.env.get("SPARK_GRAFT_PLANS_TIME").contains("1")
-    val eventLog = sys.env.get("SPARK_GRAFT_EVENTLOG") // dir or unset
-    eventLog.foreach(d =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
-    // engine config from the shared builder (round 17); event logging is
-    // the dev-loop knob this surface adds on top
+    // engine config from the shared builder (round 17)
     val spark = GraftSession.builder(s"local[$cpus]", shufflePartitions)
-      .config("spark.eventLog.enabled", eventLog.isDefined.toString)
-      .config("spark.eventLog.dir", eventLog.getOrElse("/tmp"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    if (timeIt) { // warmup: session/codegen/parquet init off the first row
-      try Tables.events(spark, sfDir).groupBy(
-        org.apache.spark.sql.functions.lower(
-          org.apache.spark.sql.functions.col("event_type"))).count()
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
@@ -49,19 +33,7 @@ object Plans {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/$name.txt"),
           txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        if (timeIt) {
-          val ts = (1 to 3).map { _ =>
-            val fresh = SparkEntry.queries(name)(spark, sfDir)
-            val t0 = System.nanoTime()
-            fresh.write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = false))
-            sec
-          }
-          println(f"[plans] $name median=${ts.sorted.apply(1)}%.3f " +
-            s"all=${ts.map(t => f"$t%.3f").mkString(",")}")
-        } else println(s"[plans] wrote $outDir/$name.txt")
+        println(s"[plans] wrote $outDir/$name.txt")
       } catch { case e: Throwable =>
         System.err.println(s"[plans] $name failed: ${e.getMessage}")
       }

@@ -1,9 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.unsafe.Platform
 
 /** |A ∩ B| for two SORTED, duplicate-free array<long> columns, as a
   * two-pointer merge — the second native expression the extension surface
@@ -52,18 +54,38 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
 object SortedIntersectCount {
 
-  /** |x ∩ y| by a two-pointer merge (see the class doc for the sorted,
-    * distinct contract). The one merge behind both eval paths and the
-    * O(n²) shingle scans of `Dedup`. */
-  def count(x: ArrayData, y: ArrayData): Long = {
-    val n = x.numElements()
-    val m = y.numElements()
+  /** |x ∩ y| for two sorted, distinct `long[]` (see the class doc for the
+    * contract): the O(n²) shingle scans of `Dedup` hold their sets as
+    * primitive arrays and call this per pair, with no wrapper or copy. */
+  def count(x: Array[Long], y: Array[Long]): Long =
+    merge(x, Platform.LONG_ARRAY_OFFSET, x.length,
+      y, Platform.LONG_ARRAY_OFFSET, y.length)
+
+  /** The same count over two array columns, for both eval paths: two
+    * `UnsafeArrayData` are read in place; other `ArrayData` are copied
+    * out once. */
+  def count(x: ArrayData, y: ArrayData): Long = (x, y) match {
+    case (u: UnsafeArrayData, v: UnsafeArrayData) =>
+      merge(u.getBaseObject, start(u), u.numElements(),
+        v.getBaseObject, start(v), v.numElements())
+    case _ => count(x.toLongArray(), y.toLongArray())
+  }
+
+  /** Byte offset of an `UnsafeArrayData`'s first element. */
+  private def start(u: UnsafeArrayData): Long =
+    u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(
+      u.numElements())
+
+  /** The one two-pointer merge: `n` longs from `xb` at byte offset `xo`
+    * against `m` longs from `yb` at `yo`. */
+  private def merge(xb: AnyRef, xo: Long, n: Int,
+                    yb: AnyRef, yo: Long, m: Int): Long = {
     var i = 0
     var j = 0
     var c = 0L
     while (i < n && j < m) {
-      val xi = x.getLong(i)
-      val yj = y.getLong(j)
+      val xi = Platform.getLong(xb, xo + 8L * i)
+      val yj = Platform.getLong(yb, yo + 8L * j)
       if (xi < yj) i += 1
       else if (xi > yj) j += 1
       else { c += 1; i += 1; j += 1 }

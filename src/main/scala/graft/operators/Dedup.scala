@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SortedIntersectCount
 
@@ -157,11 +156,12 @@ object Dedup {
     * sets are computed once (lazy checkpoint: they feed both the
     * broadcast build side and the streamed probe side), null doc_id /
     * null shingle rows dropped as the join form this scan replaced did
-    * (its conditions implied IsNotNull). Each set is wrapped as an
-    * `UnsafeArrayData` once; each spread partition then scans the
-    * broadcast with the prune first (~ns/pair) and ONE allocation-free
-    * intersect ([[graft.functions.SortedIntersectCount.count]]) per
-    * surviving pair. A BroadcastNestedLoopJoin evaluated the same
+    * (its conditions implied IsNotNull). The broadcast holds the sets as
+    * primitive `long[]`; each spread partition scans it with the prune
+    * first (~ns/pair) and ONE allocation-free intersect
+    * ([[graft.functions.SortedIntersectCount.count]], the merge the
+    * expression's eval paths use too) per surviving pair. A
+    * BroadcastNestedLoopJoin evaluated the same
     * predicate interpreted, after Catalyst had tripled the intersect
     * call and ordered it before the prunes (plan committed:
     * plans/r17/dedup_ngram_jaccard_before.txt). One task per spread
@@ -179,19 +179,17 @@ object Dedup {
       .localCheckpoint(eager = false)
       .as[(Long, Array[Long])]
     val built = s.collect()
-    val bc = spark.sparkContext.broadcast((built.map(_._1),
-      built.map(r => UnsafeArrayData.fromPrimitiveArray(r._2): ArrayData)))
+    val bc = spark.sparkContext.broadcast((built.map(_._1), built.map(_._2)))
     s.mapPartitions { it =>
       val (ids, sets) = bc.value
       it.flatMap { case (ida, sh) =>
-        val a = UnsafeArrayData.fromPrimitiveArray(sh)
         val sa = sh.length
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
         var i = 0
         while (i < ids.length) {
-          val sb = sets(i).numElements()
+          val sb = sets(i).length
           if (rule.prune(ida, ids(i), sa, sb) &&
-              rule.accept(SortedIntersectCount.count(a, sets(i)), sa, sb))
+              rule.accept(SortedIntersectCount.count(sh, sets(i)), sa, sb))
             out += ((ida, ids(i)))
           i += 1
         }
@@ -910,41 +908,13 @@ object Dedup {
     *
     * Output: (doc_id, n_tokens, n_removed, text_clean), original token
     * order preserved. */
-  def spanScrub(docs: DataFrame, n: Int): DataFrame = {
-    require(n >= 2 && n <= 64, s"n must be in [2, 64], got $n")
-    import org.apache.spark.sql.expressions.Window
-    val tok = spread(docs)
-      .withColumn("ws", tokens(coalesce(col("text"), lit(""))))
-      .select(col("doc_id"), col("ws"),
-        posexplode(col("ws")).as(Seq("k0", "w")))
-      .select(col("doc_id"), (col("k0") + 1).as("k"), col("w"),
-        size(col("ws")).as("m"))
-    val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("k"))
-    // gram starting at k (null when no full n-gram fits)
-    val gram = concat_ws(" ", col("w") +:
-      (1 until n).map(j => lead(col("w"), j).over(wOrd)): _*)
-    val withGram = tok.withColumn("ghash",
-      when(col("k") <= col("m") - (n - 1), xxhash64(gram)))
-    val wGram = Window.partitionBy(col("doc_id"), col("ghash"))
-    val withDup = withGram.withColumn("dup",
-      when(col("ghash").isNotNull,
-        (col("k") > min(col("k")).over(wGram)).cast("int")))
-    // token k's covering grams start in the n-row frame ending at k;
-    // min ignores the null dup of non-gram positions
-    val wCover = wOrd.rowsBetween(-(n - 1), 0)
-    val flagged = withDup.withColumn("removed",
-      count(col("dup")).over(wCover) > 0 &&
-        min(col("dup")).over(wCover) === 1)
-    flagged.groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_tokens"),
-        count(when(col("removed"), 1)).as("n_removed"),
-        array_join(expr(
-          """transform(
-            |  array_sort(collect_list(CASE WHEN NOT removed
-            |    THEN struct(k, w) END)),
-            |  s -> s.w)""".stripMargin), " ").as("text_clean"))
-  }
+  def spanScrub(docs: DataFrame, n: Int): DataFrame =
+    scrubSpans(docs, n) { grams =>
+      val wGram = Window.partitionBy(col("doc_id"), col("ghash"))
+      grams.withColumn("dup",
+        when(col("ghash").isNotNull,
+          (col("k") > min(col("k")).over(wGram)).cast("int")))
+    }
 
   /** CROSS-document repeated-span scrub — the corpus face of exact
     * substring dedup (Lee et al. 2021's actual setting: a span repeated
@@ -971,9 +941,26 @@ object Dedup {
     *
     * Output: (doc_id, n_tokens, n_removed, text_clean), original token
     * order preserved. */
-  def spanScrubGlobal(docs: DataFrame, n: Int): DataFrame = {
+  def spanScrubGlobal(docs: DataFrame, n: Int): DataFrame =
+    scrubSpans(docs, n) { grams =>
+      val firsts = grams.filter(col("ghash").isNotNull)
+        .groupBy(col("ghash"))
+        .agg(min(struct(col("doc_id"), col("k"))).as("first_pos"))
+      grams.join(firsts, Seq("ghash"), "left")
+        .withColumn("dup",
+          when(col("ghash").isNotNull,
+            (struct(col("doc_id"), col("k")) > col("first_pos")).cast("int")))
+    }
+
+  /** The body of [[spanScrub]] and [[spanScrubGlobal]]: tokenize, hash
+    * the word-`n`-gram starting at each token k (`ghash`, null when no
+    * full gram fits), let `firstRule` mark each gram `dup` (1 when an
+    * equal gram occurred earlier, 0 on its first occurrence, null for no
+    * gram), then drop every token whose covering grams are all dups and
+    * rebuild each document in token order. */
+  private def scrubSpans(docs: DataFrame, n: Int)(
+      firstRule: DataFrame => DataFrame): DataFrame = {
     require(n >= 2 && n <= 64, s"n must be in [2, 64], got $n")
-    import org.apache.spark.sql.expressions.Window
     val tok = spread(docs)
       .withColumn("ws", tokens(coalesce(col("text"), lit(""))))
       .select(col("doc_id"), col("ws"),
@@ -981,17 +968,13 @@ object Dedup {
       .select(col("doc_id"), (col("k0") + 1).as("k"), col("w"),
         size(col("ws")).as("m"))
     val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("k"))
+    // gram starting at k (null when no full n-gram fits)
     val gram = concat_ws(" ", col("w") +:
       (1 until n).map(j => lead(col("w"), j).over(wOrd)): _*)
-    val withGram = tok.withColumn("ghash",
-      when(col("k") <= col("m") - (n - 1), xxhash64(gram)))
-    val firsts = withGram.filter(col("ghash").isNotNull)
-      .groupBy(col("ghash"))
-      .agg(min(struct(col("doc_id"), col("k"))).as("first_pos"))
-    val withDup = withGram.join(firsts, Seq("ghash"), "left")
-      .withColumn("dup",
-        when(col("ghash").isNotNull,
-          (struct(col("doc_id"), col("k")) > col("first_pos")).cast("int")))
+    val withDup = firstRule(tok.withColumn("ghash",
+      when(col("k") <= col("m") - (n - 1), xxhash64(gram))))
+    // token k's covering grams start in the n-row frame ending at k;
+    // min ignores the null dup of non-gram positions
     val wCover = wOrd.rowsBetween(-(n - 1), 0)
     val flagged = withDup.withColumn("removed",
       count(col("dup")).over(wCover) > 0 &&

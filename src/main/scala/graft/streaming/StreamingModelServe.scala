@@ -118,57 +118,29 @@ object StreamingModelServe {
       outDir, checkpointDir, runId)
   }
 
-  /** Streaming sibling of the ROUTED pipeline serve (the reference's
-    * predict endpoint, main.py:320-391, as an unbounded feed): each
-    * micro-batch of feature rows — `(user_id, event_type, pred_f, x2)`,
-    * the caller supplies the recent-history lags exactly as the HTTP
-    * endpoint is called with recent values — is dispatched per group to
-    * its routed family via [[graft.Pipeline.routedScore]] against the
-    * three artifacts a `predictor = "routed"` [[graft.Pipeline.run]]
-    * persisted under `artifactsDir` (`model_types`,
-    * `predictor_params_rnn`, `predictor_params_xgb`). Artifacts load
-    * once at stream start (latest snapshot version, all model-sized and
-    * broadcast per batch); the identical batch dispatch expression
-    * scores every row, so batch parity is structural. */
-  def runRoutedServe(spark: SparkSession, featureStream: DataFrame,
-                     artifactsDir: String,
-                     outDir: String, checkpointDir: String,
-                     runId: String): StreamingQuery = {
+  /** Streaming sibling of the pipeline serve (the reference's predict
+    * endpoint, main.py:320-391, as an unbounded feed): each micro-batch
+    * of feature rows — `(user_id, event_type, pred_f, …)` with the
+    * family's window columns, supplied by the caller exactly as the HTTP
+    * endpoint is called with recent values — is scored by
+    * [[graft.Pipeline.score]] against the artifacts a [[graft.Pipeline.run]]
+    * of `predictor` persisted under `artifactsDir`. Artifacts load once
+    * at stream start (latest snapshot version, all model-sized and
+    * broadcast per batch); the batch apply itself scores every row, so
+    * batch parity is structural. */
+  def runPipelineServe(spark: SparkSession, featureStream: DataFrame,
+                       artifactsDir: String, predictor: String,
+                       outDir: String, checkpointDir: String,
+                       runId: String): StreamingQuery = {
     // cache(), NOT localCheckpoint (round 15): localCheckpoint blocks
     // live only in executor storage and are non-recomputable — one
     // executor loss mid-stream kills every later micro-batch with a
     // missing-block error. cache keeps the (tiny, model-sized) lineage
     // recomputable; the snapshot read re-runs at worst.
-    val modelTypes = graft.operators.Sinks
-      .readSnapshot(spark, s"$artifactsDir/model_types").cache()
-    val rnnParams = graft.operators.Sinks
-      .readSnapshot(spark, s"$artifactsDir/predictor_params_rnn").cache()
-    val xgbParams = graft.operators.Sinks
-      .readSnapshot(spark, s"$artifactsDir/predictor_params_xgb").cache()
-    runServe(featureStream,
-      b => graft.Pipeline.routedScore(b, modelTypes, rnnParams, xgbParams),
-      outDir, checkpointDir, runId)
-  }
-
-  /** Streaming sibling of the SEQ (multi-feature) pipeline serve
-    * (round 10): each micro-batch of feature rows — `(user_id,
-    * event_type, pred_f, x2, x3, x4)`, the caller supplies recent lags
-    * plus the exogenous day features exactly as a prediction endpoint
-    * is called — scores against the persisted fitLinearPerGroup
-    * artifact via [[graft.Pipeline.seqScore]]. The artifact loads once
-    * at stream start (model-sized, broadcast per batch); unknown and
-    * ill-conditioned groups keep their naive `pred_f`; the identical
-    * batch dispatch expression scores every row, so batch parity is
-    * structural. */
-  def runSeqServe(spark: SparkSession, featureStream: DataFrame,
-                  artifactsDir: String,
-                  outDir: String, checkpointDir: String,
-                  runId: String): StreamingQuery = {
-    val params = graft.operators.Sinks
-      .readSnapshot(spark, s"$artifactsDir/predictor_params")
-      .cache() // recomputable on executor loss, see runRoutedServe
-    runServe(featureStream,
-      b => graft.Pipeline.seqScore(b, params),
+    val artifacts = graft.Pipeline.scoreArtifacts(predictor).map(a =>
+      a -> graft.operators.Sinks.readSnapshot(spark, s"$artifactsDir/$a")
+        .cache()).toMap
+    runServe(featureStream, b => graft.Pipeline.score(predictor, b, artifacts),
       outDir, checkpointDir, runId)
   }
 
@@ -187,7 +159,7 @@ object StreamingModelServe {
                          outDir: String, checkpointDir: String,
                          runId: String): StreamingQuery = {
     val stats = spark.read.parquet(statsDir)
-      .cache() // recomputable on executor loss, see runRoutedServe
+      .cache() // recomputable on executor loss, see runPipelineServe
     runServe(eventStream,
       b => Features.madFlag(b, stats, group, col(valueCol), k),
       outDir, checkpointDir, runId)

@@ -66,6 +66,24 @@ class BenchEmitSpec extends AnyFunSuite {
     assert(pinned.contains("\"row_290_some_query\":0.790"))
   }
 
+  test("renderLine packs the costliest rows first, whatever their names") {
+    // many cheap TPC-H rows overflow the budget; one costly non-TPC-H row
+    // must keep its place, and the cheapest rows are the ones left out
+    val rows = (1 to 200).map(i => (f"q$i%03d_tpch_query", 0.1 + i / 1e4,
+      true)) :+ (("stream_costly", 9.5, true))
+    val line = Bench.renderLine(rows,
+      calibSec = 0.30, calibEnd = 0.29, normFactor = 0.8,
+      contended = "false", reran = 0, overPin = Nil,
+      fullPath = "BENCH_FULL.json", sfDir = "/tmp/sf",
+      complete = true, deadlineHit = false)
+    assert(line.length <= 1700, s"stdout line too long: ${line.length}")
+    assert(line.contains("\"stream_costly\":9.500"))
+    val kept = "\"q(\\d+)_tpch_query\"".r.findAllMatchIn(line)
+      .map(_.group(1).toInt).toSeq
+    assert(kept.nonEmpty && kept.size < 200, s"${kept.size} TPC-H rows kept")
+    assert(kept.min > 200 - kept.size, "a cheaper row beat a costlier one")
+  }
+
   test("contendedVerdict: missing end calibration is never 'false'") {
     // cut-short run, plausible start calibration -> unknown, not false
     assert(Bench.contendedVerdict(0.30, -1.0) == "\"unknown\"")

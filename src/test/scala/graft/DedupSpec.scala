@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.ProjectExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Checkpointing, Dedup, TextAnalysis}
@@ -675,21 +676,35 @@ class DedupSpec extends SparkSpecBase {
     val rnd = new scala.util.Random(11)
     val sigs = (Seq(1, 2, 4, 8, 64, 128, 512).map(n => Array.fill(n)(rnd.nextLong())) :+
       Array(Long.MinValue, -1L, 0L, Long.MaxValue)).map(_.toSeq)
-    val df = sigs.zipWithIndex.map { case (sg, i) => (i.toLong, sg) }
+    // an RDD-built frame: over a local Seq frame the optimizer would fold
+    // the projection on the driver, interpreted, and codegen never ran
+    val df = spark.sparkContext.parallelize(
+      sigs.zipWithIndex.map { case (sg, i) => (i.toLong, sg) }, 3)
       .toDF("doc_id", "sig")
-    def compare(): Unit = for (r <- Seq(1, 2, 4)) {
-      val out = df.filter(size(col("sig")) >= r).select(
-        call_function("graft_minhash_bands", col("sig"), lit(r)).as("got"),
+    def compare(codegen: Boolean): Unit = for (r <- Seq(1, 2, 4)) {
+      val rows = df.filter(size(col("sig")) >= r)
+      // the kernel in a projection of its own: the reference's lambda
+      // has no codegen and would keep its projection out of the stage
+      val q = rows.select(col("doc_id"),
+        call_function("graft_minhash_bands", col("sig"), lit(r)))
+      val got = q.collect().map(x => x.getLong(0) -> x.getSeq[Long](1)).toMap
+      if (codegen) assert(codegenStages(q).exists(
+        _.child.find(_.isInstanceOf[ProjectExec]).isDefined),
+        s"the projection ran outside whole-stage codegen:\n" +
+          q.queryExecution.executedPlan)
+      val want = rows.select(col("doc_id"),
         expr(s"transform(sequence(0, CAST(size(sig) / $r AS INT) - 1), " +
-          s"b -> xxhash64(b, slice(sig, b * $r + 1, $r)))").as("want"))
-        .collect()
-      assert(out.length === sigs.count(_.length >= r))
-      out.foreach(row => assert(row.getSeq[Long](0) === row.getSeq[Long](1),
-        s"rowsPerBand=$r"))
+          s"b -> xxhash64(b, slice(sig, b * $r + 1, $r)))"))
+        .collect().map(x => x.getLong(0) -> x.getSeq[Long](1)).toMap
+      assert(got.size === sigs.count(_.length >= r))
+      assert(got === want, s"rowsPerBand=$r")
     }
-    compare()
+    withSessionConf("spark.sql.codegen.factoryMode", "CODEGEN_ONLY") {
+      withSessionConf("spark.sql.codegen.fallback", "false")(compare(true))
+    }
     withSessionConf("spark.sql.codegen.wholeStage", "false") {
-      withSessionConf("spark.sql.codegen.factoryMode", "NO_CODEGEN")(compare())
+      withSessionConf("spark.sql.codegen.factoryMode", "NO_CODEGEN")(
+        compare(false))
     }
     // a NULL signature yields NULL; NULL elements are skipped like xxhash64's
     val nul = Seq[(Long, Seq[java.lang.Long])]((1L, null),

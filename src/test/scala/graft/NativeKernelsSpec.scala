@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.ProjectExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -144,11 +144,11 @@ class NativeKernelsSpec extends SparkSpecBase {
       val calls = mkCalls()
       val gen = withSessionConf("spark.sql.codegen.factoryMode", "CODEGEN_ONLY") {
         withSessionConf("spark.sql.codegen.fallback", "false") {
-          val plan = df.select(calls: _*).queryExecution.executedPlan
-          assert(plan.find {
-            case w: WholeStageCodegenExec => w.child.find(_.isInstanceOf[ProjectExec]).isDefined
-            case _ => false
-          }.isDefined, s"the projection runs outside whole-stage codegen:\n$plan")
+          val q = df.select(calls: _*)
+          assert(codegenStages(q).exists(
+            _.child.find(_.isInstanceOf[ProjectExec]).isDefined),
+            "the projection runs outside whole-stage codegen:\n" +
+              q.queryExecution.executedPlan)
           run(df, calls)
         }
       }

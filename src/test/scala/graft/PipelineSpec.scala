@@ -476,7 +476,7 @@ class PipelineSpec extends SparkSpecBase {
       (2L, 1L, "view", Some(8.0), Some(6.0), Some(1.0), None),      // null x4
       (3L, 1L, "view", Some(8.0), None, Some(1.0), Some(3.0)))      // null x2
       .toDF("req_id", "user_id", "event_type", "pred_f", "x2", "x3", "x4")
-    val out = graft.Pipeline.seqScore(feat, params)
+    val out = graft.Pipeline.score("seq", feat, Map("predictor_params" -> params))
       .select("req_id", "pred_f").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // fitted row: round(.5*8 + .25*6 + 2*1 + .1*3 + 1, 2) = 8.8
@@ -494,7 +494,7 @@ class PipelineSpec extends SparkSpecBase {
   test("run() publishes exactly the Result it returns, for every predictor; " +
     "validate/test graded from the artifacts equal the Result") {
     val ev = Tables.events(spark, sf0001)
-    for (p <- Seq("naive", "ar1", "ar2", "routed", "seq", "sgd")) {
+    for (p <- Pipeline.predictorNames) {
       val dir = Files.createTempDirectory(s"graft_publish_$p").toString
       val cfg = Pipeline.Config(predictor = p, modelThreshold = 14)
       val r = Pipeline.run(spark, ev, cfg, Some(dir))
@@ -575,7 +575,7 @@ class PipelineSpec extends SparkSpecBase {
     } finally server.stop(0)
   }
 
-  private val predictors = Seq("naive", "ar1", "ar2", "routed", "seq", "sgd")
+  private val predictors = Pipeline.predictorNames
 
   private def stampOf(dir: String) = java.nio.file.Path.of(dir, "_stage_stamp")
 

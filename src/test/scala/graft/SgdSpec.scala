@@ -217,14 +217,14 @@ class SgdSpec extends SparkSpecBase {
     val fromArtifacts = Pipeline.stageMetrics(spark, ev, out, "val",
       Pipeline.Config(predictor = "sgd"))
     assert(canon(fromArtifacts) === canon(sgd.validateMetrics))
-    // sgdScore: any missing feature keeps the naive pred_f
+    // score: any missing feature keeps the naive pred_f
     val params = spark.read.parquet(s"$out/predictor_params")
     val feat = Seq(
       (0L, Some(8.0), Some(6.0), Some(1.0), Some(3.0)),
       (1L, Some(8.0), Some(6.0), None, Some(3.0)),
       (2L, Some(8.0), None, Some(1.0), Some(3.0)))
       .toDF("req_id", "pred_f", "x2", "x3", "x4")
-    val scored = Pipeline.sgdScore(feat, params)
+    val scored = Pipeline.score("sgd", feat, Map("predictor_params" -> params))
       .select("req_id", "pred_f").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(scored(1L) === 8.0 && scored(2L) === 8.0)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Multimodal, Similarity}
@@ -775,7 +776,7 @@ class SimilaritySpec extends SparkSpecBase {
     import graft.operators.HofReferences
     def v(xs: Option[Float]*): Option[Seq[Option[Float]]] = Some(xs)
     val (one, zero, none) = (Some(1.0f), Some(0.0f), Option.empty[Float])
-    val vecs = Seq[(Option[Long], Option[Seq[Option[Float]]])](
+    val vecRows = Seq[(Option[Long], Option[Seq[Option[Float]]])](
       (Some(1L), v(one, zero, zero)),
       (Some(2L), v(Some(0.6f), Some(0.8f), zero)),
       (Some(3L), v(zero, zero, zero)),                  // zero norm
@@ -788,7 +789,11 @@ class SimilaritySpec extends SparkSpecBase {
       (Some(10L), v(Some(-1.0f), zero, zero)),
       (Some(11L), v(Some(-0.0f), one, zero)),
       (None, v(one, zero, zero))                        // NULL id: dropped
-    ).toDF("vec_id", "embedding")
+    )
+    // an RDD-built frame: over a local Seq frame the optimizer could fold
+    // the kernel's projection on the driver, interpreted
+    val vecs = spark.sparkContext.parallelize(vecRows, 3)
+      .toDF("vec_id", "embedding")
     val cents = Seq[(Long, Seq[Float])](
       (10L, Seq(1f, 0f, 0f)),
       (20L, Seq(0f, 1f, 0f)),
@@ -801,6 +806,12 @@ class SimilaritySpec extends SparkSpecBase {
       .map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
       .sortBy(t => (t._1.map(_.toString), t._2.map(_.toString)))
     val c = cents.count().toInt
+    val probe = Similarity.assign(cents, vecs, "q", 1)
+    probe.collect()
+    assert(codegenStages(probe).exists(
+      _.child.find(_.isInstanceOf[GenerateExec]).isDefined),
+      s"the kernel ran outside whole-stage codegen:\n" +
+        probe.queryExecution.executedPlan)
     // a local centroid frame is folded on the driver, any other one by
     // the one-row aggregate
     for (cs <- Seq(cents, cents.repartition(3));

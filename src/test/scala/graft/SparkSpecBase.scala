@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session; suites may
@@ -64,6 +67,18 @@ abstract class SparkSpecBase extends AnyFunSuite {
       sc.setLocalProperty(TaggedJobs.Key, null)
       sc.removeSparkListener(jobs)
     }
+  }
+
+  /** The whole-stage-codegen stages of `df`'s executed plan; once `df`
+    * has run, read through AQE's final plan and its query stages. */
+  def codegenStages(df: DataFrame): Seq[WholeStageCodegenExec] = {
+    def walk(p: SparkPlan): Seq[WholeStageCodegenExec] = p match {
+      case w: WholeStageCodegenExec => w +: walk(w.child)
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case other => other.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
   }
 
   /** Run `body` with one session conf set, restoring the previous value. */

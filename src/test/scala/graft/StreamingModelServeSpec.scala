@@ -220,8 +220,8 @@ class StreamingModelServeSpec extends SparkSpecBase {
       .schema("req_id LONG, user_id LONG, event_type STRING, pred_f DOUBLE, x2 DOUBLE")
       .option("maxFilesPerTrigger", 1)
       .json(landing)
-    val q = graft.streaming.StreamingModelServe.runRoutedServe(
-      spark, stream, s"$base/artifacts",
+    val q = graft.streaming.StreamingModelServe.runPipelineServe(
+      spark, stream, s"$base/artifacts", "routed",
       outDir = s"$base/out", checkpointDir = s"$base/ckpt", runId = "r1")
     q.awaitTermination(120000)
 
@@ -229,10 +229,8 @@ class StreamingModelServeSpec extends SparkSpecBase {
       d.select("req_id", "pred_f").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val streamed = preds(spark.read.parquet(s"$base/out"))
-    val batch = preds(Pipeline.routedScore(reqDf,
-      operators.Sinks.readSnapshot(spark, s"$base/artifacts/model_types"),
-      operators.Sinks.readSnapshot(spark, s"$base/artifacts/predictor_params_rnn"),
-      operators.Sinks.readSnapshot(spark, s"$base/artifacts/predictor_params_xgb")))
+    val batch = preds(Pipeline.score("routed", reqDf,
+      a => operators.Sinks.readSnapshot(spark, s"$base/artifacts/$a")))
     assert(streamed.size === requests.length)
     assert(streamed === batch)
 
@@ -293,8 +291,8 @@ class StreamingModelServeSpec extends SparkSpecBase {
         "pred_f DOUBLE, x2 DOUBLE, x3 DOUBLE, x4 DOUBLE")
       .option("maxFilesPerTrigger", 1)
       .json(landing)
-    val q = graft.streaming.StreamingModelServe.runSeqServe(
-      spark, stream, s"$base/artifacts",
+    val q = graft.streaming.StreamingModelServe.runPipelineServe(
+      spark, stream, s"$base/artifacts", "seq",
       outDir = s"$base/out", checkpointDir = s"$base/ckpt", runId = "r1")
     q.awaitTermination(120000)
 
@@ -302,8 +300,8 @@ class StreamingModelServeSpec extends SparkSpecBase {
       d.select("req_id", "pred_f").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val streamed = preds(spark.read.parquet(s"$base/out"))
-    val batch = preds(Pipeline.seqScore(reqDf, operators.Sinks
-      .readSnapshot(spark, s"$base/artifacts/predictor_params")))
+    val batch = preds(Pipeline.score("seq", reqDf,
+      a => operators.Sinks.readSnapshot(spark, s"$base/artifacts/$a")))
     assert(streamed.size === requests.length)
     assert(streamed === batch)
     // unknown group: naive passthrough
