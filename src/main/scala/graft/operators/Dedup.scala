@@ -67,7 +67,8 @@ object Dedup {
   private[graft] def spread(df: DataFrame): DataFrame = {
     // Streaming frames cannot be probed via .rdd (analysis error), and
     // their micro-batch partitioning is governed by the source + state
-    // dispatch (StreamTuning), not by scan splits — pass through.
+    // dispatch (BoundedStream.withStatePartitions), not by scan splits —
+    // pass through.
     if (df.isStreaming) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)

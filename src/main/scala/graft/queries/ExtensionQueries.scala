@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.streaming.BoundedStream
 import graft.operators.{Decontamination, Dedup, Features, Multimodal, Profiling, Sampling, Similarity, TextAnalysis, UrlCuration}
 
 /** LLM-data-pipeline extension operators (north star, BASELINE.json):
@@ -3335,8 +3336,8 @@ object ExtensionQueries {
     // streaming twin so far was spec-graded by necessity (DuckDB cannot
     // express micro-batch semantics) — this row closes that gap with
     // the snk3 mode-as-data pattern: the query fn RUNS a real bounded
-    // 4-micro-batch stream (file source, maxFilesPerTrigger=1,
-    // AvailableNow) through the STATEFUL exact-dedup operator
+    // 4-micro-batch stream (BoundedStream: one landed file a trigger,
+    // drained to exhaustion) through the STATEFUL exact-dedup operator
     // (dropDuplicatesWithinWatermark — state genuinely crosses batch
     // boundaries: a text's re-arrival in a later chunk must hit state
     // from an earlier one), then emits the stream-vs-batch comparison
@@ -3351,6 +3352,9 @@ object ExtensionQueries {
     // scans of the batch input) runs UNTIMED in the bench; the returned
     // thunk — stream start → state-machine drain → replay/verification →
     // read-back — is what the pin measures. Verify/fn still runs both.
+    // Every stream row has the one shape of graft.streaming.BoundedStream:
+    // `land` the chunks in the fixture phase; in the thunk, inside the
+    // `withStatePartitions` window, `open` them, `drain`, read back.
     "stream_parity" -> QueryDef.phased(
       (s, dir) => {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
@@ -3376,29 +3380,19 @@ object ExtensionQueries {
         // no duplicate texts, so without the re-arrival the cross-batch
         // dedup claim was vacuous). Any state loss re-emits these and
         // n_emitted lands at 2.
-        (0 until 4).foreach { i =>
-          docs.filter(pmod(col("doc_id"), lit(4)) === i)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-          .coalesce(1).write.mode("overwrite").json(s"$landing/c4_rearrival")
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+        BoundedStream.land(landing, (0 until 4).map(i =>
+          docs.filter(pmod(col("doc_id"), lit(4)) === i)) :+
+          docs.filter(pmod(col("doc_id"), lit(7)) === 0))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream.open(s, "doc_id LONG, text STRING", landing)
         val deduped = graft.streaming.StreamingDedup.exactDedupStream(
           in.withColumn("ts",
             timestamp_seconds(lit(1700000000L) + col("doc_id"))),
           "ts", delay)
         val outDir = s"$base/out"
-        val q = deduped
-          .select(md5(coalesce(col("text"), lit(""))).as("text_md5"))
-          .writeStream.option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+        BoundedStream.drain(
+          deduped.select(md5(coalesce(col("text"), lit(""))).as("text_md5")),
+          s"$base/ckpt")(BoundedStream.parquetSink(outDir))
         val emitted = s.read.parquet(outDir)
           .groupBy(col("text_md5")).agg(count(lit(1)).as("n_emitted"))
         val batch = docs
@@ -3454,26 +3448,17 @@ object ExtensionQueries {
         val maxId = stats.getLong(0)
         val nRows = stats.getLong(1)
         val cut = maxId / 4 + 1
-        (0 until 4).foreach { i =>
+        BoundedStream.land(landing, (0 until 4).map(i =>
           docs.filter(col("doc_id") >= i * cut &&
-              col("doc_id") < (i + 1) * cut)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("source STRING, doc_id LONG, weight LONG")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+              col("doc_id") < (i + 1) * cut)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream
+          .open(s, "source STRING, doc_id LONG, weight LONG", landing)
           .as[StreamingCuration.BudgetDoc]
         val outDir = s"$base/out"
-        val q = StreamingCuration.budgetGate(s, in, budget = 4000L)
-          .toDF()
-          .writeStream.option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+        BoundedStream.drain(
+          StreamingCuration.budgetGate(s, in, budget = 4000L).toDF(),
+          s"$base/ckpt")(BoundedStream.parquetSink(outDir))
         s.read.parquet(outDir)
           .select(col("source"), col("doc_id"), col("weight"),
             col("cum_weight"), col("selected"))
@@ -3517,15 +3502,12 @@ object ExtensionQueries {
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val nRows = bounds.getLong(2)
         val cut = (hi - lo) / 4 + 1
-        (0 until 4).foreach { i =>
+        BoundedStream.land(landing, (0 until 4).map(i =>
           ev.filter(col("ts_us") >= lo + i * cut &&
-              col("ts_us") < lo + (i + 1) * cut)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("ts_us LONG, event_type STRING, value DOUBLE")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+              col("ts_us") < lo + (i + 1) * cut)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream
+          .open(s, "ts_us LONG, event_type STRING, value DOUBLE", landing)
           .withColumn("ts", timestamp_micros(col("ts_us")))
           .withWatermark("ts", "0 seconds")
         val agg = in
@@ -3537,15 +3519,8 @@ object ExtensionQueries {
             col("window.end").as("window_end"),
             col("event_type"), col("n"), col("value_micro"))
         val outDir = s"$base/out"
-        val q = agg.writeStream
-          .option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+        BoundedStream.drain(agg, s"$base/ckpt", "append")(
+          BoundedStream.parquetSink(outDir))
         s.read.parquet(outDir)
           .filter(col("window_start") <
             to_timestamp(date_trunc("DAY", timestamp_micros(lit(hi)))))
@@ -3595,29 +3570,18 @@ object ExtensionQueries {
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val nRows = bounds.getLong(2)
         val cut = (hi - lo) / 4 + 1
-        (0 until 4).foreach { i =>
+        BoundedStream.land(landing, (0 until 4).map(i =>
           ev.filter(col("ts_us") >= lo + i * cut &&
-              col("ts_us") < lo + (i + 1) * cut)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("ts_us LONG, user_id LONG")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+              col("ts_us") < lo + (i + 1) * cut)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream.open(s, "ts_us LONG, user_id LONG", landing)
           .withColumn("ts", timestamp_micros(col("ts_us")))
           .withWatermark("ts", "0 seconds")
         val sess = graft.streaming.StreamingAnalytics.sessionCounts(
           in, "ts", "user_id", "30 minutes")
         val outDir = s"$base/out"
-        val q = sess.writeStream
-          .option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+        BoundedStream.drain(sess, s"$base/ckpt", "append")(
+          BoundedStream.parquetSink(outDir))
         s.read.parquet(outDir)
           // strictly-closed sessions only, SAME filter the oracle
           // applies — robust to either strictness of the append-mode
@@ -3685,11 +3649,9 @@ object ExtensionQueries {
           val (lo, hi) = (b.getLong(0), b.getLong(1))
           nRows += b.getLong(2)
           val cut = (hi - lo) / 3 + 1
-          (0 until 3).foreach { i =>
+          BoundedStream.land(landing, (0 until 3).map(i =>
             side.filter(col("ts_us") >= lo + i * cut &&
-                col("ts_us") < lo + (i + 1) * cut)
-              .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-          }
+                col("ts_us") < lo + (i + 1) * cut)))
           landing
         }
         val clicksDir = chunks(
@@ -3700,30 +3662,22 @@ object ExtensionQueries {
           ev.filter(col("event_type") === "purchase")
             .select(col("user_id").as("user_id_r"),
               col("event_id").as("purchase_id"), col("ts_us")), "purch")
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val left = s.readStream
-          .schema("user_id LONG, click_id LONG, ts_us LONG")
-          .option("maxFilesPerTrigger", "1").json(s"$clicksDir/*")
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val left = BoundedStream
+          .open(s, "user_id LONG, click_id LONG, ts_us LONG", clicksDir)
           .withColumn("click_ts", timestamp_micros(col("ts_us")))
           .withWatermark("click_ts", "40 days")
-        val right = s.readStream
-          .schema("user_id_r LONG, purchase_id LONG, ts_us LONG")
-          .option("maxFilesPerTrigger", "1").json(s"$purchDir/*")
+        val right = BoundedStream
+          .open(s, "user_id_r LONG, purchase_id LONG, ts_us LONG", purchDir)
           .withColumn("purchase_ts", timestamp_micros(col("ts_us")))
           .withWatermark("purchase_ts", "40 days")
         val joined = graft.streaming.StreamingAnalytics.intervalJoin(
           left, right, key = "user_id",
           leftTs = "click_ts", rightTs = "purchase_ts", within = "1 day")
         val outDir = s"$base/out"
-        val q = joined
-          .select(col("user_id"), col("click_id"), col("purchase_id"))
-          .writeStream.option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+        BoundedStream.drain(
+          joined.select(col("user_id"), col("click_id"), col("purchase_id")),
+          s"$base/ckpt")(BoundedStream.parquetSink(outDir))
         s.read.parquet(outDir)
           .select(col("user_id"), col("click_id"), col("purchase_id"))
         }
@@ -3771,32 +3725,22 @@ object ExtensionQueries {
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val nRows = bounds.getLong(2)
         val cut = (hi - lo) / 4 + 1
-        (0 until 4).foreach { i =>
+        BoundedStream.land(landing, (0 until 4).map(i =>
           ded.filter(col("ts_us") >= lo + i * cut &&
-              col("ts_us") < lo + (i + 1) * cut)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("currency STRING, event STRING, ts_us LONG, value DOUBLE")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+              col("ts_us") < lo + (i + 1) * cut)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream.open(s,
+          "currency STRING, event STRING, ts_us LONG, value DOUBLE", landing)
           .select(col("currency"), col("event"),
             timestamp_micros(col("ts_us")).cast("timestamp")
               .as("eventTime"),
             col("value").as("actual"))
           .as[graft.streaming.StreamingAnalytics.EventRow]
         val outDir = s"$base/out"
-        val q = graft.streaming.StreamingAnalytics.runningLatest(s, in)
-          .toDF()
-          .writeStream.option("checkpointLocation", s"$base/ckpt")
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.withColumn("batch_id", lit(id))
-              .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+        BoundedStream.drain(
+          graft.streaming.StreamingAnalytics.runningLatest(s, in).toDF(),
+          s"$base/ckpt", "update")(BoundedStream.parquetSink(outDir,
+          frame = (b, id) => b.withColumn("batch_id", lit(id))))
         val lastW = org.apache.spark.sql.expressions.Window
           .partitionBy(col("currency"), col("event"))
           .orderBy(col("batch_id").desc)
@@ -3863,28 +3807,17 @@ object ExtensionQueries {
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val nRows = bounds.getLong(2)
         val cut = (hi - lo) / 4 + 1
-        (0 until 4).foreach { i =>
+        BoundedStream.land(landing, (0 until 4).map(i =>
           ev.filter(col("ts") >= lo + i * cut &&
-              col("ts") < lo + (i + 1) * cut)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("key STRING, ts LONG, id LONG, v DOUBLE")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+              col("ts") < lo + (i + 1) * cut)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream
+          .open(s, "key STRING, ts LONG, id LONG, v DOUBLE", landing)
           .as[graft.streaming.StreamingAnalytics.EwmaEvent]
         val outDir = s"$base/out"
-        val q = graft.streaming.StreamingAnalytics
-          .streamingEwma(s, in, alpha = 0.3, maxLag = 8)
-          .toDF()
-          .writeStream.option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+        BoundedStream.drain(graft.streaming.StreamingAnalytics
+          .streamingEwma(s, in, alpha = 0.3, maxLag = 8).toDF(),
+          s"$base/ckpt", "append")(BoundedStream.parquetSink(outDir))
         s.read.parquet(outDir)
           .select(col("id").as("event_id"),
             split(col("key"), "\\|").getItem(0).cast("long").as("user_id"),
@@ -3942,31 +3875,20 @@ object ExtensionQueries {
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val nRows = bounds.getLong(2)
         val cut = (hi - lo) / 4 + 1
-        (0 until 4).foreach { i =>
+        BoundedStream.land(landing, (0 until 4).map(i =>
           ev.filter(col("ts_us") >= lo + i * cut &&
-              col("ts_us") < lo + (i + 1) * cut)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("userId LONG, eventType STRING, ts_us LONG, eventId LONG")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+              col("ts_us") < lo + (i + 1) * cut)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream.open(s,
+          "userId LONG, eventType STRING, ts_us LONG, eventId LONG", landing)
           .select(col("userId"), col("eventType"),
             timestamp_micros(col("ts_us")).cast("timestamp").as("eventTime"),
             col("eventId"))
           .as[graft.streaming.StreamingAnalytics.FunnelEvent]
         val outDir = s"$base/out"
-        val q = graft.streaming.StreamingAnalytics
-          .funnelProgress(s, in, stages)
-          .toDF()
-          .writeStream.option("checkpointLocation", s"$base/ckpt")
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+        BoundedStream.drain(graft.streaming.StreamingAnalytics
+          .funnelProgress(s, in, stages).toDF(),
+          s"$base/ckpt", "update")(BoundedStream.parquetSink(outDir))
         // reach is monotone per user — the final stage is the max emission
         s.read.parquet(outDir)
           .groupBy(col("userId").as("user_id"))
@@ -4036,19 +3958,14 @@ object ExtensionQueries {
         val landing = s"$base/in"
         val nRows = ev.count()
         // additive counters are order-insensitive — mod chunks suffice
-        (0 until 4).foreach { i =>
-          ev.filter(pmod(col("event_id"), lit(4)) === i)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("event_id LONG, user_id LONG")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+        BoundedStream.land(landing, (0 until 4).map(i =>
+          ev.filter(pmod(col("event_id"), lit(4)) === i)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream.open(s, "event_id LONG, user_id LONG", landing)
         val artifact = s"$base/artifact"
-        val q = graft.streaming.StreamingAnalytics.runCountMin(
+        graft.streaming.StreamingAnalytics.runCountMin(
           s, in, keyCol = "user_id", width = 64, depth = 4, seed = "cms8",
           artifactDir = artifact, checkpointDir = s"$base/ckpt")
-        q.awaitTermination()
         // REDELIVERY of already-applied batches (first and latest) — the
         // ledger must make both exact no-ops
         val replay = ev.filter(pmod(col("event_id"), lit(4)) === 0)
@@ -4099,19 +4016,14 @@ object ExtensionQueries {
         val base = Scratch.dir("stream-bloom")
         val landing = s"$base/in"
         val nRows = members.count()
-        (0 until 4).foreach { i =>
-          members.filter(pmod(col("event_id"), lit(4)) === i)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("event_id LONG, user_id LONG")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+        BoundedStream.land(landing, (0 until 4).map(i =>
+          members.filter(pmod(col("event_id"), lit(4)) === i)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream.open(s, "event_id LONG, user_id LONG", landing)
         val artifact = s"$base/artifact"
-        val q = graft.streaming.StreamingAnalytics.runBloomMembership(
+        graft.streaming.StreamingAnalytics.runBloomMembership(
           s, in, keyCol = "user_id", bits = 128, hashes = 3, seed = "bl9",
           artifactDir = artifact, checkpointDir = s"$base/ckpt")
-        q.awaitTermination()
         val snap = Sinks.readSnapshot(s, artifact).select(col("bit"))
           .localCheckpoint(eager = false)
         // algebraic replay: re-unioning chunk 0's bloom must be a no-op
@@ -4182,20 +4094,16 @@ object ExtensionQueries {
           .write.mode("overwrite").parquet(refDir)
         val landing = s"$base/in"
         val nRows = ev.count()
-        (0 until 4).foreach { i =>
-          ev.filter(pmod(col("event_id"), lit(4)) === i)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("event_id LONG, event_type STRING, value DOUBLE")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+        BoundedStream.land(landing, (0 until 4).map(i =>
+          ev.filter(pmod(col("event_id"), lit(4)) === i)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream
+          .open(s, "event_id LONG, event_type STRING, value DOUBLE", landing)
         val outDir = s"$base/out"
-        val q = graft.streaming.StreamingAnalytics.runDriftMonitor(
+        graft.streaming.StreamingAnalytics.runDriftMonitor(
           s, in, group = Seq("event_type"), valueCol = "value", nBins = 10,
           refDir = refDir, outDir = outDir, checkpointDir = s"$base/ckpt",
           thresholdMilli = 100L, runId = "r0")
-        q.awaitTermination()
         s.read.parquet(outDir)
           .select(col("event_type"), col("batch_id"), col("n_ref"),
             col("n_batch"), col("tvd"), col("drifted"))
@@ -4274,29 +4182,18 @@ object ExtensionQueries {
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val nRows = bounds.getLong(2)
         val cut = (hi - lo) / 4 + 1
-        (0 until 4).foreach { i =>
+        BoundedStream.land(landing, (0 until 4).map(i =>
           ev.filter(col("ts") >= lo + i * cut &&
-              col("ts") < lo + (i + 1) * cut)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("key STRING, ts LONG, id LONG, v DOUBLE")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+              col("ts") < lo + (i + 1) * cut)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream
+          .open(s, "key STRING, ts LONG, id LONG, v DOUBLE", landing)
           .as[graft.streaming.StreamingAnalytics.CusumEvent]
         val outDir = s"$base/out"
-        val q = graft.streaming.StreamingAnalytics
+        BoundedStream.drain(graft.streaming.StreamingAnalytics
           .streamingCusum(s, in, target = 50.0, slack = 5.0,
-            threshold = 80.0)
-          .toDF()
-          .writeStream.option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+            threshold = 80.0).toDF(),
+          s"$base/ckpt", "append")(BoundedStream.parquetSink(outDir))
         s.read.parquet(outDir)
           .select(col("id").as("event_id"),
             split(col("key"), "\\|").getItem(0).cast("long").as("user_id"),
@@ -4357,20 +4254,16 @@ object ExtensionQueries {
           .write.mode("overwrite").parquet(gridDir)
         val landing = s"$base/in"
         val nRows = ev.count()
-        (0 until 4).foreach { i =>
-          ev.filter(pmod(col("event_id"), lit(4)) === i)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("event_id LONG, event_type STRING, value DOUBLE")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+        BoundedStream.land(landing, (0 until 4).map(i =>
+          ev.filter(pmod(col("event_id"), lit(4)) === i)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream
+          .open(s, "event_id LONG, event_type STRING, value DOUBLE", landing)
         val artifact = s"$base/artifact"
-        val q = graft.streaming.StreamingAnalytics.runBinHistogram(
+        graft.streaming.StreamingAnalytics.runBinHistogram(
           s, in, group = Seq("event_type"), valueCol = "value", nBins = 32,
           gridDir = gridDir, artifactDir = artifact,
           checkpointDir = s"$base/ckpt")
-        q.awaitTermination()
         // redeliver two already-applied batches — exact no-ops or bust
         val replay = ev.filter(pmod(col("event_id"), lit(4)) === 1)
         graft.streaming.StreamingAnalytics.applyHistBatch(
@@ -4425,19 +4318,14 @@ object ExtensionQueries {
         val base = Scratch.dir("stream-hll")
         val landing = s"$base/in"
         val nRows = ev.count()
-        (0 until 4).foreach { i =>
-          ev.filter(pmod(col("event_id"), lit(4)) === i)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("event_id LONG, user_id LONG")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+        BoundedStream.land(landing, (0 until 4).map(i =>
+          ev.filter(pmod(col("event_id"), lit(4)) === i)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream.open(s, "event_id LONG, user_id LONG", landing)
         val artifact = s"$base/artifact"
-        val q = graft.streaming.StreamingAnalytics.runHllDistinct(
+        graft.streaming.StreamingAnalytics.runHllDistinct(
           s, in, keyCol = "user_id", artifactDir = artifact,
           checkpointDir = s"$base/ckpt")
-        q.awaitTermination()
         val snap = Sinks.readSnapshot(s, artifact)
           .select(col("sk"), col("estimate"))
           .localCheckpoint(eager = false)
@@ -4490,20 +4378,14 @@ object ExtensionQueries {
           .withColumn("op", lit("I"))
           .withColumn("ord", lit(2L))
         val nRows = e.count()
-        Seq(existing, upsDels, reins, reins).zipWithIndex.foreach {
-          case (chunk, i) => chunk.coalesce(1).write.mode("overwrite")
-            .json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("event_id LONG, user_id LONG, event_type STRING, " +
-            "value DOUBLE, op STRING, ord LONG")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+        BoundedStream.land(landing, Seq(existing, upsDels, reins, reins))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream.open(s, "event_id LONG, user_id LONG, " +
+          "event_type STRING, value DOUBLE, op STRING, ord LONG", landing)
         val tableDir = s"$base/table"
-        val q = graft.streaming.StreamingIngest
+        graft.streaming.StreamingIngest
           .runChangesToBucketedSnapshot(in, tableDir, s"$base/ckpt",
             key = Seq("event_id"), orderCol = "ord", nBuckets = 16)
-        q.awaitTermination()
         graft.operators.Sinks.readBucketedSnapshot(s, tableDir)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"))
@@ -4561,21 +4443,17 @@ object ExtensionQueries {
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val nRows = bounds.getLong(2)
         val cut = (hi - lo) / 4 + 1
-        (0 until 4).foreach { i =>
+        BoundedStream.land(landing, (0 until 4).map(i =>
           ded.filter(col("ts_us") >= lo + i * cut &&
-              col("ts_us") < lo + (i + 1) * cut)
-            .coalesce(1).write.mode("overwrite").json(s"$landing/c$i")
-        }
-        () => graft.streaming.StreamTuning.withStatePartitions(s, nRows) {
-        val in = s.readStream
-          .schema("user_id LONG, event_type STRING, ts_us LONG, value DOUBLE")
-          .option("maxFilesPerTrigger", "1").json(s"$landing/*")
+              col("ts_us") < lo + (i + 1) * cut)))
+        () => BoundedStream.withStatePartitions(s, nRows) {
+        val in = BoundedStream.open(s,
+          "user_id LONG, event_type STRING, ts_us LONG, value DOUBLE", landing)
         val tableDir = s"$base/table"
-        val q = graft.streaming.StreamingIngest.runToBucketedSnapshot(
+        graft.streaming.StreamingIngest.runToBucketedSnapshot(
           in, tableDir, s"$base/ckpt",
           key = Seq("user_id", "event_type"), orderCol = "ts_us",
           nBuckets = 16)
-        q.awaitTermination()
         graft.operators.Sinks.readBucketedSnapshot(s, tableDir)
           .select(col("user_id"), col("event_type"),
             timestamp_micros(col("ts_us")).cast("timestamp_ntz")

@@ -186,11 +186,8 @@ object StreamingAnalytics {
                      artifactDir: String, checkpointDir: String,
                      lgK: Int = 12, keepVersions: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    BoundedStream.drain(stream, checkpointDir) {
+      (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val batchSk = batch.agg(
             hll_sketch_agg(col(keyCol), lit(lgK)).as("sk"))
@@ -218,8 +215,7 @@ object StreamingAnalytics {
             keepLast = keepVersions)
           ()
         }
-      }
-      .start()
+    }
 
   /** Incremental MEMBERSHIP sketch over an unbounded stream (round 9) —
     * the streaming face of sketch_bloom, completing the streaming sketch
@@ -239,11 +235,8 @@ object StreamingAnalytics {
                          artifactDir: String, checkpointDir: String,
                          keepVersions: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    BoundedStream.drain(stream, checkpointDir) {
+      (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           import graft.operators.{Sinks, Sketches}
           val batchBits = Sketches.bloom(batch, col(keyCol), bits, hashes, seed)
@@ -258,8 +251,7 @@ object StreamingAnalytics {
           Sinks.vacuumSnapshotIfGrown(spark, artifactDir, keepLast = keepVersions)
           ()
         }
-      }
-      .start()
+    }
 
   /** Incremental FREQUENCY sketch over an unbounded stream (round 9 —
     * the streaming face of sketch_count_min, and the exactly-once
@@ -281,15 +273,11 @@ object StreamingAnalytics {
                   width: Int, depth: Int, seed: String, artifactDir: String,
                   checkpointDir: String, keepVersions: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    BoundedStream.drain(stream, checkpointDir) {
+      (batch: DataFrame, id: Long) =>
         applyCountMinBatch(spark, batch, id, keyCol, width, depth, seed,
           artifactDir, keepVersions)
-      }
-      .start()
+    }
 
   /** The transactional merge step of [[runCountMin]], factored out so a
     * redelivery is directly testable: no-op when `batchId` is at or
@@ -356,15 +344,11 @@ object StreamingAnalytics {
                       gridDir: String, artifactDir: String,
                       checkpointDir: String, keepVersions: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    BoundedStream.drain(stream, checkpointDir) {
+      (batch: DataFrame, id: Long) =>
         applyHistBatch(spark, batch, id, group, valueCol, nBins, gridDir,
           artifactDir, keepVersions)
-      }
-      .start()
+    }
 
   /** The transactional merge step of [[runBinHistogram]] (same recipe
     * as [[applyCountMinBatch]]: skip at-or-below the ledger high-water
@@ -553,20 +537,9 @@ object StreamingAnalytics {
                       group: Seq[String], valueCol: String, nBins: Int,
                       refDir: String, outDir: String, checkpointDir: String,
                       thresholdMilli: Long, runId: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(thresholdMilli >= 0 && thresholdMilli <= 1000,
-      s"thresholdMilli must be in [0,1000]: $thresholdMilli")
-    StreamingSimilarity.requireRunId(runId)
-    stream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyDriftBatch(spark, batch, id, group, valueCol, nBins, refDir,
-          outDir, thresholdMilli, runId)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BoundedStream.drain(stream, checkpointDir)(driftSink(spark, group,
+      valueCol, nBins, refDir, outDir, thresholdMilli, runId))
 
   /** The grading step of [[runDriftMonitor]], factored out so a batch
     * is directly testable against the batch-side arithmetic. */
@@ -575,43 +548,55 @@ object StreamingAnalytics {
                                      valueCol: String, nBins: Int,
                                      refDir: String, outDir: String,
                                      thresholdMilli: Long,
-                                     runId: String): Unit = {
+                                     runId: String): Unit =
+    driftSink(spark, group, valueCol, nBins, refDir, outDir, thresholdMilli,
+      runId)(batch, batchId)
+
+  /** The verdict sink of [[runDriftMonitor]]: each batch's verdicts over
+    * `outDir/batch=<runId>-<id>`. */
+  private def driftSink(spark: SparkSession, group: Seq[String],
+                        valueCol: String, nBins: Int, refDir: String,
+                        outDir: String, thresholdMilli: Long,
+                        runId: String): (DataFrame, Long) => Unit = {
     import graft.operators.Sketches
     // the batch twin's domain check (Profiling.driftTvd): out-of-range
     // thresholds must fail loudly here too, not produce a monitor that
     // silently never (or always) fires (round 15)
     require(thresholdMilli >= 0 && thresholdMilli <= 1000,
       s"thresholdMilli must be in [0,1000]: $thresholdMilli")
-    if (batch.isEmpty) return
-    val gc = group.map(col)
-    val ref = spark.read.parquet(refDir)
-    val bounds = ref.select((gc :+ col("lo") :+ col("width")): _*).distinct()
-    val batchCells = Sketches
-      .binHistogramWith(batch, bounds, group, col(valueCol), nBins)
-      .select((gc :+ col("bin") :+ col("cnt").as("n2")): _*)
-    val refCells = ref.select((gc :+ col("bin") :+ col("cnt").as("n1")): _*)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(gc: _*)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val verdicts = refCells
-      .join(batchCells, group :+ "bin", "full_outer")
-      .na.fill(0L, Seq("n1", "n2"))
-      .withColumn("t1", sum(col("n1")).over(w))
-      .withColumn("t2", sum(col("n2")).over(w))
-      .withColumn("__d", abs(col("n1") * col("t2") - col("n2") * col("t1")))
-      .groupBy(gc: _*)
-      .agg(max(col("t1")).as("n_ref"), max(col("t2")).as("n_batch"),
-        sum(col("__d")).as("__s"))
-      .filter(col("n_batch") > 0) // only groups the batch actually carries
-      .select((gc :+ col("n_ref") :+ col("n_batch") :+
-        (col("__s").cast("double") /
-          (lit(2.0) * col("n_ref").cast("double") *
-            col("n_batch").cast("double"))).as("tvd") :+
-        (col("__s") * lit(1000L) >=
-          lit(2L * thresholdMilli) * col("n_ref") * col("n_batch"))
-          .as("drifted") :+ lit(batchId).as("batch_id")): _*)
-    verdicts.write.mode("overwrite")
-      .parquet(s"$outDir/batch=$runId-$batchId")
-    ()
+    BoundedStream.skipEmpty(BoundedStream.parquetSink(outDir, Some(runId),
+      (batch, batchId) => {
+      val gc = group.map(col)
+      val ref = spark.read.parquet(refDir)
+      val bounds =
+        ref.select((gc :+ col("lo") :+ col("width")): _*).distinct()
+      val batchCells = Sketches
+        .binHistogramWith(batch, bounds, group, col(valueCol), nBins)
+        .select((gc :+ col("bin") :+ col("cnt").as("n2")): _*)
+      val refCells =
+        ref.select((gc :+ col("bin") :+ col("cnt").as("n1")): _*)
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(gc: _*)
+        .rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.unboundedFollowing)
+      refCells
+        .join(batchCells, group :+ "bin", "full_outer")
+        .na.fill(0L, Seq("n1", "n2"))
+        .withColumn("t1", sum(col("n1")).over(w))
+        .withColumn("t2", sum(col("n2")).over(w))
+        .withColumn("__d",
+          abs(col("n1") * col("t2") - col("n2") * col("t1")))
+        .groupBy(gc: _*)
+        .agg(max(col("t1")).as("n_ref"), max(col("t2")).as("n_batch"),
+          sum(col("__d")).as("__s"))
+        .filter(col("n_batch") > 0) // only groups the batch carries
+        .select((gc :+ col("n_ref") :+ col("n_batch") :+
+          (col("__s").cast("double") /
+            (lit(2.0) * col("n_ref").cast("double") *
+              col("n_batch").cast("double"))).as("tvd") :+
+          (col("__s") * lit(1000L) >=
+            lit(2L * thresholdMilli) * col("n_ref") * col("n_batch"))
+            .as("drifted") :+ lit(batchId).as("batch_id")): _*)
+    }))
   }
 }

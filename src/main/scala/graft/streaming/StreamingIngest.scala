@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Ingest, Sinks}
 
@@ -15,22 +15,21 @@ import graft.operators.{Ingest, Sinks}
   * micro-batch over one CSV produces exactly what Ingest.ingestCsv would.
   *
   * Scale notes: the file source tracks processed files (offsets = the
-  * watermark's job in the batch path); `maxFilesPerTrigger` bounds batch
-  * size; dropDuplicates state is bounded by the event-time watermark; the
-  * upsert inside foreachBatch shuffles only the micro-batch against the
-  * snapshot (bucket the snapshot by key at scale).
+  * watermark's job in the batch path); the files-per-trigger pace bounds
+  * batch size; dropDuplicates state is bounded by the event-time
+  * watermark; the upsert inside foreachBatch shuffles only the
+  * micro-batch against the snapshot (bucket the snapshot by key at
+  * scale). Every sink here drains through [[BoundedStream.drain]].
   */
 object StreamingIngest {
 
   /** readStream → clean → watermark → dedup, ready for a sink. */
-  def cleanedStream(spark: SparkSession, landingDir: String,
-                    maxFilesPerTrigger: Int = 1): DataFrame = {
-    val raw = spark.readStream
+  def cleanedStream(spark: SparkSession, landingDir: String): DataFrame = {
+    val raw = BoundedStream.paced(spark.readStream
       .schema(Ingest.rawSchema)
       .option("header", "false")
       .option("quote", "\"")
-      .option("ignoreLeadingWhiteSpace", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("ignoreLeadingWhiteSpace", "true"))
       .csv(landingDir)
     Ingest.clean(raw)
       // TIMESTAMP (not NTZ) for streaming watermark bookkeeping
@@ -44,15 +43,12 @@ object StreamingIngest {
       .dropDuplicates("Date", "Time", "Currency", "Event", "EventTime")
   }
 
-  /** Run the stream into a versioned-snapshot upsert sink (SNK1 via
-    * foreachBatch). Returns the query; caller awaits/stops it. */
+  /** Drain the stream into a versioned-snapshot upsert sink (SNK1 via
+    * foreachBatch). Returns the finished query. */
   def run(spark: SparkSession, landingDir: String, tableDir: String,
           checkpointDir: String): StreamingQuery =
-    cleanedStream(spark, landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    BoundedStream.drain(cleanedStream(spark, landingDir), checkpointDir) {
+      (batch: DataFrame, _: Long) =>
         // persist once (round 15): the isEmpty probe is one job over the
         // source scan, and upsertSnapshot references the batch on BOTH
         // sides of its merge — uncached, a micro-batch's files were read
@@ -66,8 +62,7 @@ object StreamingIngest {
             ()
           }
         } finally { b.unpersist(); () }
-      }
-      .start()
+    }
 
   /** Run the stream into a REAL database table (the reference's actual
     * sink — cleaned events land in MySQL via chunked executemany,
@@ -83,19 +78,15 @@ object StreamingIngest {
   def runToJdbc(spark: SparkSession, landingDir: String, url: String,
                 table: String, checkpointDir: String,
                 batchSize: Int = 500): StreamingQuery =
-    cleanedStream(spark, landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    BoundedStream.drain(cleanedStream(spark, landingDir), checkpointDir) {
+      (batch: DataFrame, _: Long) =>
         val b = batch.persist() // one scan feeds probe + sink (round 15)
         try {
           if (!b.isEmpty)
             graft.operators.Jdbc.writeTable(b, url, table, batchSize,
               mode = org.apache.spark.sql.SaveMode.Append)
         } finally { b.unpersist(); () }
-      }
-      .start()
+    }
 
   /** EXACTLY-ONCE stream → JDBC (round 13): each micro-batch publishes
     * through [[graft.operators.Jdbc.writeBatchExactlyOnce]] — stage
@@ -114,11 +105,8 @@ object StreamingIngest {
                            url: String, table: String, checkpointDir: String,
                            runId: String,
                            batchSize: Int = 500): StreamingQuery =
-    cleanedStream(spark, landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    BoundedStream.drain(cleanedStream(spark, landingDir), checkpointDir) {
+      (batch: DataFrame, id: Long) =>
         val b = batch.persist() // one scan feeds probe + stage (round 15)
         try {
           if (!b.isEmpty) {
@@ -127,8 +115,7 @@ object StreamingIngest {
             ()
           }
         } finally { b.unpersist(); () }
-      }
-      .start()
+    }
 
   /** Stream → PARTITION-SCOPED upsert: every micro-batch merges into a
     * [[graft.operators.Sinks.upsertSnapshotBucketed]] table, so an
@@ -154,11 +141,8 @@ object StreamingIngest {
                             checkpointDir: String, key: Seq[String],
                             orderCol: String,
                             nBuckets: Int = 64): StreamingQuery =
-    stream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    BoundedStream.drain(stream, checkpointDir) {
+      (batch: DataFrame, _: Long) =>
         // no isEmpty pre-probe (round 16): the merge's own touched-bucket
         // collect IS the emptiness probe for an existing table, and the
         // create branch guards itself. No batch.persist either (round
@@ -167,8 +151,7 @@ object StreamingIngest {
         // persist of the raw rows was a redundant cache fill per batch.
         graft.operators.Sinks.upsertSnapshotBucketed(
           batch.sparkSession, tableDir, batch, key, orderCol, nBuckets)
-      }
-      .start()
+    }
 
   /** Streaming CDC: an I/U/D changelog stream (the Debezium-consumer
     * shape) maintains a bucketed keyed snapshot via
@@ -182,16 +165,12 @@ object StreamingIngest {
                                    checkpointDir: String, key: Seq[String],
                                    orderCol: String, opCol: String = "op",
                                    nBuckets: Int = 64): StreamingQuery =
-    changes
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    BoundedStream.drain(changes, checkpointDir) {
+      (batch: DataFrame, _: Long) =>
         // no isEmpty pre-probe (round 16) and no batch.persist (round
         // 17; see runToBucketedSnapshot — the sink's localCheckpoint is
         // the one cache layer)
         graft.operators.Sinks.applyChangesBucketed(
           batch.sparkSession, tableDir, batch, key, orderCol, opCol, nBuckets)
-      }
-      .start()
+    }
 }

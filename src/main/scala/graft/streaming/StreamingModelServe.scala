@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Features
@@ -40,19 +40,10 @@ object StreamingModelServe {
   private def runServe(featureStream: DataFrame,
                        score: DataFrame => DataFrame,
                        outDir: String, checkpointDir: String,
-                       runId: String): StreamingQuery = {
-    StreamingSimilarity.requireRunId(runId)
-    featureStream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          score(batch).write.mode(SaveMode.Overwrite)
-            .parquet(s"$outDir/batch=$runId-$id")
-      }
-      .start()
-  }
+                       runId: String): StreamingQuery =
+    BoundedStream.drain(featureStream, checkpointDir)(
+      BoundedStream.skipEmpty(
+        BoundedStream.parquetSink(outDir, Some(runId), (b, _) => score(b))))
 
   /** Serve a parquet-persisted [[Features.LinearModel]]
     * ([[Features.linearModelToFrame]] layout at `modelDir`) over a

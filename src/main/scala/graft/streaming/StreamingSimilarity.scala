@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
 
@@ -31,12 +31,6 @@ import graft.operators.Similarity
   * serve sink). */
 object StreamingSimilarity {
 
-  /** The runId contract shared by every batch-directory sink here and
-    * in [[StreamingModelServe]]/[[StreamingAnalytics]]. */
-  private[streaming] def requireRunId(runId: String): Unit =
-    require(runId.nonEmpty && !runId.contains("/"),
-      s"runId must be a nonempty path-safe token, got '$runId'")
-
   /** Serve top-k from a prebuilt [[Similarity.IvfIndex]] for every query
     * micro-batch; results land in `outDir/batch=<runId>-<id>/`. The
     * stream needs (vec_id, embedding) rows — the corpus frame's own
@@ -44,20 +38,11 @@ object StreamingSimilarity {
   def runIvfServe(queryStream: DataFrame, index: Similarity.IvfIndex,
                   corpus: DataFrame, k: Int, nProbe: Int,
                   outDir: String, checkpointDir: String,
-                  runId: String): StreamingQuery = {
-    requireRunId(runId)
-    queryStream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          Similarity.ivfTopKWithIndex(batch, corpus, index, k, nProbe)
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$outDir/batch=$runId-$id")
-      }
-      .start()
-  }
+                  runId: String): StreamingQuery =
+    BoundedStream.drain(queryStream, checkpointDir)(BoundedStream.skipEmpty(
+      BoundedStream.parquetSink(outDir, Some(runId),
+        (batch, _) => Similarity.ivfTopKWithIndex(batch, corpus, index, k,
+          nProbe))))
 
   /** Grow a persisted IVF index from an unbounded INGEST stream of new
     * vectors — the WRITE half of the build-once/add-many lifecycle and
@@ -86,28 +71,23 @@ object StreamingSimilarity {
     * late batches servable, re-delivered batch a no-op. */
   def runIndexGrow(vectorStream: DataFrame, centroids: DataFrame,
                    postingsDir: String, checkpointDir: String,
-                   runId: String): StreamingQuery = {
-    requireRunId(runId)
-    vectorStream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        growBatch(batch, id, centroids, postingsDir, runId)
-      }
-      .start()
-  }
+                   runId: String): StreamingQuery =
+    BoundedStream.drain(vectorStream, checkpointDir)(
+      growSink(centroids, postingsDir, runId))
 
   /** The per-batch step of [[runIndexGrow]], factored out so replay
     * idempotence and assignment parity are directly testable. */
   private[graft] def growBatch(batch: DataFrame, id: Long,
                                centroids: DataFrame,
-                               postingsDir: String, runId: String): Unit = {
-    if (batch.isEmpty) return
-    Similarity.assign(centroids, batch, "neighbor_id", keep = 1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$postingsDir/batch=$runId-$id")
-  }
+                               postingsDir: String, runId: String): Unit =
+    growSink(centroids, postingsDir, runId)(batch, id)
+
+  private def growSink(centroids: DataFrame, postingsDir: String,
+                       runId: String): (DataFrame, Long) => Unit =
+    BoundedStream.skipEmpty(BoundedStream.parquetSink(postingsDir,
+      Some(runId),
+      (batch, _) => Similarity.assign(centroids, batch, "neighbor_id",
+        keep = 1)))
 
   /** Streaming HYBRID search serve (round 9) — the full modern
     * retrieval stack on an unbounded query stream: each micro-batch of
@@ -126,20 +106,11 @@ object StreamingSimilarity {
   def runHybridServe(queryStream: DataFrame, index: Similarity.IvfIndex,
                      corpus: DataFrame, postings: DataFrame, nDocs: Long,
                      k: Int, nProbe: Int, outDir: String,
-                     checkpointDir: String, runId: String): StreamingQuery = {
-    requireRunId(runId)
-    queryStream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          hybridBatch(batch, index, corpus, postings, nDocs, k, nProbe)
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$outDir/batch=$runId-$id")
-      }
-      .start()
-  }
+                     checkpointDir: String, runId: String): StreamingQuery =
+    BoundedStream.drain(queryStream, checkpointDir)(BoundedStream.skipEmpty(
+      BoundedStream.parquetSink(outDir, Some(runId),
+        (batch, _) => hybridBatch(batch, index, corpus, postings, nDocs, k,
+          nProbe))))
 
   /** The per-batch fusion of [[runHybridServe]], factored out so batch
     * parity is directly testable. */

@@ -29,8 +29,13 @@ Usage:
 
 A plan that reads a checkpointed or RDD-built frame (`Scan ExistingRDD`)
 shows only what runs above that scan: the stage that built the frame is
-not in the text. Such a row, when its visible text is identical, is
-reported `opaque` rather than `identical`: the diff cannot vouch for it.
+not in the text. A plan that scans no file and no RDD at all (a bare
+`LocalTableScan`, the shape of a result collected on the driver, as the
+`pipeline_e2e*` rows return) shows none of the work that made its rows.
+Such a row, when its visible text is identical, is reported `opaque`
+rather than `identical`: the diff cannot vouch for it. Generated leaves
+(`Range`, `Scan OneRowRelation`) count as sources: the plan holds all
+they compute.
 
 With no rows, every `<row>.txt` present in either directory is compared.
 Prints one line per row (`identical`, `opaque`, `DIFFERENT`, or
@@ -88,6 +93,14 @@ def unbracket(s):
 
 
 OPAQUE = "Scan ExistingRDD"
+# a leaf whose rows the plan itself reads or generates
+SOURCE = re.compile(r"^\(\d+\) (?:Scan (?!ExistingRDD)|BatchScan|Range\b)", re.M)
+
+
+def is_opaque(text):
+    """True when the plan's work is not all in its text: it reads an
+    RDD-built frame, or it reads nothing but local rows."""
+    return OPAQUE in text or not SOURCE.search(text)
 
 ATTR_ID = re.compile(r"#\d+L?")
 EXPAND_ARGS = re.compile(r"^(\(\d+\) Expand\n(?:.*\n)*?Arguments: )(.*)$", re.M)
@@ -192,7 +205,7 @@ def main(argv):
             continue
         ta, tb = read(a), read(b)
         if ta == tb:
-            if OPAQUE in ta:
+            if is_opaque(ta):
                 opaque += 1
                 print(f"{row}: opaque")
             else:
