@@ -293,8 +293,8 @@ object Pipeline {
     * model predicts in standardized space, the pipeline speaks raw
     * units — everything else (and every row of an untrained run) keeps
     * the naive `pred_f`. The artifact is ONE row (collected — the
-    * linearModelFromFrame convention); coefficients and moments ride
-    * the plan as literals, map-only at any corpus size. */
+    * one-row `Features.ModelEntry` convention); coefficients and moments
+    * ride the plan as literals, map-only at any corpus size. */
   private def applySgd(feat2: DataFrame, artifact: DataFrame): DataFrame = {
     val rows = artifact.collect()
     if (rows.isEmpty) feat2

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  IntegerType, LongType, StringType, StructField, StructType}
 
 /** The reference's per-(Currency,Event) time-series feature operators
   * re-expressed as Spark window/aggregate transforms (SURVEY.md §2e).
@@ -847,6 +851,36 @@ object Features {
         col("intercept") :+ col("n_fit") :+ col("well_conditioned")): _*)
   }
 
+  /** A trained model's artifact contract, one entry per model: the
+    * columns of its parquet frame (names, types, nullability), the
+    * conversion between the model and the frame's rows, and the batch
+    * predict that scores feature rows with it. Train once, persist with
+    * `toFrame`, serve the artifact from storage — the reference's
+    * joblib-dump contract (train.py:555-567, main.py:320-391) — in batch
+    * or per micro-batch ([[graft.streaming.StreamingModelServe.runModelServe]])
+    * through the same predict. A `parts` model persists one row per part
+    * (stump, component), ordered by its int first column; any other
+    * model is exactly one row. */
+  private[graft] final class ModelEntry[M](
+      name: String, columns: StructType, parts: Boolean,
+      rows: M => Seq[Row], model: Seq[Row] => M,
+      val predict: (DataFrame, M, Seq[Column]) => DataFrame) {
+    def toFrame(spark: SparkSession, m: M): DataFrame =
+      spark.createDataFrame(rows(m).asJava, columns)
+    def fromFrame(df: DataFrame): M = {
+      val rs = df.select(columns.fieldNames.toSeq.map(col): _*).collect().toSeq
+      if (parts) require(rs.nonEmpty, s"empty $name model frame")
+      else require(rs.length == 1, s"expected one model row, got ${rs.length}")
+      model(if (parts) rs.sortBy(_.getInt(0)) else rs)
+    }
+  }
+
+  /** A [[ModelEntry]]'s columns: scalars NOT NULL, arrays nullable. */
+  private[operators] def modelColumns(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) =>
+      StructField(n, t, nullable = t.isInstanceOf[ArrayType]) })
+  private[operators] val DoubleSeq = ArrayType(DoubleType, containsNull = false)
+
   /** A trained general linear model: intercept-first coefficient vector
     * over p features, with the fit size for provenance. */
   final case class LinearModel(coef: Array[Double], nFit: Long)
@@ -879,10 +913,7 @@ object Features {
     require(features.nonEmpty, "linearFit needs at least one feature")
     require(ridge >= 0.0, s"ridge must be >= 0, got $ridge")
     val p = features.length
-    val domain = lit(1e11)
-    val guard = (features :+ target)
-      .map(c => c.isNotNull && abs(c) < domain)
-      .reduce(_ && _)
+    val guard = (features :+ target).map(inDomain).reduce(_ && _)
     val z: IndexedSeq[Column] =
       (lit(1).cast("decimal(17,6)") +: features.map(_.cast("decimal(17,6)")))
         .toIndexedSeq
@@ -897,19 +928,48 @@ object Features {
     val row = df.filter(guard).agg(aggs.head, aggs.tail: _*).head()
     val n = row.getAs[Long]("n")
     if (n == 0L) return None
+    solveNormal(row, p, ridge, "sy") match {
+      case Some(beta) => Some(LinearModel(beta, n))
+      case None => // singular: the mean model, the fitAr1 convention
+        val mean = row.getAs[Double]("sy_0") / n
+        Some(LinearModel(mean +: Array.fill(p)(0.0), n))
+    }
+  }
+
+  /** β of the ridge normal system (A + λ·n·I₋)β = b read off one moment
+    * row: A's upper triangle `s_<i>_<j>`, b's entries `<rhs>_<i>` and the
+    * count `n`. None when singular ([[solveInPlace]]). */
+  private def solveNormal(row: Row, p: Int, ridge: Double,
+                          rhs: String): Option[Array[Double]] = {
+    val n = row.getAs[Long]("n")
     val a = Array.ofDim[Double](p + 1, p + 1)
     for (i <- 0 to p; j <- i to p) {
       val v = row.getAs[Double](s"s_${i}_$j")
       a(i)(j) = v; a(j)(i) = v
     }
     for (i <- 1 to p) a(i)(i) += ridge * n
-    val b = Array.tabulate(p + 1)(i => row.getAs[Double](s"sy_$i"))
-    solveInPlace(a, b) match {
-      case Some(beta) => Some(LinearModel(beta, n))
-      case None => // singular: the mean model, the fitAr1 convention
-        val mean = row.getAs[Double]("sy_0") / n
-        Some(LinearModel(mean +: Array.fill(p)(0.0), n))
-    }
+    solveInPlace(a, Array.tabulate(p + 1)(i => row.getAs[Double](s"${rhs}_$i")))
+  }
+
+  /** The model fits' row guard: `c` non-null inside |c| < 1e11. */
+  private def inDomain(c: Column): Column = c.isNotNull && abs(c) < lit(1e11)
+
+  /** The guarded design frame of the iterative fits, with its intercept-
+    * first design columns: rows whose every feature is non-null inside
+    * the |·| < 1e11 domain and that pass the response's own `yGuard`,
+    * projected to double features `__z<i>` and the response `y` as
+    * `__y` — plus, when `hashed`, the row hash `__h` the SGD minibatch
+    * gate reads — lazily checkpointed so one computed copy feeds every
+    * pass. */
+  private def designFrame(df: DataFrame, features: Seq[Column],
+                          yGuard: Seq[Column], y: Column,
+                          hashed: Boolean): (DataFrame, IndexedSeq[Column]) = {
+    val zs = features.indices.map(i => col(s"__z$i"))
+    val src = df.filter((features.map(inDomain) ++ yGuard).reduce(_ && _))
+      .select(features.zipWithIndex.map { case (c, i) =>
+        c.cast("double").as(s"__z$i") } :+ y.as("__y"): _*)
+    ((if (hashed) src.withColumn("__h", xxhash64(zs :+ col("__y"): _*))
+      else src).localCheckpoint(eager = false), lit(1.0) +: zs)
   }
 
   /** Gaussian elimination with partial pivoting, in place; None when the
@@ -979,17 +1039,8 @@ object Features {
     require(maxIters >= 1 && tol > 0.0 && ridge >= 0.0,
       s"bad hyperparameters: maxIters=$maxIters tol=$tol ridge=$ridge")
     val p = features.length
-    val domain = lit(1e11)
-    val guard = features.map(c => c.isNotNull && abs(c) < domain)
-      .reduce(_ && _) && label.isNotNull
-    val src = df.filter(guard)
-      .select((features.map(_.cast("double")) :+
-        label.cast("boolean").cast("int").cast("double").as("__y"))
-        .zipWithIndex.map { case (c, i) =>
-          if (i < p) c.as(s"__z$i") else c
-        }: _*)
-      .localCheckpoint(eager = false) // one computed copy feeds every iter
-    val z: IndexedSeq[Column] = lit(1.0) +: (0 until p).map(i => col(s"__z$i"))
+    val (src, z) = designFrame(df, features, Seq(label.isNotNull),
+      label.cast("boolean").cast("int").cast("double"), hashed = false)
     var beta = new Array[Double](p + 1)
     var n = -1L
     var grad = Double.MaxValue
@@ -1011,20 +1062,11 @@ object Features {
       n = row.getAs[Long]("n")
       if (n == 0L) return None
       grad = (0 to p).map(i => math.abs(row.getAs[Double](s"g_$i"))).max / n
-      if (grad > tol) {
-        val a = Array.ofDim[Double](p + 1, p + 1)
-        for (i <- 0 to p; j <- i to p) {
-          val v = row.getAs[Double](s"s_${i}_$j")
-          a(i)(j) = v; a(j)(i) = v
-        }
-        for (i <- 1 to p) a(i)(i) += ridge * n
-        val b = Array.tabulate(p + 1)(i => row.getAs[Double](s"su_$i"))
-        solveInPlace(a, b) match {
-          case Some(next) => beta = next
-          case None =>
-            if (it == 0) return None
-            else singular = true // keep the last stable β
-        }
+      if (grad > tol) solveNormal(row, p, ridge, "su") match {
+        case Some(next) => beta = next
+        case None =>
+          if (it == 0) return None
+          else singular = true // keep the last stable β
       }
       // a singular iteration produced no new β — don't count it, so the
       // persisted provenance `iters` can never exceed maxIters
@@ -1075,10 +1117,7 @@ object Features {
       nBins >= 2, s"bad hyperparameters: rounds=$rounds lr=$learningRate " +
       s"nBins=$nBins")
     val p = features.length
-    val domain = lit(1e11)
-    val guard = (features :+ target)
-      .map(c => c.isNotNull && abs(c) < domain).reduce(_ && _)
-    val base = df.filter(guard)
+    val base = df.filter((features :+ target).map(inDomain).reduce(_ && _))
     val mmAggs = features.zipWithIndex.flatMap { case (c, f) =>
       Seq(min(c.cast("double")).as(s"mn$f"), max(c.cast("double")).as(s"mx$f"))
     } ++ Seq(count(lit(1)).as("n"), sum(target.cast("double")).as("sy"))
@@ -1092,22 +1131,16 @@ object Features {
       if (s > 0.0) s else 1.0 // constant feature: one bin, never splits
     }
     val binCols = features.zipWithIndex.map { case (c, f) =>
-      least(lit(nBins - 1), greatest(lit(0),
-        floor((c.cast("double") - lit(mins(f))) / lit(spans(f)) * nBins)))
-        .cast("int").as(s"__b$f")
+      gbmBin(c, mins(f), spans(f), nBins).as(s"__b$f")
     }
     val src = base
       .select(binCols :+ target.cast("double").as("__y"): _*)
       .localCheckpoint(eager = false) // bin once, scan per round
     val stumps = scala.collection.mutable.ArrayBuffer.empty[GbmStump]
     val sses = scala.collection.mutable.ArrayBuffer.empty[Double]
+    def pred = stumpFold(f0, learningRate, stumps, f => col(s"__b$f"))
     var stop = false
     while (stumps.length < rounds && !stop) {
-      val pred = stumps.foldLeft(lit(f0): Column) { (acc, st) =>
-        acc + lit(learningRate) * when(
-          col(s"__b${st.featureIdx}") <= st.bin,
-          lit(st.leftValue)).otherwise(lit(st.rightValue))
-      }
       val r = col("__y") - pred
       val cells = src
         .select(r.as("__r"), explode(array((0 until p).map(f =>
@@ -1159,17 +1192,27 @@ object Features {
     // after it), so closing again would duplicate the last entry and
     // break the sses.length == stumps.length + 1 contract.
     if (stumps.nonEmpty && !stop) {
-      val pred = stumps.foldLeft(lit(f0): Column) { (acc, st) =>
-        acc + lit(learningRate) * when(
-          col(s"__b${st.featureIdx}") <= st.bin,
-          lit(st.leftValue)).otherwise(lit(st.rightValue))
-      }
-      sses += src.agg(sum((col("__y") - pred) * (col("__y") - pred)))
-        .head().getDouble(0)
+      val r = col("__y") - pred
+      sses += src.agg(sum(r * r)).head().getDouble(0)
     }
     Some(GbmModel(f0, learningRate, nBins, mins, spans,
       stumps.toSeq, n, sses.toSeq))
   }
+
+  /** Feature `c`'s equi-width bin under one feature's training geometry,
+    * clamped to [0, nBins − 1] — the one bin arithmetic of fit and serve. */
+  private def gbmBin(c: Column, min: Double, span: Double, nBins: Int): Column =
+    least(lit(nBins - 1), greatest(lit(0),
+      floor((c.cast("double") - lit(min)) / lit(span) * nBins))).cast("int")
+
+  /** ŷ = f₀ + lr·Σ stump contributions, each stump reading the bin column
+    * of its feature. */
+  private def stumpFold(f0: Double, lr: Double, stumps: Iterable[GbmStump],
+                        bin: Int => Column): Column =
+    stumps.foldLeft(lit(f0): Column) { (acc, st) =>
+      acc + lit(lr) * when(bin(st.featureIdx) <= st.bin,
+        lit(st.leftValue)).otherwise(lit(st.rightValue))
+    }
 
   /** Serve a [[GbmModel]]: ŷ = f₀ + lr·Σ stump contributions, with bins
     * recomputed by the model's own geometry — map-only, the exact
@@ -1179,15 +1222,9 @@ object Features {
     require(features.length == model.mins.length,
       s"model has ${model.mins.length} features, got ${features.length}")
     val binOf = features.zipWithIndex.map { case (c, f) =>
-      least(lit(model.nBins - 1), greatest(lit(0),
-        floor((c.cast("double") - lit(model.mins(f))) /
-          lit(model.spans(f)) * model.nBins))).cast("int")
+      gbmBin(c, model.mins(f), model.spans(f), model.nBins)
     }
-    val pred = model.stumps.foldLeft(lit(model.f0): Column) { (acc, st) =>
-      acc + lit(model.learningRate) * when(
-        binOf(st.featureIdx) <= st.bin,
-        lit(st.leftValue)).otherwise(lit(st.rightValue))
-    }
+    val pred = stumpFold(model.f0, model.learningRate, model.stumps, binOf)
     // a NULL feature propagates to a NULL prediction (round 15): greatest()
     // SKIPS nulls, so a missing feature silently binned to 0 and the row
     // got a confidently wrong ŷ — the other model serves
@@ -1197,81 +1234,44 @@ object Features {
       when(anyNull, lit(null).cast("double")).otherwise(pred))
   }
 
-  /** [[GbmModel]] → frame for parquet persistence: one row per stump
-    * (param columns repeated — one relation, no side files). A model
-    * with ZERO stumps (constant target / nothing splittable in round 1)
-    * persists as one `round = -1` sentinel row carrying the model-level
-    * fields — per-stump rows previously meant an empty-stumps model
-    * wrote an EMPTY frame that lost f0/lr/bins/nFit entirely and could
-    * never be served again (round 15). */
-  def gbmModelToFrame(spark: org.apache.spark.sql.SparkSession,
-                      model: GbmModel): DataFrame = {
-    import spark.implicits._
-    val rows =
-      if (model.stumps.isEmpty)
-        Seq((-1, -1, -1, 0.0, 0.0, model.f0, model.learningRate,
-          model.nBins, model.mins.toSeq, model.spans.toSeq, model.nFit,
-          model.sses.toSeq))
-      else model.stumps.zipWithIndex.map { case (st, i) =>
-        (i, st.featureIdx, st.bin, st.leftValue, st.rightValue, model.f0,
-          model.learningRate, model.nBins, model.mins.toSeq,
-          model.spans.toSeq, model.nFit, model.sses.toSeq)
-      }
-    rows.toDF("round", "feature_idx", "bin", "left_val", "right_val", "f0",
-      "lr", "n_bins", "mins", "spans", "n_fit", "sses")
-  }
+  /** [[GbmModel]]'s artifact: one row per stump in round order, the
+    * model-level fields repeated on every row (one relation, no side
+    * files). A model with ZERO stumps (constant target / nothing
+    * splittable in round 1) persists as one `round = -1` sentinel row
+    * carrying the model-level fields — an empty frame would lose
+    * f0/lr/bins/nFit and could never be served again (round 15). */
+  private[graft] val Gbm = new ModelEntry[GbmModel]("GBM",
+    modelColumns("round" -> IntegerType, "feature_idx" -> IntegerType,
+      "bin" -> IntegerType, "left_val" -> DoubleType,
+      "right_val" -> DoubleType, "f0" -> DoubleType, "lr" -> DoubleType,
+      "n_bins" -> IntegerType, "mins" -> DoubleSeq, "spans" -> DoubleSeq,
+      "n_fit" -> LongType, "sses" -> DoubleSeq), parts = true,
+    m => {
+      def row(round: Int, st: GbmStump) = Row(round, st.featureIdx, st.bin,
+        st.leftValue, st.rightValue, m.f0, m.learningRate, m.nBins,
+        m.mins.toSeq, m.spans.toSeq, m.nFit, m.sses)
+      if (m.stumps.isEmpty) Seq(row(-1, GbmStump(-1, -1, 0.0, 0.0)))
+      else m.stumps.zipWithIndex.map { case (st, i) => row(i, st) }
+    },
+    rs => {
+      val h = rs.head
+      GbmModel(h.getDouble(5), h.getDouble(6), h.getInt(7),
+        h.getSeq[Double](8).toArray, h.getSeq[Double](9).toArray,
+        if (rs.length == 1 && h.getInt(0) == -1) Nil
+        else rs.map(r => GbmStump(r.getInt(1), r.getInt(2), r.getDouble(3),
+          r.getDouble(4))),
+        h.getLong(10), h.getSeq[Double](11))
+    },
+    gbmPredict(_, _, _))
 
-  /** Inverse of [[gbmModelToFrame]] — stumps re-ordered by round; the
-    * round = -1 sentinel rebuilds a zero-stump model. */
-  def gbmModelFromFrame(df: DataFrame): GbmModel = {
-    val rows = df.collect().sortBy(_.getAs[Int]("round"))
-    require(rows.nonEmpty, "empty GBM model frame")
-    val h = rows.head
-    val stumps =
-      if (rows.length == 1 && h.getAs[Int]("round") == -1) Nil
-      else rows.toSeq.map(r => GbmStump(r.getAs[Int]("feature_idx"),
-        r.getAs[Int]("bin"), r.getAs[Double]("left_val"),
-        r.getAs[Double]("right_val")))
-    GbmModel(h.getAs[Double]("f0"), h.getAs[Double]("lr"),
-      h.getAs[Int]("n_bins"),
-      h.getAs[scala.collection.Seq[Double]]("mins").toArray,
-      h.getAs[scala.collection.Seq[Double]]("spans").toArray,
-      stumps,
-      h.getAs[Long]("n_fit"),
-      h.getAs[scala.collection.Seq[Double]]("sses").toSeq)
-  }
-
-  /** [[LinearModel]] → one-row frame for parquet persistence (the
-    * pcaModelToFrame / IvfIndex convention: train once, serve the
-    * artifact from storage — the reference's joblib-dump contract). */
-  def linearModelToFrame(spark: org.apache.spark.sql.SparkSession,
-                         model: LinearModel): DataFrame = {
-    import spark.implicits._
-    Seq((model.coef.toSeq, model.nFit)).toDF("coef", "n_fit")
-  }
-
-  /** Inverse of [[linearModelToFrame]]. */
-  def linearModelFromFrame(df: DataFrame): LinearModel = {
-    val r = df.select(col("coef"), col("n_fit")).collect()
-    require(r.length == 1, s"expected one model row, got ${r.length}")
-    LinearModel(r.head.getSeq[Double](0).toArray, r.head.getLong(1))
-  }
-
-  /** [[LogisticModel]] → one-row frame for parquet persistence. */
-  def logisticModelToFrame(spark: org.apache.spark.sql.SparkSession,
-                           model: LogisticModel): DataFrame = {
-    import spark.implicits._
-    Seq((model.coef.toSeq, model.nFit, model.gradNorm, model.iters))
-      .toDF("coef", "n_fit", "grad_norm", "iters")
-  }
-
-  /** Inverse of [[logisticModelToFrame]]. */
-  def logisticModelFromFrame(df: DataFrame): LogisticModel = {
-    val r = df.select(col("coef"), col("n_fit"), col("grad_norm"),
-      col("iters")).collect()
-    require(r.length == 1, s"expected one model row, got ${r.length}")
-    LogisticModel(r.head.getSeq[Double](0).toArray, r.head.getLong(1),
-      r.head.getDouble(2), r.head.getInt(3))
+  /** β₀ + Σ βᵢ·x(fᵢ) over intercept-first coefficients, coefficients as
+    * plan literals; `x` is each predict's own feature cast. */
+  private def interceptFirst(coef: Array[Double], features: Seq[Column],
+                             x: Column => Column): Column = {
+    require(features.length + 1 == coef.length,
+      s"model has ${coef.length - 1} features, got ${features.length}")
+    features.zipWithIndex.map { case (c, i) => lit(coef(i + 1)) * x(c) }
+      .foldLeft(lit(coef(0)))(_ + _)
   }
 
   /** Serve a [[LogisticModel]]: P(y=1 | x) = σ(β₀ + Σ βᵢ·xᵢ), map-only
@@ -1279,13 +1279,18 @@ object Features {
   def logisticPredict(df: DataFrame, model: LogisticModel,
                       features: Seq[Column],
                       outCol: String = "probability"): DataFrame = {
-    require(features.length + 1 == model.coef.length,
-      s"model has ${model.coef.length - 1} features, got ${features.length}")
-    val eta = features.zipWithIndex
-      .map { case (c, i) => lit(model.coef(i + 1)) * c.cast("double") }
-      .foldLeft(lit(model.coef(0)))(_ + _)
+    val eta = interceptFirst(model.coef, features, _.cast("double"))
     df.withColumn(outCol, lit(1.0) / (lit(1.0) + exp(-eta)))
   }
+
+  /** [[LogisticModel]]'s artifact: one row. */
+  private[graft] val Logistic = new ModelEntry[LogisticModel]("logistic",
+    modelColumns("coef" -> DoubleSeq, "n_fit" -> LongType,
+      "grad_norm" -> DoubleType, "iters" -> IntegerType), parts = false,
+    m => Seq(Row(m.coef.toSeq, m.nFit, m.gradNorm, m.iters)),
+    { case Seq(r) => LogisticModel(r.getSeq[Double](0).toArray, r.getLong(1),
+      r.getDouble(2), r.getInt(3)) },
+    logisticPredict(_, _, _))
 
   /** Serve a [[LinearModel]]: prediction = β₀ + Σ βᵢ·xᵢ with the
     * coefficients riding the plan as literals — map-only, scan speed at
@@ -1294,14 +1299,16 @@ object Features {
     * invariant holds only against the snapped design matrix). */
   def linearPredict(df: DataFrame, model: LinearModel,
                     features: Seq[Column],
-                    outCol: String = "prediction"): DataFrame = {
-    require(features.length + 1 == model.coef.length,
-      s"model has ${model.coef.length - 1} features, got ${features.length}")
-    val terms = features.zipWithIndex.map { case (c, i) =>
-      lit(model.coef(i + 1)) * c.cast("decimal(17,6)").cast("double")
-    }
-    df.withColumn(outCol, terms.foldLeft(lit(model.coef(0)))(_ + _))
-  }
+                    outCol: String = "prediction"): DataFrame =
+    df.withColumn(outCol, interceptFirst(model.coef, features,
+      _.cast("decimal(17,6)").cast("double")))
+
+  /** [[LinearModel]]'s artifact: one row. */
+  private[graft] val Linear = new ModelEntry[LinearModel]("linear",
+    modelColumns("coef" -> DoubleSeq, "n_fit" -> LongType), parts = false,
+    m => Seq(Row(m.coef.toSeq, m.nFit)),
+    { case Seq(r) => LinearModel(r.getSeq[Double](0).toArray, r.getLong(1)) },
+    linearPredict(_, _, _))
 
   /** A trained minibatch-SGD linear model: intercept-first
     * coefficients, fit size, the FULL-TRAIN MSE ledger (entry 0 = the
@@ -1373,70 +1380,76 @@ object Features {
       s"bad hyperparameters: epochs=$epochs lr0=$lr0 " +
         s"batchMilli=$batchMilli nHalvings=$nHalvings")
     val p = features.length
-    val domain = lit(1e11)
-    val guard = features.map(c => c.isNotNull && abs(c) < domain)
-      .reduce(_ && _) && target.isNotNull && abs(target) < domain
-    val src = df.filter(guard)
-      .select((features.map(_.cast("double")) :+
-        target.cast("double").as("__y"))
-        .zipWithIndex.map { case (c, i) =>
-          if (i < p) c.as(s"__z$i") else c
-        }: _*)
-      .withColumn("__h",
-        xxhash64(((0 until p).map(i => col(s"__z$i")) :+ col("__y")): _*))
-      .localCheckpoint(eager = false) // one computed copy feeds every pass
-    val z: IndexedSeq[Column] = lit(1.0) +: (0 until p).map(i => col(s"__z$i"))
-    def lossOf(beta: Array[Double]): Column = {
-      val pred = z.zipWithIndex.map { case (c, i) => c * lit(beta(i)) }
-        .reduce(_ + _)
-      sum((pred - col("__y")) * (pred - col("__y")))
-    }
+    val (src, z) = designFrame(df, features,
+      Seq(target.isNotNull, abs(target) < lit(1e11)), target.cast("double"),
+      hashed = true)
+    def residual(beta: Array[Double]): Column =
+      z.zipWithIndex.map { case (c, i) => c * lit(beta(i)) }.reduce(_ + _) -
+        col("__y")
     // init: β = [ȳ, 0…]; ledger(0) = the mean model's MSE, computed by
     // the SAME loss expression every later entry uses
     val init = src.agg(count(lit(1)).as("n"), sum(col("__y")).as("sy")).head()
     val n = init.getAs[Long]("n")
     if (n == 0L) return None
-    var beta = new Array[Double](p + 1)
-    beta(0) = init.getAs[Double]("sy") / n
-    var lastLoss = src.agg(lossOf(beta).as("l")).head().getDouble(0) / n
+    val beta0 = new Array[Double](p + 1)
+    beta0(0) = init.getAs[Double]("sy") / n
+    val (beta, ledger, accepted) = sgdDescend(src, n, beta0,
+      b => { val r = residual(b); sum(r * r) },
+      b => { val r = residual(b); z.map(zi => sum(r * zi)) }, gradScale = 2.0,
+      epochs, lr0, batchMilli, nHalvings, seed)
+    Some(SgdModel(beta, n, ledger, epochs, accepted))
+  }
+
+  /** The epoch loop of [[sgdLinearFit]] and [[sgdSoftmaxFit]] over a
+    * hashed [[designFrame]] of `n` rows, from `beta0`. Each epoch sums
+    * the `gradient` columns of β over its minibatch (the [[sgdGate]]
+    * membership read off `__h`; gᵢ = gradScale·sumᵢ/|b|), then prices
+    * every backtracking candidate β − (lr₀/2ᵏ)·g, k < nHalvings, by its
+    * full-train `loss` in ONE scan, and accepts the largest step whose
+    * mean loss does not exceed the ledger tail. An empty minibatch or a
+    * worsening epoch is a no-op that repeats the tail, so the ledger —
+    * entry 0 the loss of `beta0` — is monotone non-increasing by
+    * construction. Returns (β, ledger, accepted steps). */
+  private def sgdDescend(src: DataFrame, n: Long, beta0: Array[Double],
+                         loss: Array[Double] => Column,
+                         gradient: Array[Double] => Seq[Column],
+                         gradScale: Double, epochs: Int, lr0: Double,
+                         batchMilli: Int, nHalvings: Int,
+                         seed: Long): (Array[Double], Seq[Double], Int) = {
+    var beta = beta0
+    var lastLoss = src.agg(loss(beta).as("l")).head().getDouble(0) / n
     val ledger = scala.collection.mutable.ArrayBuffer(lastLoss)
     var accepted = 0
-    var epoch = 0
-    while (epoch < epochs) {
+    for (epoch <- 0 until epochs) {
       val gate = pmod(xxhash64(col("__h"), lit(seed + epoch)), lit(1000L)) <
         lit(batchMilli.toLong)
-      val pred = z.zipWithIndex.map { case (c, i) => c * lit(beta(i)) }
-        .reduce(_ + _)
-      val gAggs = (0 to p).map(i =>
-        sum((pred - col("__y")) * z(i)).as(s"g_$i")) :+
-        count(lit(1)).as("nb")
+      val gAggs = gradient(beta).zipWithIndex.map { case (g, i) =>
+        g.as(s"g_$i") } :+ count(lit(1)).as("nb")
       val gRow = src.filter(gate).agg(gAggs.head, gAggs.tail: _*).head()
       val nb = gRow.getAs[Long]("nb")
       if (nb > 0L) {
-        val grad = Array.tabulate(p + 1)(i =>
-          2.0 * gRow.getAs[Double](s"g_$i") / nb)
+        val grad = Array.tabulate(beta.length)(i =>
+          gradScale * gRow.getDouble(i) / nb)
         val candidates = Array.tabulate(nHalvings) { k =>
           val lr = lr0 / (1L << k)
-          Array.tabulate(p + 1)(i => beta(i) - lr * grad(i))
+          Array.tabulate(beta.length)(i => beta(i) - lr * grad(i))
         }
         val lAggs = candidates.zipWithIndex.map { case (b, k) =>
-          lossOf(b).as(s"l_$k")
+          loss(b).as(s"l_$k")
         }
         val lRow = src.agg(lAggs.head, lAggs.tail.toIndexedSeq: _*).head()
-        val hit = (0 until nHalvings).find { k =>
-          val l = lRow.getAs[Double](s"l_$k") / n
+        (0 until nHalvings).find { k =>
+          val l = lRow.getDouble(k) / n
           !l.isNaN && l <= lastLoss
-        }
-        hit.foreach { k =>
+        }.foreach { k =>
           beta = candidates(k)
-          lastLoss = lRow.getAs[Double](s"l_$k") / n
+          lastLoss = lRow.getDouble(k) / n
           accepted += 1
         }
       }
       ledger += lastLoss // a rejected/empty epoch repeats the tail
-      epoch += 1
     }
-    Some(SgdModel(beta, n, ledger.toSeq, epochs, accepted))
+    (beta, ledger.toSeq, accepted)
   }
 
   /** Serve an [[SgdModel]]: prediction = β₀ + Σ βᵢ·xᵢ with the
@@ -1445,32 +1458,20 @@ object Features {
     * ledger is defined over raw doubles, and serve must reproduce the
     * fit arithmetic for the serve-consistency invariant to hold. */
   def sgdPredict(df: DataFrame, model: SgdModel, features: Seq[Column],
-                 outCol: String = "prediction"): DataFrame = {
-    require(features.length + 1 == model.coef.length,
-      s"model has ${model.coef.length - 1} features, got ${features.length}")
-    val terms = features.zipWithIndex.map { case (c, i) =>
-      lit(model.coef(i + 1)) * c.cast("double")
-    }
-    df.withColumn(outCol, terms.foldLeft(lit(model.coef(0)))(_ + _))
-  }
+                 outCol: String = "prediction"): DataFrame =
+    df.withColumn(outCol,
+      interceptFirst(model.coef, features, _.cast("double")))
 
-  /** [[SgdModel]] → one-row frame for parquet persistence. */
-  def sgdModelToFrame(spark: org.apache.spark.sql.SparkSession,
-                      model: SgdModel): DataFrame = {
-    import spark.implicits._
-    Seq((model.coef.toSeq, model.nFit, model.lossLedger, model.epochsRun,
-      model.acceptedSteps))
-      .toDF("coef", "n_fit", "loss_ledger", "epochs_run", "accepted_steps")
-  }
-
-  /** Inverse of [[sgdModelToFrame]]. */
-  def sgdModelFromFrame(df: DataFrame): SgdModel = {
-    val r = df.select(col("coef"), col("n_fit"), col("loss_ledger"),
-      col("epochs_run"), col("accepted_steps")).collect()
-    require(r.length == 1, s"expected one model row, got ${r.length}")
-    SgdModel(r.head.getSeq[Double](0).toArray, r.head.getLong(1),
-      r.head.getSeq[Double](2).toSeq, r.head.getInt(3), r.head.getInt(4))
-  }
+  /** [[SgdModel]]'s artifact: one row. */
+  private[graft] val Sgd = new ModelEntry[SgdModel]("SGD",
+    modelColumns("coef" -> DoubleSeq, "n_fit" -> LongType,
+      "loss_ledger" -> DoubleSeq, "epochs_run" -> IntegerType,
+      "accepted_steps" -> IntegerType), parts = false,
+    m => Seq(Row(m.coef.toSeq, m.nFit, m.lossLedger, m.epochsRun,
+      m.acceptedSteps)),
+    { case Seq(r) => SgdModel(r.getSeq[Double](0).toArray, r.getLong(1),
+      r.getSeq[Double](2), r.getInt(3), r.getInt(4)) },
+    sgdPredict(_, _, _))
 
   /** A trained softmax (multinomial logistic) SGD model: classes in
     * lexicographic order, row-major K×(p+1) coefficients (class k's
@@ -1513,19 +1514,8 @@ object Features {
       batchMilli >= 1 && batchMilli <= 1000 && maxClasses >= 2,
       s"bad hyperparameters: epochs=$epochs lr0=$lr0 " +
         s"batchMilli=$batchMilli nHalvings=$nHalvings maxClasses=$maxClasses")
-    val p = features.length
-    val domain = lit(1e11)
-    val guard = features.map(c => c.isNotNull && abs(c) < domain)
-      .reduce(_ && _) && label.isNotNull
-    val src = df.filter(guard)
-      .select((features.map(_.cast("double")) :+
-        label.cast("string").as("__y"))
-        .zipWithIndex.map { case (c, i) =>
-          if (i < p) c.as(s"__z$i") else c
-        }: _*)
-      .withColumn("__h",
-        xxhash64(((0 until p).map(i => col(s"__z$i")) :+ col("__y")): _*))
-      .localCheckpoint(eager = false)
+    val (src, z) = designFrame(df, features, Seq(label.isNotNull),
+      label.cast("string"), hashed = true)
     // bounded class domain + priors in one pass
     val classRows = src.groupBy(col("__y")).agg(count(lit(1)).as("n"))
       .orderBy(col("__y")).collect()
@@ -1543,16 +1533,10 @@ object Features {
       s"softmax needs at least 2 distinct label classes, got $k " +
         s"('${classes.headOption.getOrElse("")}')")
     val n = counts.sum
-    val z: IndexedSeq[Column] = lit(1.0) +: (0 until p).map(i => col(s"__z$i"))
-    def logits(beta: Array[Double]): IndexedSeq[Column] =
-      (0 until k).map { c =>
-        z.zipWithIndex.map { case (x, j) => x * lit(beta(c * (p + 1) + j)) }
-          .reduce(_ + _)
-      }
     // numerically-stable mean cross-entropy: Σ_rows [m + ln Σ exp(z_c−m)
     // − z_y] with m = max_c z_c
     def lossOf(beta: Array[Double]): Column = {
-      val ls = logits(beta)
+      val ls = softmaxLogits(z, beta, k)
       val m = greatest(ls: _*)
       val lse = log(ls.map(c => exp(c - m)).reduce(_ + _)) + m
       // exactly one class matches (__y drawn from the collected domain)
@@ -1561,52 +1545,33 @@ object Features {
       }
       sum(lse - zy)
     }
-    var beta = new Array[Double](k * (p + 1))
-    for (c <- 0 until k) beta(c * (p + 1)) = math.log(counts(c).toDouble / n)
-    var lastLoss = src.agg(lossOf(beta).as("l")).head().getDouble(0) / n
-    val ledger = scala.collection.mutable.ArrayBuffer(lastLoss)
-    var accepted = 0
-    var epoch = 0
-    while (epoch < epochs) {
-      val gate = pmod(xxhash64(col("__h"), lit(seed + epoch)), lit(1000L)) <
-        lit(batchMilli.toLong)
-      val ls = logits(beta)
-      val m = greatest(ls: _*)
-      val exps = ls.map(c => exp(c - m))
-      val denom = exps.reduce(_ + _)
-      val gAggs = (for (c <- 0 until k; j <- 0 to p) yield {
-        val resid = exps(c) / denom -
-          when(col("__y") === classes(c), lit(1.0)).otherwise(lit(0.0))
-        sum(resid * z(j)).as(s"g_${c}_$j")
-      }) :+ count(lit(1)).as("nb")
-      val gRow = src.filter(gate).agg(gAggs.head, gAggs.tail: _*).head()
-      val nb = gRow.getAs[Long]("nb")
-      if (nb > 0L) {
-        val grad = Array.tabulate(k * (p + 1)) { i =>
-          gRow.getAs[Double](s"g_${i / (p + 1)}_${i % (p + 1)}") / nb
-        }
-        val candidates = Array.tabulate(nHalvings) { h =>
-          val lr = lr0 / (1L << h)
-          Array.tabulate(k * (p + 1))(i => beta(i) - lr * grad(i))
-        }
-        val lAggs = candidates.zipWithIndex.map { case (b, h) =>
-          lossOf(b).as(s"l_$h")
-        }
-        val lRow = src.agg(lAggs.head, lAggs.tail.toIndexedSeq: _*).head()
-        val hit = (0 until nHalvings).find { h =>
-          val l = lRow.getAs[Double](s"l_$h") / n
-          !l.isNaN && l <= lastLoss
-        }
-        hit.foreach { h =>
-          beta = candidates(h)
-          lastLoss = lRow.getAs[Double](s"l_$h") / n
-          accepted += 1
-        }
-      }
-      ledger += lastLoss
-      epoch += 1
+    def gradient(beta: Array[Double]): Seq[Column] = {
+      val (exps, denom) = softmaxExps(softmaxLogits(z, beta, k))
+      for (c <- 0 until k; zj <- z) yield sum((exps(c) / denom -
+        when(col("__y") === classes(c), lit(1.0)).otherwise(lit(0.0))) * zj)
     }
-    Some(SoftmaxModel(classes, beta, n, ledger.toSeq, epochs, accepted))
+    val beta0 = new Array[Double](k * z.length)
+    for (c <- 0 until k) beta0(c * z.length) = math.log(counts(c).toDouble / n)
+    val (beta, ledger, accepted) = sgdDescend(src, n, beta0, lossOf, gradient,
+      gradScale = 1.0, epochs, lr0, batchMilli, nHalvings, seed)
+    Some(SoftmaxModel(classes, beta, n, ledger, epochs, accepted))
+  }
+
+  /** Class c's logit z·β_c for c < k, over row-major K×(p+1)
+    * coefficients and the intercept-first design z. */
+  private def softmaxLogits(z: IndexedSeq[Column], coef: Array[Double],
+                            k: Int): IndexedSeq[Column] =
+    (0 until k).map { c =>
+      z.zipWithIndex.map { case (x, j) => x * lit(coef(c * z.length + j)) }
+        .reduce(_ + _)
+    }
+
+  /** exp(z_c − max z) per class and their sum: softmax probabilities
+    * exps(c)/denom whose exp never overflows. */
+  private def softmaxExps(ls: IndexedSeq[Column]): (IndexedSeq[Column], Column) = {
+    val m = greatest(ls: _*)
+    val exps = ls.map(c => exp(c - m))
+    (exps, exps.reduce(_ + _))
   }
 
   /** Serve a [[SoftmaxModel]]: per-class probability columns
@@ -1620,15 +1585,9 @@ object Features {
     require((p + 1) * model.classes.length == model.coef.length,
       s"model expects ${model.coef.length / model.classes.length - 1} " +
         s"features, got $p")
-    val z: IndexedSeq[Column] =
-      lit(1.0) +: features.map(_.cast("double")).toIndexedSeq
-    val ls = model.classes.indices.map { c =>
-      z.zipWithIndex.map { case (x, j) =>
-        x * lit(model.coef(c * (p + 1) + j)) }.reduce(_ + _)
-    }
-    val m = greatest(ls: _*)
-    val exps = ls.map(c => exp(c - m))
-    val denom = exps.reduce(_ + _)
+    val (exps, denom) = softmaxExps(softmaxLogits(
+      lit(1.0) +: features.map(_.cast("double")).toIndexedSeq, model.coef,
+      model.classes.length))
     // probabilities referenced as EXPRESSIONS, never re-resolved through
     // col(s"p_$cls") (round 15): class labels are data — one label with
     // a dot or backtick parsed as a struct access and broke the argmax
@@ -1646,26 +1605,17 @@ object Features {
     withP.withColumn("predicted_class", best)
   }
 
-  /** [[SoftmaxModel]] → one-row frame for parquet persistence. */
-  def softmaxModelToFrame(spark: org.apache.spark.sql.SparkSession,
-                          model: SoftmaxModel): DataFrame = {
-    import spark.implicits._
-    Seq((model.classes, model.coef.toSeq, model.nFit, model.lossLedger,
-      model.epochsRun, model.acceptedSteps))
-      .toDF("classes", "coef", "n_fit", "loss_ledger", "epochs_run",
-        "accepted_steps")
-  }
-
-  /** Inverse of [[softmaxModelToFrame]]. */
-  def softmaxModelFromFrame(df: DataFrame): SoftmaxModel = {
-    val r = df.select(col("classes"), col("coef"), col("n_fit"),
-      col("loss_ledger"), col("epochs_run"), col("accepted_steps"))
-      .collect()
-    require(r.length == 1, s"expected one model row, got ${r.length}")
-    SoftmaxModel(r.head.getSeq[String](0).toSeq,
-      r.head.getSeq[Double](1).toArray, r.head.getLong(2),
-      r.head.getSeq[Double](3).toSeq, r.head.getInt(4), r.head.getInt(5))
-  }
+  /** [[SoftmaxModel]]'s artifact: one row. */
+  private[graft] val Softmax = new ModelEntry[SoftmaxModel]("softmax",
+    modelColumns("classes" -> ArrayType(StringType), "coef" -> DoubleSeq,
+      "n_fit" -> LongType, "loss_ledger" -> DoubleSeq,
+      "epochs_run" -> IntegerType, "accepted_steps" -> IntegerType),
+    parts = false,
+    m => Seq(Row(m.classes, m.coef.toSeq, m.nFit, m.lossLedger, m.epochsRun,
+      m.acceptedSteps)),
+    { case Seq(r) => SoftmaxModel(r.getSeq[String](0), r.getSeq[Double](1).toArray,
+      r.getLong(2), r.getSeq[Double](3), r.getInt(4), r.getInt(5)) },
+    sgdSoftmaxPredict)
 
   /** Per-group Pearson correlation, deterministically: the built-in
     * `corr()` sums doubles in partition order (last-ulp nondeterminism

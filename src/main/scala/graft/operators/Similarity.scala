@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType,
+  IntegerType, StructType}
 
 /** Similarity search over an embedding column (`array<float>`): exact
   * brute-force cosine top-k as the correctness baseline, and a
@@ -1199,8 +1200,8 @@ object Similarity {
 
   /** A fitted PCA basis: per-dim mean, eigenvalues (descending), and the
     * matching unit eigenvectors (`components(c)(dim)`). Parquet-persist
-    * via [[pcaModelToFrame]]/[[pcaModelFromFrame]] (the IvfIndex
-    * convention: fit once on the 100 TB corpus, serve as kilobytes). */
+    * via [[Pca]] (the IvfIndex convention: fit once on the 100 TB
+    * corpus, serve as kilobytes). */
   final case class PcaModel(mean: Array[Double], eigenvalues: Array[Double],
                             components: Array[Array[Double]])
 
@@ -1389,27 +1390,22 @@ object Similarity {
     (Array.tabulate(d)(i => a(i)(i)), v)
   }
 
-  /** [[PcaModel]] → one-row-per-component frame (component_id,
-    * eigenvalue, component, mean) for parquet persistence. */
-  def pcaModelToFrame(spark: org.apache.spark.sql.SparkSession,
-                      model: PcaModel): DataFrame = {
-    import spark.implicits._
-    model.components.indices.map(c =>
-      (c, model.eigenvalues(c), model.components(c).toSeq, model.mean.toSeq))
-      .toDF("component_id", "eigenvalue", "component", "mean")
-  }
-
-  /** Inverse of [[pcaModelToFrame]] — components re-ordered by id. */
-  def pcaModelFromFrame(df: DataFrame): PcaModel = {
-    val rows = df.select(col("component_id"), col("eigenvalue"),
-        col("component"), col("mean"))
-      .collect().sortBy(_.getInt(0))
-    require(rows.nonEmpty, "empty PCA model frame")
-    PcaModel(
-      rows.head.getSeq[Double](3).toArray,
-      rows.map(_.getDouble(1)),
-      rows.map(_.getSeq[Double](2).toArray))
-  }
+  /** [[PcaModel]]'s artifact: one row per component (component_id,
+    * eigenvalue, component, mean). Its predict is [[pcaProject]] of the
+    * `embedding` column, so it takes no feature columns. */
+  private[graft] val Pca = new Features.ModelEntry[PcaModel]("PCA",
+    Features.modelColumns("component_id" -> IntegerType,
+      "eigenvalue" -> DoubleType, "component" -> Features.DoubleSeq,
+      "mean" -> Features.DoubleSeq), parts = true,
+    m => m.components.indices.map(c =>
+      Row(c, m.eigenvalues(c), m.components(c).toSeq, m.mean.toSeq)),
+    rs => PcaModel(rs.head.getSeq[Double](3).toArray,
+      rs.map(_.getDouble(1)).toArray, rs.map(_.getSeq[Double](2).toArray).toArray),
+    (df, m, features) => {
+      require(features.isEmpty,
+        "PCA projects the `embedding` column: pass no feature columns")
+      pcaProject(df, m)
+    })
 
   /** Project (and optionally whiten) the `embedding` column onto a fitted
     * basis: out[c] = ⟨x − μ, v_c⟩ (· λ_c^−½ when whitening — unit variance

@@ -935,8 +935,8 @@ object FeatureQueries {
         // the artifact contract: persist, reload, serve through the
         // RELOADED model — a lossy round-trip would break normal_ok
         val rtDir = Scratch.dir("a22-model")
-        Features.linearModelToFrame(s, fit).write.parquet(rtDir)
-        val ols = Features.linearModelFromFrame(s.read.parquet(rtDir))
+        Features.Linear.toFrame(s, fit).write.parquet(rtDir)
+        val ols = Features.Linear.fromFrame(s.read.parquet(rtDir))
         val rtOk = ols.coef.sameElements(fit.coef) && ols.nFit == fit.nFit
         def zd(c: org.apache.spark.sql.Column) =
           c.cast("decimal(17,6)").cast("double")
@@ -1007,8 +1007,8 @@ object FeatureQueries {
           maxIters = 15).get
         // artifact contract: serve through the persisted + reloaded model
         val rtDir = Scratch.dir("a23-model")
-        Features.logisticModelToFrame(s, fit).write.parquet(rtDir)
-        val model = Features.logisticModelFromFrame(s.read.parquet(rtDir))
+        Features.Logistic.toFrame(s, fit).write.parquet(rtDir)
+        val model = Features.Logistic.fromFrame(s.read.parquet(rtDir))
         val rtOk = model.coef.sameElements(fit.coef) &&
           model.nFit == fit.nFit && model.gradNorm == fit.gradNorm
         val guarded = e.filter(f1.isNotNull && abs(f1) < lit(1e11) &&
@@ -1067,8 +1067,8 @@ object FeatureQueries {
         val monotone = model.sses.sliding(2).forall(p =>
           p.length < 2 || p(1) <= p(0) + 1e-9)
         val rtDir = Scratch.dir("a24-model")
-        Features.gbmModelToFrame(s, model).write.parquet(rtDir)
-        val rt = Features.gbmModelFromFrame(s.read.parquet(rtDir))
+        Features.Gbm.toFrame(s, model).write.parquet(rtDir)
+        val rt = Features.Gbm.fromFrame(s.read.parquet(rtDir))
         val guard = (fs :+ col("value"))
           .map(c => c.isNotNull && abs(c) < lit(1e11)).reduce(_ && _)
         Features.gbmPredict(feat.filter(guard), rt, fs)
@@ -1134,8 +1134,8 @@ object FeatureQueries {
         val monotone = fit.lossLedger.sliding(2).forall(p =>
           p.length < 2 || p(1) <= p(0) + 1e-12)
         val rtDir = Scratch.dir("a40-model")
-        Features.sgdModelToFrame(s, fit).write.parquet(rtDir)
-        val rt = Features.sgdModelFromFrame(s.read.parquet(rtDir))
+        Features.Sgd.toFrame(s, fit).write.parquet(rtDir)
+        val rt = Features.Sgd.fromFrame(s.read.parquet(rtDir))
         val rtOk = rt.coef.sameElements(fit.coef) && rt.nFit == fit.nFit &&
           rt.lossLedger == fit.lossLedger &&
           rt.acceptedSteps == fit.acceptedSteps
@@ -1192,8 +1192,8 @@ object FeatureQueries {
         val monotone = fit.lossLedger.sliding(2).forall(p =>
           p.length < 2 || p(1) <= p(0) + 1e-12)
         val rtDir = Scratch.dir("a41-model")
-        Features.softmaxModelToFrame(s, fit).write.parquet(rtDir)
-        val rt = Features.softmaxModelFromFrame(s.read.parquet(rtDir))
+        Features.Softmax.toFrame(s, fit).write.parquet(rtDir)
+        val rt = Features.Softmax.fromFrame(s.read.parquet(rtDir))
         val rtOk = rt.classes == fit.classes &&
           rt.coef.sameElements(fit.coef) &&
           rt.lossLedger == fit.lossLedger

@@ -5,15 +5,18 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Features
+import graft.operators.Features.ModelEntry
 
 /** Streaming model serve — the inference topology for the trained
-  * regression/classifier artifacts (§2i × the model surface), mirroring
+  * model artifacts (§2i × the model surface), mirroring
   * [[StreamingSimilarity.runIvfServe]]: the model is fitted ONCE in
-  * batch and persisted as a parquet frame (the reference's joblib-dump
+  * batch and persisted as a parquet frame by its
+  * [[graft.operators.Features.ModelEntry]] (the reference's joblib-dump
   * contract, fastapi model/ML Pipeline/train.py:555-567 — retrain
   * republishes wholesale), then an unbounded FEATURE stream is scored
-  * per micro-batch by the IDENTICAL batch predict operator inside
-  * foreachBatch.
+  * per micro-batch by the entry's batch predict inside foreachBatch —
+  * the batch operator run on every micro-batch, one [[runModelServe]]
+  * for every model.
   *
   * Scale shape: the artifact is model-sized (p+1 coefficients, or
   * nRounds stumps), loaded on the driver once at stream start and
@@ -45,67 +48,20 @@ object StreamingModelServe {
       BoundedStream.skipEmpty(
         BoundedStream.parquetSink(outDir, Some(runId), (b, _) => score(b))))
 
-  /** Serve a parquet-persisted [[Features.LinearModel]]
-    * ([[Features.linearModelToFrame]] layout at `modelDir`) over a
-    * feature stream via [[Features.linearPredict]]. */
-  def runLinearServe(spark: SparkSession, featureStream: DataFrame,
-                     modelDir: String, features: Seq[String],
-                     outDir: String, checkpointDir: String, runId: String,
-                     outCol: String = "prediction"): StreamingQuery = {
-    val model = Features.linearModelFromFrame(spark.read.parquet(modelDir))
-    runServe(featureStream,
-      b => Features.linearPredict(b, model, features.map(col), outCol),
-      outDir, checkpointDir, runId)
-  }
-
-  /** Serve a parquet-persisted [[Features.LogisticModel]] over a feature
-    * stream via [[Features.logisticPredict]] — P(y=1|x) per row. */
-  def runLogisticServe(spark: SparkSession, featureStream: DataFrame,
-                       modelDir: String, features: Seq[String],
-                       outDir: String, checkpointDir: String, runId: String,
-                       outCol: String = "probability"): StreamingQuery = {
-    val model = Features.logisticModelFromFrame(spark.read.parquet(modelDir))
-    runServe(featureStream,
-      b => Features.logisticPredict(b, model, features.map(col), outCol),
-      outDir, checkpointDir, runId)
-  }
-
-  /** Serve a parquet-persisted [[Features.SgdModel]] (the round-12
-    * gradient-trained linear family) over a feature stream via
-    * [[Features.sgdPredict]] — raw-double fold, the fit's arithmetic. */
-  def runSgdServe(spark: SparkSession, featureStream: DataFrame,
-                  modelDir: String, features: Seq[String],
-                  outDir: String, checkpointDir: String, runId: String,
-                  outCol: String = "prediction"): StreamingQuery = {
-    val model = Features.sgdModelFromFrame(spark.read.parquet(modelDir))
-    runServe(featureStream,
-      b => Features.sgdPredict(b, model, features.map(col), outCol),
-      outDir, checkpointDir, runId)
-  }
-
-  /** Serve a parquet-persisted [[Features.SoftmaxModel]] over a feature
-    * stream via [[Features.sgdSoftmaxPredict]] — per-class probability
-    * columns plus the deterministic argmax class per row. */
-  def runSoftmaxServe(spark: SparkSession, featureStream: DataFrame,
-                      modelDir: String, features: Seq[String],
-                      outDir: String, checkpointDir: String,
-                      runId: String): StreamingQuery = {
-    val model = Features.softmaxModelFromFrame(spark.read.parquet(modelDir))
-    runServe(featureStream,
-      b => Features.sgdSoftmaxPredict(b, model, features.map(col)),
-      outDir, checkpointDir, runId)
-  }
-
-  /** Serve a parquet-persisted [[Features.GbmModel]] over a feature
-    * stream via [[Features.gbmPredict]] — the boosted-stump fold as plan
-    * literals, one `when` chain per round. */
-  def runGbmServe(spark: SparkSession, featureStream: DataFrame,
-                  modelDir: String, features: Seq[String],
-                  outDir: String, checkpointDir: String, runId: String,
-                  outCol: String = "prediction"): StreamingQuery = {
-    val model = Features.gbmModelFromFrame(spark.read.parquet(modelDir))
-    runServe(featureStream,
-      b => Features.gbmPredict(b, model, features.map(col), outCol),
+  /** Serve the model `entry` persisted at `modelDir` over a feature
+    * stream: the model loads once, and every micro-batch is scored by
+    * the entry's batch predict over the `features` columns (the
+    * predict's own output columns: `prediction` for the regressors,
+    * `probability` for logistic, `p_<class>` and `predicted_class` for
+    * softmax). */
+  private[graft] def runModelServe[M](spark: SparkSession,
+                                      featureStream: DataFrame,
+                                      modelDir: String, features: Seq[String],
+                                      outDir: String, checkpointDir: String,
+                                      runId: String,
+                                      entry: ModelEntry[M]): StreamingQuery = {
+    val model = entry.fromFrame(spark.read.parquet(modelDir))
+    runServe(featureStream, b => entry.predict(b, model, features.map(col)),
       outDir, checkpointDir, runId)
   }
 

@@ -723,8 +723,8 @@ class FeaturesSpec extends SparkSpecBase {
     // serve through the persisted + reloaded model: SSE equals the
     // ledger's final entry
     val dir = java.nio.file.Files.createTempDirectory("graft_gbm").toString
-    Features.gbmModelToFrame(spark, m).write.parquet(s"$dir/model")
-    val rt = Features.gbmModelFromFrame(spark.read.parquet(s"$dir/model"))
+    Features.Gbm.toFrame(spark, m).write.parquet(s"$dir/model")
+    val rt = Features.Gbm.fromFrame(spark.read.parquet(s"$dir/model"))
     val sse = Features.gbmPredict(df, rt, Seq(col("x1"), col("x2")))
       .agg(sum(pow(col("y") - col("prediction"), 2))).head.getDouble(0)
     assert(math.abs(sse - m.sses.last) < 1e-6 * (1.0 + m.sses.last))
@@ -1181,8 +1181,8 @@ class FeaturesSpec extends SparkSpecBase {
     assert(cm.stumps.isEmpty)
     val rtDir = java.nio.file.Files
       .createTempDirectory("graft_gbm0").toString + "/m"
-    Features.gbmModelToFrame(spark, cm).write.parquet(rtDir)
-    val back = Features.gbmModelFromFrame(spark.read.parquet(rtDir))
+    Features.Gbm.toFrame(spark, cm).write.parquet(rtDir)
+    val back = Features.Gbm.fromFrame(spark.read.parquet(rtDir))
     assert(back.stumps.isEmpty && back.f0 === cm.f0 &&
       back.nFit === cm.nFit && back.sses === cm.sses)
     // null feature -> null prediction (not silently binned to 0)

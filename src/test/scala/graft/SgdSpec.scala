@@ -111,8 +111,8 @@ class SgdSpec extends SparkSpecBase {
     assert(math.abs(served - model.lossLedger.last) <=
       1e-9 * (served + 1.0))
     // roundtrip
-    val rt = Features.sgdModelFromFrame(
-      Features.sgdModelToFrame(spark, model))
+    val rt = Features.Sgd.fromFrame(
+      Features.Sgd.toFrame(spark, model))
     assert(rt.coef.sameElements(model.coef) && rt.nFit === model.nFit &&
       rt.lossLedger === model.lossLedger &&
       rt.epochsRun === model.epochsRun &&
@@ -174,8 +174,8 @@ class SgdSpec extends SparkSpecBase {
     assert(chk.getDouble(2) < 1e-9)
     assert(chk.getDouble(3) > 0.5, s"accuracy ${chk.getDouble(3)}")
     // roundtrip
-    val rt = Features.softmaxModelFromFrame(
-      Features.softmaxModelToFrame(spark, model))
+    val rt = Features.Softmax.fromFrame(
+      Features.Softmax.toFrame(spark, model))
     assert(rt.classes === model.classes &&
       rt.coef.sameElements(model.coef) &&
       rt.lossLedger === model.lossLedger)

@@ -52,18 +52,19 @@ class StreamingModelServeSpec extends SparkSpecBase {
     writeJsonBatches(df, s"$base/feed")
 
     val model = Features.linearFit(df, Seq(col("x1"), col("x2")), col("y")).get
-    Features.linearModelToFrame(spark, model).write.parquet(s"$base/model")
+    Features.Linear.toFrame(spark, model).write.parquet(s"$base/model")
 
-    val q = graft.streaming.StreamingModelServe.runLinearServe(
+    val q = graft.streaming.StreamingModelServe.runModelServe(
       spark, stream(s"$base/feed"), s"$base/model", Seq("x1", "x2"),
-      outDir = s"$base/out", checkpointDir = s"$base/ckpt", runId = "r1")
+      outDir = s"$base/out", checkpointDir = s"$base/ckpt", runId = "r1",
+      entry = Features.Linear)
     q.awaitTermination(120000)
 
     def scores(d: org.apache.spark.sql.DataFrame) =
       d.select("row_id", "prediction").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val streamed = scores(spark.read.parquet(s"$base/out"))
-    val reloaded = Features.linearModelFromFrame(
+    val reloaded = Features.Linear.fromFrame(
       spark.read.parquet(s"$base/model"))
     val batch = scores(
       Features.linearPredict(df, reloaded, Seq(col("x1"), col("x2"))))
@@ -95,15 +96,16 @@ class StreamingModelServeSpec extends SparkSpecBase {
     // linear SGD
     val lin = Features.sgdLinearFit(df, Seq(col("x1"), col("x2")),
       col("y")).get
-    Features.sgdModelToFrame(spark, lin).write.parquet(s"$base/lin")
-    val q1 = graft.streaming.StreamingModelServe.runSgdServe(
+    Features.Sgd.toFrame(spark, lin).write.parquet(s"$base/lin")
+    val q1 = graft.streaming.StreamingModelServe.runModelServe(
       spark, stream(s"$base/feed"), s"$base/lin", Seq("x1", "x2"),
-      outDir = s"$base/linout", checkpointDir = s"$base/linckpt", runId = "r1")
+      outDir = s"$base/linout", checkpointDir = s"$base/linckpt", runId = "r1",
+      entry = Features.Sgd)
     q1.awaitTermination(120000)
     def scores(d: org.apache.spark.sql.DataFrame) =
       d.select("row_id", "prediction").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val rtLin = Features.sgdModelFromFrame(spark.read.parquet(s"$base/lin"))
+    val rtLin = Features.Sgd.fromFrame(spark.read.parquet(s"$base/lin"))
     assert(scores(spark.read.parquet(s"$base/linout")) ===
       scores(Features.sgdPredict(df, rtLin, Seq(col("x1"), col("x2")))))
 
@@ -127,20 +129,21 @@ class StreamingModelServeSpec extends SparkSpecBase {
       jsonOf(c2.toSeq))
     val sm = Features.sgdSoftmaxFit(cls, Seq(col("x1"), col("x2")),
       col("y"), epochs = 8).get
-    Features.softmaxModelToFrame(spark, sm).write.parquet(s"$base/sm")
+    Features.Softmax.toFrame(spark, sm).write.parquet(s"$base/sm")
     val cstream = spark.readStream
       .schema("row_id LONG, x1 DOUBLE, x2 DOUBLE, y STRING")
       .option("maxFilesPerTrigger", 1).json(s"$base/cfeed")
-    val q2 = graft.streaming.StreamingModelServe.runSoftmaxServe(
+    val q2 = graft.streaming.StreamingModelServe.runModelServe(
       spark, cstream, s"$base/sm", Seq("x1", "x2"),
-      outDir = s"$base/smout", checkpointDir = s"$base/smckpt", runId = "r1")
+      outDir = s"$base/smout", checkpointDir = s"$base/smckpt", runId = "r1",
+      entry = Features.Softmax)
     q2.awaitTermination(120000)
     def preds(d: org.apache.spark.sql.DataFrame) =
       d.select("row_id", "predicted_class", "p_lo", "p_mid", "p_hi")
         .collect().map(r => r.getLong(0) ->
           ((r.getString(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))))
         .toMap
-    val rtSm = Features.softmaxModelFromFrame(spark.read.parquet(s"$base/sm"))
+    val rtSm = Features.Softmax.fromFrame(spark.read.parquet(s"$base/sm"))
     val batchPreds = preds(
       Features.sgdSoftmaxPredict(cls, rtSm, Seq(col("x1"), col("x2"))))
     val streamPreds = preds(spark.read.parquet(s"$base/smout"))
@@ -155,17 +158,18 @@ class StreamingModelServeSpec extends SparkSpecBase {
 
     val model = Features.gbmFit(df, Seq(col("x1"), col("x2")), col("y"),
       rounds = 10, learningRate = 0.3, nBins = 16).get
-    Features.gbmModelToFrame(spark, model).write.parquet(s"$base/model")
+    Features.Gbm.toFrame(spark, model).write.parquet(s"$base/model")
 
-    val q = graft.streaming.StreamingModelServe.runGbmServe(
+    val q = graft.streaming.StreamingModelServe.runModelServe(
       spark, stream(s"$base/feed"), s"$base/model", Seq("x1", "x2"),
-      outDir = s"$base/out", checkpointDir = s"$base/ckpt", runId = "r1")
+      outDir = s"$base/out", checkpointDir = s"$base/ckpt", runId = "r1",
+      entry = Features.Gbm)
     q.awaitTermination(120000)
 
     def scores(d: org.apache.spark.sql.DataFrame) =
       d.select("row_id", "prediction").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val reloaded = Features.gbmModelFromFrame(spark.read.parquet(s"$base/model"))
+    val reloaded = Features.Gbm.fromFrame(spark.read.parquet(s"$base/model"))
     val batch = scores(
       Features.gbmPredict(df, reloaded, Seq(col("x1"), col("x2"))))
     val streamed = scores(spark.read.parquet(s"$base/out"))
@@ -326,17 +330,18 @@ class StreamingModelServeSpec extends SparkSpecBase {
     writeJsonBatches(df, s"$base/feed")
     val model = Features.logisticFit(df, Seq(col("x1"), col("x2")), col("y"),
       maxIters = 15).get
-    Features.logisticModelToFrame(spark, model).write.parquet(s"$base/model")
+    Features.Logistic.toFrame(spark, model).write.parquet(s"$base/model")
 
-    val q = graft.streaming.StreamingModelServe.runLogisticServe(
+    val q = graft.streaming.StreamingModelServe.runModelServe(
       spark, stream(s"$base/feed"), s"$base/model", Seq("x1", "x2"),
-      outDir = s"$base/out", checkpointDir = s"$base/ckpt", runId = "r1")
+      outDir = s"$base/out", checkpointDir = s"$base/ckpt", runId = "r1",
+      entry = Features.Logistic)
     q.awaitTermination(120000)
 
     def probs(d: org.apache.spark.sql.DataFrame) =
       d.select("row_id", "probability").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val reloaded = Features.logisticModelFromFrame(
+    val reloaded = Features.Logistic.fromFrame(
       spark.read.parquet(s"$base/model"))
     val batch = probs(
       Features.logisticPredict(df, reloaded, Seq(col("x1"), col("x2"))))
