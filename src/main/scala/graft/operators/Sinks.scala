@@ -12,33 +12,49 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
   *
   * | ref  | semantics                                   | here |
   * |------|---------------------------------------------|------|
-  * | SNK1 | keyed upsert (ON DUPLICATE KEY UPDATE)      | [[upsertSnapshot]] (versioned merge-on-write) |
+  * | SNK1 | keyed upsert (ON DUPLICATE KEY UPDATE)      | [[upsertSnapshot]] (versioned merge-on-write), [[upsertSnapshotBucketed]] (bucketed merge) |
   * | SNK2 | truncate-and-load                           | [[truncateAndLoad]] (mode=overwrite) |
   * | SNK3 | append if empty else replace (first-run)    | [[appendOrReplace]] (emptiness-gated SaveMode) |
   * | SNK4 | row-count probe                             | [[rowCount]] |
   * | SNK5 | object-store snapshot replace               | [[snapshotReplace]] (partitioned overwrite) |
+  * | SNK10 | CDC changelog apply (I/U/D)                | [[applyChangesSnapshot]] (versioned), [[applyChangesBucketed]] (bucketed merge) |
+  *
+  * Two persisted layouts, one commit path each:
+  *  - versioned `v=N` directories: every write is [[writeNextVersion]]
+  *    (a version is committed once its `_SUCCESS` marker lands); the
+  *    streaming state artifacts (sketches) publish through the one
+  *    read-merge-publish [[foldSnapshot]];
+  *  - hash-bucketed `__bucket=N` directories: upsert and CDC are two
+  *    merge functions over the one [[mergeBucketed]], whose swap moves the
+  *    old bucket aside, renames the new one in and deletes the stage last,
+  *    so a crashed batch replays to the table it would have built. The
+  *    swap needs directory renames to be atomic (HDFS, local and POSIX
+  *    filesystems; not an object store's copy-and-delete rename).
+  *
+  * Every path resolves its own filesystem (`gs://`, `s3a://`, `hdfs://`
+  * tables work beside a `file:///` default).
   *
   * Scale notes: SNK1 is merge-on-write over immutable snapshots — new
   * version = anti-join(old, batch) ∪ batch, written to `v=N+1` then the
   * pointer advances (what Delta/Iceberg MERGE does with a log instead of
-  * a directory scan). The anti-join shuffles on the key; bucket the
-  * snapshot by the key at scale so only the batch moves. SNK2/SNK5 are
+  * a directory scan). The anti-join shuffles on the key; the bucketed
+  * layout rewrites only the buckets a batch touches. SNK2/SNK5 are
   * plain overwrites — no read-modify-write, embarrassingly parallel.
   */
 object Sinks {
 
-  private def fs(spark: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+  private def fs(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** SNK4 — row count of a parquet table path; 0 when absent
     * (db_connector.py:153-162). */
   def rowCount(spark: SparkSession, path: String): Long =
-    if (!fs(spark).exists(new Path(path))) 0L
+    if (!fs(spark, path).exists(new Path(path))) 0L
     else spark.read.parquet(path).count()
 
   /** SRC5 — existence probe (main.py:96-114). */
   def tableExists(spark: SparkSession, path: String): Boolean =
-    fs(spark).exists(new Path(path))
+    fs(spark, path).exists(new Path(path))
 
   /** SNK2 — truncate-and-load: replace the table contents atomically-ish
     * (db_connector.py:120-150). */
@@ -105,7 +121,7 @@ object Sinks {
     * directory, committed or not, so a retry never collides with a
     * crashed attempt's debris (ErrorIfExists would wedge otherwise). */
   private def listVersions(spark: SparkSession, tableDir: String): Seq[Int] = {
-    val f = fs(spark)
+    val f = fs(spark, tableDir)
     val raw = rawVersions(spark, tableDir)
     val marked = raw.filter(v =>
       f.exists(new Path(s"$tableDir/v=$v/_SUCCESS")))
@@ -152,7 +168,7 @@ object Sinks {
   /** Every v=N directory, committed or not — next-version computation
     * and vacuum need the full set. */
   private def rawVersions(spark: SparkSession, tableDir: String): Seq[Int] = {
-    val f = fs(spark)
+    val f = fs(spark, tableDir)
     val dir = new Path(tableDir)
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).toSeq
@@ -176,7 +192,7 @@ object Sinks {
     // committers) would make every snapshot just written invisible to
     // readers. Fail LOUD at write time — the one moment the mismatch is
     // diagnosable — instead of letting reads quietly see a stale version.
-    if (!fs(spark).exists(new Path(s"$tableDir/v=$next/_SUCCESS")))
+    if (!fs(spark, tableDir).exists(new Path(s"$tableDir/v=$next/_SUCCESS")))
       throw new IllegalStateException(
         s"$tableDir/v=$next was written but carries no _SUCCESS marker — " +
           "the configured output committer does not write success markers " +
@@ -261,163 +277,198 @@ object Sinks {
   /** SNK1 at scale — PARTITION-SCOPED keyed upsert: the snapshot lives
     * hash-bucketed on the upsert key (`__bucket=N/` partition
     * directories), and a batch rewrites ONLY the buckets its keys hash
-    * into, via dynamic partition overwrite. [[upsertSnapshot]] is the
-    * reference-faithful versioned form, but it re-writes the ENTIRE
-    * snapshot per batch — at 100 TB a monthly ~GB batch would rewrite
-    * 100 TB; here the rewrite cost is O(touched buckets) =
-    * O(batch keys), the partition-pruned read matches (only touched
-    * `__bucket=` directories are scanned, IngestSpec pins the file-level
-    * behavior), and untouched buckets' files are never opened. This is
-    * what Delta/Iceberg MERGE does with a transaction log in place of
-    * the directory layout; without the log, per-partition replace is
-    * atomic per bucket, not across buckets — the documented trade vs the
+    * into. [[upsertSnapshot]] is the reference-faithful versioned form,
+    * but it re-writes the ENTIRE snapshot per batch — at 100 TB a monthly
+    * ~GB batch would rewrite 100 TB; here the rewrite cost is O(touched
+    * buckets) = O(batch keys), the partition-pruned read matches (only
+    * touched `__bucket=` directories are scanned, IngestSpec pins the
+    * file-level behavior), and untouched buckets' files are never opened.
+    * This is what Delta/Iceberg MERGE does with a transaction log in
+    * place of the directory layout; without the log, the swap is atomic
+    * per bucket, not across buckets — the documented trade vs the
     * versioned form (readers of OTHER buckets are never disturbed).
-    *
-    * The bucket count is part of the table's layout contract: it is
-    * written to a `_graft_nbuckets` marker on creation and validated on
-    * every later batch — a mismatched `nBuckets` would hash the same key
-    * into a different bucket and silently duplicate it across buckets
-    * (the pack/probe drift hazard, failed loud instead).
     *
     * In-batch duplicates resolve last-write-wins in `orderCol` order and
     * existing rows whose key appears in the batch are replaced —
     * exactly [[Ingest.upsert]]'s contract (`INSERT … ON DUPLICATE KEY
-    * UPDATE`, main.py:175-188). */
+    * UPDATE`, main.py:175-188). Commit protocol: [[mergeBucketed]]. */
   def upsertSnapshotBucketed(spark: SparkSession, tableDir: String,
                              incoming: DataFrame, key: Seq[String],
-                             orderCol: String, nBuckets: Int = 64): Unit = {
+                             orderCol: String, nBuckets: Int = 64): Unit =
+    mergeBucketed(spark, tableDir, incoming, key, nBuckets, feedCols = Nil)(
+      Ingest.upsert(_, _, key, orderCol))
+
+  /** SNK10 at scale — [[applyChanges]] routed through the
+    * [[upsertSnapshotBucketed]] layout: a changelog batch rewrites ONLY
+    * the buckets its keys hash into, DELETE included. The frame-level
+    * [[applyChanges]] is the semantics reference; this is the shape that
+    * survives 100 TB — rewrite cost O(touched buckets) = O(batch keys),
+    * untouched buckets' files never opened (IngestSpec pins that a 1-key
+    * D batch rewrites exactly one bucket). The table stores the data
+    * columns only: the feed's `opCol` and `orderCol` are dropped (matched
+    * by the session resolver), so the layout stays relation-invisible for
+    * [[readBucketedSnapshot]], as the frame-level [[applyChanges]]'s
+    * existing side never carries feed columns. Replaying a batch
+    * converges because the collapse rule is idempotent. Commit protocol:
+    * [[mergeBucketed]]. */
+  def applyChangesBucketed(spark: SparkSession, tableDir: String,
+                           changes: DataFrame, key: Seq[String],
+                           orderCol: String, opCol: String = "op",
+                           nBuckets: Int = 64): Unit =
+    mergeBucketed(spark, tableDir, changes, key, nBuckets,
+      feedCols = Seq(opCol, orderCol))(
+      applyChanges(_, _, key, orderCol, opCol))
+
+  /** The one commit path of the bucketed layout: `merge(existing, batch)`
+    * of the batch (`__bucket` added, `feedCols` kept) against the table's
+    * rows (`__bucket` included, `feedCols` never stored) becomes the new
+    * contents of every bucket the batch touches.
+    *
+    *  - The batch feeds the touched-bucket probe AND the merge: a lazy
+    *    localCheckpoint (the Dedup convention) instead of recomputing the
+    *    incoming pipeline per consumer.
+    *  - Dispatch is on the `_graft_nbuckets` marker, not the directory. The
+    *    bucket count is part of the layout contract: written on creation,
+    *    validated on every later batch (a mismatched count would hash the
+    *    same key into a different bucket and duplicate it). A crash between
+    *    the create write and the marker leaves data without a marker; the
+    *    replay re-creates with Overwrite ([[requireCreatableBucketDir]]
+    *    refuses a foreign directory).
+    *  - Create: an empty batch creates nothing; otherwise the SAME merge
+    *    as every later batch, against an empty table, so in-batch
+    *    duplicates and net-deletes resolve on the first batch too.
+    *    `count()`, not `isEmpty`: the limit-1 read consumes the checkpoint's
+    *    partition partially, so nothing caches and the create write would
+    *    re-read the batch source.
+    *  - Later batches: [[restoreSwap]] undoes a crashed swap,
+    *    [[requireStoredSchema]] rejects a drifted batch, the touched buckets
+    *    are collected (≤ nBuckets driver-side values; an empty batch stops
+    *    here) and read partition-pruned with the table's schema given
+    *    explicitly (the layout contract makes it the batch's data schema,
+    *    so no per-batch schema-inference job), and [[replaceBuckets]]
+    *    writes the merge once into a stage and swaps it in.
+    *  - Every write clusters by bucket: one file per bucket, since every
+    *    later merge re-reads these files.
+    *  - A table whose rows all netted to deletes keeps one empty,
+    *    schema-carrying file in `__bucket=0`, so it stays a readable empty
+    *    table (zero files would fail every later read). */
+  private def mergeBucketed(spark: SparkSession, tableDir: String,
+                            batch: DataFrame, key: Seq[String], nBuckets: Int,
+                            feedCols: Seq[String])(
+      merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     import org.apache.spark.sql.functions._
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    val f = fs(spark)
+    val f = fs(spark, tableDir)
     val marker = new Path(tableDir, "_graft_nbuckets")
-    // batch rows feed the touched-bucket probe AND the merge — lazy
-    // localCheckpoint (the Dedup convention) instead of recomputing the
-    // incoming pipeline per consumer
-    val inc = incoming
+    val inc = batch
       .withColumn("__bucket",
         pmod(xxhash64(key.map(col): _*), lit(nBuckets.toLong)).cast("int"))
       .localCheckpoint(eager = false)
-    if (!f.exists(marker)) {
-      // marker-dispatched create (round 15): a crash between the data
-      // write and the marker create leaves data-without-marker, and the
-      // old dir-dispatched branches threw on every replay; re-creating
-      // with Overwrite repairs that partial state and converges. First
-      // batch goes through the SAME last-write-wins resolution as every
-      // later one (merge against an empty snapshot): a create batch
-      // carrying duplicate keys must not persist duplicate rows, or the
-      // contract below ("in-batch duplicates resolve last-write-wins")
-      // would hold for every batch except the first.
-      // empty first batch: no table yet, nothing to create — the guard
-      // that used to live as a per-batch isEmpty pre-probe in the
-      // streaming runners (round 16) only matters on THIS branch (an
-      // existing table's merge no-ops via the touched-bucket collect).
-      // count(), not isEmpty (round 17): isEmpty's limit-1 read consumes
-      // the lazy checkpoint's partition PARTIALLY, so nothing caches and
-      // the create write re-parsed the whole batch source a second time
-      // (event-log profile: a ~600 ms/task re-read); count consumes the
-      // partitions fully, so the write below reads cached blocks.
-      if (inc.count() == 0L) return
-      requireCreatableBucketDir(f, tableDir)
-      // cluster by bucket: one file per bucket (guide §6 — see
-      // replaceBuckets; every later merge re-reads these files)
-      Ingest.upsert(inc.limit(0), inc, key, orderCol)
-        .repartition(col("__bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-        .parquet(tableDir)
+    val stored = inc.drop(feedCols: _*)
+    val fresh = !f.exists(marker)
+    val merged =
+      if (fresh) {
+        if (inc.count() == 0L) return
+        requireCreatableBucketDir(f, tableDir)
+        val created = merge(stored.limit(0), inc)
+        created.repartition(col("__bucket"))
+          .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
+          .parquet(tableDir)
+        created
+      } else {
+        val in = f.open(marker)
+        val declared = try new String(in.readAllBytes(), "UTF-8").trim.toInt
+          finally in.close()
+        require(declared == nBuckets,
+          s"bucket-count mismatch: table $tableDir was created with " +
+            s"$declared buckets, batch hashed with $nBuckets — the same key " +
+            "would land in a different bucket and duplicate")
+        restoreSwap(f, tableDir)
+        requireStoredSchema(spark, tableDir, batch.drop(feedCols: _*).schema)
+        val touched = inc.select(col("__bucket")).distinct()
+          .collect().map(_.getInt(0)).toSeq
+        if (touched.isEmpty) return
+        val existing = spark.read.schema(stored.schema).parquet(tableDir)
+          .filter(col("__bucket").isin(touched: _*))
+        val swapped = merge(existing, inc)
+        replaceBuckets(f, tableDir, swapped, touched)
+        swapped
+      }
+    // merged.limit(0) plans to an empty local relation: nothing re-reads
+    // the swapped files
+    if (!f.listStatus(new Path(tableDir))
+        .exists(_.getPath.getName.startsWith("__bucket=")))
+      merged.drop("__bucket").limit(0).coalesce(1)
+        .write.mode(SaveMode.Overwrite)
+        .parquet(s"$tableDir/__bucket=0")
+    if (fresh) {
       val out = f.create(marker, true)
       out.write(nBuckets.toString.getBytes("UTF-8")); out.close()
-    } else {
-      val declared = readNBucketsMarker(spark, marker)
-      require(declared == nBuckets,
-        s"bucket-count mismatch: table $tableDir was created with " +
-          s"$declared buckets, batch hashed with $nBuckets — the same key " +
-          "would land in a different bucket and duplicate")
-      requireStoredSchema(spark, tableDir, incoming.schema)
-      // O(touched buckets) ≤ nBuckets driver-side values — corpus-size-
-      // independent, the IVF-seeding budget class
-      val touched = inc.select(col("__bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      if (touched.nonEmpty) {
-        // isin on the partition column → partition-pruned scan of only
-        // the touched bucket directories. Explicit schema (round 17):
-        // the table's schema IS the batch schema by the layout contract
-        // (the create branch wrote exactly these columns, and
-        // requireStoredSchema above rejects a drifted batch), so
-        // per-batch parquet schema inference is a job for nothing on the
-        // streaming hot path.
-        val existingTouched = spark.read.schema(inc.schema)
-          .parquet(tableDir)
-          .filter(col("__bucket").isin(touched: _*))
-        // STAGED single-job write (round 17, guide §2.4 — the streaming
-        // hot path runs this once per micro-batch): merge computes
-        // DIRECTLY into a hidden stage dir under the table (one job),
-        // then the driver swaps each written bucket directory in. The
-        // round-15/16 shape paid an eager localCheckpoint job (merge →
-        // block store) plus a dynamic-partition-overwrite job (blocks →
-        // files) per batch — the checkpoint existed only because a
-        // direct overwrite both reads and replaces tableDir; writing to
-        // the stage path removes the conflict, so the merge rows
-        // materialize exactly once. Atomicity remains PER BUCKET
-        // (documented above and on runToBucketedSnapshot), the same
-        // delete-then-rename window dynamic partition overwrite's
-        // committer has; replaying the batch converges (last-write-wins
-        // absorbs re-merges). Upsert output always carries ≥1 row per
-        // touched bucket (the batch's own rows land there), so every
-        // touched bucket is re-written.
-        replaceBuckets(spark, tableDir,
-          Ingest.upsert(existingTouched, inc, key, orderCol), touched)
-        ()
-      }
     }
   }
 
-  /** Swap `touched` bucket directories of a bucketed snapshot table for
-    * the contents of `merged`, materializing the merge exactly once: one
-    * write job into a hidden `.graft_stage_*` dir under the table
-    * (hidden → invisible to concurrent readers and partition discovery),
-    * then one driver-side delete+rename per written bucket. A touched
-    * bucket ABSENT from the stage netted to zero rows (CDC all-deletes)
-    * and is removed. Stale stage debris from a crashed prior attempt is
-    * GC'd first — the checkpoint replay that re-runs this merge
-    * converges on the same final state. Returns the written bucket ids. */
-  private def replaceBuckets(spark: SparkSession, tableDir: String,
-                             merged: DataFrame,
-                             touched: Seq[Int]): Set[Int] = {
-    val f = fs(spark)
-    f.listStatus(new Path(tableDir)).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith(".graft_stage_"))
-      .foreach(p => f.delete(p, true))
+  /** Swap `touched` bucket directories for the contents of `merged`: one
+    * write job into a hidden `.graft_stage_*` dir under the table (hidden
+    * → invisible to readers and partition discovery), then per written
+    * bucket two driver-side renames — the old bucket aside into the
+    * stage, the new one in — and the stage deleted last. A touched bucket
+    * ABSENT from the stage netted to zero rows (CDC all-deletes) and is
+    * deleted: replaying the batch against the missing bucket nets it to
+    * zero again.
+    *
+    * Crash safety needs atomic directory renames. A crash between the two
+    * renames leaves the bucket's old rows aside in the stage, and
+    * [[restoreSwap]] renames them back before the replayed batch reads the
+    * table; a crash after the new bucket is in leaves a bucket the replay
+    * re-merges idempotently. No rename targets an existing path (a
+    * directory renamed onto a directory lands inside it). */
+  private def replaceBuckets(f: org.apache.hadoop.fs.FileSystem,
+                             tableDir: String, merged: DataFrame,
+                             touched: Seq[Int]): Unit = {
     val stage = new Path(tableDir,
       s".graft_stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    // Cluster by bucket before writing (guide §6 file sizing): without
-    // it every write task opens a parquet writer per bucket value it
-    // sees — the event-log profile showed 17–34 tasks × up to 16 bucket
-    // dirs ≈ hundreds of KB-sized files PER MICRO-BATCH, and the next
-    // batch's merge re-reads all of them (the small-files double cost).
-    // Hash-clustering on __bucket puts each touched bucket in exactly
-    // one task → one file per bucket per merge, and the shuffle moves
-    // only the batch-sized merge output.
+    // Hash-clustering on __bucket puts each touched bucket in exactly one
+    // task → one file per bucket per merge (guide §6 file sizing: without
+    // it every task opened a writer per bucket it saw, hundreds of KB-sized
+    // files per micro-batch that the next merge re-read).
     merged
       .repartition(math.max(1, touched.size),
         org.apache.spark.sql.functions.col("__bucket"))
       .write.mode(SaveMode.ErrorIfExists).partitionBy("__bucket")
       .parquet(stage.toString)
-    val written = f.listStatus(stage).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("__bucket="))
-    written.foreach { src =>
-      val dst = new Path(tableDir, src.getName)
-      f.delete(dst, true)
-      if (!f.rename(src, dst))
-        throw new java.io.IOException(
-          s"failed to swap bucket directory $src -> $dst")
+    val written = f.listStatus(stage).map(_.getPath.getName).toSet
+    touched.map(b => s"__bucket=$b").foreach { name =>
+      val dst = new Path(tableDir, name)
+      if (!written(name)) f.delete(dst, true)
+      else {
+        if (f.exists(dst)) rename(f, dst, new Path(stage, s"aside-$name"))
+        rename(f, new Path(stage, name), dst)
+      }
     }
-    val writtenBuckets = written
-      .map(_.getName.stripPrefix("__bucket=").toInt).toSet
-    touched.filterNot(writtenBuckets.contains).foreach(b =>
-      f.delete(new Path(s"$tableDir/__bucket=$b"), true))
     f.delete(stage, true)
-    writtenBuckets
   }
+
+  /** Undo a crashed [[replaceBuckets]]: every bucket set aside in a stage
+    * whose table bucket is missing is renamed back, then the stage is
+    * deleted. Runs before a batch reads the table. */
+  private def restoreSwap(f: org.apache.hadoop.fs.FileSystem,
+                          tableDir: String): Unit =
+    f.listStatus(new Path(tableDir)).map(_.getPath)
+      .filter(_.getName.startsWith(".graft_stage_"))
+      .foreach { stage =>
+        f.listStatus(stage).map(_.getPath)
+          .filter(_.getName.startsWith("aside-"))
+          .foreach { aside =>
+            val dst = new Path(tableDir, aside.getName.stripPrefix("aside-"))
+            if (!f.exists(dst)) rename(f, aside, dst)
+          }
+        f.delete(stage, true)
+      }
+
+  private def rename(f: org.apache.hadoop.fs.FileSystem, src: Path,
+                     dst: Path): Unit =
+    if (!f.rename(src, dst))
+      throw new java.io.IOException(s"failed to rename $src -> $dst")
 
   /** Current contents of an [[upsertSnapshotBucketed]] table (layout
     * column dropped). The schema comes from one bucket file's footer
@@ -428,14 +479,10 @@ object Sinks {
     spark.read.schema(storedBucketSchema(spark, tableDir)).parquet(tableDir)
       .drop("__bucket")
 
-
-  /** Create-branch safety for the bucketed tables (round 15): dispatch
-    * is on the MARKER, not the directory — a crash between the data
-    * write and the marker create used to wedge the table forever (dir
-    * exists, marker missing, every replay throws). A marker-less dir is
+  /** Create-branch safety for the bucketed tables: a marker-less dir is
     * re-creatable ONLY if it looks like our own partial create (nothing
-    * but __bucket= partitions and _-prefixed job metadata); anything
-    * else is a foreign directory and fails loud as before. */
+    * but __bucket= partitions, _-prefixed job metadata and hidden
+    * stages); anything else is a foreign directory and fails loud. */
   private def requireCreatableBucketDir(f: org.apache.hadoop.fs.FileSystem,
                                         tableDir: String): Unit = {
     val dir = new Path(tableDir)
@@ -493,7 +540,7 @@ object Sinks {
     * contract; an emptied table keeps one empty schema-carrying file). */
   private def storedBucketSchema(spark: SparkSession,
                                  tableDir: String): StructType = {
-    val f = fs(spark)
+    val f = fs(spark, tableDir)
     val conf = spark.sparkContext.hadoopConfiguration
     def visible(p: Path) =
       !p.getName.startsWith("_") && !p.getName.startsWith(".")
@@ -513,111 +560,6 @@ object Sinks {
         .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
           .ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
     } finally reader.close()
-  }
-
-  private def readNBucketsMarker(spark: SparkSession, marker: Path): Int = {
-    val in = fs(spark).open(marker)
-    val buf = new java.io.ByteArrayOutputStream()
-    org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, true)
-    new String(buf.toByteArray, "UTF-8").trim.toInt
-  }
-
-  /** SNK10 at scale — [[applyChanges]] routed through the
-    * [[upsertSnapshotBucketed]] layout: a changelog batch rewrites ONLY
-    * the buckets its keys hash into, DELETE included. The frame-level
-    * [[applyChanges]] is the semantics reference; this is the shape that
-    * survives 100 TB — rewrite cost O(touched buckets) = O(batch keys),
-    * untouched buckets' files never opened (IngestSpec pins that a 1-key
-    * D batch rewrites exactly one bucket).
-    *
-    * Delete wrinkle dynamic-partition overwrite does not cover: a touched
-    * bucket whose rows ALL net to deletes yields no output partition, so
-    * the overwrite would silently leave the stale directory — such
-    * buckets are removed explicitly after the write. Atomicity remains
-    * per bucket (the documented bucketed-layout trade); replaying the
-    * same batch converges because the collapse rule is idempotent. */
-  def applyChangesBucketed(spark: SparkSession, tableDir: String,
-                           changes: DataFrame, key: Seq[String],
-                           orderCol: String, opCol: String = "op",
-                           nBuckets: Int = 64): Unit = {
-    import org.apache.spark.sql.functions._
-    require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    val f = fs(spark)
-    val marker = new Path(tableDir, "_graft_nbuckets")
-    val inc = changes
-      .withColumn("__bucket",
-        pmod(xxhash64(key.map(col): _*), lit(nBuckets.toLong)).cast("int"))
-      .localCheckpoint(eager = false)
-    if (!f.exists(marker)) {
-      // marker-dispatched create (round 15, see upsertSnapshotBucketed):
-      // the SAME collapse as every later batch, against an empty
-      // snapshot — net-deletes drop, I-after-D nets to the insert. BOTH
-      // feed bookkeeping columns (op AND order) are dropped from the
-      // empty existing frame so the snapshot schema carries only data
-      // columns + __bucket, same as the frame-level applyChanges whose
-      // existing side never has feed columns — the bucketed layout stays
-      // relation-invisible for readBucketedSnapshot
-      // empty first batch: nothing to create (see upsertSnapshotBucketed;
-      // count() — not isEmpty — so the checkpoint caches for the write)
-      if (inc.count() == 0L) return
-      requireCreatableBucketDir(f, tableDir)
-      // cluster by bucket: one file per bucket (guide §6 — see
-      // replaceBuckets; every later merge re-reads these files)
-      applyChanges(inc.drop(opCol, orderCol).limit(0), inc, key, orderCol,
-        opCol)
-        .repartition(col("__bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-        .parquet(tableDir)
-      val out = f.create(marker, true)
-      out.write(nBuckets.toString.getBytes("UTF-8")); out.close()
-    } else {
-      val declared = readNBucketsMarker(spark, marker)
-      require(declared == nBuckets,
-        s"bucket-count mismatch: table $tableDir was created with " +
-          s"$declared buckets, batch hashed with $nBuckets — the same key " +
-          "would land in a different bucket and duplicate")
-      val resolver = spark.sessionState.analyzer.resolver
-      def isFeedCol(name: String) =
-        resolver(name, opCol) || resolver(name, orderCol)
-      requireStoredSchema(spark, tableDir,
-        StructType(changes.schema.filterNot(fd => isFeedCol(fd.name))))
-      val touched = inc.select(col("__bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      if (touched.nonEmpty) {
-        // explicit schema from the layout contract (round 17, see
-        // upsertSnapshotBucketed): the snapshot carries the changes'
-        // data columns + __bucket, never the feed bookkeeping columns —
-        // matched by the session's resolver, as the create branch's
-        // drop(opCol, orderCol) and upsertSnapshotEvolving match names
-        val snapSchema =
-          StructType(inc.schema.filterNot(fd => isFeedCol(fd.name)))
-        val existingTouched = spark.read.schema(snapSchema)
-          .parquet(tableDir)
-          .filter(col("__bucket").isin(touched: _*))
-        val merged = applyChanges(existingTouched, inc, key, orderCol, opCol)
-        // STAGED single-job write (round 17, see upsertSnapshotBucketed):
-        // replaces the eager-checkpoint + remaining-bucket collect +
-        // dynamic-overwrite trio (THREE jobs per micro-batch) with ONE
-        // write job — the stage listing IS the remaining-bucket probe (a
-        // bucket netting all-deletes writes no partition dir), and the
-        // per-bucket swap deletes touched-but-absent buckets, the CDC
-        // wrinkle dynamic overwrite could not cover.
-        replaceBuckets(spark, tableDir, merged, touched)
-        // a batch netting EVERY remaining row to D would leave zero
-        // parquet files — the next read of the table (or batch) would
-        // throw "unable to infer schema" forever (round 15). Keep one
-        // empty, schema-carrying file in bucket 0 so an emptied table
-        // stays a readable empty table. (merged.limit(0) plans to an
-        // empty local relation — nothing re-reads the swapped files.)
-        val anyBucketLeft = f.exists(new Path(tableDir)) &&
-          f.listStatus(new Path(tableDir)).exists(
-            _.getPath.getName.startsWith("__bucket="))
-        if (!anyBucketLeft)
-          merged.drop("__bucket").limit(0).coalesce(1)
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$tableDir/__bucket=0")
-      }
-    }
   }
 
   /** Bucketed persistence for co-located joins: the table is written
@@ -649,11 +591,13 @@ object Sinks {
     *
     * Reads the LATEST `v=N`, sizes it from the file listing (driver-side
     * metadata only, O(files)), targets `ceil(totalBytes / targetBytes)`
-    * output files, and rewrites via round-robin repartition into
-    * `v=N+1` — content-identical by construction (repartition moves rows,
-    * never drops), and readers always see a complete version (the
-    * upsertSnapshot atomicity story). Old versions are retained for the
-    * caller's retention policy to reap.
+    * output files, and rewrites via round-robin repartition through
+    * [[writeNextVersion]] — the next version past every directory, so a
+    * crashed attempt's uncommitted debris never wedges a later compaction,
+    * and the `_SUCCESS` check holds. Content-identical by construction
+    * (repartition moves rows, never drops), and readers always see a
+    * complete version (the upsertSnapshot atomicity story). Old versions
+    * are retained for the caller's retention policy to reap.
     *
     * Returns (filesBefore, filesAfter, newVersion). Compaction of an
     * already-compact table still advances the version — idempotent in
@@ -661,20 +605,17 @@ object Sinks {
   def compactSnapshot(spark: SparkSession, tableDir: String,
                       targetBytes: Long): (Int, Int, Int) = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val f = fs(spark)
+    val f = fs(spark, tableDir)
     val versions = listVersions(spark, tableDir)
     require(versions.nonEmpty, s"$tableDir has no v=N snapshot versions")
-    val latest = versions.last
-    val dataFiles = f.listStatus(new Path(s"$tableDir/v=$latest")).toSeq
+    def dataFiles(v: Int) = f.listStatus(new Path(s"$tableDir/v=$v")).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-    val totalBytes = dataFiles.map(_.getLen).sum
+    val before = dataFiles(versions.last)
+    val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(s"$tableDir/v=$latest")
-      .repartition(nOut)
-      .write.mode(SaveMode.ErrorIfExists).parquet(s"$tableDir/v=${latest + 1}")
-    val after = f.listStatus(new Path(s"$tableDir/v=${latest + 1}")).toSeq
-      .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
-    (dataFiles.size, after, latest + 1)
+    val next = writeNextVersion(spark, tableDir,
+      spark.read.parquet(s"$tableDir/v=${versions.last}").repartition(nOut))
+    (before.size, dataFiles(next).size, next)
   }
 
   /** SNK10 — CDC changelog apply: merge an ordered change feed (op column
@@ -757,7 +698,7 @@ object Sinks {
   def vacuumSnapshot(spark: SparkSession, tableDir: String,
                      keepLast: Int): (Seq[Int], Seq[Int]) = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val f = fs(spark)
+    val f = fs(spark, tableDir)
     val versions = listVersions(spark, tableDir)
     require(versions.nonEmpty, s"$tableDir has no v=N snapshot versions")
     val (drop, keep) = versions.splitAt((versions.size - keepLast).max(0))
@@ -785,6 +726,54 @@ object Sinks {
       vacuumSnapshot(spark, tableDir, keepLast)
       ()
     }
+
+  /** The one read-merge-publish of a versioned state artifact (the
+    * streaming sketch sinks): the first publish is `state`, every later
+    * one `merge(current)` over the latest committed version, and the
+    * trail is then bounded by [[vacuumSnapshotIfGrown]] (growth-gated:
+    * one listing per publish on the streaming hot path). A table with no
+    * COMMITTED version — a crashed first publish leaves only debris —
+    * counts as fresh, so the restart converges instead of failing every
+    * replay.
+    *
+    * `ledger = Some((batchId, countCol))` keeps a batch ledger for a merge
+    * that is not idempotent (counter addition): state rows carry
+    * `batch_id = -1`, each publish adds one row with `batch_id = batchId`,
+    * `countCol` 0 and every other column null, `merge` sees the state rows
+    * only, and a batch at or below the ledger's high-water mark is an
+    * exact no-op (batch ids are monotonic and stable across
+    * checkpoint-recovered retries). Without a ledger the merge must be
+    * idempotent by its algebra (HLL union, bloom OR), so a redelivered
+    * batch leaves the artifact's contents unchanged. */
+  private[graft] def foldSnapshot(spark: SparkSession, tableDir: String,
+                                  state: DataFrame, keepLast: Int,
+                                  ledger: Option[(Long, String)] = None)(
+      merge: DataFrame => DataFrame): Unit = {
+    import org.apache.spark.sql.functions.{col, lit, max}
+    def withLedger(df: DataFrame) = ledger.fold(df) { case (id, countCol) =>
+      df.unionByName(spark.range(1).select(state.schema.fields.map { fd =>
+        (fd.name match {
+          case `countCol` => lit(0L)
+          case "batch_id" => lit(id)
+          case _ => lit(null)
+        }).cast(fd.dataType).as(fd.name)
+      }.toSeq: _*))
+    }
+    latestCommittedVersion(spark, tableDir) match {
+      case None => replaceSnapshot(spark, tableDir, withLedger(state))
+      case Some(v) =>
+        val current = spark.read.parquet(s"$tableDir/v=$v")
+        val applied = ledger.exists { case (id, _) =>
+          id <= current.filter(col("batch_id") >= 0)
+            .agg(max(col("batch_id"))).head.getLong(0)
+        }
+        if (applied) return
+        replaceSnapshot(spark, tableDir, withLedger(merge(
+          if (ledger.isEmpty) current
+          else current.filter(col("batch_id") < 0))))
+    }
+    vacuumSnapshotIfGrown(spark, tableDir, keepLast)
+  }
 
   /** Latest snapshot version of an [[upsertSnapshot]] table. */
   def readSnapshot(spark: SparkSession, tableDir: String): DataFrame = {

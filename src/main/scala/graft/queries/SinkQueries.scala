@@ -20,8 +20,8 @@ import graft.operators.{Incremental, Ingest, Scd2, Sinks}
   */
 object SinkQueries {
 
-  private def fs(s: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+  private def fs(s: SparkSession, path: String) =
+    new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
 
   /** Fresh scratch path from the shared [[Scratch]] factory (one root,
     * one nonce, one exit-time cleanup hook for all query modules). The
@@ -31,7 +31,7 @@ object SinkQueries {
   private def scratch(s: SparkSession, name: String): String = {
     val path = Scratch.dir(name)
     val p = new Path(path)
-    if (fs(s).exists(p)) fs(s).delete(p, true)
+    if (fs(s, path).exists(p)) fs(s, path).delete(p, true)
     path
   }
 
@@ -45,7 +45,7 @@ object SinkQueries {
                             dir: String, fileName: String): Unit = {
     val stage = s"$dir/__stage_$fileName"
     df.coalesce(1).write.mode("overwrite").option("header", "false").csv(stage)
-    val f = fs(s)
+    val f = fs(s, stage)
     val part = f.listStatus(new Path(stage)).map(_.getPath)
       .find(_.getName.startsWith("part-"))
       .getOrElse(sys.error(s"no part file under $stage"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
+import graft.operators.{Sinks, Sketches}
+
 /** Streaming analytics over the cleaned event stream (SURVEY.md §2i
   * mapping): the reference's batch aggregations re-expressed with
   * event-time watermarks bounding state, plus a stateful latest-per-group
@@ -170,7 +172,7 @@ object StreamingAnalytics {
     * sketch_hll_union row): each micro-batch is sketched
     * (`hll_sketch_agg`, kilobytes regardless of batch size), unioned
     * with the artifact's current sketch (`hll_union`), and republished
-    * through [[graft.operators.Sinks.replaceSnapshot]] — so any reader
+    * through [[graft.operators.Sinks.foldSnapshot]] — so any reader
     * gets the running distinct estimate for pennies and the raw stream
     * is never re-scanned.
     *
@@ -186,36 +188,17 @@ object StreamingAnalytics {
                      artifactDir: String, checkpointDir: String,
                      lgK: Int = 12, keepVersions: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    BoundedStream.drain(stream, checkpointDir) {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val batchSk = batch.agg(
-            hll_sketch_agg(col(keyCol), lit(lgK)).as("sk"))
-          val merged =
-            // committed-version gate (round 16): a crashed FIRST publish
-            // leaves artifactDir with no committed v=N; a bare-dir gate
-            // would route every restart into readSnapshot -> throw ->
-            // failed batch -> wedged stream. hasCommittedVersion treats
-            // that state as "fresh" and the create path converges.
-            if (graft.operators.Sinks.hasCommittedVersion(spark, artifactDir))
-              graft.operators.Sinks.readSnapshot(spark, artifactDir)
-                .select(col("sk"))
-                .unionByName(batchSk)
-                .agg(hll_union_agg(col("sk")).as("sk"))
-            else batchSk
-          graft.operators.Sinks.replaceSnapshot(spark, artifactDir,
-            merged.select(col("sk"),
-              hll_sketch_estimate(col("sk")).as("estimate")))
-          // bound the version trail (round 15; round 16: growth-gated —
-          // a full vacuum on EVERY micro-batch paid an O(versions)
-          // marker-probe listing per publish on the streaming hot path;
-          // the gated form is one dir listing per batch, full vacuum
-          // only once the trail exceeds 2x keepVersions)
-          graft.operators.Sinks.vacuumSnapshotIfGrown(spark, artifactDir,
-            keepLast = keepVersions)
-          ()
+    BoundedStream.drain(stream, checkpointDir)(BoundedStream.skipEmpty {
+      (batch, _) =>
+        def published(sk: DataFrame) =
+          sk.select(col("sk"), hll_sketch_estimate(col("sk")).as("estimate"))
+        val batchSk = batch.agg(hll_sketch_agg(col(keyCol), lit(lgK)).as("sk"))
+        Sinks.foldSnapshot(spark, artifactDir, published(batchSk),
+          keepVersions) { current =>
+          published(current.select(col("sk")).unionByName(batchSk)
+            .agg(hll_union_agg(col("sk")).as("sk")))
         }
-    }
+    })
 
   /** Incremental MEMBERSHIP sketch over an unbounded stream (round 9) —
     * the streaming face of sketch_bloom, completing the streaming sketch
@@ -225,33 +208,24 @@ object StreamingAnalytics {
     * merge is IDEMPOTENT BY ALGEBRA (OR-ing bits already present is a
     * no-op), so at-least-once redelivery needs no batch ledger; the
     * artifact is just the current bit set, versioned per batch through
-    * the snapshot sink. Serve = [[graft.operators.Sketches
-    * .bloomMightContain]] against the snapshot: "was this key ever seen
-    * on the stream?" with no false negatives ever — the streaming
-    * seen-before gate (URL dedup, incremental-crawl prefilters) at
-    * kilobytes of state regardless of stream length. */
+    * [[graft.operators.Sinks.foldSnapshot]]. Serve = [[graft.operators
+    * .Sketches.bloomMightContain]] against the snapshot: "was this key
+    * ever seen on the stream?" with no false negatives ever — the
+    * streaming seen-before gate (URL dedup, incremental-crawl prefilters)
+    * at kilobytes of state regardless of stream length. */
   def runBloomMembership(spark: SparkSession, stream: DataFrame,
                          keyCol: String, bits: Int, hashes: Int, seed: String,
                          artifactDir: String, checkpointDir: String,
                          keepVersions: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    BoundedStream.drain(stream, checkpointDir) {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          import graft.operators.{Sinks, Sketches}
-          val batchBits = Sketches.bloom(batch, col(keyCol), bits, hashes, seed)
-          val merged =
-            // committed-version gate (round 16, see runHllDistinct)
-            if (Sinks.hasCommittedVersion(spark, artifactDir))
-              Sketches.mergeBlooms(Seq(
-                Sinks.readSnapshot(spark, artifactDir).select(col("bit")),
-                batchBits))
-            else batchBits
-          Sinks.replaceSnapshot(spark, artifactDir, merged)
-          Sinks.vacuumSnapshotIfGrown(spark, artifactDir, keepLast = keepVersions)
-          ()
+    BoundedStream.drain(stream, checkpointDir)(BoundedStream.skipEmpty {
+      (batch, _) =>
+        val batchBits = Sketches.bloom(batch, col(keyCol), bits, hashes, seed)
+        Sinks.foldSnapshot(spark, artifactDir, batchBits, keepVersions) {
+          current =>
+            Sketches.mergeBlooms(Seq(current.select(col("bit")), batchBits))
         }
-    }
+    })
 
   /** Incremental FREQUENCY sketch over an unbounded stream (round 9 —
     * the streaming face of sketch_count_min, and the exactly-once
@@ -290,40 +264,11 @@ object StreamingAnalytics {
                                         batchId: Long, keyCol: String,
                                         width: Int, depth: Int, seed: String,
                                         artifactDir: String,
-                                        keepVersions: Int = 8): Unit = {
-    import graft.operators.{Sinks, Sketches}
-    if (batch.isEmpty) return
-    val cells = Sketches.countMin(batch, col(keyCol), width, depth, seed)
-      .withColumn("batch_id", lit(-1L)) // sketch rows carry no ledger id
-    // committed-version gate (round 16, see runHllDistinct)
-    if (!Sinks.hasCommittedVersion(spark, artifactDir)) {
-      Sinks.replaceSnapshot(spark, artifactDir,
-        cells.unionByName(ledgerRow(spark, batchId)))
-    } else {
-      val current = Sinks.readSnapshot(spark, artifactDir)
-      val maxApplied = current.filter(col("batch_id") >= 0)
-        .agg(max(col("batch_id"))).head.getLong(0)
-      if (batchId <= maxApplied) return // redelivery: exact no-op
-      val merged = current.filter(col("batch_id") < 0)
-        .unionByName(cells)
-        .groupBy(col("sk_row"), col("sk_col"))
-        .agg(sum(col("c")).as("c"))
-        .withColumn("batch_id", lit(-1L))
-        .unionByName(ledgerRow(spark, batchId))
-      Sinks.replaceSnapshot(spark, artifactDir, merged)
-      Sinks.vacuumSnapshotIfGrown(spark, artifactDir, keepLast = keepVersions)
-    }
-    ()
-  }
-
-  /** One ledger row marking `batchId` applied (cells are null/zero). */
-  private def ledgerRow(spark: SparkSession, batchId: Long): DataFrame = {
-    import spark.implicits._
-    Seq((batchId)).toDF("batch_id")
-      .select(lit(null).cast("int").as("sk_row"),
-        lit(null).cast("long").as("sk_col"), lit(0L).as("c"),
-        col("batch_id"))
-  }
+                                        keepVersions: Int = 8): Unit =
+    if (!batch.isEmpty)
+      addCells(spark, Sketches.countMin(batch, col(keyCol), width, depth,
+        seed), Seq("sk_row", "sk_col"), "c", batchId, artifactDir,
+        keepVersions)
 
   /** Incremental QUANTILE sketch over an unbounded stream (round 9) —
     * the streaming face of sketch_bin_quantiles, completing the
@@ -358,43 +303,27 @@ object StreamingAnalytics {
                                     valueCol: String, nBins: Int,
                                     gridDir: String,
                                     artifactDir: String,
-                                    keepVersions: Int = 8): Unit = {
-    import graft.operators.{Sinks, Sketches}
-    if (batch.isEmpty) return
-    val bounds = spark.read.parquet(gridDir)
-    val cells = Sketches.binHistogramWith(batch, bounds, group,
-      col(valueCol), nBins)
-      .withColumn("batch_id", lit(-1L))
-    val sketchKey = group ++ Seq("bin", "lo", "width", "n_bins")
-    def ledger(id: Long) = cells.limit(0)
-      .unionByName(
-        spark.range(1).select(cells.schema.fields.map { f =>
-          (f.name match {
-            case "cnt" => lit(0L)
-            case "batch_id" => lit(id)
-            case _ => lit(null)
-          }).cast(f.dataType).as(f.name)
-        }: _*))
-    // committed-version gate (round 16, see runHllDistinct)
-    if (!Sinks.hasCommittedVersion(spark, artifactDir)) {
-      Sinks.replaceSnapshot(spark, artifactDir,
-        cells.unionByName(ledger(batchId)))
-      ()
-    } else {
-      val current = Sinks.readSnapshot(spark, artifactDir)
-      val maxApplied = current.filter(col("batch_id") >= 0)
-        .agg(max(col("batch_id"))).head.getLong(0)
-      if (batchId <= maxApplied) return // redelivery: exact no-op
-      val merged = current.filter(col("batch_id") < 0)
-        .unionByName(cells)
-        .groupBy(sketchKey.map(col): _*)
-        .agg(sum(col("cnt")).as("cnt"))
+                                    keepVersions: Int = 8): Unit =
+    if (!batch.isEmpty)
+      addCells(spark, Sketches.binHistogramWith(batch,
+        spark.read.parquet(gridDir), group, col(valueCol), nBins),
+        group ++ Seq("bin", "lo", "width", "n_bins"), "cnt", batchId,
+        artifactDir, keepVersions)
+
+  /** The additive ledgered fold of the count-min and histogram artifacts:
+    * `cells` (keyed by `cellKey`, counted in `countCol`) are added
+    * cell-wise into the artifact under its batch ledger. */
+  private def addCells(spark: SparkSession, cells: DataFrame,
+                       cellKey: Seq[String], countCol: String, batchId: Long,
+                       artifactDir: String, keepVersions: Int): Unit = {
+    val state = cells.withColumn("batch_id", lit(-1L))
+    Sinks.foldSnapshot(spark, artifactDir, state, keepVersions,
+      Some((batchId, countCol))) { current =>
+      current.unionByName(state)
+        .groupBy(cellKey.map(col): _*)
+        .agg(sum(col(countCol)).as(countCol))
         .withColumn("batch_id", lit(-1L))
-        .select(cells.columns.map(col): _*)
-        .unionByName(ledger(batchId))
-      Sinks.replaceSnapshot(spark, artifactDir, merged)
-      Sinks.vacuumSnapshotIfGrown(spark, artifactDir, keepLast = keepVersions)
-      ()
+        .select(state.columns.map(col): _*)
     }
   }
 
@@ -558,7 +487,6 @@ object StreamingAnalytics {
                         valueCol: String, nBins: Int, refDir: String,
                         outDir: String, thresholdMilli: Long,
                         runId: String): (DataFrame, Long) => Unit = {
-    import graft.operators.Sketches
     // the batch twin's domain check (Profiling.driftTvd): out-of-range
     // thresholds must fail loudly here too, not produce a monitor that
     // silently never (or always) fires (round 15)

@@ -43,25 +43,30 @@ object StreamingIngest {
       .dropDuplicates("Date", "Time", "Currency", "Event", "EventTime")
   }
 
+  /** Drain the cleaned stream of `landingDir` into `sink`, one persisted
+    * step per micro-batch: the batch is cached so the emptiness probe and
+    * every read the sink makes share one scan of its files (the upsert
+    * sink reads the batch on both sides of its merge), an empty batch is
+    * skipped, and the cache is released after. */
+  private def drainPersisted(spark: SparkSession, landingDir: String,
+                             checkpointDir: String)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    BoundedStream.drain(cleanedStream(spark, landingDir), checkpointDir) {
+      (batch: DataFrame, id: Long) =>
+        val b = batch.persist()
+        try BoundedStream.skipEmpty(sink)(b, id)
+        finally { b.unpersist(); () }
+    }
+
   /** Drain the stream into a versioned-snapshot upsert sink (SNK1 via
     * foreachBatch). Returns the finished query. */
   def run(spark: SparkSession, landingDir: String, tableDir: String,
           checkpointDir: String): StreamingQuery =
-    BoundedStream.drain(cleanedStream(spark, landingDir), checkpointDir) {
-      (batch: DataFrame, _: Long) =>
-        // persist once (round 15): the isEmpty probe is one job over the
-        // source scan, and upsertSnapshot references the batch on BOTH
-        // sides of its merge — uncached, a micro-batch's files were read
-        // up to three times per trigger
-        val b = batch.persist()
-        try {
-          if (!b.isEmpty) {
-            Sinks.upsertSnapshot(spark, tableDir, b,
-              key = Seq("Date", "Time", "Currency", "Event"),
-              orderCol = "EventTime")
-            ()
-          }
-        } finally { b.unpersist(); () }
+    drainPersisted(spark, landingDir, checkpointDir) { (b, _) =>
+      Sinks.upsertSnapshot(spark, tableDir, b,
+        key = Seq("Date", "Time", "Currency", "Event"),
+        orderCol = "EventTime")
+      ()
     }
 
   /** Run the stream into a REAL database table (the reference's actual
@@ -78,14 +83,9 @@ object StreamingIngest {
   def runToJdbc(spark: SparkSession, landingDir: String, url: String,
                 table: String, checkpointDir: String,
                 batchSize: Int = 500): StreamingQuery =
-    BoundedStream.drain(cleanedStream(spark, landingDir), checkpointDir) {
-      (batch: DataFrame, _: Long) =>
-        val b = batch.persist() // one scan feeds probe + sink (round 15)
-        try {
-          if (!b.isEmpty)
-            graft.operators.Jdbc.writeTable(b, url, table, batchSize,
-              mode = org.apache.spark.sql.SaveMode.Append)
-        } finally { b.unpersist(); () }
+    drainPersisted(spark, landingDir, checkpointDir) { (b, _) =>
+      graft.operators.Jdbc.writeTable(b, url, table, batchSize,
+        mode = org.apache.spark.sql.SaveMode.Append)
     }
 
   /** EXACTLY-ONCE stream → JDBC (round 13): each micro-batch publishes
@@ -105,16 +105,10 @@ object StreamingIngest {
                            url: String, table: String, checkpointDir: String,
                            runId: String,
                            batchSize: Int = 500): StreamingQuery =
-    BoundedStream.drain(cleanedStream(spark, landingDir), checkpointDir) {
-      (batch: DataFrame, id: Long) =>
-        val b = batch.persist() // one scan feeds probe + stage (round 15)
-        try {
-          if (!b.isEmpty) {
-            graft.operators.Jdbc.writeBatchExactlyOnce(b, url, table,
-              batchId = id, runId = runId, batchSize = batchSize)
-            ()
-          }
-        } finally { b.unpersist(); () }
+    drainPersisted(spark, landingDir, checkpointDir) { (b, id) =>
+      graft.operators.Jdbc.writeBatchExactlyOnce(b, url, table,
+        batchId = id, runId = runId, batchSize = batchSize)
+      ()
     }
 
   /** Stream → PARTITION-SCOPED upsert: every micro-batch merges into a
@@ -132,9 +126,10 @@ object StreamingIngest {
     * upsert-shaped sinks are the recommended foreachBatch target.
     *
     * Atomicity is PER BUCKET, not per trigger: a crash between bucket
-    * commits inside one micro-batch leaves that batch partially merged
-    * until the checkpoint replays it (at which point the idempotent
-    * re-merge converges). Readers needing cross-bucket snapshot
+    * swaps inside one micro-batch leaves that batch partially merged
+    * until the checkpoint replays it (the sink first restores any bucket
+    * the crash left set aside, then the idempotent re-merge converges).
+    * Readers needing cross-bucket snapshot
     * consistency should read between triggers or use the versioned
     * [[graft.operators.Sinks.upsertSnapshot]] form. */
   def runToBucketedSnapshot(stream: DataFrame, tableDir: String,

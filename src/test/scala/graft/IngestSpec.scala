@@ -585,6 +585,60 @@ class IngestSpec extends SparkSpecBase {
     assert(e.getMessage.contains("non-bucket entries"))
   }
 
+  test("bucketed layout guards hold on both bucketed sinks: bucket-count " +
+    "mismatch, foreign directory, re-create after a marker-less crash") {
+    import spark.implicits._
+    import graft.operators.Sinks
+    val batch = Seq(("u1", 1L, "a"), ("u2", 2L, "b"))
+      .toDF("user_id", "event_id", "v")
+    val sinks: Seq[(String, (String, Int) => Unit)] = Seq(
+      "upsert" -> ((t, n) => Sinks.upsertSnapshotBucketed(spark, t, batch,
+        Seq("user_id"), "event_id", nBuckets = n)),
+      "cdc" -> ((t, n) => Sinks.applyChangesBucketed(spark, t,
+        batch.withColumn("op", lit("I")), Seq("user_id"), "event_id", "op",
+        nBuckets = n)))
+    sinks.foreach { case (name, write) =>
+      val base = java.nio.file.Files
+        .createTempDirectory(s"graft_bguard_$name").toString
+      val tableDir = s"$base/t"
+      write(tableDir, 4)
+      // crash shape: the marker never landed; the replay re-creates
+      assert(new java.io.File(tableDir, "_graft_nbuckets").delete(), name)
+      write(tableDir, 4)
+      assert(new java.io.File(tableDir, "_graft_nbuckets").exists, name)
+      assert(Sinks.readBucketedSnapshot(spark, tableDir).select("user_id", "v")
+        .as[(String, String)].collect().toSet === Set(("u1", "a"), ("u2", "b")),
+        name)
+      val mismatch = intercept[IllegalArgumentException](write(tableDir, 8))
+      assert(mismatch.getMessage.contains("bucket-count mismatch"), name)
+      val foreign = s"$base/f"
+      new java.io.File(foreign).mkdirs()
+      java.nio.file.Files.writeString(
+        java.nio.file.Path.of(foreign, "data.csv"), "x")
+      val e = intercept[IllegalArgumentException](write(foreign, 4))
+      assert(e.getMessage.contains("non-bucket entries"), name)
+    }
+  }
+
+  test("SNK10 bucketed CDC: a CREATE batch netting to zero rows leaves a " +
+    "readable empty table that accepts later batches") {
+    import spark.implicits._
+    import graft.operators.Sinks
+    val tableDir = java.nio.file.Files
+      .createTempDirectory("graft_bzero").toString + "/t"
+    Sinks.applyChangesBucketed(spark, tableDir,
+      Seq(("u1", 1.0, "D", 1L)).toDF("user_id", "value", "op", "ord"),
+      Seq("user_id"), "ord", "op", nBuckets = 4)
+    val empty = Sinks.readBucketedSnapshot(spark, tableDir)
+    assert(empty.columns.toSeq === Seq("user_id", "value"))
+    assert(empty.count() === 0L)
+    Sinks.applyChangesBucketed(spark, tableDir,
+      Seq(("u2", 2.0, "I", 2L)).toDF("user_id", "value", "op", "ord"),
+      Seq("user_id"), "ord", "op", nBuckets = 4)
+    assert(Sinks.readBucketedSnapshot(spark, tableDir)
+      .as[(String, Double)].collect().toSeq === Seq(("u2", 2.0)))
+  }
+
   test("SNK10 bucketed CDC: a batch deleting EVERY remaining row leaves " +
     "a readable EMPTY table (schema kept), and the table accepts later " +
     "batches") {

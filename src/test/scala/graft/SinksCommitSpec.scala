@@ -2,7 +2,40 @@ package graft
 
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+
 import graft.operators.Sinks
+
+/** The local filesystem under a scheme of its own (`crashfs:`), so a spec
+  * can run a sink against a table that is not on the session's default
+  * filesystem. Armed through [[CrashingLocalFs.armed]], it throws on the
+  * next rename of a staged `__bucket=` directory (the one under a
+  * `.graft_stage_*` dir) into its table — the crash point inside the
+  * bucketed swap. */
+class CrashingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = CrashingLocalFs.Uri
+  override def getScheme: String = CrashingLocalFs.Scheme
+  override def rename(src: Path, dst: Path): Boolean = {
+    if (src.getParent.getName.startsWith(".graft_stage_") &&
+      src.getName.startsWith("__bucket=") &&
+      CrashingLocalFs.armed.compareAndSet(true, false))
+      throw new java.io.IOException(s"injected crash renaming $src -> $dst")
+    super.rename(src, dst)
+  }
+}
+
+object CrashingLocalFs {
+  val Scheme = "crashfs"
+  val Uri: java.net.URI = java.net.URI.create(s"$Scheme:///")
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Register the scheme on the session and return `localDir` under it. */
+  def path(spark: SparkSession, localDir: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.$Scheme.impl", classOf[CrashingLocalFs].getName)
+    s"$Scheme://$localDir"
+  }
+}
 
 /** Round-16 commit-protocol hardening of the versioned snapshot layout:
   *
@@ -13,7 +46,10 @@ import graft.operators.Sinks
   *    emit `_SUCCESS`) stay readable via the no-marker fallback,
   *  - [[Sinks.vacuumSnapshotIfGrown]] amortizes the streaming hot-path
   *    vacuum: no reclaim until the raw trail exceeds 2×keepLast, full
-  *    vacuum after.
+  *    vacuum after,
+  *  - every sink resolves its table's own filesystem, a crash inside the
+  *    bucketed swap replays to the table a clean run builds, and a
+  *    crashed uncommitted version does not wedge compaction.
   */
 class SinksCommitSpec extends SparkSpecBase {
   import spark.implicits._
@@ -83,6 +119,73 @@ class SinksCommitSpec extends SparkSpecBase {
     assert(rawCount === 2, "exceeding 2x keepLast must trigger a full vacuum")
     assert(Sinks.readSnapshot(spark, dir).as[(Int, String)].collect().toSet
       === Set((5, "r5")), "latest version survives the gated vacuum")
+    fs.delete(new Path(dir), true)
+  }
+
+  test("sinks run on a table outside the session's default filesystem") {
+    val local = freshDir("scheme")
+    val dir = CrashingLocalFs.path(spark, local)
+    Sinks.upsertSnapshot(spark, s"$dir/v",
+      Seq((1L, "a"), (2L, "a")).toDF("k", "s"), Seq("k"), "s")
+    assert(Sinks.upsertSnapshot(spark, s"$dir/v",
+      Seq((2L, "b"), (3L, "b")).toDF("k", "s"), Seq("k"), "s") === 2)
+    assert(Sinks.readSnapshot(spark, s"$dir/v").as[(Long, String)].collect()
+      .toSet === Set((1L, "a"), (2L, "b"), (3L, "b")))
+    val seed = (0 until 16).map(i => (s"u$i", 1L, s"old$i"))
+      .toDF("user_id", "ord", "v")
+    Sinks.upsertSnapshotBucketed(spark, s"$dir/b", seed, Seq("user_id"),
+      "ord", nBuckets = 4)
+    Sinks.upsertSnapshotBucketed(spark, s"$dir/b",
+      Seq(("u3", 2L, "new3"), ("u99", 2L, "new99")).toDF("user_id", "ord", "v"),
+      Seq("user_id"), "ord", nBuckets = 4)
+    val out = Sinks.readBucketedSnapshot(spark, s"$dir/b")
+      .as[(String, Long, String)].collect().map(r => r._1 -> r._3).toMap
+    assert(out.size === 17)
+    assert(out("u3") === "new3" && out("u99") === "new99" &&
+      out("u4") === "old4")
+    fs.delete(new Path(local), true)
+  }
+
+  test("bucketed swap crash: an upsert and a CDC batch that crash mid-swap " +
+    "replay to the table a run with no crash builds") {
+    val local = freshDir("swap")
+    val dir = CrashingLocalFs.path(spark, local)
+    val key = Seq("user_id")
+    val seed = (0 until 32).map(i => (s"u$i", s"old$i", "I", 1L))
+      .toDF("user_id", "v", "op", "ord")
+    // touches several buckets; the CDC form also deletes keys
+    val batch = (0 until 32 by 5).map(i => (s"u$i",
+      s"new$i", if (i % 2 == 0) "D" else "U", 2L)).toDF("user_id", "v", "op", "ord")
+    val sinks: Seq[(String, (String, DataFrame) => Unit)] = Seq(
+      "upsert" -> ((t, df) => Sinks.upsertSnapshotBucketed(spark, t,
+        df.drop("op"), key, "ord", nBuckets = 4)),
+      "cdc" -> ((t, df) => Sinks.applyChangesBucketed(spark, t, df, key,
+        "ord", "op", nBuckets = 4)))
+    def rows(t: String): Set[Row] =
+      Sinks.readBucketedSnapshot(spark, t).collect().toSet
+    sinks.foreach { case (name, write) =>
+      write(s"$dir/$name-clean", seed)
+      write(s"$dir/$name-clean", batch)
+      write(s"$dir/$name-crash", seed)
+      CrashingLocalFs.armed.set(true)
+      intercept[java.io.IOException](write(s"$dir/$name-crash", batch))
+      assert(!CrashingLocalFs.armed.get, s"$name: the swap must have crashed")
+      write(s"$dir/$name-crash", batch) // the checkpoint's replay
+      assert(rows(s"$dir/$name-crash") === rows(s"$dir/$name-clean"), name)
+      assert(rows(s"$dir/$name-clean").size === (if (name == "cdc") 28 else 32))
+    }
+    fs.delete(new Path(local), true)
+  }
+
+  test("compactSnapshot writes past a crashed, uncommitted version") {
+    val dir = freshDir("compact")
+    Sinks.replaceSnapshot(spark, dir, Seq((1, "a"), (2, "b")).toDF("id", "s"))
+    fs.mkdirs(new Path(s"$dir/v=2/_temporary")) // crashed attempt's debris
+    val (_, after, v) = Sinks.compactSnapshot(spark, dir, 1L << 20)
+    assert(v === 3 && after === 1)
+    assert(Sinks.latestCommittedVersion(spark, dir) === Some(3))
+    assert(Sinks.readSnapshot(spark, dir).as[(Int, String)].collect().toSet
+      === Set((1, "a"), (2, "b")))
     fs.delete(new Path(dir), true)
   }
 }
