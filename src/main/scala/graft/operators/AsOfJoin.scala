@@ -135,18 +135,13 @@ object AsOfJoin {
                    tolerance: Option[Column] = None,
                    tiebreak: Option[String] = None,
                    maxBuildBytes: Long = 64L << 20): DataFrame =
-    autoAsOf(left, right, keys, tsColLeft, tsColRight, rightPayload,
-      fwd = false, tolerance, tiebreak, maxBuildBytes)
-
-  /** [[autoBackward]]'s forward twin. */
-  def autoForward(left: DataFrame, right: DataFrame, keys: Seq[String],
-                  tsColLeft: String, tsColRight: String,
-                  rightPayload: Seq[String],
-                  tolerance: Option[Column] = None,
-                  tiebreak: Option[String] = None,
-                  maxBuildBytes: Long = 64L << 20): DataFrame =
-    autoAsOf(left, right, keys, tsColLeft, tsColRight, rightPayload,
-      fwd = true, tolerance, tiebreak, maxBuildBytes)
+    if (packSizeEstimate(right, keys, tsColRight, rightPayload, tiebreak)
+        <= BigInt(maxBuildBytes))
+      broadcastAsOf(left, right, keys, tsColLeft, tsColRight, rightPayload,
+        fwd = false, tolerance, tiebreak)
+    else
+      asof(left, right, keys, tsColLeft, tsColRight, rightPayload,
+        forward = false, tolerance, tiebreak)
 
   /** Catalyst's size estimate of the columns [[pack]] would carry —
     * exposed for tests pinning the [[autoBackward]] gate. */
@@ -158,19 +153,6 @@ object AsOfJoin {
       (keys ++ (tsColRight +: rightPayload) ++ tiebreak.toSeq)
         .distinct.map(col): _*)
       .queryExecution.optimizedPlan.stats.sizeInBytes
-
-  private def autoAsOf(left: DataFrame, right: DataFrame, keys: Seq[String],
-                       tsColLeft: String, tsColRight: String,
-                       rightPayload: Seq[String], fwd: Boolean,
-                       tolerance: Option[Column], tiebreak: Option[String],
-                       maxBuildBytes: Long): DataFrame =
-    if (packSizeEstimate(right, keys, tsColRight, rightPayload, tiebreak)
-        <= BigInt(maxBuildBytes))
-      broadcastAsOf(left, right, keys, tsColLeft, tsColRight, rightPayload,
-        fwd, tolerance, tiebreak)
-    else
-      asof(left, right, keys, tsColLeft, tsColRight, rightPayload,
-        forward = fwd, tolerance, tiebreak)
 
   private val SALT = "__asof_salt"
 

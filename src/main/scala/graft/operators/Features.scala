@@ -451,15 +451,6 @@ object Features {
       .select(keys.map(col): _*)
   }
 
-  /** J5+A3 — group-mean imputation: NULL → mean over the group, groups with
-    * no non-null values → 0.0 (train.py:347-357 fill_missing). Window form —
-    * the reference's dict-lookup join is unnecessary in Spark. */
-  def imputeGroupMean(c: Column, key: Seq[String]): Column = {
-    val frame = Window.partitionBy(key.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    coalesce(c, avg(c).over(frame), lit(0.0))
-  }
-
   /** A2 — model routing: total samples per key, >=threshold → "rnn" else
     * "xgb" (train.py:377-389). */
   def modelRouting(df: DataFrame, key: Seq[String], threshold: Int = 50): DataFrame =

@@ -142,13 +142,4 @@ object Ingest {
                           slack: Column): DataFrame =
     upsert(existing, watermarkFilter(incoming, existing, tsCol, slack),
       key, orderCol)
-
-  /** E1 end-to-end: CSV path → clean → watermark vs existing → upsert. */
-  def ingestCsv(spark: SparkSession, csvPath: String, existing: DataFrame,
-                slack: Column = expr("INTERVAL 0 SECONDS")): DataFrame =
-    upsertWithWatermark(
-      existing,
-      clean(readCsv(spark, csvPath)),
-      key = Seq("Date", "Time", "Currency", "Event"), // init.sql:20
-      tsCol = "EventTime", orderCol = "EventTime", slack = slack)
 }

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
@@ -19,27 +22,34 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
   * | SNK5 | object-store snapshot replace               | [[snapshotReplace]] (partitioned overwrite) |
   * | SNK10 | CDC changelog apply (I/U/D)                | [[applyChangesSnapshot]] (versioned), [[applyChangesBucketed]] (bucketed merge) |
   *
-  * Two persisted layouts, one commit path each:
-  *  - versioned `v=N` directories: every write is [[writeNextVersion]]
-  *    (a version is committed once its `_SUCCESS` marker lands); the
-  *    streaming state artifacts (sketches) publish through the one
-  *    read-merge-publish [[foldSnapshot]];
-  *  - hash-bucketed `__bucket=N` directories: upsert and CDC are two
-  *    merge functions over the one [[mergeBucketed]], whose swap moves the
-  *    old bucket aside, renames the new one in and deletes the stage last,
-  *    so a crashed batch replays to the table it would have built. The
-  *    swap needs directory renames to be atomic (HDFS, local and POSIX
-  *    filesystems; not an object store's copy-and-delete rename).
+  * Versioned and bucketed tables keep ONE commit log each,
+  * `_graft_log/<n>.json`, written and read only here (the log of the
+  * Structured Streaming file sink, Delta and Iceberg). Entry `n` is
+  * version `n`: the table's live data files (relative to the table
+  * directory; per bucket in the bucketed layout), its schema and, for a
+  * bucketed table, the bucket count. A commit writes its data files
+  * under `v=<n+1>/` (cleared first: files there belong to no entry),
+  * then creates entry `n + 1` ([[commit]]). A reader opens exactly the
+  * newest entry's files with its schema, so it never sees a torn table
+  * and never runs a schema-inference job. The versioned layout writes
+  * every version whole; the bucketed one rewrites only the buckets a
+  * batch touches and carries the other buckets' files over. The
+  * streaming sketch artifacts publish through the one read-merge-publish
+  * [[foldSnapshot]].
+  *
+  * Store requirement: a single-file rename that is atomic (HDFS, POSIX;
+  * an object store's copy-and-delete of one object also lands whole).
+  * No directory is ever renamed, and one writer commits to a table at a
+  * time. A directory without a log fails loud ([[versions]]).
   *
   * Every path resolves its own filesystem (`gs://`, `s3a://`, `hdfs://`
   * tables work beside a `file:///` default).
   *
   * Scale notes: SNK1 is merge-on-write over immutable snapshots — new
-  * version = anti-join(old, batch) ∪ batch, written to `v=N+1` then the
-  * pointer advances (what Delta/Iceberg MERGE does with a log instead of
-  * a directory scan). The anti-join shuffles on the key; the bucketed
-  * layout rewrites only the buckets a batch touches. SNK2/SNK5 are
-  * plain overwrites — no read-modify-write, embarrassingly parallel.
+  * version = anti-join(old, batch) ∪ batch. The anti-join shuffles on
+  * the key; the bucketed layout rewrites only the buckets a batch
+  * touches. SNK2/SNK5 are plain overwrites — no read-modify-write,
+  * embarrassingly parallel.
   */
 object Sinks {
 
@@ -106,47 +116,128 @@ object Sinks {
   def snapshotReplace(df: DataFrame, path: String, partitionCol: String): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path)
 
-  /** SNK1 — keyed upsert over a versioned snapshot directory: read the
-    * current version (empty frame if none), merge via [[Ingest.upsert]],
-    * write `v=N+1`, return the new version. Readers always see a complete
-    * version; the directory listing stands in for a transaction log.
-    *
-    * A version is COMMITTED only once its `_SUCCESS` marker lands (the
-    * Hadoop committer writes it after the last task commit — round 15):
-    * a crash mid-write leaves a `v=N` holding `_temporary` or a partial
-    * file set, and counting it as real would either wedge every later
-    * read ("unable to infer schema" on an empty dir) or silently merge
-    * from a snapshot missing rows. Readers and merge bases use committed
-    * versions only; the NEXT version number advances past every
-    * directory, committed or not, so a retry never collides with a
-    * crashed attempt's debris (ErrorIfExists would wedge otherwise). */
-  private def listVersions(spark: SparkSession, tableDir: String): Seq[Int] = {
+  private val LogDir = "_graft_log"
+  private val EntryName = """(\d+)\.json""".r
+  private val VersionDir = """v=(\d+)""".r
+  private val Json = new ObjectMapper()
+
+  /** One log entry: the live data files by bucket (all under bucket 0 in
+    * the versioned layout), the data schema and the bucket count of a
+    * bucketed table. */
+  private case class Entry(files: Map[Int, Seq[String]], schema: StructType,
+                           buckets: Option[Int]) {
+    def paths: Seq[String] = files.toSeq.sortBy(_._1).flatMap(_._2)
+  }
+
+  private def entryPath(tableDir: String, n: Int) =
+    new Path(new Path(tableDir, LogDir), s"$n.json")
+
+  /** The committed versions (log entry numbers) of a versioned or bucketed
+    * table, oldest first — one listing of its log, no Spark job. An absent
+    * or empty directory is a table with no version yet. A directory with
+    * anything else and no log (a table written before the log, or not a
+    * table at all) fails loud, on read and on write alike. */
+  private[graft] def versions(spark: SparkSession,
+                              tableDir: String): Seq[Int] = {
     val f = fs(spark, tableDir)
-    val raw = rawVersions(spark, tableDir)
-    val marked = raw.filter(v =>
-      f.exists(new Path(s"$tableDir/v=$v/_SUCCESS")))
-    if (marked.nonEmpty || raw.isEmpty) marked
-    else
-      // LEGACY FALLBACK (round 16 advice): on a cluster whose committer
-      // does not write markers (marksuccessfuljobs=false, some
-      // object-store committers), a table written BEFORE the round-15
-      // marker requirement would otherwise become wholly unreadable.
-      // When NO version carries a marker, treat version dirs that hold
-      // real data files and no in-flight _temporary debris as committed.
-      // New writes on such a cluster fail loud in [[writeNextVersion]]
-      // instead of reaching this path, so the fallback can only see
-      // pre-marker tables — where "non-empty and not mid-write" was the
-      // original commit signal. Once a marker-bearing version lands on a
-      // legacy table (e.g. an upsert under a marker-writing committer),
-      // strict mode resumes and the marker-less vintages stop being
-      // listed: time travel to them is lost, but data is not — the
-      // upsert's merge base was read through this fallback.
-      raw.filter { v =>
-        val entries = f.listStatus(new Path(s"$tableDir/v=$v")).toSeq
-          .map(_.getPath.getName)
-        entries.exists(n => !n.startsWith("_") && !n.startsWith(".")) &&
-          !entries.contains("_temporary")
+    val log = new Path(tableDir, LogDir)
+    if (f.exists(log))
+      f.listStatus(log).toSeq.map(_.getPath.getName)
+        .collect { case EntryName(n) => n.toInt }.sorted
+    else {
+      val dir = new Path(tableDir)
+      require(!f.exists(dir) || f.listStatus(dir).isEmpty,
+        s"$tableDir holds no commit log ($LogDir): a table written before " +
+          "the log, or not a table. Convert a versioned table with " +
+          "replaceSnapshot(spark, newDir, spark.read.parquet(s\"$old/v=$n\"))" +
+          " (a bucketed one: upsert spark.read.parquet(old).drop(\"__bucket\")" +
+          " into a new directory)")
+      Nil
+    }
+  }
+
+  private def readEntry(spark: SparkSession, tableDir: String,
+                        n: Int): Entry = {
+    val in = fs(spark, tableDir).open(entryPath(tableDir, n))
+    val doc = try Json.readTree(in) finally in.close()
+    def names(a: com.fasterxml.jackson.databind.JsonNode) =
+      a.asScala.map(_.asText).toSeq
+    val files = doc.get("files")
+    Entry(
+      if (files.isArray) Map(0 -> names(files))
+      else files.properties.asScala
+        .map(e => e.getKey.toInt -> names(e.getValue)).toMap,
+      DataType.fromJson(doc.get("schema").toString).asInstanceOf[StructType],
+      Option(doc.get("buckets")).map(_.asInt))
+  }
+
+  private def latest(spark: SparkSession,
+                     tableDir: String): Option[(Int, Entry)] =
+    versions(spark, tableDir).lastOption.map(n =>
+      n -> readEntry(spark, tableDir, n))
+
+  /** `files` of the table read with `schema` given: no inference job. */
+  private def scan(spark: SparkSession, tableDir: String, schema: StructType,
+                   files: Seq[String]): DataFrame =
+    spark.read.schema(schema)
+      .parquet(files.map(new Path(tableDir, _).toString): _*)
+
+  /** The one commit of both layouts: write `df` as version n + 1's data
+    * under `v=<n+1>/` (partitioned by `__bucket` when `buckets` is set),
+    * then create log entry n + 1 listing the files written plus `kept`
+    * (the untouched buckets' files). A crash before the entry leaves files
+    * no entry lists: readers keep seeing version n whole, and the replay
+    * clears them.
+    *
+    * The entry appears whole or not at all and never replaces an existing
+    * one: it is written to a hidden temp file, and that single file is
+    * renamed into place only when no entry n + 1 exists. This relies on
+    * the store renaming one file atomically; an object store's rename
+    * (copy the object, then delete it) also lands the entry whole. */
+  private def commit(spark: SparkSession, tableDir: String, df: DataFrame,
+                     buckets: Option[Int],
+                     kept: Map[Int, Seq[String]] = Map.empty): Int = {
+    val f = fs(spark, tableDir)
+    val n = versions(spark, tableDir).lastOption.getOrElse(0) + 1
+    val log = new Path(tableDir, LogDir)
+    // the log comes first: a crashed first commit leaves a table with no
+    // version, not a directory that fails loud as foreign
+    f.mkdirs(log)
+    val w = df.write.mode(SaveMode.Overwrite)
+    buckets.fold(w)(_ => w.partitionBy("__bucket")).parquet(s"$tableDir/v=$n")
+    def data(rel: String): Seq[(Int, String)] =
+      f.listStatus(new Path(tableDir, rel)).toSeq.flatMap { s =>
+        val name = s.getPath.getName
+        if (s.isDirectory && name.startsWith("__bucket="))
+          data(s"$rel/$name").map { case (_, p) =>
+            name.stripPrefix("__bucket=").toInt -> p }
+        else if (s.isDirectory || name.startsWith("_") || name.startsWith("."))
+          Nil
+        else Seq(0 -> s"$rel/$name")
       }
+    val files = kept ++ data(s"v=$n").groupMap(_._1)(_._2)
+    val doc = Json.createObjectNode()
+    buckets match {
+      case Some(b) =>
+        doc.put("buckets", b)
+        val byBucket = doc.putObject("files")
+        files.toSeq.sortBy(_._1).foreach { case (k, ps) =>
+          val a = byBucket.putArray(k.toString); ps.sorted.foreach(a.add) }
+      case None =>
+        val a = doc.putArray("files")
+        files.values.flatten.toSeq.sorted.foreach(a.add)
+    }
+    doc.set("schema", Json.readTree(df.drop("__bucket").schema.json))
+    val dst = entryPath(tableDir, n)
+    val tmp = new Path(log, s".$n.json.${java.util.UUID.randomUUID()}")
+    val out = f.create(tmp, false)
+    try out.write(Json.writeValueAsBytes(doc)) finally out.close()
+    if (f.exists(dst) || !f.rename(tmp, dst)) {
+      f.delete(tmp, false)
+      throw new FileAlreadyExistsException(s"$dst: version $n was committed " +
+        "by another writer")
+    }
+    n
   }
 
   /** True when the versioned table has at least one COMMITTED version —
@@ -163,58 +254,24 @@ object Sinks {
     * listing, no Spark job. */
   def latestCommittedVersion(spark: SparkSession,
                              tableDir: String): Option[Int] =
-    listVersions(spark, tableDir).lastOption
+    versions(spark, tableDir).lastOption
 
-  /** Every v=N directory, committed or not — next-version computation
-    * and vacuum need the full set. */
-  private def rawVersions(spark: SparkSession, tableDir: String): Seq[Int] = {
-    val f = fs(spark, tableDir)
-    val dir = new Path(tableDir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toInt)
-      .sorted
-  }
-
-  /** The one versioned-write choreography (round 15 — was triplicated
-    * across upsertSnapshot/upsertSnapshotEvolving/applyChangesSnapshot):
-    * write `df` as the next version past ANY existing directory and
-    * return it. */
-  private def writeNextVersion(spark: SparkSession, tableDir: String,
-                               df: DataFrame): Int = {
-    val next = rawVersions(spark, tableDir).lastOption.getOrElse(0) + 1
-    df.write.mode(SaveMode.ErrorIfExists).parquet(s"$tableDir/v=$next")
-    // Commit-marker config check (round 16 advice): the versioned layout
-    // treats `_SUCCESS` as the commit record, so a committer configured
-    // not to write it (marksuccessfuljobs=false, some object-store
-    // committers) would make every snapshot just written invisible to
-    // readers. Fail LOUD at write time — the one moment the mismatch is
-    // diagnosable — instead of letting reads quietly see a stale version.
-    if (!fs(spark, tableDir).exists(new Path(s"$tableDir/v=$next/_SUCCESS")))
-      throw new IllegalStateException(
-        s"$tableDir/v=$next was written but carries no _SUCCESS marker — " +
-          "the configured output committer does not write success markers " +
-          "(mapreduce.fileoutputcommitter.marksuccessfuljobs=false?); the " +
-          "versioned snapshot layout requires them as its commit record")
-    next
-  }
-
-  /** Latest COMMITTED version read, or an empty frame with `schema`'s
-    * shape when the table has none. */
+  /** Latest committed version read, or `empty` when the table has none. */
   private def readLatestOr(spark: SparkSession, tableDir: String,
                            empty: => DataFrame): DataFrame =
-    listVersions(spark, tableDir).lastOption
-      .map(v => spark.read.parquet(s"$tableDir/v=$v"))
+    latest(spark, tableDir)
+      .map { case (_, e) => scan(spark, tableDir, e.schema, e.paths) }
       .getOrElse(empty)
 
+  /** SNK1 — keyed upsert over a versioned snapshot table: read the current
+    * version (empty frame if none), merge via [[Ingest.upsert]], commit
+    * the result as the next version and return it. */
   def upsertSnapshot(spark: SparkSession, tableDir: String, incoming: DataFrame,
                      key: Seq[String], orderCol: String): Int = {
     val current = readLatestOr(spark, tableDir,
       incoming.filter(org.apache.spark.sql.functions.lit(false)))
-    writeNextVersion(spark, tableDir,
-      Ingest.upsert(current, incoming, key, orderCol))
+    commit(spark, tableDir, Ingest.upsert(current, incoming, key, orderCol),
+      None)
   }
 
   /** [[upsertSnapshot]] with ADDITIVE schema evolution (round 9) — the
@@ -258,8 +315,8 @@ object Sinks {
           org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)
       }
     }.toSeq: _*)
-    writeNextVersion(spark, tableDir,
-      Ingest.upsert(align(current), align(incoming), key, orderCol))
+    commit(spark, tableDir,
+      Ingest.upsert(align(current), align(incoming), key, orderCol), None)
   }
 
   /** Versioned REPLACE: `v=N+1` is exactly `df` — no merge with prior
@@ -272,21 +329,17 @@ object Sinks {
     * [[truncateAndLoad]]'s in-place overwrite). */
   def replaceSnapshot(spark: SparkSession, tableDir: String,
                       df: DataFrame): Int =
-    writeNextVersion(spark, tableDir, df)
+    commit(spark, tableDir, df, None)
 
   /** SNK1 at scale — PARTITION-SCOPED keyed upsert: the snapshot lives
-    * hash-bucketed on the upsert key (`__bucket=N/` partition
-    * directories), and a batch rewrites ONLY the buckets its keys hash
-    * into. [[upsertSnapshot]] is the reference-faithful versioned form,
-    * but it re-writes the ENTIRE snapshot per batch — at 100 TB a monthly
-    * ~GB batch would rewrite 100 TB; here the rewrite cost is O(touched
-    * buckets) = O(batch keys), the partition-pruned read matches (only
-    * touched `__bucket=` directories are scanned, IngestSpec pins the
+    * hash-bucketed on the upsert key, and a batch rewrites ONLY the
+    * buckets its keys hash into. [[upsertSnapshot]] is the
+    * reference-faithful versioned form, but it re-writes the ENTIRE
+    * snapshot per batch — at 100 TB a monthly ~GB batch would rewrite
+    * 100 TB; here the rewrite cost is O(touched buckets) = O(batch keys),
+    * the read opens only the touched buckets' files (IngestSpec pins the
     * file-level behavior), and untouched buckets' files are never opened.
-    * This is what Delta/Iceberg MERGE does with a transaction log in
-    * place of the directory layout; without the log, the swap is atomic
-    * per bucket, not across buckets — the documented trade vs the
-    * versioned form (readers of OTHER buckets are never disturbed).
+    * Each batch commits as one log entry, so readers see it whole.
     *
     * In-batch duplicates resolve last-write-wins in `orderCol` order and
     * existing rows whose key appears in the batch are replaced —
@@ -319,183 +372,72 @@ object Sinks {
       feedCols = Seq(opCol, orderCol))(
       applyChanges(_, _, key, orderCol, opCol))
 
-  /** The one commit path of the bucketed layout: `merge(existing, batch)`
-    * of the batch (`__bucket` added, `feedCols` kept) against the table's
-    * rows (`__bucket` included, `feedCols` never stored) becomes the new
-    * contents of every bucket the batch touches.
+  /** The one merge of the bucketed layout: `merge(existing, batch)` of the
+    * batch (`__bucket` added, `feedCols` kept) against the table's rows
+    * (`__bucket` included, `feedCols` never stored) becomes the new
+    * contents of every bucket the batch touches, committed as one entry.
     *
     *  - The batch feeds the touched-bucket probe AND the merge: a lazy
     *    localCheckpoint (the Dedup convention) instead of recomputing the
     *    incoming pipeline per consumer.
-    *  - Dispatch is on the `_graft_nbuckets` marker, not the directory. The
-    *    bucket count is part of the layout contract: written on creation,
-    *    validated on every later batch (a mismatched count would hash the
-    *    same key into a different bucket and duplicate it). A crash between
-    *    the create write and the marker leaves data without a marker; the
-    *    replay re-creates with Overwrite ([[requireCreatableBucketDir]]
-    *    refuses a foreign directory).
-    *  - Create: an empty batch creates nothing; otherwise the SAME merge
-    *    as every later batch, against an empty table, so in-batch
-    *    duplicates and net-deletes resolve on the first batch too.
-    *    `count()`, not `isEmpty`: the limit-1 read consumes the checkpoint's
-    *    partition partially, so nothing caches and the create write would
-    *    re-read the batch source.
-    *  - Later batches: [[restoreSwap]] undoes a crashed swap,
-    *    [[requireStoredSchema]] rejects a drifted batch, the touched buckets
-    *    are collected (≤ nBuckets driver-side values; an empty batch stops
-    *    here) and read partition-pruned with the table's schema given
-    *    explicitly (the layout contract makes it the batch's data schema,
-    *    so no per-batch schema-inference job), and [[replaceBuckets]]
-    *    writes the merge once into a stage and swaps it in.
-    *  - Every write clusters by bucket: one file per bucket, since every
-    *    later merge re-reads these files.
-    *  - A table whose rows all netted to deletes keeps one empty,
-    *    schema-carrying file in `__bucket=0`, so it stays a readable empty
-    *    table (zero files would fail every later read). */
+    *  - The bucket count is part of the layout contract: recorded in the
+    *    first entry, validated on every later batch (a mismatched count
+    *    would hash the same key into a different bucket and duplicate it),
+    *    as is the schema ([[requireStoredSchema]]).
+    *  - The touched buckets are collected (≤ nBuckets driver-side values;
+    *    an empty batch stops here and creates nothing), and only their
+    *    files are read, with the batch's data schema given explicitly (no
+    *    schema-inference job). A new table merges against an empty one,
+    *    so in-batch duplicates and net-deletes resolve on the first batch
+    *    too.
+    *  - The merge is written clustered by bucket — one file per touched
+    *    bucket, since every later merge re-reads these files. A touched
+    *    bucket that nets to zero rows has no file in the new entry; a table
+    *    whose rows all netted away is an entry with no file and its schema.
+    *  - After the commit only the newest entry is kept, and the replaced
+    *    files are deleted ([[vacuumSnapshot]]). */
   private def mergeBucketed(spark: SparkSession, tableDir: String,
                             batch: DataFrame, key: Seq[String], nBuckets: Int,
                             feedCols: Seq[String])(
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     import org.apache.spark.sql.functions._
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    val f = fs(spark, tableDir)
-    val marker = new Path(tableDir, "_graft_nbuckets")
-    val inc = batch
-      .withColumn("__bucket",
-        pmod(xxhash64(key.map(col): _*), lit(nBuckets.toLong)).cast("int"))
+    val bucket =
+      pmod(xxhash64(key.map(col): _*), lit(nBuckets.toLong)).cast("int")
+    val inc = batch.withColumn("__bucket", bucket)
       .localCheckpoint(eager = false)
-    val stored = inc.drop(feedCols: _*)
-    val fresh = !f.exists(marker)
-    val merged =
-      if (fresh) {
-        if (inc.count() == 0L) return
-        requireCreatableBucketDir(f, tableDir)
-        val created = merge(stored.limit(0), inc)
-        created.repartition(col("__bucket"))
-          .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-          .parquet(tableDir)
-        created
-      } else {
-        val in = f.open(marker)
-        val declared = try new String(in.readAllBytes(), "UTF-8").trim.toInt
-          finally in.close()
-        require(declared == nBuckets,
-          s"bucket-count mismatch: table $tableDir was created with " +
-            s"$declared buckets, batch hashed with $nBuckets — the same key " +
-            "would land in a different bucket and duplicate")
-        restoreSwap(f, tableDir)
-        requireStoredSchema(spark, tableDir, batch.drop(feedCols: _*).schema)
-        val touched = inc.select(col("__bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        if (touched.isEmpty) return
-        val existing = spark.read.schema(stored.schema).parquet(tableDir)
-          .filter(col("__bucket").isin(touched: _*))
-        val swapped = merge(existing, inc)
-        replaceBuckets(f, tableDir, swapped, touched)
-        swapped
-      }
-    // merged.limit(0) plans to an empty local relation: nothing re-reads
-    // the swapped files
-    if (!f.listStatus(new Path(tableDir))
-        .exists(_.getPath.getName.startsWith("__bucket=")))
-      merged.drop("__bucket").limit(0).coalesce(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$tableDir/__bucket=0")
-    if (fresh) {
-      val out = f.create(marker, true)
-      out.write(nBuckets.toString.getBytes("UTF-8")); out.close()
+    val stored = batch.drop(feedCols: _*).schema
+    val head = latest(spark, tableDir)
+    head.foreach { case (_, e) =>
+      require(e.buckets.contains(nBuckets),
+        s"bucket-count mismatch: table $tableDir was created with " +
+          s"${e.buckets.getOrElse("no")} buckets, batch hashed with " +
+          s"$nBuckets — the same key would land in a different bucket and " +
+          "duplicate")
+      requireStoredSchema(spark, tableDir, e.schema, stored)
     }
-  }
-
-  /** Swap `touched` bucket directories for the contents of `merged`: one
-    * write job into a hidden `.graft_stage_*` dir under the table (hidden
-    * → invisible to readers and partition discovery), then per written
-    * bucket two driver-side renames — the old bucket aside into the
-    * stage, the new one in — and the stage deleted last. A touched bucket
-    * ABSENT from the stage netted to zero rows (CDC all-deletes) and is
-    * deleted: replaying the batch against the missing bucket nets it to
-    * zero again.
-    *
-    * Crash safety needs atomic directory renames. A crash between the two
-    * renames leaves the bucket's old rows aside in the stage, and
-    * [[restoreSwap]] renames them back before the replayed batch reads the
-    * table; a crash after the new bucket is in leaves a bucket the replay
-    * re-merges idempotently. No rename targets an existing path (a
-    * directory renamed onto a directory lands inside it). */
-  private def replaceBuckets(f: org.apache.hadoop.fs.FileSystem,
-                             tableDir: String, merged: DataFrame,
-                             touched: Seq[Int]): Unit = {
-    val stage = new Path(tableDir,
-      s".graft_stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    // Hash-clustering on __bucket puts each touched bucket in exactly one
-    // task → one file per bucket per merge (guide §6 file sizing: without
-    // it every task opened a writer per bucket it saw, hundreds of KB-sized
-    // files per micro-batch that the next merge re-read).
-    merged
-      .repartition(math.max(1, touched.size),
-        org.apache.spark.sql.functions.col("__bucket"))
-      .write.mode(SaveMode.ErrorIfExists).partitionBy("__bucket")
-      .parquet(stage.toString)
-    val written = f.listStatus(stage).map(_.getPath.getName).toSet
-    touched.map(b => s"__bucket=$b").foreach { name =>
-      val dst = new Path(tableDir, name)
-      if (!written(name)) f.delete(dst, true)
-      else {
-        if (f.exists(dst)) rename(f, dst, new Path(stage, s"aside-$name"))
-        rename(f, new Path(stage, name), dst)
-      }
+    val touched = inc.select(col("__bucket")).distinct()
+      .collect().map(_.getInt(0)).toSeq
+    if (touched.isEmpty) return
+    val existing = head.fold(inc.drop(feedCols: _*).limit(0)) { case (_, e) =>
+      scan(spark, tableDir, stored, touched.flatMap(e.files.getOrElse(_, Nil)))
+        .withColumn("__bucket", bucket)
     }
-    f.delete(stage, true)
+    // hash-clustering on __bucket puts each touched bucket in exactly one
+    // task → one file per bucket per merge (guide §6 file sizing)
+    commit(spark, tableDir,
+      merge(existing, inc).repartition(touched.size, col("__bucket")),
+      Some(nBuckets),
+      head.fold(Map.empty[Int, Seq[String]])(_._2.files -- touched))
+    vacuumSnapshot(spark, tableDir, keepLast = 1)
   }
-
-  /** Undo a crashed [[replaceBuckets]]: every bucket set aside in a stage
-    * whose table bucket is missing is renamed back, then the stage is
-    * deleted. Runs before a batch reads the table. */
-  private def restoreSwap(f: org.apache.hadoop.fs.FileSystem,
-                          tableDir: String): Unit =
-    f.listStatus(new Path(tableDir)).map(_.getPath)
-      .filter(_.getName.startsWith(".graft_stage_"))
-      .foreach { stage =>
-        f.listStatus(stage).map(_.getPath)
-          .filter(_.getName.startsWith("aside-"))
-          .foreach { aside =>
-            val dst = new Path(tableDir, aside.getName.stripPrefix("aside-"))
-            if (!f.exists(dst)) rename(f, aside, dst)
-          }
-        f.delete(stage, true)
-      }
-
-  private def rename(f: org.apache.hadoop.fs.FileSystem, src: Path,
-                     dst: Path): Unit =
-    if (!f.rename(src, dst))
-      throw new java.io.IOException(s"failed to rename $src -> $dst")
 
   /** Current contents of an [[upsertSnapshotBucketed]] table (layout
-    * column dropped). The schema comes from one bucket file's footer
-    * ([[storedBucketSchema]], read on the driver) instead of parquet
-    * schema inference, which runs a Spark job on every call; a table with
-    * no bucket data file fails loud. */
+    * column dropped): the newest entry's files with its schema, no Spark
+    * job for a table of ≤ 32 files (Spark lists more paths than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` in a job). */
   def readBucketedSnapshot(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.schema(storedBucketSchema(spark, tableDir)).parquet(tableDir)
-      .drop("__bucket")
-
-  /** Create-branch safety for the bucketed tables: a marker-less dir is
-    * re-creatable ONLY if it looks like our own partial create (nothing
-    * but __bucket= partitions, _-prefixed job metadata and hidden
-    * stages); anything else is a foreign directory and fails loud. */
-  private def requireCreatableBucketDir(f: org.apache.hadoop.fs.FileSystem,
-                                        tableDir: String): Unit = {
-    val dir = new Path(tableDir)
-    if (f.exists(dir)) {
-      val foreign = f.listStatus(dir).toSeq.map(_.getPath.getName)
-        .filterNot(n => n.startsWith("__bucket=") || n.startsWith("_") ||
-          n.startsWith("."))
-      require(foreign.isEmpty,
-        s"$tableDir exists, carries no _graft_nbuckets marker, and holds " +
-          s"non-bucket entries ${foreign.take(3).mkString(", ")} — not a " +
-          "bucketed snapshot table (and not a crashed partial create)")
-    }
-  }
+    readSnapshot(spark, tableDir)
 
   /** Schema-drift gate of the bucketed sinks: a batch's data columns must
     * be the table's stored columns — the same names under the session
@@ -504,13 +446,10 @@ object Sinks {
     * gate a column the batch lacks silently vanishes from every rewritten
     * bucket, an extra batch column reads back all-null for the old rows,
     * and a changed type is written into the rewritten buckets, after which
-    * reading the table fails on the mixed file types.
-    * The stored schema is the Spark row schema Spark writes into every
-    * parquet footer, read from ONE bucket file on the driver: a listing
-    * and a footer read, no Spark job. */
+    * reading the table fails on the mixed file types. */
   private def requireStoredSchema(spark: SparkSession, tableDir: String,
+                                  stored: StructType,
                                   batch: StructType): Unit = {
-    val stored = storedBucketSchema(spark, tableDir)
     val resolver = spark.sessionState.analyzer.resolver
     def find(s: StructType, name: String) =
       s.find(fd => resolver(fd.name, name))
@@ -533,33 +472,6 @@ object Sinks {
         Seq("missing" -> missing, "extra" -> extra, "changed type" -> changed)
           .filter(_._2.nonEmpty)
           .map { case (k, v) => s"$k: ${v.mkString(", ")}" }.mkString("; "))
-  }
-
-  /** The data schema of a bucketed table, from the footer of its first
-    * bucket file (every bucket carries the same columns by the layout
-    * contract; an emptied table keeps one empty schema-carrying file). */
-  private def storedBucketSchema(spark: SparkSession,
-                                 tableDir: String): StructType = {
-    val f = fs(spark, tableDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def visible(p: Path) =
-      !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    val file = f.listStatus(new Path(tableDir)).iterator
-      .filter(_.getPath.getName.startsWith("__bucket="))
-      .flatMap(d => f.listStatus(d.getPath).iterator.map(_.getPath))
-      .find(visible)
-      .getOrElse(throw new IllegalStateException(
-        s"$tableDir holds no bucket data file"))
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try {
-      val meta = reader.getFooter.getFileMetaData
-      Option(meta.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
-    } finally reader.close()
   }
 
   /** Bucketed persistence for co-located joins: the table is written
@@ -587,17 +499,15 @@ object Sinks {
     * 100 TB the file-open overhead and scan-task explosion — one task per
     * tiny file — dominate read cost long before data volume does; this is
     * Delta OPTIMIZE / Iceberg rewrite_data_files re-expressed over the
-    * [[upsertSnapshot]] directory layout).
+    * [[upsertSnapshot]] layout).
     *
-    * Reads the LATEST `v=N`, sizes it from the file listing (driver-side
-    * metadata only, O(files)), targets `ceil(totalBytes / targetBytes)`
-    * output files, and rewrites via round-robin repartition through
-    * [[writeNextVersion]] — the next version past every directory, so a
-    * crashed attempt's uncommitted debris never wedges a later compaction,
-    * and the `_SUCCESS` check holds. Content-identical by construction
-    * (repartition moves rows, never drops), and readers always see a
-    * complete version (the upsertSnapshot atomicity story). Old versions
-    * are retained for the caller's retention policy to reap.
+    * Reads the LATEST version, sizes it from a listing of its files'
+    * directories (driver-side metadata only), targets
+    * `ceil(totalBytes / targetBytes)` output files, and commits a
+    * round-robin repartition as the next version. Content-identical by
+    * construction (repartition moves rows, never drops), and readers
+    * always see a complete version. Old versions are retained for the
+    * caller's retention policy to reap.
     *
     * Returns (filesBefore, filesAfter, newVersion). Compaction of an
     * already-compact table still advances the version — idempotent in
@@ -606,16 +516,17 @@ object Sinks {
                       targetBytes: Long): (Int, Int, Int) = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val f = fs(spark, tableDir)
-    val versions = listVersions(spark, tableDir)
-    require(versions.nonEmpty, s"$tableDir has no v=N snapshot versions")
-    def dataFiles(v: Int) = f.listStatus(new Path(s"$tableDir/v=$v")).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-    val before = dataFiles(versions.last)
-    val totalBytes = before.map(_.getLen).sum
+    val (_, e) = latest(spark, tableDir).getOrElse(throw
+      new IllegalArgumentException(s"$tableDir has no committed version"))
+    val totalBytes = e.paths.map(new Path(tableDir, _)).groupBy(_.getParent)
+      .toSeq.map { case (dir, ps) =>
+        val names = ps.map(_.getName).toSet
+        f.listStatus(dir).filter(s => names(s.getPath.getName)).map(_.getLen).sum
+      }.sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val next = writeNextVersion(spark, tableDir,
-      spark.read.parquet(s"$tableDir/v=${versions.last}").repartition(nOut))
-    (before.size, dataFiles(next).size, next)
+    val next = commit(spark, tableDir,
+      scan(spark, tableDir, e.schema, e.paths).repartition(nOut), None)
+    (e.paths.size, readEntry(spark, tableDir, next).paths.size, next)
   }
 
   /** SNK10 — CDC changelog apply: merge an ordered change feed (op column
@@ -665,8 +576,8 @@ object Sinks {
     * with the three-verb changelog contract (a latest D removes the key).
     * First batch creates `v=1` against an empty snapshot whose schema is
     * the feed minus its bookkeeping columns (op AND order) — same
-    * relation-invisibility rule as [[applyChangesBucketed]]'s create
-    * branch. Returns the new version number.
+    * relation-invisibility rule as [[applyChangesBucketed]].
+    * Returns the new version number.
     *
     * This is the layout [[compactSnapshot]] and [[vacuumSnapshot]]
     * maintain; the three interleave freely (SnapshotSoakSpec pins the
@@ -674,55 +585,65 @@ object Sinks {
     * net-effect state of the changes applied so far). At 100 TB prefer
     * [[applyChangesBucketed]] (O(touched buckets) rewrite); this form
     * rewrites the full snapshot per batch but keeps readers of `v=N`
-    * undisturbed forever — the documented trade between the two. */
+    * undisturbed until it is vacuumed — the documented trade between
+    * the two. */
   def applyChangesSnapshot(spark: SparkSession, tableDir: String,
                            changes: DataFrame, key: Seq[String],
                            orderCol: String, opCol: String = "op"): Int = {
     val current = readLatestOr(spark, tableDir,
       changes.drop(opCol, orderCol)
         .filter(org.apache.spark.sql.functions.lit(false)))
-    writeNextVersion(spark, tableDir,
-      applyChanges(current, changes, key, orderCol, opCol))
+    commit(spark, tableDir,
+      applyChanges(current, changes, key, orderCol, opCol), None)
   }
 
-  /** SNK11 — retention vacuum over an [[upsertSnapshot]] versioned table:
-    * delete every version older than the newest `keepLast` (the Delta
-    * VACUUM / Iceberg expire_snapshots maintenance verb that completes
-    * the merge-on-write story — without it a 100 TB table re-upserted
-    * monthly retains 100 TB × months of dead versions).
+  /** SNK11 — retention vacuum over a versioned or bucketed table: drop
+    * every log entry older than the newest `keepLast`, oldest first, then
+    * delete the files no kept entry lists (the Delta VACUUM / Iceberg
+    * expire_snapshots verb — without it a 100 TB table re-upserted
+    * monthly retains 100 TB × months of dead versions). A `v=N`
+    * directory that holds no kept file goes whole.
     *
-    * Deletion walks OLDEST-first so a crash mid-vacuum can only leave
-    * extra (still-consistent) versions behind, never a gap below the
-    * latest; the latest version is always retained regardless of
-    * `keepLast`. Returns (removedVersions, keptVersions). */
+    * A crash mid-vacuum leaves extra entries or unlisted files behind,
+    * never a gap below the newest entry; the next vacuum reaps them. It
+    * never touches `v=N` above the newest entry (a commit in flight), and
+    * the newest entry always survives. Returns (removedVersions,
+    * keptVersions). */
   def vacuumSnapshot(spark: SparkSession, tableDir: String,
                      keepLast: Int): (Seq[Int], Seq[Int]) = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val f = fs(spark, tableDir)
-    val versions = listVersions(spark, tableDir)
-    require(versions.nonEmpty, s"$tableDir has no v=N snapshot versions")
-    val (drop, keep) = versions.splitAt((versions.size - keepLast).max(0))
-    // crashed-attempt debris (v=N without _SUCCESS) below the newest
-    // kept committed version is also reaped — STRICTLY below, so a
-    // concurrent writer's in-flight v=N+1 (always above the latest
-    // committed) is never swept mid-write (round 15)
-    val orphans = rawVersions(spark, tableDir)
-      .filterNot(versions.contains).filter(_ < keep.head)
-    (drop ++ orphans).foreach(v =>
-      f.delete(new Path(s"$tableDir/v=$v"), true))
-    (drop ++ orphans, keep)
+    val all = versions(spark, tableDir)
+    require(all.nonEmpty, s"$tableDir has no committed version")
+    val (drop, keep) = all.splitAt(all.size - keepLast)
+    drop.foreach(v => f.delete(entryPath(tableDir, v), false))
+    val live = keep.flatMap(readEntry(spark, tableDir, _).paths).toSet
+    def sweep(dir: Path, rel: String, top: Boolean): Unit =
+      f.listStatus(dir).foreach { s =>
+        val name = s.getPath.getName
+        val r = rel + name
+        val ours = !top || (name match {
+          case VersionDir(v) => v.toInt <= keep.last
+          case _ => false
+        })
+        if (ours && !live(r)) {
+          if (s.isDirectory && live.exists(_.startsWith(r + "/")))
+            sweep(s.getPath, r + "/", top = false)
+          else f.delete(s.getPath, true)
+        }
+      }
+    sweep(new Path(tableDir), "", top = true)
+    (drop, keep)
   }
 
   /** [[vacuumSnapshot]] gated on actual growth — the streaming hot-path
-    * form (round-16 advice): an unconditional vacuum on every micro-batch
-    * pays an O(retained versions) marker-probe listing per publish, for a
-    * reclaim that can remove at most one version per batch. This probe is
-    * ONE directory listing (no per-version marker checks); the full
-    * vacuum runs only once the raw trail exceeds `2 * keepLast` dirs —
-    * amortized O(1) listings per batch, trail bounded at ≤ 2·keepLast. */
+    * form (round-16 advice): the probe is ONE listing of the log; the
+    * full vacuum runs only once the log holds more than `2 * keepLast`
+    * entries — amortized O(1) listings per batch, trail bounded at
+    * ≤ 2·keepLast. */
   def vacuumSnapshotIfGrown(spark: SparkSession, tableDir: String,
                             keepLast: Int): Unit =
-    if (rawVersions(spark, tableDir).size > 2 * keepLast) {
+    if (versions(spark, tableDir).size > 2 * keepLast) {
       vacuumSnapshot(spark, tableDir, keepLast)
       ()
     }
@@ -732,9 +653,9 @@ object Sinks {
     * one `merge(current)` over the latest committed version, and the
     * trail is then bounded by [[vacuumSnapshotIfGrown]] (growth-gated:
     * one listing per publish on the streaming hot path). A table with no
-    * COMMITTED version — a crashed first publish leaves only debris —
-    * counts as fresh, so the restart converges instead of failing every
-    * replay.
+    * COMMITTED version — a crashed first publish leaves only files no
+    * entry lists — counts as fresh, so the restart converges instead of
+    * failing every replay.
     *
     * `ledger = Some((batchId, countCol))` keeps a batch ledger for a merge
     * that is not idempotent (counter addition): state rows carry
@@ -759,10 +680,10 @@ object Sinks {
         }).cast(fd.dataType).as(fd.name)
       }.toSeq: _*))
     }
-    latestCommittedVersion(spark, tableDir) match {
+    latest(spark, tableDir) match {
       case None => replaceSnapshot(spark, tableDir, withLedger(state))
-      case Some(v) =>
-        val current = spark.read.parquet(s"$tableDir/v=$v")
+      case Some((_, e)) =>
+        val current = scan(spark, tableDir, e.schema, e.paths)
         val applied = ledger.exists { case (id, _) =>
           id <= current.filter(col("batch_id") >= 0)
             .agg(max(col("batch_id"))).head.getLong(0)
@@ -775,22 +696,23 @@ object Sinks {
     vacuumSnapshotIfGrown(spark, tableDir, keepLast)
   }
 
-  /** Latest snapshot version of an [[upsertSnapshot]] table. */
-  def readSnapshot(spark: SparkSession, tableDir: String): DataFrame = {
-    val versions = listVersions(spark, tableDir)
-    require(versions.nonEmpty, s"$tableDir has no v=N snapshot versions")
-    spark.read.parquet(s"$tableDir/v=${versions.last}")
-  }
+  /** Latest version of an [[upsertSnapshot]] (or bucketed) table: the
+    * newest entry's files, read with its schema. */
+  def readSnapshot(spark: SparkSession, tableDir: String): DataFrame =
+    readLatestOr(spark, tableDir, throw new IllegalArgumentException(
+      s"$tableDir has no committed version"))
 
   /** A specific version of an [[upsertSnapshot]] table — time travel for
     * the versioned layout (the Delta `VERSION AS OF` verb). Fails loud
     * on a vacuumed or never-written version. */
   def readSnapshotVersion(spark: SparkSession, tableDir: String,
                           version: Int): DataFrame = {
-    val versions = listVersions(spark, tableDir)
-    require(versions.contains(version),
-      s"$tableDir has no v=$version (available: ${versions.mkString(",")})")
-    spark.read.parquet(s"$tableDir/v=$version")
+    val available = versions(spark, tableDir)
+    require(available.contains(version),
+      s"$tableDir has no version $version (available: " +
+        s"${available.mkString(",")})")
+    val e = readEntry(spark, tableDir, version)
+    scan(spark, tableDir, e.schema, e.paths)
   }
 
   /** INVERSE of [[applyChanges]] (round 9) — derive the I/U/D changelog

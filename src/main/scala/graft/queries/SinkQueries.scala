@@ -66,8 +66,7 @@ object SinkQueries {
     "snk9_compaction" -> QueryDef(
       (s, dir) => {
         val tableDir = scratch(s, "snk9")
-        ev(s, dir).repartition(64)
-          .write.parquet(s"$tableDir/v=1")
+        Sinks.replaceSnapshot(s, tableDir, ev(s, dir).repartition(64))
         val (before, after, version) =
           Sinks.compactSnapshot(s, tableDir, targetBytes = 512L * 1024 * 1024)
         Sinks.readSnapshot(s, tableDir)

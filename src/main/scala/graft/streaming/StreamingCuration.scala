@@ -134,15 +134,6 @@ object StreamingCuration {
       UrlCuration.blocklistVerdict(col("domain"), blocked))
   }
 
-  /** Gopher rule gate on a stream: [[TextAnalysis.gopherRulesRowwise]]
-    * IS the stream shape (one stateless projection, the in-row
-    * top-token count) — exposed here so the curation chain names its
-    * full gate set in one place. Verdict columns ride along; filtering
-    * on `gopher_pass` is caller policy. */
-  def gopherGate(docs: DataFrame,
-                 p: TextAnalysis.GopherParams): DataFrame =
-    TextAnalysis.gopherRulesRowwise(docs, p)
-
   /** Back half: near-dup candidate pairs among the curated survivors
     * (SimHash sketch → band buckets). Chain this onto [[curatedStream]]'s
     * output for the full flow. `probeBits` per [[StreamingDedup.banded]]:

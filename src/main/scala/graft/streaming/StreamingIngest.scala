@@ -12,7 +12,9 @@ import graft.operators.{Ingest, Sinks}
   * equivalent is a file source over the landing prefix → the SAME cleaning
   * chain → event-time watermark → in-stream key dedup → a foreachBatch
   * keyed-upsert sink. Batch parity is the fidelity target: one
-  * micro-batch over one CSV produces exactly what Ingest.ingestCsv would.
+  * micro-batch over one CSV produces exactly what
+  * `Ingest.upsertWithWatermark(existing, Ingest.clean(Ingest.readCsv(…)))`
+  * would.
   *
   * Scale notes: the file source tracks processed files (offsets = the
   * watermark's job in the batch path); the files-per-trigger pace bounds
@@ -125,13 +127,10 @@ object StreamingIngest {
     * on `orderCol` absorbs the replay), which is precisely why
     * upsert-shaped sinks are the recommended foreachBatch target.
     *
-    * Atomicity is PER BUCKET, not per trigger: a crash between bucket
-    * swaps inside one micro-batch leaves that batch partially merged
-    * until the checkpoint replays it (the sink first restores any bucket
-    * the crash left set aside, then the idempotent re-merge converges).
-    * Readers needing cross-bucket snapshot
-    * consistency should read between triggers or use the versioned
-    * [[graft.operators.Sinks.upsertSnapshot]] form. */
+    * Atomicity is PER TRIGGER: each micro-batch commits as one entry of
+    * the table's log, so a reader sees a batch wholly or not at all. A
+    * crash before the entry leaves files no entry lists; the checkpoint
+    * replays the batch and the idempotent re-merge converges. */
   def runToBucketedSnapshot(stream: DataFrame, tableDir: String,
                             checkpointDir: String, key: Seq[String],
                             orderCol: String,
@@ -152,7 +151,7 @@ object StreamingIngest {
     * shape) maintains a bucketed keyed snapshot via
     * [[graft.operators.Sinks.applyChangesBucketed]] in foreachBatch —
     * the third verb ([[runToBucketedSnapshot]] can insert and update but
-    * never remove a key). Same per-bucket atomicity and at-least-once
+    * never remove a key). Same per-trigger atomicity and at-least-once
     * caveats as the upsert form; replaying a micro-batch converges
     * because the per-key collapse rule (latest op in `orderCol` wins) is
     * idempotent — an I→U→D key re-applied still nets to the delete. */

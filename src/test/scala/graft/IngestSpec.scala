@@ -13,6 +13,18 @@ import graft.operators.Ingest
 class IngestSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** The parquet data files under a table directory, by the name of the
+    * bucket directory holding them: (path, modification time) each. */
+  private def filesByBucket(tableDir: String): Map[String, Set[(String, Long)]] = {
+    val walk = Files.walk(java.nio.file.Path.of(tableDir))
+    try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .groupBy(_.getParent.getFileName.toString)
+      .map { case (b, ps) => b -> ps.map(p =>
+        p.toString -> Files.getLastModifiedTime(p).toMillis).toSet }
+    finally walk.close()
+  }
+
   test("SNK1 upsert: batch replaces existing on key; in-batch dups last-write-wins (main.py:175-188)") {
     val existing = Seq(("k1", 1, "old1"), ("k2", 2, "old2"), ("k3", 3, "old3"))
       .toDF("key", "ord", "payload")
@@ -91,18 +103,16 @@ class IngestSpec extends SparkSpecBase {
       i.toLong, i.toDouble)).toDF("user_id", "event_type", "event_id", "value")
     Sinks.upsertSnapshotBucketed(spark, tableDir, seed, key, "event_id",
       nBuckets = 8)
-    def filesByBucket: Map[String, Set[String]] =
-      new java.io.File(tableDir).listFiles.toSeq
-        .filter(_.getName.startsWith("__bucket="))
-        .map(d => d.getName -> d.listFiles.map(_.getName).toSet).toMap
-    val before = filesByBucket
+    val before = filesByBucket(tableDir)
     assert(before.size > 1, "seed must spread over several buckets")
     // the 1-row batch: replaces (u3, click)'s row
     val batch = Seq(("u3", "click", 100L, 99.5))
       .toDF("user_id", "event_type", "event_id", "value")
     Sinks.upsertSnapshotBucketed(spark, tableDir, batch, key, "event_id",
       nBuckets = 8)
-    val after = filesByBucket
+    // untouched buckets' files keep their paths and modification times;
+    // the replaced file of the touched bucket is gone
+    val after = filesByBucket(tableDir)
     val touched = spark.range(1)
       .select(pmod(xxhash64(lit("u3"), lit("click")), lit(8L)).cast("int"))
       .head.getInt(0)
@@ -157,21 +167,29 @@ class IngestSpec extends SparkSpecBase {
       .toDF("user_id", "event_type", "event_id", "value", "ts")
     Sinks.upsertSnapshotBucketed(spark, tableDir, batch,
       Seq("user_id", "event_type"), "event_id", nBuckets = 4)
-    val (jobs, df) = countingJobs("footer-schema")(
-      Sinks.readBucketedSnapshot(spark, tableDir))
-    assert(jobs.started === 0, s"reading the table ran ${jobs.started} jobs")
-    val inferred = spark.read.parquet(tableDir).drop("__bucket")
-    assert(df.schema === inferred.schema)
-    assert(df.collect().map(_.toString).sorted ===
-      inferred.collect().map(_.toString).sorted)
-    assert(df.count() === 40)
-    // a table directory with no bucket data file fails loud
+    Sinks.replaceSnapshot(spark, root + "/versioned", batch.repartition(3))
+    // both layouts read the log's file list and schema: no Spark job, and
+    // the same schema and rows as parquet inference over those files
+    Seq(
+      "bucketed" -> (() => Sinks.readBucketedSnapshot(spark, tableDir)),
+      "versioned" -> (() => Sinks.readSnapshot(spark, root + "/versioned"))
+    ).foreach { case (layout, read) =>
+      val (jobs, df) = countingJobs(s"log-schema-$layout")(read())
+      assert(jobs.started === 0,
+        s"$layout: reading the table ran ${jobs.started} jobs")
+      val inferred = spark.read.parquet(df.inputFiles.toSeq: _*)
+      assert(df.schema === inferred.schema, layout)
+      assert(df.collect().map(_.toString).sorted ===
+        inferred.collect().map(_.toString).sorted, layout)
+      assert(df.count() === 40, layout)
+    }
+    // a table directory with no log fails loud
     val emptyDir = new java.io.File(root + "/empty/__bucket=0")
     emptyDir.mkdirs()
-    val e = intercept[IllegalStateException] {
+    val e = intercept[IllegalArgumentException] {
       Sinks.readBucketedSnapshot(spark, root + "/empty")
     }
-    assert(e.getMessage.contains("no bucket data file"))
+    assert(e.getMessage.contains("holds no commit log"))
   }
 
   test("SNK10 applyChanges: I-then-D nets delete, D-then-I nets insert, unknown op fails loud") {
@@ -209,11 +227,7 @@ class IngestSpec extends SparkSpecBase {
       .toDF("user_id", "event_id", "value", "op", "ord")
     Sinks.applyChangesBucketed(spark, tableDir, seed, key, "ord", "op",
       nBuckets = 8)
-    def filesByBucket: Map[String, Set[String]] =
-      new java.io.File(tableDir).listFiles.toSeq
-        .filter(_.getName.startsWith("__bucket="))
-        .map(d => d.getName -> d.listFiles.map(_.getName).toSet).toMap
-    val before = filesByBucket
+    val before = filesByBucket(tableDir)
     assert(before.size > 1, "seed must spread over several buckets")
     // the bucketed layout is relation-invisible: NEITHER feed
     // bookkeeping column (op, ord) leaks into the snapshot schema
@@ -225,7 +239,7 @@ class IngestSpec extends SparkSpecBase {
       .toDF("user_id", "event_id", "value", "op", "ord")
     Sinks.applyChangesBucketed(spark, tableDir, dBatch, key, "ord", "op",
       nBuckets = 8)
-    val after = filesByBucket
+    val after = filesByBucket(tableDir)
     val touched = spark.range(1)
       .select(pmod(xxhash64(lit("u3")), lit(8L)).cast("int")).head.getInt(0)
     val touchedDir = s"__bucket=$touched"
@@ -252,8 +266,10 @@ class IngestSpec extends SparkSpecBase {
       .toDF("user_id", "event_id", "value", "op", "ord")
     Sinks.applyChangesBucketed(spark, tableDir, wipe, key, "ord", "op",
       nBuckets = 8)
-    assert(!new java.io.File(tableDir, s"__bucket=$victim").exists,
+    val walk = Files.walk(java.nio.file.Path.of(tableDir))
+    try assert(!walk.anyMatch(_.getFileName.toString == s"__bucket=$victim"),
       "fully-deleted bucket directory must be removed, not left stale")
+    finally walk.close()
     val out2 = Sinks.readBucketedSnapshot(spark, tableDir)
       .select("user_id").as[String].collect().toSet
     assert(out2 === (0 until 64).map(i => s"u$i").toSet - "u3" -- keysInVictim)
@@ -283,7 +299,7 @@ class IngestSpec extends SparkSpecBase {
       .toMap ++ Map("u1" -> 10.0, "u9" -> 9.0))
   }
 
-  test("bucketed staged write: no stage debris after a merge; crashed-attempt stage dirs are GC'd and invisible to readers") {
+  test("bucketed merge leaves no debris; crashed-attempt files unread, then reclaimed") {
     import graft.operators.Sinks
     val tableDir = Files.createTempDirectory("graft_stage_gc")
       .toFile.getAbsolutePath + "/tbl"
@@ -292,26 +308,26 @@ class IngestSpec extends SparkSpecBase {
       .toDF("user_id", "event_id")
     Sinks.upsertSnapshotBucketed(spark, tableDir, seed, key, "event_id",
       nBuckets = 4)
-    def stageDirs: Seq[String] =
-      new java.io.File(tableDir).listFiles.toSeq.map(_.getName)
-        .filter(_.startsWith(".graft_stage_"))
-    // a merge batch leaves no stage directory behind
+    // every data file on disk is one the table reads: nothing left over
+    def onDisk: Set[String] = filesByBucket(tableDir).values.flatten.map(_._1).toSet
+    def read: Set[String] = Sinks.readBucketedSnapshot(spark, tableDir)
+      .inputFiles.map(new org.apache.hadoop.fs.Path(_).toUri.getPath).toSet
     Sinks.upsertSnapshotBucketed(spark, tableDir,
       Seq(("u3", 100L)).toDF("user_id", "event_id"), key, "event_id",
       nBuckets = 4)
-    assert(stageDirs.isEmpty, s"stage debris left behind: $stageDirs")
-    // simulate a crashed prior attempt: a stale stage dir with a bogus
-    // bucket payload must (a) not surface in reads (hidden dir), and
-    // (b) be GC'd by the next merge — the replay-converges contract
-    val stale = new java.io.File(tableDir, ".graft_stage_deadbeef/__bucket=0")
+    assert(onDisk === read, "a replaced bucket file was left behind")
+    // a crashed attempt of the next commit: a bogus file under the next
+    // version's directory, which no log entry lists — never read
+    val next = Sinks.latestCommittedVersion(spark, tableDir).get + 1
+    val stale = new java.io.File(tableDir, s"v=$next/__bucket=0")
     stale.mkdirs()
-    Files.writeString(stale.toPath.resolve("junk.txt"), "not parquet")
+    Files.writeString(stale.toPath.resolve("part-junk.parquet"), "not parquet")
     assert(Sinks.readBucketedSnapshot(spark, tableDir).count() === 16,
-      "hidden stage dir leaked into the read path")
+      "a crashed attempt's file leaked into the read path")
     Sinks.upsertSnapshotBucketed(spark, tableDir,
       Seq(("u5", 200L)).toDF("user_id", "event_id"), key, "event_id",
       nBuckets = 4)
-    assert(stageDirs.isEmpty, "stale stage dir was not GC'd by the merge")
+    assert(onDisk === read, "the crashed attempt's file was not reclaimed")
     val out = Sinks.readBucketedSnapshot(spark, tableDir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(out.size === 16 && out("u3") === 100L && out("u5") === 200L)
@@ -414,7 +430,7 @@ class IngestSpec extends SparkSpecBase {
     import spark.implicits._
     val dir = s"/tmp/graft_test_compact_${System.nanoTime()}"
     val df = (1 to 1000).map(i => (i.toLong, s"row$i")).toDF("id", "s")
-    df.repartition(20).write.parquet(s"$dir/v=1")
+    graft.operators.Sinks.replaceSnapshot(spark, dir, df.repartition(20))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     def files(v: Int) = fs.listStatus(
@@ -524,33 +540,29 @@ class IngestSpec extends SparkSpecBase {
     assert(e.getMessage.contains("type conflicts"))
   }
 
-  test("versioned snapshot crash recovery: an uncommitted v=N (no " +
-    "_SUCCESS) is invisible to readers and merges, and the retry writes " +
-    "PAST the debris instead of colliding with it") {
+  test("versioned crash recovery: uncommitted v=N is never read; the retry commits v=N") {
     import spark.implicits._
     import graft.operators.Sinks
     val tableDir = java.nio.file.Files
       .createTempDirectory("graft_vcrash").toString + "/t"
     Sinks.upsertSnapshot(spark,
       tableDir, Seq((1L, "a")).toDF("k", "v"), Seq("k"), "v")
-    // simulate a writer that died mid-write: v=2 exists but never
-    // committed (empty dir, no _SUCCESS) — previously this wedged every
-    // later read with "unable to infer schema" and every later write
-    // with an ErrorIfExists collision
-    assert(new java.io.File(s"$tableDir/v=2").mkdirs())
+    // simulate a writer that died after its data files, before its log
+    // entry: v=2 holds a complete-looking file that no entry lists
+    Seq((9L, "torn")).toDF("k", "v").write.parquet(s"$tableDir/v=2")
     assert(Sinks.readSnapshot(spark, tableDir)
       .as[(Long, String)].collect().toSet === Set((1L, "a")))
-    // the replayed batch lands as v=3 (past the debris), merged from v=1
+    // the replayed batch commits version 2 over the debris, merged from v=1
     val v = Sinks.upsertSnapshot(spark,
       tableDir, Seq((2L, "b")).toDF("k", "v"), Seq("k"), "v")
-    assert(v === 3)
+    assert(v === 2)
     assert(Sinks.readSnapshot(spark, tableDir)
       .as[(Long, String)].collect().toSet === Set((1L, "a"), (2L, "b")))
-    // vacuum reaps committed-below-horizon AND the uncommitted debris,
-    // but never the kept versions
+    // vacuum reaps the versions below the kept one, never the kept one
     val (dropped, kept) = Sinks.vacuumSnapshot(spark, tableDir, keepLast = 1)
-    assert(kept === Seq(3) && dropped.toSet === Set(1, 2))
-    assert(!new java.io.File(s"$tableDir/v=2").exists)
+    assert(kept === Seq(2) && dropped === Seq(1))
+    assert(!new java.io.File(s"$tableDir/v=1").exists)
+    assert(Sinks.readSnapshot(spark, tableDir).count() === 2)
   }
 
   test("bucketed create crash recovery: data-without-marker (a crash " +
@@ -564,16 +576,15 @@ class IngestSpec extends SparkSpecBase {
     val batch = Seq(("u1", 1L), ("u2", 2L)).toDF("user_id", "event_id")
     Sinks.upsertSnapshotBucketed(spark, tableDir, batch, Seq("user_id"),
       "event_id", nBuckets = 4)
-    // crash shape: the marker never landed
-    assert(new java.io.File(tableDir, "_graft_nbuckets").delete())
-    // the checkpoint replays the same batch — previously an unconditional
-    // "exists but carries no marker" throw, forever; now it re-creates
+    // crash shape: the data files landed, the first log entry did not
+    assert(new java.io.File(tableDir, "_graft_log/1.json").delete())
+    // the checkpoint replays the same batch and re-creates the table
     Sinks.upsertSnapshotBucketed(spark, tableDir, batch, Seq("user_id"),
       "event_id", nBuckets = 4)
     assert(Sinks.readBucketedSnapshot(spark, tableDir)
       .select("user_id").as[String].collect().toSet === Set("u1", "u2"))
-    assert(new java.io.File(tableDir, "_graft_nbuckets").exists)
-    // but a marker-less dir with non-bucket content is NOT ours to clobber
+    assert(new java.io.File(tableDir, "_graft_log/1.json").exists)
+    // but a dir with no log and other content is NOT ours to clobber
     val foreign = s"$base/f"
     new java.io.File(foreign).mkdirs()
     java.nio.file.Files.writeString(
@@ -582,7 +593,7 @@ class IngestSpec extends SparkSpecBase {
       Sinks.upsertSnapshotBucketed(spark, foreign, batch, Seq("user_id"),
         "event_id", nBuckets = 4)
     }
-    assert(e.getMessage.contains("non-bucket entries"))
+    assert(e.getMessage.contains("holds no commit log"))
   }
 
   test("bucketed layout guards hold on both bucketed sinks: bucket-count " +
@@ -602,10 +613,11 @@ class IngestSpec extends SparkSpecBase {
         .createTempDirectory(s"graft_bguard_$name").toString
       val tableDir = s"$base/t"
       write(tableDir, 4)
-      // crash shape: the marker never landed; the replay re-creates
-      assert(new java.io.File(tableDir, "_graft_nbuckets").delete(), name)
+      // crash shape: the first log entry never landed; the replay
+      // re-creates
+      assert(new java.io.File(tableDir, "_graft_log/1.json").delete(), name)
       write(tableDir, 4)
-      assert(new java.io.File(tableDir, "_graft_nbuckets").exists, name)
+      assert(new java.io.File(tableDir, "_graft_log/1.json").exists, name)
       assert(Sinks.readBucketedSnapshot(spark, tableDir).select("user_id", "v")
         .as[(String, String)].collect().toSet === Set(("u1", "a"), ("u2", "b")),
         name)
@@ -616,7 +628,7 @@ class IngestSpec extends SparkSpecBase {
       java.nio.file.Files.writeString(
         java.nio.file.Path.of(foreign, "data.csv"), "x")
       val e = intercept[IllegalArgumentException](write(foreign, 4))
-      assert(e.getMessage.contains("non-bucket entries"), name)
+      assert(e.getMessage.contains("holds no commit log"), name)
     }
   }
 

@@ -8,19 +8,20 @@ import graft.operators.Sinks
 
 /** The local filesystem under a scheme of its own (`crashfs:`), so a spec
   * can run a sink against a table that is not on the session's default
-  * filesystem. Armed through [[CrashingLocalFs.armed]], it throws on the
-  * next rename of a staged `__bucket=` directory (the one under a
-  * `.graft_stage_*` dir) into its table — the crash point inside the
-  * bucketed swap. */
+  * filesystem. Armed through [[CrashingLocalFs.armed]], it throws when the
+  * next commit-log entry is renamed into place — the crash point between
+  * a commit's data files and its entry. With [[CrashingLocalFs.copyRename]]
+  * set, every rename copies and then deletes, as GCS and S3 do. */
 class CrashingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = CrashingLocalFs.Uri
   override def getScheme: String = CrashingLocalFs.Scheme
   override def rename(src: Path, dst: Path): Boolean = {
-    if (src.getParent.getName.startsWith(".graft_stage_") &&
-      src.getName.startsWith("__bucket=") &&
+    if (dst.getParent.getName == "_graft_log" &&
       CrashingLocalFs.armed.compareAndSet(true, false))
-      throw new java.io.IOException(s"injected crash renaming $src -> $dst")
-    super.rename(src, dst)
+      throw new java.io.IOException(s"injected crash creating entry $dst")
+    if (CrashingLocalFs.copyRename.get)
+      org.apache.hadoop.fs.FileUtil.copy(this, src, this, dst, true, getConf)
+    else super.rename(src, dst)
   }
 }
 
@@ -28,6 +29,7 @@ object CrashingLocalFs {
   val Scheme = "crashfs"
   val Uri: java.net.URI = java.net.URI.create(s"$Scheme:///")
   val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val copyRename = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Register the scheme on the session and return `localDir` under it. */
   def path(spark: SparkSession, localDir: String): String = {
@@ -37,19 +39,21 @@ object CrashingLocalFs {
   }
 }
 
-/** Round-16 commit-protocol hardening of the versioned snapshot layout:
+/** The commit log of the versioned and bucketed layouts:
   *
   *  - [[Sinks.hasCommittedVersion]] is the existence gate serving paths
   *    use — it must see COMMITTED versions only (a crashed first write
-  *    leaves a dir with no committed version and must read as "absent"),
-  *  - marker-less legacy tables (written where the committer does not
-  *    emit `_SUCCESS`) stay readable via the no-marker fallback,
+  *    leaves files no entry lists and must read as "absent"),
+  *  - a directory with no log (a table written before it) fails loud and
+  *    names its conversion,
   *  - [[Sinks.vacuumSnapshotIfGrown]] amortizes the streaming hot-path
-  *    vacuum: no reclaim until the raw trail exceeds 2×keepLast, full
+  *    vacuum: no reclaim until the log exceeds 2×keepLast entries, full
   *    vacuum after,
-  *  - every sink resolves its table's own filesystem, a crash inside the
-  *    bucketed swap replays to the table a clean run builds, and a
-  *    crashed uncommitted version does not wedge compaction.
+  *  - every sink resolves its table's own filesystem; a crash between a
+  *    commit's data files and its entry leaves the previous table whole
+  *    for readers and replays to the table a clean run builds; a
+  *    copy-and-delete rename commits the same tables; and a crashed
+  *    uncommitted version does not wedge compaction.
   */
 class SinksCommitSpec extends SparkSpecBase {
   import spark.implicits._
@@ -64,45 +68,51 @@ class SinksCommitSpec extends SparkSpecBase {
     val dir = freshDir("gate")
     assert(!Sinks.hasCommittedVersion(spark, dir), "absent dir must gate false")
 
-    // simulate a crash during the FIRST write: v=1 exists, no _SUCCESS,
-    // in-flight _temporary debris still present (so the legacy fallback
-    // must NOT adopt it either)
+    // simulate a crash during the FIRST write: the log exists (a commit
+    // creates it first) but holds no entry, and v=1 holds in-flight
+    // _temporary debris
+    fs.mkdirs(new Path(s"$dir/_graft_log"))
     fs.mkdirs(new Path(s"$dir/v=1/_temporary"))
     assert(!Sinks.hasCommittedVersion(spark, dir),
       "uncommitted v=1 (crash mid-first-write) must gate false")
     intercept[IllegalArgumentException] { Sinks.readSnapshot(spark, dir) }
 
-    // a real commit past the debris: gate flips true, reader sees it
+    // a real commit over the debris: gate flips true, reader sees it
     val v = Sinks.replaceSnapshot(spark, dir,
       Seq((1, "a")).toDF("id", "s"))
-    assert(v === 2, "next version must advance past crashed debris")
+    assert(v === 1,
+      "the retry takes the version the crashed write never committed")
     assert(Sinks.hasCommittedVersion(spark, dir))
     assert(Sinks.readSnapshot(spark, dir).count() === 1)
     fs.delete(new Path(dir), true)
   }
 
-  test("legacy marker-less table stays readable; a marker-bearing version disables the fallback") {
-    val dir = freshDir("legacy")
-    Sinks.replaceSnapshot(spark, dir, Seq((1, "a"), (2, "b")).toDF("id", "s"))
-    Sinks.replaceSnapshot(spark, dir, Seq((3, "c")).toDF("id", "s"))
-    // strip EVERY marker — the pre-round-15 on-disk layout, or a cluster
-    // whose committer never writes markers
-    Seq(1, 2).foreach(v => fs.delete(new Path(s"$dir/v=$v/_SUCCESS"), false))
-    assert(Sinks.hasCommittedVersion(spark, dir),
-      "marker-less-but-nonempty legacy table must stay readable")
-    assert(Sinks.readSnapshot(spark, dir).as[(Int, String)].collect().toSet
-      === Set((3, "c")), "fallback must still serve the LATEST version")
-    // in fallback mode, mid-write debris is still excluded
-    fs.mkdirs(new Path(s"$dir/v=3/_temporary"))
-    assert(Sinks.readSnapshot(spark, dir).as[(Int, String)].collect().toSet
-      === Set((3, "c")), "in-flight _temporary dir must not be adopted")
-    fs.delete(new Path(s"$dir/v=3"), true)
-    // one marker-bearing version → strict mode: only IT is committed
-    Sinks.replaceSnapshot(spark, dir, Seq((4, "d")).toDF("id", "s"))
-    assert(Sinks.readSnapshot(spark, dir).as[(Int, String)].collect().toSet
-      === Set((4, "d")),
-      "a marker-bearing version must put the table back in strict mode")
-    fs.delete(new Path(dir), true)
+  test("a directory with no commit log fails loud on read and write") {
+    val dir = freshDir("nolog")
+    // a versioned table as written before the log: v=N data, no entries
+    val rows = Seq((1, "a"), (2, "b")).toDF("id", "s")
+    rows.write.parquet(s"$dir/v=1")
+    val b = Seq(("u1", 1L)).toDF("user_id", "ord")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "readSnapshot" -> (() => Sinks.readSnapshot(spark, dir)),
+      "readBucketedSnapshot" -> (() => Sinks.readBucketedSnapshot(spark, dir)),
+      "hasCommittedVersion" -> (() => Sinks.hasCommittedVersion(spark, dir)),
+      "vacuumSnapshot" -> (() => Sinks.vacuumSnapshot(spark, dir, 1)),
+      "replaceSnapshot" -> (() => Sinks.replaceSnapshot(spark, dir, rows)),
+      "upsertSnapshotBucketed" -> (() => Sinks.upsertSnapshotBucketed(spark,
+        dir, b, Seq("user_id"), "ord", nBuckets = 4)))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("holds no commit log") &&
+        e.getMessage.contains("replaceSnapshot(spark, newDir"), name)
+    }
+    // the named conversion works
+    val converted = freshDir("converted")
+    assert(Sinks.replaceSnapshot(spark, converted,
+      spark.read.parquet(s"$dir/v=1")) === 1)
+    assert(Sinks.readSnapshot(spark, converted).as[(Int, String)].collect()
+      .toSet === Set((1, "a"), (2, "b")))
+    Seq(dir, converted).foreach(d => fs.delete(new Path(d), true))
   }
 
   test("vacuumSnapshotIfGrown: no reclaim until the trail exceeds 2x keepLast, full vacuum after") {
@@ -146,33 +156,62 @@ class SinksCommitSpec extends SparkSpecBase {
     fs.delete(new Path(local), true)
   }
 
-  test("bucketed swap crash: an upsert and a CDC batch that crash mid-swap " +
-    "replay to the table a run with no crash builds") {
-    val local = freshDir("swap")
+  private val crashKey = Seq("user_id")
+  private def crashSeed = (0 until 32).map(i => (s"u$i", s"old$i", "I", 1L))
+    .toDF("user_id", "v", "op", "ord")
+  // touches several buckets; the CDC form also deletes keys
+  private def crashBatch = (0 until 32 by 5).map(i => (s"u$i",
+    s"new$i", if (i % 2 == 0) "D" else "U", 2L)).toDF("user_id", "v", "op", "ord")
+
+  /** The crash specs' sinks: a writer and the reader of its layout. */
+  private val crashSinks: Seq[(String, (String, DataFrame) => Unit,
+      String => Set[Row])] = Seq(
+    ("upsert", (t, df) => Sinks.upsertSnapshotBucketed(spark, t,
+      df.drop("op"), crashKey, "ord", nBuckets = 4),
+      t => Sinks.readBucketedSnapshot(spark, t).collect().toSet),
+    ("cdc", (t, df) => Sinks.applyChangesBucketed(spark, t, df, crashKey,
+      "ord", "op", nBuckets = 4),
+      t => Sinks.readBucketedSnapshot(spark, t).collect().toSet),
+    ("versioned", (t, df) => { Sinks.upsertSnapshot(spark, t, df.drop("op"),
+      crashKey, "ord"); () },
+      t => Sinks.readSnapshot(spark, t).collect().toSet))
+
+  test("crash before the log entry: old table read whole; replay builds the new") {
+    val local = freshDir("crash")
     val dir = CrashingLocalFs.path(spark, local)
-    val key = Seq("user_id")
-    val seed = (0 until 32).map(i => (s"u$i", s"old$i", "I", 1L))
-      .toDF("user_id", "v", "op", "ord")
-    // touches several buckets; the CDC form also deletes keys
-    val batch = (0 until 32 by 5).map(i => (s"u$i",
-      s"new$i", if (i % 2 == 0) "D" else "U", 2L)).toDF("user_id", "v", "op", "ord")
-    val sinks: Seq[(String, (String, DataFrame) => Unit)] = Seq(
-      "upsert" -> ((t, df) => Sinks.upsertSnapshotBucketed(spark, t,
-        df.drop("op"), key, "ord", nBuckets = 4)),
-      "cdc" -> ((t, df) => Sinks.applyChangesBucketed(spark, t, df, key,
-        "ord", "op", nBuckets = 4)))
-    def rows(t: String): Set[Row] =
-      Sinks.readBucketedSnapshot(spark, t).collect().toSet
-    sinks.foreach { case (name, write) =>
-      write(s"$dir/$name-clean", seed)
-      write(s"$dir/$name-clean", batch)
-      write(s"$dir/$name-crash", seed)
+    crashSinks.foreach { case (name, write, rows) =>
+      write(s"$dir/$name-clean", crashSeed)
+      write(s"$dir/$name-clean", crashBatch)
+      write(s"$dir/$name-crash", crashSeed)
+      val before = rows(s"$dir/$name-crash")
       CrashingLocalFs.armed.set(true)
-      intercept[java.io.IOException](write(s"$dir/$name-crash", batch))
-      assert(!CrashingLocalFs.armed.get, s"$name: the swap must have crashed")
-      write(s"$dir/$name-crash", batch) // the checkpoint's replay
+      intercept[java.io.IOException](write(s"$dir/$name-crash", crashBatch))
+      assert(!CrashingLocalFs.armed.get, s"$name: the commit must have crashed")
+      // the batch's data files are written, its entry is not: a reader
+      // sees the previous table whole
+      assert(rows(s"$dir/$name-crash") === before, name)
+      write(s"$dir/$name-crash", crashBatch) // the checkpoint's replay
       assert(rows(s"$dir/$name-crash") === rows(s"$dir/$name-clean"), name)
       assert(rows(s"$dir/$name-clean").size === (if (name == "cdc") 28 else 32))
+    }
+    fs.delete(new Path(local), true)
+  }
+
+  test("a copy-and-delete rename (object stores) commits the same tables") {
+    val local = freshDir("copyrename")
+    val dir = CrashingLocalFs.path(spark, local)
+    crashSinks.foreach { case (name, write, _) =>
+      write(s"$dir/$name-rename", crashSeed)
+      write(s"$dir/$name-rename", crashBatch)
+    }
+    CrashingLocalFs.copyRename.set(true)
+    try crashSinks.foreach { case (name, write, _) =>
+      write(s"$dir/$name-copy", crashSeed)
+      write(s"$dir/$name-copy", crashBatch)
+    } finally CrashingLocalFs.copyRename.set(false)
+    crashSinks.foreach { case (name, _, rows) =>
+      assert(rows(s"$dir/$name-copy") === rows(s"$dir/$name-rename"), name)
+      assert(rows(s"$dir/$name-copy").nonEmpty, name)
     }
     fs.delete(new Path(local), true)
   }
@@ -182,8 +221,10 @@ class SinksCommitSpec extends SparkSpecBase {
     Sinks.replaceSnapshot(spark, dir, Seq((1, "a"), (2, "b")).toDF("id", "s"))
     fs.mkdirs(new Path(s"$dir/v=2/_temporary")) // crashed attempt's debris
     val (_, after, v) = Sinks.compactSnapshot(spark, dir, 1L << 20)
-    assert(v === 3 && after === 1)
-    assert(Sinks.latestCommittedVersion(spark, dir) === Some(3))
+    assert(v === 2 && after === 1)
+    assert(Sinks.latestCommittedVersion(spark, dir) === Some(2))
+    assert(!fs.exists(new Path(s"$dir/v=2/_temporary")),
+      "the commit clears the crashed attempt's files first")
     assert(Sinks.readSnapshot(spark, dir).as[(Int, String)].collect().toSet
       === Set((1, "a"), (2, "b")))
     fs.delete(new Path(dir), true)

@@ -37,6 +37,8 @@ class SnapshotSoakSpec extends SparkSpecBase {
     val truth = mutable.Map.empty[Long, (String, Double)]
     // expected content of every versioned v=N ever written
     val expectedByVersion = mutable.Map.empty[Int, Set[(Long, String, Double)]]
+    // versions vacuumed so far: reading one must fail loud
+    val vacuumed = mutable.Set.empty[Int]
 
     def applyTruth(batch: Seq[Chg]): Unit =
       batch.groupBy(_.k).foreach { case (k, cs) =>
@@ -52,10 +54,7 @@ class SnapshotSoakSpec extends SparkSpecBase {
       df.select("k", "name", "amt").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
 
-    def versions(): Seq[Int] =
-      new java.io.File(vDir).listFiles().toSeq
-        .map(_.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toInt).sorted
+    def versions(): Seq[Int] = Sinks.versions(spark, vDir)
 
     def applyBoth(batch: Seq[Chg]): Unit = {
       val df = batch.map(c => (c.k, c.name, c.amt, c.op, c.ord))
@@ -73,8 +72,13 @@ class SnapshotSoakSpec extends SparkSpecBase {
       assert(readSet(Sinks.readBucketedSnapshot(spark, bDir)) === truthSet)
       versions().foreach { v =>
         assert(expectedByVersion.contains(v), s"untracked version v=$v")
-        assert(readSet(spark.read.parquet(s"$vDir/v=$v")) === expectedByVersion(v),
-          s"v=$v drifted from its frozen state")
+        assert(readSet(Sinks.readSnapshotVersion(spark, vDir, v)) ===
+          expectedByVersion(v), s"v=$v drifted from its frozen state")
+      }
+      vacuumed.foreach { v =>
+        val e = intercept[IllegalArgumentException](
+          Sinks.readSnapshotVersion(spark, vDir, v))
+        assert(e.getMessage.contains(s"no version $v"), e.getMessage)
       }
     }
 
@@ -107,6 +111,7 @@ class SnapshotSoakSpec extends SparkSpecBase {
     assert(kept.size === 2 && kept.last === versions().last)
     assert(dropped.forall(d => kept.forall(_ > d)), "vacuum dropped a newer version")
     dropped.foreach(expectedByVersion.remove)
+    vacuumed ++= dropped
     checkAll()
 
     // -- batch 4: delete EVERYTHING current, then re-insert a few -------
@@ -117,8 +122,9 @@ class SnapshotSoakSpec extends SparkSpecBase {
     assert(truth.keySet === Set(2L, 30L))
     // bucketed layout: delete-emptied buckets must not resurrect rows,
     // and the two survivors hash into at most two bucket dirs
-    val bucketDirs = new java.io.File(bDir).listFiles().toSeq
-      .map(_.getName).filter(_.startsWith("__bucket="))
+    val walk = Files.walk(java.nio.file.Path.of(bDir))
+    val bucketDirs = try walk.toArray.toSeq.map(_.toString)
+      .filter(_.split('/').last.startsWith("__bucket=")) finally walk.close()
     assert(bucketDirs.size <= 2, s"stale bucket dirs survived the wipe: $bucketDirs")
 
     // -- replay batch 4 (at-least-once delivery): state converges -------
@@ -137,7 +143,7 @@ class SnapshotSoakSpec extends SparkSpecBase {
     val (_, kept2) = Sinks.vacuumSnapshot(spark, vDir, keepLast = 1)
     kept2.foreach(v => assert(expectedByVersion.contains(v)))
     expectedByVersion.keys.filterNot(kept2.contains).toSeq
-      .foreach(expectedByVersion.remove)
+      .foreach { v => expectedByVersion.remove(v); vacuumed += v }
     checkAll()
     assert(versions() === Seq(cv2), "vacuum keepLast=1 must leave exactly the latest")
   }

@@ -240,11 +240,12 @@ class StreamingAnalyticsSpec extends SparkSpecBase {
     java.nio.file.Files.writeString(
       java.nio.file.Path.of(landing, "b1.json"),
       (1 to 30).map(u => s"""{"user_id":$u}""").mkString("\n"))
-    // the crash shape a killed first publish leaves: the artifact dir
-    // exists, v=1 holds only in-flight _temporary debris, NO _SUCCESS.
-    // The old bare-directory gate routed this into readSnapshot ("no
-    // v=N snapshot versions") on EVERY restart — a permanently wedged
-    // stream; the committed-version gate takes the create path instead.
+    // the crash shape a killed first publish leaves: the artifact's log
+    // exists with no entry, v=1 holds only in-flight _temporary debris.
+    // A bare-directory gate would route this into readSnapshot on EVERY
+    // restart — a permanently wedged stream; the committed-version gate
+    // takes the create path instead.
+    new java.io.File(s"$base/artifact/_graft_log").mkdirs()
     new java.io.File(s"$base/artifact/v=1/_temporary").mkdirs()
     val stream = spark.readStream.schema("user_id LONG").json(landing)
     val q = StreamingAnalytics.runHllDistinct(spark, stream, "user_id",
@@ -252,9 +253,10 @@ class StreamingAnalyticsSpec extends SparkSpecBase {
     q.awaitTermination(120000)
     val art = graft.operators.Sinks.readSnapshot(spark, s"$base/artifact")
     assert(art.select("estimate").head.getLong(0) === 30L)
-    // the recovery version advanced PAST the debris, never into it
-    assert(!new java.io.File(s"$base/artifact/v=1/_SUCCESS").exists())
-    assert(new java.io.File(s"$base/artifact/v=2/_SUCCESS").exists())
+    // the recovery commits version 1 over the debris
+    assert(graft.operators.Sinks.latestCommittedVersion(spark,
+      s"$base/artifact") === Some(1))
+    assert(!new java.io.File(s"$base/artifact/v=1/_temporary").exists())
   }
 
   test("runCountMin: cell-wise sketch accretion across batches; redelivered batch id is an exact no-op (ledger)") {
